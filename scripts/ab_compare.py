@@ -15,24 +15,31 @@ def load(paths):
             if not line or '"query"' not in line:
                 continue
             d = json.loads(line)
+            if "sec" not in d:  # a failed query carries "err", no time
+                continue
             q = d["query"]
-            v = d["sec"]
-            out[q] = min(out.get(q, float("inf")), v)
+            out[q] = min(out.get(q, float("inf")), d["sec"])
     return out
 
 sep = sys.argv.index("--")
 a = load(sys.argv[1:sep])
 b = load(sys.argv[sep + 1:])
 common = sorted(set(a) & set(b))
+if not common:
+    sys.exit("ab_compare: the two sides share no query with a time "
+             f"(A has {len(a)}, B has {len(b)}); nothing to compare")
 rows = [(q, a[q], b[q], a[q] / b[q] if b[q] > 0 else float("nan"))
         for q in common]
 tot_a = sum(a[q] for q in common)
 tot_b = sum(b[q] for q in common)
-geo = math.exp(sum(math.log(r) for _, _, _, r in rows if r > 0) / len(rows))
+ratios = sorted(r for _, _, _, r in rows if math.isfinite(r) and r > 0)
+if not ratios:
+    sys.exit("ab_compare: no query has a finite positive A/B ratio")
+geo = math.exp(sum(math.log(r) for r in ratios) / len(ratios))
+tot = f"{tot_a / tot_b:.3f}" if tot_b > 0 else "nan"
 print(f"n={len(common)} total A={tot_a:.1f}s B={tot_b:.1f}s "
-      f"ratio={tot_a/tot_b:.3f} geomean={geo:.3f}")
-med = sorted(r for _, _, _, r in rows)[len(rows) // 2]
-print(f"median per-query ratio={med:.3f}")
+      f"ratio={tot} geomean={geo:.3f} (over {len(ratios)} finite ratios)")
+print(f"median per-query ratio={ratios[len(ratios) // 2]:.3f}")
 print("\n-- A slower than B by >20% (possible regressions) --")
 for q, va, vb, r in sorted(rows, key=lambda x: -x[3]):
     if r > 1.2 and va > 0.3:

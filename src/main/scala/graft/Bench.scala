@@ -92,12 +92,10 @@ object Bench {
     // each query runs TWICE and scores its MIN: one noisy scheduler window
     // can't poison the artifact; both raw times go to BENCH_DETAILS
     var sinceGc = 0
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-        (System.nanoTime() - t0) / 1e9
-      }
+    // a query whose rep throws is FAILED: it carries its error instead
+    // of a time and stays out of total, top5 and the heal pass
+    val measured = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      def once() = graft.tools.Harness.attempt(fn(spark, sfDir).count())
       val r1 = once()
       // SPARK_GRAFT_BENCH_REPS=1: single-rep mode for the off-artifact
       // scale runs (sf1, local-cluster) where wall-clock is 10x and
@@ -110,8 +108,11 @@ object Bench {
       // 25-query cadence keeps the pause cost off any single query
       sinceGc += 1
       if (cleanBetween && sinceGc >= 25) { System.gc(); sinceGc = 0 }
-      (name, math.min(r1, r2), r1, r2)
+      (for (a <- r1; b <- r2) yield (name, math.min(a, b), a, b))
+        .left.map(name -> _)
     }
+    val results = measured.collect { case Right(r) => r }
+    val failed = measured.collect { case Left(f) => f }
     // SELF-HEALING re-measure (rounds 8/11/12 each shipped one headline
     // query reading 5-10x its true time): transient interference — a
     // noisy-neighbor burst, a ContextCleaner/GC stall — can inflate a
@@ -126,16 +127,12 @@ object Bench {
     val healed = results.sortBy(-_._2).take(12)
       .filter(_._2 > 1.0)
       .flatMap { case (name, v, _, _) =>
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          try { SparkEntry.queries(name)(spark, sfDir).count() }
-          catch { case _: Throwable => return Double.NaN }
-          (System.nanoTime() - t0) / 1e9
-        }
+        def once() =
+          graft.tools.Harness.timed(SparkEntry.queries(name)(spark, sfDir).count())
         val (h1, h2) = (once(), once())
         dropLeftovers(spark)
-        val m = if (h1.isNaN || h2.isNaN) Double.NaN else math.min(h1, h2)
-        if (!m.isNaN && m < v / 2) Some(name -> (v, m)) else None
+        for (a <- h1; b <- h2 if math.min(a, b) < v / 2)
+          yield name -> (v, math.min(a, b))
       }.toMap
     val adopted = results.map { case (name, v, r1, r2) =>
       (name, healed.get(name).map(_._2).getOrElse(v), r1, r2)
@@ -165,16 +162,11 @@ object Bench {
     val top5FreshVals = top5Rows.map { case (k, v, _, _) =>
       // a FAILED fresh run must read as a failure (-1), not as a
       // near-zero time that fabricates "in-session inflation" evidence
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try { SparkEntry.queries(k)(fresh, sfDir).count() }
-        catch { case _: Throwable => return Double.NaN }
-        (System.nanoTime() - t0) / 1e9
-      }
+      def once() =
+        graft.tools.Harness.timed(SparkEntry.queries(k)(fresh, sfDir).count())
       once() // plan-compilation + class-load rep, discarded
       val (r1, r2) = (once(), once())
-      val steady =
-        if (r1.isNaN || r2.isNaN) -1.0 else math.min(r1, r2)
+      val steady = (for (a <- r1; b <- r2) yield math.min(a, b)).getOrElse(-1.0)
       dropLeftovers(fresh)
       (k, v, steady)
     }
@@ -198,15 +190,17 @@ object Bench {
       Seq(load0, load1).exists(l =>
         try l.toDouble > loadLimit + selfLoad catch { case _: Throwable => false })
     val line =
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","n_queries":${results.size},"top5_sec":$top5,"top5_fresh_sec":$top5Fresh,"runs_per_query":$benchReps,"n_healed":${healed.size},"loadavg":["$load0","$load1"],"contaminated":$contaminated,"sf":"$sfName"}"""
+      s"""{"metric":"total","value":${f(total)},"unit":"sec","n_queries":${measured.size},"n_failed":${failed.size},"top5_sec":$top5,"top5_fresh_sec":$top5Fresh,"runs_per_query":$benchReps,"n_healed":${healed.size},"loadavg":["$load0","$load1"],"contaminated":$contaminated,"sf":"$sfName"}"""
     // full-precision per-query detail — committed artifact, not tail-parsed;
     // healed queries carry their inflated original alongside the adopted time
-    val detail = adopted.map { case (k, v, r1, r2) =>
+    val detail = (adopted.map { case (k, v, r1, r2) =>
       val h = healed.get(k)
         .map { case (orig, _) => s""","inflated_orig":${f(orig)}""" }
         .getOrElse("")
-      s"""{"query":"$k","sec":${f(v)},"r1":${f(r1)},"r2":${f(r2)}$h}"""
-    }.mkString("", "\n", "\n") + line + "\n"
+      k -> s"""{"query":"$k","sec":${f(v)},"r1":${f(r1)},"r2":${f(r2)}$h}"""
+    } ++ failed.map { case (k, err) =>
+      k -> s"""{"query":"$k","err":${graft.tools.Harness.jsonString(err)}}"""
+    }).sortBy(_._1).map(_._2).mkString("", "\n", "\n") + line + "\n"
     Seq("BENCH_DETAILS_latest.jsonl", "/tmp/graft_bench_last.json").foreach {
       p => try java.nio.file.Files.writeString(
         java.nio.file.Paths.get(p), detail)

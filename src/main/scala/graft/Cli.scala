@@ -1382,49 +1382,9 @@ object Cli {
     }
   }
 
-  /** The CLI's session recipe, factored out so specs can assert on a
-    * CLI-built session: graft's Catalyst rules ([[graft.plans.GraftExtensions]]
-    * — RangeJoinRewrite) and the engine defaults (hugeMethodLimit, UTC)
-    * apply to EVERY `graft.Cli` invocation, not just spec-built sessions. */
-  def buildSession(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      // JVM JIT refuses methods past ~8KB bytecode: a whole-stage method
-      // bigger than that runs INTERPRETED (measured 18x on wide-expression
-      // plans). Make Spark fall back to per-operator codegen there.
-      .config("spark.sql.codegen.hugeMethodLimit", 8000)
-      // keep intentional constant-key windows single-partitioned AS
-      // DECLARED: EliminateWindowPartitions folds `partitionBy(lit(1))`
-      // away, turning every bounded-table global window back into a
-      // warning-emitting unpartitioned WindowExec. The "optimization"
-      // saves nothing (one partition either way) and erases the
-      // engine's declared intent, so it is excluded session-wide.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions")
-      // let AQE coalesce shuffles that CONSUME cached frames too (off
-      // upstream by default): every persist()-using operator otherwise
-      // pins full-width post-shuffle stages on its consumers — dozens
-      // of near-empty tasks per job on small inputs, with no effect at
-      // scale where AQE keeps them wide by size. Interleaved A/B (r16,
-      // AbConf): q_dedup_keep_best 0.63x, q_ann_recall_ivf 0.81x,
-      // q_dedup_cc 0.90x, no reproducible regression. Deliberate
-      // repartition(n) respreads are size-exempt from coalescing
-      // (REPARTITION_BY_NUM), so the BNLJ parallelism contracts hold.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: graft.Cli <run|stats|norm|export> --data ...")
-    val spark = buildSession()
+    val spark = graft.tools.Harness.session()
     try run(spark, args.head, parseArgs(args.tail)).foreach(println)
     finally spark.stop()
   }

@@ -28,18 +28,18 @@ object Soak {
       val fn = SparkEntry.queries.getOrElse(q,
         sys.error(s"unknown query $q"))
       dirs.foreach { dir =>
-        val times = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          val n = try fn(spark, dir).count() catch { case _: Throwable => -1L }
-          ((System.nanoTime() - t0) / 1e9, n)
-        }
+        // a failed rep reads FAILED and is never timed; rows stays -1
+        // when every rep failed
+        var rows = -1L
+        val times = (1 to reps).map(_ =>
+          graft.tools.Harness.timed { rows = fn(spark, dir).count() })
         dropLeftovers()
         System.gc()
         // reps=1 is a legal knob: steady falls back to the only rep
-        val steady =
-          (if (times.length > 1) times.drop(1) else times).map(_._1).min
-        println(("[soak]" +: Seq(q, dir, times.head._2.toString) ++:
-          times.map(t => f"${t._1}%.3f") :+ f"$steady%.3f")
+        val steady = (if (times.length > 1) times.drop(1) else times)
+          .flatten.minOption.fold("FAILED")(t => f"$t%.3f")
+        println(("[soak]" +: Seq(q, dir, rows.toString) ++:
+          times.map(_.fold("FAILED")(t => f"$t%.3f")) :+ steady)
           .mkString("\t"))
       }
     }

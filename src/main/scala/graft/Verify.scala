@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.tools.Harness
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -10,54 +10,10 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER=local-cluster[2,2,1536] runs the WHOLE oracle
     // gate on real multi-JVM executors (the multi-executor smoke the
-    // local[n] default cannot give); executors are fresh JVMs and need
-    // the compiled classes + the driver's module opens on their own
-    // command lines (see tools.CkptDrill)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-    val builder =
-      if (!master.startsWith("local-cluster")) builder0
-      else {
-        if (!sys.env.contains("SPARK_HOME"))
-          System.setProperty("spark.test.home", "/opt/spark")
-        val opens = Seq("java.lang", "java.lang.invoke",
-          "java.lang.reflect", "java.io", "java.net", "java.nio",
-          "java.util", "java.util.concurrent",
-          "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-          "sun.security.action", "sun.util.calendar")
-          .map(p => s"--add-opens java.base/$p=ALL-UNNAMED").mkString(" ")
-        builder0
-          .config("spark.executor.extraClassPath", new java.io.File(
-            "target/scala-2.13/classes").getAbsolutePath)
-          .config("spark.executor.extraJavaOptions", opens)
-      }
-    val spark = builder
-      // JVM JIT refuses methods past ~8KB bytecode: a whole-stage method
-      // bigger than that runs INTERPRETED (measured 18x on wide-expression
-      // plans). Make Spark fall back to per-operator codegen there.
-      .config("spark.sql.codegen.hugeMethodLimit", 8000)
-      // keep intentional constant-key windows single-partitioned AS
-      // DECLARED: EliminateWindowPartitions folds `partitionBy(lit(1))`
-      // away, turning every bounded-table global window back into a
-      // warning-emitting unpartitioned WindowExec. The "optimization"
-      // saves nothing (one partition either way) and erases the
-      // engine's declared intent, so it is excluded session-wide.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions")
-      // AQE coalescing for consumers of cached frames — see the
-      // buildSession twin in graft.Cli for the measured rationale;
-      // Verify runs the SAME plans the bench times
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // local[n] default cannot give)
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -71,22 +27,11 @@ object Verify {
       }
       // same hygiene as Bench: operator-internal persists must not
       // accumulate across the 247-query session
-      graft.tools.Harness.dropLeftovers(spark)
+      Harness.dropLeftovers(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Harness.jsonString(k)}: ${Harness.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

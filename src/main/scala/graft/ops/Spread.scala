@@ -18,12 +18,7 @@ import org.apache.spark.sql.DataFrame
   * float sum at the query's precision boundary — repartitioning
   * reassociates the sum (check.py's float-close flag guards this). */
 object Spread {
-  /** Runtime-settable kill switch (A/B probes; `false` disables all
-    * widening in the session). */
-  val Key = "spark.sql.graft.widen"
-
   def widen(df: DataFrame): DataFrame = {
-    if (!df.sparkSession.conf.get(Key, "true").toBoolean) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions * 2 < target) df.repartition(target) else df
   }
@@ -37,7 +32,6 @@ object Spread {
     * production exchange. */
   def fanoutExchange(df: DataFrame,
       keys: Seq[org.apache.spark.sql.Column]): DataFrame = {
-    if (!df.sparkSession.conf.get(Key, "true").toBoolean) return df
     val s = df.sparkSession
     val width = math.max(s.sparkContext.defaultParallelism,
       s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
@@ -56,7 +50,6 @@ object Spread {
     * mutation cannot race another batch. */
   def withBatchWidth[T](sp: org.apache.spark.sql.SparkSession,
       rows: => Long)(body: => T): T = {
-    if (!sp.conf.get(Key, "true").toBoolean) return body
     val key = "spark.sql.shuffle.partitions"
     val prev = sp.conf.get(key)
     // saturate: a caller whose size probe failed passes Long.MaxValue
@@ -77,7 +70,6 @@ object Spread {
     * counts are unaffected. */
   def cellWidth(sp: org.apache.spark.sql.SparkSession, bound: Int): Int = {
     val cur = sp.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    if (!sp.conf.get(Key, "true").toBoolean) return cur
     math.min(math.max(bound, 1), cur)
   }
 
@@ -90,7 +82,6 @@ object Spread {
     * width sticks. Never shrinks: at production width this keeps the
     * larger existing partitioning. */
   def force(df: DataFrame): DataFrame = {
-    if (!df.sparkSession.conf.get(Key, "true").toBoolean) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     val cur = df.rdd.getNumPartitions
     if (cur < target) df.repartition(target) else df

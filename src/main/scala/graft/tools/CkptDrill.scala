@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Executor-loss drill for the session-level reliable-checkpoint policy
@@ -40,31 +39,10 @@ object CkptDrill {
   def main(args: Array[String]): Unit = {
     val chains = args.headOption.map(_.toInt).getOrElse(20000)
     val len = args.lift(1).map(_.toInt).getOrElse(32)
-    if (!sys.env.contains("SPARK_HOME"))
-      System.setProperty("spark.test.home", "/opt/spark")
-    val classesDir =
-      new java.io.File("target/scala-2.13/classes").getAbsolutePath
-    // executors are fresh JVMs: they need the same module opens the
-    // driver runs with (scripts/run.sh), or Spark 4 on JDK 17 dies at
-    // executor startup
-    val opens = Seq("java.lang", "java.lang.invoke", "java.lang.reflect",
-      "java.io", "java.net", "java.nio", "java.util",
-      "java.util.concurrent", "java.util.concurrent.atomic",
-      "sun.nio.ch", "sun.nio.cs", "sun.security.action",
-      "sun.util.calendar")
-      .map(p => s"--add-opens java.base/$p=ALL-UNNAMED").mkString(" ")
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_ckpt_drill").toString
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,2,1536]")
-      .appName("ckpt-drill")
-      .config("spark.executor.extraClassPath", classesDir)
-      .config("spark.executor.extraJavaOptions", opens)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // real executor JVMs; Harness wires their classpath and module opens
+    val spark = Harness.session("8", "local-cluster[2,2,1536]")
     def ckptFiles(): Long = {
       val s = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
       try s.filter(java.nio.file.Files.isRegularFile(_)).count()

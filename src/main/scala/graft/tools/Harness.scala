@@ -2,21 +2,25 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** ONE copy of the measurement-harness session recipe (Bench, Soak,
-  * TimeQ, AnnProbe) — the same engine defaults `graft.Cli.buildSession`
-  * gives a production session (GraftExtensions, hugeMethodLimit, UTC),
-  * so harness numbers measure the plans a CLI user actually runs.
-  * Config drift between four hand-rolled builders was a review finding;
-  * fix it here, everywhere. */
+/** The ONE session recipe: the CLI, the oracle gate (graft.Verify), the
+  * bench, every measurement tool and the test suite all build their
+  * session here, so the plans the gate checks are the plans the bench
+  * times and a CLI user runs (GraftExtensions, hugeMethodLimit, AQE
+  * coalescing of cached plans, UTC). Hand-rolled builders drifted apart
+  * (the gate and the tests once ran without GraftExtensions); do not add
+  * another builder. */
 object Harness {
 
-  def session(cpus: String =
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
-    // SPARK_GRAFT_MASTER=local-cluster[2,2,2048] runs any tool on real
-    // multi-JVM executors (the soak battery's wire-format evidence) —
-    // same recipe as graft.Verify: fresh executor JVMs need the
-    // compiled classes and the module opens on their own command lines
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
+  /** The master is SPARK_GRAFT_MASTER, else `local[cpus]`:
+    * SPARK_GRAFT_MASTER=local-cluster[2,2,2048] runs any entry point on
+    * real multi-JVM executors (the soak battery's wire-format evidence). */
+  def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+      : SparkSession =
+    session(cpus, sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
+
+  /** Fresh executor JVMs (local-cluster) need the compiled classes and
+    * the driver's module opens on their own command lines. */
+  def session(cpus: String, master: String): SparkSession = {
     val builder0 = SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", cpus)
@@ -49,8 +53,15 @@ object Harness {
       // engine's declared intent, so it is excluded session-wide.
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions")
-      // AQE coalescing for consumers of cached frames — see the
-      // buildSession twin in graft.Cli for the measured rationale
+      // let AQE coalesce shuffles that CONSUME cached frames too (off
+      // upstream by default): every persist()-using operator otherwise
+      // pins full-width post-shuffle stages on its consumers — dozens
+      // of near-empty tasks per job on small inputs, with no effect at
+      // scale where AQE keeps them wide by size. Interleaved A/B (r16):
+      // q_dedup_keep_best 0.63x, q_ann_recall_ivf 0.81x, q_dedup_cc
+      // 0.90x, no reproducible regression. Deliberate repartition(n)
+      // respreads are size-exempt from coalescing (REPARTITION_BY_NUM),
+      // so the BNLJ parallelism contracts hold.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
       .config("spark.sql.session.timeZone", "UTC")
@@ -80,4 +91,35 @@ object Harness {
       .foreach(t => s.catalog.dropTempView(t.name))
     catch { case _: Throwable => () }
   }
+
+  /** Wall seconds of `body`, or `Left("<Class>: <message>")` (message
+    * cut to 120 chars, also printed to stderr) when it throws — a
+    * failed rep is never timed as if it had succeeded (a fast failure
+    * would otherwise read as a huge speed-up). */
+  def attempt(body: => Any): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    try { body; Right((System.nanoTime() - t0) / 1e9) }
+    catch { case e: Throwable =>
+      val err = s"${e.getClass.getSimpleName}: " +
+        Option(e.getMessage).getOrElse("").take(120)
+      System.err.println(s"[harness] FAILED $err")
+      Left(err)
+    }
+  }
+
+  /** [[attempt]] without the error text: `None` when `body` throws. */
+  def timed(body: => Any): Option[Double] = attempt(body).toOption
+
+  /** JSON string literal: escapes backslash, quote and ALL control chars
+    * (<0x20) — a tab or CR in a query's SQL or an error message would
+    * otherwise make a reader's json.load fail. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

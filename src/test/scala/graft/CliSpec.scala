@@ -1203,17 +1203,24 @@ class CliSpec extends AnyFunSuite {
     "in the optimizer and the hugeMethodLimit default is set") {
     import org.apache.spark.sql.SparkSession
     val prior = spark // ensure the shared test session exists first
+    // the CLI, the oracle gate and the test suite share Harness.session:
+    // the suite checks the plans the CLI runs
+    assert(prior.sessionState.optimizer.extendedOperatorOptimizationRules
+      .contains(graft.plans.RangeJoinRewrite))
     // getOrCreate only applies extensions to a NEW session — drop the
-    // active/default pointers so buildSession actually constructs one
+    // active/default pointers so Harness.session actually constructs one
     // (over the same SparkContext), then restore the shared session
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val cliSpark = Cli.buildSession()
-      assert(cliSpark.sessionState.optimizer
+      val built = graft.tools.Harness.session()
+      assert(built ne prior)
+      assert(built.sessionState.optimizer
         .extendedOperatorOptimizationRules
         .contains(graft.plans.RangeJoinRewrite))
-      assert(cliSpark.conf.get("spark.sql.codegen.hugeMethodLimit") === "8000")
+      assert(built.conf.get("spark.sql.codegen.hugeMethodLimit") === "8000")
+      assert(built.conf.get(
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") === "true")
     } finally {
       SparkSession.setDefaultSession(prior)
       SparkSession.setActiveSession(prior)

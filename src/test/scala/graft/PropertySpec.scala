@@ -165,12 +165,8 @@ class PropertySpec extends AnyFunSuite {
   /** Run `body` with the CC small-graph cut DISABLED so the test
     * exercises the DISTRIBUTED hook+jump loop (the cut would otherwise
     * take every test-sized graph down the driver union-find path). */
-  private def withDistributedCc[T](body: => T): T = {
-    val sp = TestSpark.spark
-    val key = "spark.sql.graft.ccLocalEdges"
-    sp.conf.set(key, "0")
-    try body finally sp.conf.set(key, "1000000")
-  }
+  private def withDistributedCc[T](body: => T): T =
+    TestSpark.withConf("spark.sql.graft.ccLocalEdges", "0")(body)
 
   test("dedupClustersIterative: exact on a 10-node chain (diameter 9)") {
     val spark = TestSpark.spark

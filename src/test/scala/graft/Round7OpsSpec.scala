@@ -40,11 +40,10 @@ class Round7OpsSpec extends AnyFunSuite {
       finally s.close()
     }
     spark.conf.set(graft.Ckpt.DirKey, dir)
-    try {
-      // iterative CC with NO explicit dir — the session conf decides;
-      // small-graph cut disabled so the ROUND materializations (the
-      // thing this test asserts) actually run
-      spark.conf.set("spark.sql.graft.ccLocalEdges", "0")
+    // iterative CC with NO explicit dir — the session conf decides;
+    // small-graph cut disabled so the ROUND materializations (the
+    // thing this test asserts) actually run
+    try TestSpark.withConf("spark.sql.graft.ccLocalEdges", "0") {
       val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("doc_a", "doc_b")
       val got = graft.text.TextOps.dedupClustersIterative(pairs)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
@@ -93,10 +92,7 @@ class Round7OpsSpec extends AnyFunSuite {
       assert(files(mine) > afterFirst,
         "truncate must detect the foreign slot and re-set the " +
           "configured root instead of checkpointing into the foreign dir")
-    } finally {
-      spark.conf.unset(graft.Ckpt.DirKey)
-      spark.conf.set("spark.sql.graft.ccLocalEdges", "1000000")
-    }
+    } finally spark.conf.unset(graft.Ckpt.DirKey)
   }
 
   test("dedupClustersIterative with a reliable checkpoint dir: same " +
@@ -108,12 +104,11 @@ class Round7OpsSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     // distributed loop pinned (the small-graph cut would skip the
     // per-round reliable materializations this test asserts)
-    spark.conf.set("spark.sql.graft.ccLocalEdges", "0")
-    val got =
-      try graft.text.TextOps
+    val got = TestSpark.withConf("spark.sql.graft.ccLocalEdges", "0") {
+      graft.text.TextOps
         .dedupClustersIterative(pairs, checkpointDir = Some(dir))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally spark.conf.set("spark.sql.graft.ccLocalEdges", "1000000")
+    }
     val expected = ((0L to 11L).map(_ -> 0L) ++
       Seq(100L -> 100L, 101L -> 100L)).toMap
     assert(got === expected)

@@ -2,28 +2,18 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test JVM. */
+/** One shared local session for the whole test JVM — the production
+  * recipe, pinned to 4 cores so the suite's partition-count assertions
+  * do not follow the width of the machine running it. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // JVM JIT refuses methods past ~8KB bytecode: a whole-stage method
-      // bigger than that runs INTERPRETED (measured 18x on wide-expression
-      // plans). Make Spark fall back to per-operator codegen there.
-      .config("spark.sql.codegen.hugeMethodLimit", 8000)
-      // keep intentional constant-key windows single-partitioned AS
-      // DECLARED: EliminateWindowPartitions folds `partitionBy(lit(1))`
-      // away, turning every bounded-table global window back into a
-      // warning-emitting unpartitioned WindowExec. The "optimization"
-      // saves nothing (one partition either way) and erases the
-      // engine's declared intent, so it is excluded session-wide.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  lazy val spark: SparkSession = graft.tools.Harness.session("4", "local[4]")
+
+  /** Run `body` with session conf `key` = `value`, then put back the
+    * value it had before — or unset it if it had none. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }
