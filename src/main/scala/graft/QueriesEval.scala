@@ -434,7 +434,9 @@ object QueriesEval {
          |  count(*) AS total_cnt,
          |  CASE WHEN count(DISTINCT v) <= 2 THEN 'N'
          |       WHEN sum(CASE WHEN TRY_CAST(v AS DOUBLE) IS NOT NULL
-         |                THEN 1 ELSE 0 END) >= count(*) * 0.95 THEN 'N'
+         |                THEN 1 ELSE 0 END)
+         |            >= (count(*) - sum(CASE WHEN v IS NULL THEN 1 ELSE 0 END))
+         |               * 0.95 THEN 'N'
          |       ELSE 'C' END AS col_kind
          |FROM u GROUP BY col_name
          |""".stripMargin

@@ -28,8 +28,8 @@ object AutoType {
 
   /** Long-format typing report: (col_name, n_distinct, n_null, numeric_cnt,
     * total_cnt, col_kind) — kind decision per the reference thresholds:
-    * numeric-parse ratio >= 0.95 → N; distinct <= 2 → binary-numeric;
-    * else C. */
+    * numeric-parse ratio over non-null values >= 0.95 → N; distinct
+    * <= 2 → binary-numeric; else C. */
   def profile(df: DataFrame, cols: Seq[String],
               approxDistinct: Boolean = false): DataFrame = {
     val stackExpr = "stack(" + cols.length + ", " +
@@ -49,7 +49,11 @@ object AutoType {
         count(lit(1)).as("total_cnt"))
       .withColumn("col_kind",
         when(col("n_distinct") <= 2, lit("N"))
-          .when(col("numeric_cnt") >= col("total_cnt") * 0.95, lit("N"))
+          // the parse share is over NON-NULL values: a missing value
+          // is not evidence against a numeric column, and counting it
+          // typed every numeric column with >5% missing as C
+          .when(col("numeric_cnt") >=
+            (col("total_cnt") - col("n_null")) * 0.95, lit("N"))
           // everything non-numeric is C regardless of cardinality —
           // the reference has no high-cardinality kind either; the old
           // distinct<256 branch and its threshold constant were dead

@@ -129,17 +129,27 @@ object Ivf {
       .toDF("vec_id", "e", "norm", "cell")
   }
 
+  /** The `nProbe` nearest cells of `e`, nearest first, ties broken by
+    * cell id. DEAD slots (all-NaN centroids left by a cold-cell fold —
+    * see [[graft.streaming.AnnIngest]]) are never probed: their
+    * distances read NaN and are filtered before the sort (the
+    * single-assign loops skip them for free — NaN never wins a running
+    * min — but a sort would order NaN after the finites and a large
+    * nProbe could reach them). Shared by [[assignProbes]] and the ANN
+    * index's driver-side query probes, so both pick the same cells. */
+  def probeCells(cs: Array[Array[Double]], e: Array[Double],
+                 nProbe: Int): Array[Int] =
+    distances(cs, e).zipWithIndex.filter(!_._1.isNaN)
+      .sortBy { case (d, i) => (d, i) }
+      .take(math.min(nProbe, cs.length))
+      .map(_._2)
+
   /** Multi-probe QUERY assignment (the IVF nprobe recall knob): each
-    * vector probes its `nProbe` nearest cells — one (vec_id, cell) row per
-    * probe, narrow flatMap over the broadcast centroids. The INDEX side
-    * stays single-assigned; candidate volume scales ×nProbe and recall
-    * approaches brute force as nProbe → nCells. DEAD slots (all-NaN
-    * centroids left by a cold-cell fold — see
-    * [[graft.streaming.AnnIngest]]) are never probed: their distances
-    * read NaN and are filtered before the sort (the single-assign
-    * loops skip them for free — NaN never wins a running min — but a
-    * sort would order NaN after the finites and a large nProbe could
-    * reach them). */
+    * vector probes its `nProbe` nearest cells ([[probeCells]]) — one
+    * (vec_id, cell) row per probe, narrow flatMap over the broadcast
+    * centroids. The INDEX side stays single-assigned; candidate volume
+    * scales ×nProbe and recall approaches brute force as nProbe →
+    * nCells. */
   def assignProbes(v: DataFrame, cents: Array[Array[Double]],
                    nProbe: Int): DataFrame = {
     val spark = v.sparkSession
@@ -148,14 +158,7 @@ object Ivf {
     val p = nProbe
     v.select(col("vec_id"), col("e"))
       .as[(Long, Array[Double])]
-      .flatMap { case (id, e) =>
-        val cs = bc.value
-        val d2 = distances(cs, e)
-        d2.zipWithIndex.filter(!_._1.isNaN)
-          .sortBy { case (d, i) => (d, i) }
-          .take(math.min(p, cs.length))
-          .map { case (_, cell) => (id, cell) }
-      }
+      .flatMap { case (id, e) => probeCells(bc.value, e, p).map((id, _)) }
       .toDF("vec_id", "cell")
   }
 

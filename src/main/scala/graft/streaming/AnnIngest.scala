@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -49,10 +51,17 @@ import graft.streaming.IngestIndex.{Manifest, Run}
   * Scale shape: ingest is APPEND-ONLY — unlike the dedup gate it never
   * probes prior state, so per-batch cost is O(batch) by construction
   * (broadcast centroids, narrow assignment map, one cell-partitioned
-  * write). Queries probe nProbe cells per vector: the probed cell set
-  * (≤ nCells values) becomes a partition filter on every run scan, so a
-  * query touches `nProbe / nCells` of the corpus regardless of index
-  * size. Cells are the IVF sharding — on a cluster each cell's files
+  * write). Queries probe nProbe cells per vector: the query set is
+  * small by contract, so it is collected once and its probes are
+  * assigned on the driver against the in-memory quantizer; the probed
+  * cell set (≤ nCells values) becomes a partition filter on every run
+  * scan, so a query touches `nProbe / nCells` of the corpus regardless
+  * of index size. Every run, delta and tombstone read uses the index's
+  * fixed at-rest schema (`vecSchema`, `tombSchema`) instead of
+  * inferring one per directory, and the live runs and deltas are read
+  * as ONE scan relation, so the number of Spark jobs a query or
+  * compaction launches does not grow with the number of live dirs.
+  * Cells are the IVF sharding — on a cluster each cell's files
   * co-locate and brute-force scoring stays within the pruned slice.
   */
 object AnnIngest {
@@ -74,10 +83,11 @@ object AnnIngest {
     * to f64 storage. Double-born vectors round to the nearest float
     * (half-ulp per component); opt-in by design.
     *
-    * Decoding is SCHEMA-driven: every index read casts `e` back to
-    * `array<double>` (a no-op cast Catalyst removes under f64), so an
-    * index may MIX runs written under either codec — the flag only
-    * matters to writers, and a reader session needs no conf at all. */
+    * Decoding is SCHEMA-driven: every index read pins `e` to
+    * `array<double>` in its read schema ([[vecSchema]]) and the Parquet
+    * reader widens stored floats to doubles exactly, so an index may MIX
+    * runs written under either codec — the flag only matters to
+    * writers, and a reader session needs no conf at all. */
   val VectorCodecKey = "spark.sql.graft.ann.vectorCodec"
 
   /** Apply the session's at-rest codec to a (vec_id, e, norm, cell)
@@ -346,10 +356,22 @@ object AnnIngest {
     * guessing "new" would be resurrecting a stale pre-split copy). */
   private def srcIdOf(dir: String): Long = IngestIndex.srcIdOf(dir)
 
+  /** Read schema of every tombstone dir: takedowns ([[delete]]) write
+    * (vec_id, tb_bound), heal tombstones write (vec_id, cell), and a
+    * legacy takedown holds vec_id alone. A column a dir lacks reads as
+    * NULL — exactly the "no scope" meaning [[antiTombs]] gives it. */
+  private val tombSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("vec_id",
+      org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("cell",
+      org.apache.spark.sql.types.IntegerType),
+    org.apache.spark.sql.types.StructField("tb_bound",
+      org.apache.spark.sql.types.LongType)))
+
   /** Live tombstone rows normalized to (vec_id, cell, tb_applied):
-    * takedown tombstones ([[delete]]) carry only vec_id — cell reads
-    * NULL, meaning "exclude everywhere, from every source"; split-
-    * retrain relocation tombstones are CELL-SCOPED (vec_id, cell) AND
+    * takedown tombstones ([[delete]]) carry no cell — cell reads NULL,
+    * meaning "exclude from every cell"; split-retrain relocation
+    * tombstones are CELL-SCOPED (vec_id, cell) AND
     * SOURCE-SCOPED (tb_applied = the manifest's applied-at id): they
     * exclude only the STALE copy left in the row's former cell by a
     * run that PREDATES the split. Without the source scope, a vec_id
@@ -361,10 +383,6 @@ object AnnIngest {
       dirs: Seq[String]): DataFrame =
     dirs.map { d =>
       val n = d.split("/").last
-      val df = sp.read.parquet(d)
-      val cellCol =
-        if (df.columns.contains("cell")) col("cell").cast("int")
-        else lit(null).cast("int")
       val applied: Column =
         if (n.startsWith("t_split_"))
           // split tombstones are manifest-gated, so a live one always
@@ -374,14 +392,12 @@ object AnnIngest {
           lit((m.runs.getOrElse("tombs", Nil) ++
             m.runs.getOrElse("tswept", Nil))
             .find(_.name == n).map(_.rows).getOrElse(Long.MaxValue))
-        else if (df.columns.contains("tb_bound"))
-          // source-scoped takedown ([[delete]] stamps the bound); a
-          // legacy dir without it excludes from every source
-          col("tb_bound").cast("long")
-        else lit(null).cast("long")
-      df.select(col("vec_id"), cellCol.as("cell"),
-        applied.as("tb_applied"))
-    }.reduce(_ unionByName _)
+        // source-scoped takedown ([[delete]] stamps the bound); a
+        // legacy dir without it reads NULL = every source
+        else col("tb_bound")
+      sp.read.schema(tombSchema).parquet(d)
+        .select(col("vec_id"), col("cell"), applied.as("tb_applied"))
+    }.reduce(_ union _)
 
   /** Anti-join `rows` (must carry vec_id + cell + src_id) against
     * normalized tombstone rows: match on vec_id, scoped to the row's
@@ -464,22 +480,15 @@ object AnnIngest {
   private def readIndexWith(m: Manifest, sp: SparkSession,
       indexDir: String, cells: Option[Seq[Int]]): DataFrame = {
     val (runs, deltas) = liveWith(m, sp, indexDir, Long.MaxValue)
-    val frames = (runs ++ deltas).map { d =>
-      // codec decode: f32-written runs come back as array<double>
-      // (no-op cast under f64, removed by SimplifyCasts)
-      val full = sp.read.option("basePath", d).parquet(d)
-        .withColumn("e", col("e").cast("array<double>"))
-      cells.fold(full)(cs => full.filter(col("cell").isin(cs: _*)))
-        .withColumn("src_id", lit(srcIdOf(d)))
-    }
-    // empty-index fallback reuses vecSchema so the two can never
-    // drift (a diverged empty schema breaks unionByName callers)
-    val all = frames.reduceOption(_ unionByName _).getOrElse(
-      sp.createDataFrame(sp.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        vecSchema.add("src_id", org.apache.spark.sql.types.LongType)))
-    minusTombs(m, sp, indexDir, all).drop("src_id")
+    val all = readDirs(sp, runs ++ deltas)
+    minusTombs(m, sp, indexDir,
+      cells.fold(all)(cs => all.filter(col("cell").isin(cs: _*))))
+      .drop("src_id")
   }
 
+  /** The at-rest schema of every run and delta, pinned on every read:
+    * no per-dir schema-inference job, and `e` decodes to
+    * `array<double>` under either codec ([[VectorCodecKey]]). */
   private val vecSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("vec_id",
       org.apache.spark.sql.types.LongType),
@@ -491,18 +500,12 @@ object AnnIngest {
     org.apache.spark.sql.types.StructField("cell",
       org.apache.spark.sql.types.IntegerType)))
 
-  /** Partition-column-only read schema for footer counts and run-count
-    * read-backs: no data columns at all, so the read is codec-agnostic
-    * by construction (and provably never touches vector bytes). */
-  private val cellOnlySchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("cell",
-      org.apache.spark.sql.types.IntegerType)))
-
   /** Write `df` (vec_id, e, norm, cell) as the cell-partitioned run
-    * `name` and return its manifest entry. Explicit-schema read-back:
-    * a fully-tombstoned input writes an empty partitioned dir, and a
-    * schema-inferring read of that throws — wedging compaction
-    * permanently (the retry hits the same empty write). */
+    * `name` and return its manifest entry. A fully-tombstoned input
+    * writes an empty partitioned dir; the footer count reads it as 0
+    * and every later read pins [[vecSchema]], where a schema-inferring
+    * read of that dir would throw — wedging compaction permanently
+    * (the retry hits the same empty write). */
   private def writeRun(sp: SparkSession, indexDir: String, name: String,
       df: DataFrame, nCells: Int): Run = {
     val dir = s"${vectorsDir(indexDir)}/$name"
@@ -522,15 +525,30 @@ object AnnIngest {
     Run(name, IngestIndex.footerRows(sp, Seq(dir)))
   }
 
-  /** Read one run/delta dir, carrying its source id ([[srcIdOf]]) so
-    * downstream tombstone anti-joins can source-scope split
-    * tombstones. Writers ([[writeRun]], [[reassign]]) select their
+  /** Read run/delta dirs as ONE scan relation under [[vecSchema]],
+    * each row carrying its dir's source id ([[srcIdOf]]) so downstream
+    * tombstone anti-joins can source-scope it. One relation keeps the
+    * tombstone anti-join in one place: over a union of per-dir scans
+    * the optimizer pushes it into every branch with that branch's
+    * literal source id folded into the build side — one broadcast job
+    * per dir. Writers ([[writeRun]], [[reassign]]) select their
     * columns explicitly, so src_id never reaches disk. */
-  private def readRunDir(sp: SparkSession, d: String): DataFrame =
-    sp.read.option("basePath", d).parquet(d)
-      .select(col("vec_id"), col("e").cast("array<double>").as("e"),
-        col("norm"), col("cell"))
-      .withColumn("src_id", lit(srcIdOf(d)))
+  private def readDirs(sp: SparkSession, dirs: Seq[String]): DataFrame =
+    if (dirs.isEmpty)
+      sp.createDataFrame(sp.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        vecSchema.add("src_id", org.apache.spark.sql.types.LongType))
+    else {
+      // a row's dir is its file's grandparent: `<dir>/cell=<c>/<file>`
+      val dir = regexp_extract(col("_metadata.file_path"),
+        "([^/]+)/[^/]+/[^/]+$", 1)
+      val srcIds =
+        typedLit(dirs.map(d => new Path(d).getName -> srcIdOf(d)).toMap)
+      // every dir is its own partition root; Spark refuses several
+      // roots unless told to skip that check
+      sp.read.schema(vecSchema)
+        .option("ignoreInvalidPartitionPaths", "true").parquet(dirs: _*)
+        .withColumn("src_id", coalesce(srcIds(dir), lit(0L)))
+    }
 
   private def sizeClass(rows: Long): Int =
     63 - java.lang.Long.numberOfLeadingZeros(math.max(rows, 1L))
@@ -616,8 +634,7 @@ object AnnIngest {
 
   /** Per-cell PHYSICAL occupancy straight off the parquet footers —
     * driver-side, no Spark job: the cell id is the partition dir name
-    * and the row count is footer metadata. Same values as the
-    * cellOnlySchema scan this replaces (physical rows per cell, no
+    * and the row count is footer metadata (physical rows per cell, no
     * tombstone anti-join). */
   private def cellFootersOf(sp: SparkSession, dirs: Seq[String])
       : Map[Int, Long] = {
@@ -626,13 +643,15 @@ object AnnIngest {
     dirs.foreach { d =>
       val p = new Path(d)
       val f = p.getFileSystem(conf)
+      // a dir whose value is not a cell id (a null-key partition,
+      // `cell=__HIVE_DEFAULT_PARTITION__`) holds no countable cell
       if (f.exists(p)) f.listStatus(p).foreach { s =>
         val n = s.getPath.getName
-        if (s.isDirectory && n.startsWith("cell=")) {
-          val c = n.stripPrefix("cell=").toInt
-          acc(c) = acc.getOrElse(c, 0L) +
-            IngestIndex.footerRows(sp, Seq(s.getPath.toString))
-        }
+        if (s.isDirectory && n.startsWith("cell="))
+          n.stripPrefix("cell=").toIntOption.foreach { c =>
+            acc(c) = acc.getOrElse(c, 0L) +
+              IngestIndex.footerRows(sp, Seq(s.getPath.toString))
+          }
       }
     }
     acc.toMap
@@ -751,12 +770,11 @@ object AnnIngest {
         df => antiTombs(df, ids, small)
       }
     if (retrain) {
-      val all = (runDirs ++ deltaDirs).map(readRunDir(sp, _))
-        .reduceOption(_ union _)
-      if (all.isEmpty) return
+      if (runDirs.isEmpty && deltaDirs.isEmpty) return
       // clean BEFORE dropping the cell column: relocation tombstones
       // are cell-scoped and need the row's current cell to match
-      val corpus = clean(all.get).select("vec_id", "e", "norm").persist()
+      val corpus = clean(readDirs(sp, runDirs ++ deltaDirs))
+        .select("vec_id", "e", "norm").persist()
       if (corpus.isEmpty) {
         // fully-tombstoned corpus: there is nothing to train a
         // quantizer on (Ivf.centroids on zero rows throws), and an
@@ -786,7 +804,7 @@ object AnnIngest {
     } else {
       if (deltaDirs.nonEmpty) {
         val folded = writeRun(sp, indexDir, nextName(),
-          clean(deltaDirs.map(readRunDir(sp, _)).reduce(_ union _)),
+          clean(readDirs(sp, deltaDirs)),
           preSlots)
         if (folded.rows > 0) runs :+= folded
       }
@@ -803,10 +821,8 @@ object AnnIngest {
       while (pair.isDefined) {
         val i = pair.get
         val (a, b) = (sorted(i), sorted(i + 1))
-        val merged = writeRun(sp, indexDir, nextName(), clean(
-          readRunDir(sp, s"${vectorsDir(indexDir)}/${a.name}")
-            .union(readRunDir(sp, s"${vectorsDir(indexDir)}/${b.name}"))),
-          preSlots)
+        val merged = writeRun(sp, indexDir, nextName(), clean(readDirs(sp,
+          Seq(a, b).map(r => s"${vectorsDir(indexDir)}/${r.name}"))), preSlots)
         // a fully-tombstoned merge yields zero rows — drop it instead
         // of looping on an empty size class
         sorted = (sorted.patch(i,
@@ -853,9 +869,8 @@ object AnnIngest {
     // current quantizer version; not built yet because splits are
     // drift-rare and the scan is the cheap half of the heal.
     var splitThisCycle = false
-    def liveAll() = clean(runs.map(r =>
-      readRunDir(sp, s"${vectorsDir(indexDir)}/${r.name}"))
-      .reduce(_ union _))
+    def liveAll() = clean(readDirs(sp,
+      runs.map(r => s"${vectorsDir(indexDir)}/${r.name}")))
     if (!retrain && splitHot > 0 && runs.nonEmpty) {
       readCentroidsFile(sp, indexDir,
           cents.getOrElse("centroids.json")).foreach { base =>
@@ -956,8 +971,7 @@ object AnnIngest {
         // just counted
         val counts: Option[Map[Int, Long]] = healedCounts.orElse {
           // physical pre-check straight off the footers (driver-side,
-          // no job — was a cellOnlySchema scan job per fold-armed
-          // compaction)
+          // no job)
           val footer = cellFootersOf(sp,
             runs.map(r => s"${vectorsDir(indexDir)}/${r.name}"))
           val fMean = footer.values.sum.toDouble / math.max(live.size, 1)
@@ -1106,13 +1120,30 @@ object AnnIngest {
 
   /** Top-k cosine neighbors of `queries` (vec_id, embedding) against
     * the persisted index, probing each query's `nProbe` nearest cells.
-    * The union of probed cells (bounded by nCells, collected
-    * driver-side) prunes the index scan to the slices that can match;
-    * scoring joins on `cell` so candidate volume is
-    * ~n·nProbe/nCells, never n². Self-matches (same vec_id) are kept —
-    * callers screening a corpus against itself filter them. */
+    * Self-matches (same vec_id) are kept — callers screening a corpus
+    * against itself filter them.
+    *
+    * The query set is small by contract, so it is prepared and
+    * COLLECTED once: that driver copy is the query's only snapshot of
+    * `queries`. A caller frame with a non-deterministic row set (an
+    * unordered `limit`, a `sample`) is therefore evaluated exactly
+    * once, and every query row's probes and vector come from the same
+    * evaluation — re-executing such a frame in several subplans
+    * returns a different row set per use on real executor JVMs and
+    * silently joins to empty or partial results. Probes are assigned
+    * on the driver against the in-memory quantizer
+    * ([[graft.sim.Ivf.probeCells]], the same nearest-first, id-tie
+    * order as [[graft.sim.Ivf.assignProbes]]), so the probed cell set
+    * (≤ nCells values) is known before any index read: it prunes every
+    * run scan to the slices that can match, and the (vec_id, cell, ea,
+    * na) probe rows broadcast into the join on `cell` — candidate
+    * volume is ~n·nProbe/nCells, never n². One query is the collect
+    * plus the scoring plan's own jobs, whatever the number of runs,
+    * deltas and tombstones. */
   def queryTopK(sp: SparkSession, indexDir: String, queries: DataFrame,
                 k: Int = 3, nProbe: Int = 1): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
     // ONE manifest read for both the quantizer and the run set: a
     // retrain commit between two separate reads would pair old
     // centroids with new-quantizer cell ids — same value range,
@@ -1121,26 +1152,23 @@ object AnnIngest {
     val cents = centroidsOf(m, sp, indexDir).getOrElse(
       throw new IllegalStateException(
         s"no centroids at $indexDir — ingest at least one batch first"))
-    // ONE materialization of the query set: this plan embeds `queries`
-    // three times (probe assignment, the pruning collect, the vector
-    // re-attach join), and a caller-supplied NON-DETERMINISTIC frame —
-    // an unordered limit(), a sample — would otherwise evaluate to a
-    // DIFFERENT row set in each, silently joining to empty/partial
-    // results. local[n] masks it (stable partition arrival order); the
-    // r15 multi-JVM soak surfaced it as nondeterministic zero-row
-    // queries. localCheckpoint is eager + lineage-truncating, so every
-    // use sees the same snapshot; query sets are small by contract.
-    val q = graft.sim.Similarity.prep(queries).localCheckpoint(true)
-    val probes = graft.sim.Ivf.assignProbes(q, cents, nProbe)
-    val cells = probes.select("cell").distinct()
-      .collect().map(_.getInt(0)).toSeq // bounded: ≤ nCells values
+    val probes = graft.sim.Similarity.prep(queries)
+      .select(col("vec_id").cast("long"), col("e"), col("norm"))
+      .collect().toSeq
+      .flatMap { r =>
+        val e = r.getSeq[Double](1).toArray
+        graft.sim.Ivf.probeCells(cents, e, nProbe)
+          .map(c => Row(r.getLong(0), c, e.toSeq, r.getDouble(2)))
+      }
+    val cells = probes.map(_.getInt(1)).distinct
+    val q = sp.createDataFrame(probes.asJava, StructType(Seq(
+      StructField("vec_id", LongType), StructField("cell", IntegerType),
+      StructField("ea", ArrayType(DoubleType)),
+      StructField("na", DoubleType))))
     val idx = readIndexWith(m, sp, indexDir, Some(cells))
       .select(col("cell"), col("vec_id").as("nb_id"), col("e").as("eb"),
         col("norm").as("nb"))
-    val pairs = probes
-      .join(q.select(col("vec_id"), col("e").as("ea"),
-        col("norm").as("na")), Seq("vec_id"))
-      .join(idx, Seq("cell"))
+    val pairs = broadcast(q).join(idx, Seq("cell"))
       .withColumn("cos", graft.sim.Similarity.cosine(dot(col("ea"), col("eb")), col("na"), col("nb")))
     pairs.groupBy("vec_id")
       .agg(graft.agg.TopKAgg.topK(k)(col("cos"), col("nb_id")).as("nn"))

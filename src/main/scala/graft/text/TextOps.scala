@@ -382,8 +382,8 @@ object TextOps {
       graft.Ckpt.truncate(df, explicit = checkpointDir)
     val sp = pairs.sparkSession
     val fwd = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    val edges = ckpt(fwd.union(
-        pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
+    val raw = fwd.union(
+      pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
     // SMALL-GRAPH CUT (guide §8.4 decide-small): the duplicate graph is
     // usually tiny relative to the corpus (edges = confirmed near-dup
     // pairs), and each distributed round costs 2 checkpoints + a
@@ -391,17 +391,25 @@ object TextOps {
     // drill-family wall. Up to `spark.sql.graft.ccLocalEdges` edges
     // (default 1M ≈ 16 MB collected — broadcast-relation territory)
     // the component minimum is computed exactly by a driver union-find
-    // instead: same labels, any diameter, two jobs total. 0 disables
-    // (the specs pin the distributed loop through it); long-id graphs
-    // only — any other id type falls through to the loop.
-    val localCap =
-      sp.conf.get("spark.sql.graft.ccLocalEdges", "1000000").toLong
-    val longIds = edges.schema.fields.forall(
+    // instead: same labels, any diameter, one bounded collect of the
+    // raw edges and no checkpoint write. 0 disables (the specs pin the
+    // distributed loop through it); long-id graphs only — any other id
+    // type falls through to the loop.
+    val localCap = math.min(Int.MaxValue - 1L,
+      sp.conf.get("spark.sql.graft.ccLocalEdges", "1000000").toLong).toInt
+    val longIds = raw.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
-    if (longIds && localCap > 0 && edges.count() <= localCap) {
-      import sp.implicits._
-      val es = edges.as[(Long, Long)].collect()
-      edges.unpersist(false)
+    // at most cap+1 rows come back, and more than cap decides "big":
+    // a big graph then evaluates `pairs` once more for its checkpoint,
+    // a cost the round loop that follows dwarfs
+    val local =
+      if (longIds && localCap > 0) {
+        import sp.implicits._
+        Some(raw.as[(Long, Long)].limit(localCap + 1).collect())
+          .filter(_.length <= localCap)
+      } else None
+    if (local.isDefined) {
+      val es = local.get
       // union-find with path halving; cluster = component minimum
       // (identical to the loop's converged min-label)
       val parent = scala.collection.mutable.LongMap.empty[Long]
@@ -435,6 +443,8 @@ object TextOps {
           org.apache.spark.sql.types.StructField("cluster",
             org.apache.spark.sql.types.LongType))))
     }
+    // distributed path only: the loop re-joins the edges every round
+    val edges = ckpt(raw)
     var labels = ckpt(edges.select(col("src").as("doc_id")).distinct()
       .withColumn("label", col("doc_id")))
     var changed = 1L

@@ -78,4 +78,23 @@ class PipelineSpec extends AnyFunSuite {
     assert(res.selected.length === 2)
     assert(res.auc >= 0.0 && res.auc <= 1.0)
   }
+
+  test("autotype measures the numeric-parse share over NON-NULL values: " +
+    "a numeric column with 30% missing is typed N, a 30%-missing text " +
+    "column stays C") {
+    val s0 = spark
+    import s0.implicits._
+    val df = (0 until 100).map { i =>
+      val missing = i % 10 < 3
+      (if (missing) None else Some(i * 1.5),
+        if (missing) None else Some(s"lvl_${i % 7}"))
+    }.toDF("x", "t")
+    val kinds = graft.ops.AutoType.profile(df, Seq("x", "t")).collect()
+      .map(r => r.getAs[String]("col_name") ->
+        (r.getAs[Long]("n_null"), r.getAs[String]("col_kind"))).toMap
+    assert(kinds("x") === (30L, "N"))
+    assert(kinds("t") === (30L, "C"))
+    val (num, cat) = Pipeline.autoColumns(df, Seq("x", "t"))
+    assert(num === Seq("x") && cat === Seq("t"))
+  }
 }

@@ -1048,4 +1048,115 @@ class AnnIngestSpec extends AnyFunSuite {
       .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(ids === (1L to 30L))
   }
+
+  test("a cell dir that is not a cell id (a null-key partition, " +
+    "cell=__HIVE_DEFAULT_PARTITION__) is skipped by the occupancy " +
+    "footer walk: compaction completes and every live id stays " +
+    "indexed exactly once") {
+    val s = spark
+    import s.implicits._
+    val t = java.nio.file.Files.createTempDirectory("graft_annh").toString
+    val idx = s"$t/idx"
+    AnnIngest.ingestBatch(vecs(0 until 40), 0L, idx, nCells = 4)
+    AnnIngest.compact(spark, idx, 0L)
+    // a zero-row null-key partition inside the live run
+    Seq.empty[(Long, Seq[Double], Double)].toDF("vec_id", "e", "norm")
+      .write.parquet(s"$idx/vectors/run_0_0/cell=__HIVE_DEFAULT_PARTITION__")
+    // a 5-row fold lands in a smaller size class: run_0_0 stays live and
+    // the skew report walks its cell dirs
+    AnnIngest.ingestBatch(vecs(40 until 45), 1L, idx, nCells = 4)
+    AnnIngest.compact(spark, idx, 1L)
+    val m = IngestIndex.readManifest(spark, idx)
+    assert(m.maxCompacted === 1L)
+    assert(m.runs("vectors").map(_.name).contains("run_0_0"))
+    val ids = AnnIngest.readIndex(spark, idx, None)
+      .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids === (0L until 45L))
+  }
+
+  /** Run `body` and return (jobs it launched, the (name, details) of
+    * every stage of those jobs). Jobs are matched by a job group set on
+    * this thread, so a stray job from elsewhere never counts. */
+  private def jobsOf(body: => Unit): (Int, Seq[(String, String)]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"ann_budget_${java.util.UUID.randomUUID()}"
+    val seen =
+      new java.util.concurrent.ConcurrentLinkedQueue[Seq[(String, String)]]()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.jobGroup.id") == group)
+          seen.add(j.stageInfos.map(si => (si.name, si.details)))
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "ANN job budget")
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.TestBus.drain(sc)
+      sc.removeSparkListener(l)
+    }
+    import scala.jdk.CollectionConverters._
+    (seen.size, seen.asScala.toSeq.flatten)
+  }
+
+  test("job budget: over 2 runs, 2 deltas and a takedown tombstone, " +
+    "queryTopK and compact launch no per-dir schema-inference job, a " +
+    "query stays within 8 jobs, and a non-deterministic query frame " +
+    "is evaluated once (every returned id has its full rank list)") {
+    val s = spark
+    import s.implicits._
+    val t = java.nio.file.Files.createTempDirectory("graft_annj").toString
+    val idx = s"$t/idx"
+    AnnIngest.ingestBatch(vecs(0 until 40), 0L, idx, nCells = 4)
+    AnnIngest.compact(spark, idx, 0L)
+    AnnIngest.ingestBatch(vecs(40 until 50), 1L, idx, nCells = 4)
+    AnnIngest.compact(spark, idx, 1L)
+    AnnIngest.ingestBatch(vecs(50 until 60), 2L, idx, nCells = 4)
+    AnnIngest.ingestBatch(vecs(60 until 70), 3L, idx, nCells = 4)
+    val deleted = Set(3L, 55L)
+    AnnIngest.delete(spark, idx, deleted.toSeq.toDF("vec_id"), "gone")
+    val (runs, deltas) = AnnIngest.live(spark, idx, Long.MaxValue)
+    assert(runs.length === 2 && deltas.length === 2)
+    assert(AnnIngest.tombDirs(spark, idx).length === 1)
+    def inferred(stages: Seq[(String, String)]) = stages.filter {
+      case (name, details) => (name + details).contains("parquet at AnnIngest")
+    }.map(_._1)
+
+    val k = 3
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val (qJobs, qStages) = jobsOf {
+      rows = AnnIngest.queryTopK(spark, idx, vecs(0 until 70), k = k,
+        nProbe = 2).collect()
+    }
+    assert(inferred(qStages).isEmpty, inferred(qStages).mkString("\n"))
+    assert(qJobs <= 8, s"queryTopK launched $qJobs jobs: " +
+      qStages.map(_._1).mkString(", "))
+    assert(rows.map(_.getLong(0)).distinct.length === 70)
+
+    // a frame whose row set changes per evaluation: every id the query
+    // returns must come with ranks 1..k, and a live indexed id must be
+    // its own top-1 — its probes and its vector are one evaluation
+    def consistent(frame: org.apache.spark.sql.DataFrame): Unit = {
+      val byId = AnnIngest.queryTopK(spark, idx, frame, k = k, nProbe = 4)
+        .collect().groupBy(_.getLong(0))
+      assert(byId.nonEmpty)
+      byId.foreach { case (id, rs) =>
+        assert(rs.map(_.getInt(1)).sorted.toSeq === (1 to k), s"id $id")
+        if (!deleted(id))
+          assert(rs.find(_.getInt(1) == 1).map(_.getLong(2)) === Some(id),
+            s"id $id is not its own top-1")
+      }
+    }
+    consistent(vecs(0 until 70).repartition(4).sample(0.5))
+    consistent(vecs(0 until 70).repartition(4).limit(20))
+
+    val (cJobs, cStages) = jobsOf(AnnIngest.compact(spark, idx, 3L))
+    assert(inferred(cStages).isEmpty, inferred(cStages).mkString("\n"))
+    assert(cJobs > 0)
+    val live = AnnIngest.readIndex(spark, idx, None)
+      .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(live === (0L until 70L).filterNot(deleted))
+  }
 }
