@@ -1,6 +1,9 @@
 package graft.agg
 
 import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.ScalaReflection
+import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder,
+  ExpressionEncoder}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
@@ -46,12 +49,22 @@ final class TopKAgg(k: Int)
   override def finish(r: Seq[(Double, Long)]): Seq[(Double, Long)] = r
 
   override def bufferEncoder: Encoder[Seq[(Double, Long)]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
+    ExpressionEncoder(TopKAgg.BufEncoder)
   override def outputEncoder: Encoder[Seq[(Double, Long)]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
+    ExpressionEncoder(TopKAgg.BufEncoder)
 }
 
 object TopKAgg {
+  /** The buffer/output type's encoder, derived from its TypeTag ONCE per
+    * JVM. Spark asks the aggregator for its encoders in every task that
+    * runs it, and a TypeTag derivation walks Scala runtime reflection:
+    * a global lock, plus class lookups that miss on the task's session
+    * class loader and go to the driver over RPC — a per-task cost that
+    * grows with load. The agnostic encoder is immutable, so each call
+    * above wraps a fresh ExpressionEncoder around the shared one. */
+  private val BufEncoder: AgnosticEncoder[Seq[(Double, Long)]] =
+    ScalaReflection.encoderFor[Seq[(Double, Long)]]
+
   /** Column form: `topK(5)(scoreCol, idCol)` → array<struct<score,id>>,
     * descending; explode with posexplode for (rank-1, neighbor) rows. */
   def topK(k: Int): (Column, Column) => Column = {

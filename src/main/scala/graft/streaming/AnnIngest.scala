@@ -481,8 +481,14 @@ object AnnIngest {
       indexDir: String, cells: Option[Seq[Int]]): DataFrame = {
     val (runs, deltas) = liveWith(m, sp, indexDir, Long.MaxValue)
     val all = readDirs(sp, runs ++ deltas)
-    minusTombs(m, sp, indexDir,
-      cells.fold(all)(cs => all.filter(col("cell").isin(cs: _*))))
+    // array_contains over an array LITERAL, not isin: generated code
+    // inlines an IN list's values, so each distinct cell set would
+    // compile a fresh predicate class — once per query, since the
+    // optimizer also infers this filter onto the probe side of the
+    // query's cell join. An array literal is referenced, not inlined,
+    // so every cell set shares one class.
+    minusTombs(m, sp, indexDir, cells.fold(all)(cs =>
+      all.filter(array_contains(lit(cs.toArray), col("cell")))))
       .drop("src_id")
   }
 

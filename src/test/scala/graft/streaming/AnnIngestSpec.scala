@@ -1159,4 +1159,30 @@ class AnnIngestSpec extends AnyFunSuite {
       .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(live === (0L until 70L).filterNot(deleted))
   }
+
+  test("a query probing a cell set no earlier query probed compiles no " +
+    "new code: the cell filter's values are not inlined into generated " +
+    "classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val t = java.nio.file.Files.createTempDirectory("graft_anncg").toString
+    val idx = s"$t/idx"
+    AnnIngest.ingestBatch(vecs(0 until 30), 0L, idx, nCells = 4)
+    AnnIngest.ingestBatch(vecs(30 until 60), 1L, idx, nCells = 4)
+    // one indexed vector per cell: a one-vector self query with
+    // nProbe = 1 probes exactly that vector's cell
+    val byCell = AnnIngest.readIndex(spark, idx, None)
+      .select("cell", "vec_id").collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap.toSeq.sortBy(_._1)
+    assert(byCell.length >= 3, s"cells populated: $byCell")
+    def query(id: Long): Unit = {
+      val rows = AnnIngest.queryTopK(spark, idx, vecs(id.toInt to id.toInt),
+        k = 3, nProbe = 1).collect()
+      assert(rows.find(_.getInt(1) == 1).map(_.getLong(2)) === Some(id))
+    }
+    query(byCell(0)._2)
+    query(byCell(1)._2)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    query(byCell(2)._2)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === before)
+  }
 }
