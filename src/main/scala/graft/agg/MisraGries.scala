@@ -1,6 +1,9 @@
 package graft.agg
 
 import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.ScalaReflection
+import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder,
+  ExpressionEncoder}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
@@ -58,12 +61,18 @@ final class MisraGries(k: Int)
     r.toSeq.sortBy { case (t, c) => (-c, t) }
 
   override def bufferEncoder: Encoder[Map[String, Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
+    ExpressionEncoder(MisraGries.BufEncoder)
   override def outputEncoder: Encoder[Seq[(String, Long)]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
+    ExpressionEncoder(MisraGries.OutEncoder)
 }
 
 object MisraGries {
+  /** Derived once per JVM, not per task — see `TopKAgg.BufEncoder`. */
+  private val BufEncoder: AgnosticEncoder[Map[String, Long]] =
+    ScalaReflection.encoderFor[Map[String, Long]]
+  private val OutEncoder: AgnosticEncoder[Seq[(String, Long)]] =
+    ScalaReflection.encoderFor[Seq[(String, Long)]]
+
   /** Column form: `sketch(k)(itemCol)` → array<struct<item, est>>. */
   def sketch(k: Int): Column => Column = {
     val fn = udaf(new MisraGries(k), Encoders.STRING)

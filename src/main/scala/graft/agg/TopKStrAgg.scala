@@ -1,6 +1,9 @@
 package graft.agg
 
 import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.ScalaReflection
+import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder,
+  ExpressionEncoder}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
@@ -36,12 +39,16 @@ final class TopKStrAgg(k: Int)
   override def finish(r: Seq[(Double, String)]): Seq[(Double, String)] = r
 
   override def bufferEncoder: Encoder[Seq[(Double, String)]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
+    ExpressionEncoder(TopKStrAgg.BufEncoder)
   override def outputEncoder: Encoder[Seq[(Double, String)]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
+    ExpressionEncoder(TopKStrAgg.BufEncoder)
 }
 
 object TopKStrAgg {
+  /** Derived once per JVM, not per task — see `TopKAgg.BufEncoder`. */
+  private val BufEncoder: AgnosticEncoder[Seq[(Double, String)]] =
+    ScalaReflection.encoderFor[Seq[(Double, String)]]
+
   /** Column form: `topK(3)(scoreCol, strIdCol)` → array<struct<score,id>>
     * descending; posexplode for (rank-1, member) rows. */
   def topK(k: Int): (Column, Column) => Column = {

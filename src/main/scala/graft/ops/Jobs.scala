@@ -34,4 +34,12 @@ object Jobs {
   def fork[T](body: => T): Future[T] = Future(body)(pool)
 
   def join[T](f: Future[T]): T = Await.result(f, Duration.Inf)
+
+  /** Every result, in order. Waits for ALL the futures before raising
+    * the first failure, so no forked chain still submits jobs after the
+    * caller has moved on. */
+  def joinAll[T](fs: Seq[Future[T]]): Seq[T] = {
+    fs.foreach(Await.ready(_, Duration.Inf))
+    fs.map(join)
+  }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 
 import graft.catalog._
@@ -14,7 +15,10 @@ import graft.catalog._
   * (`MapReducerStatsWorker.java:93-150`, `UpdateBinningInfoReducer`).
   *
   * Scale: both passes are full scans with map-side partial aggregation;
-  * shuffled data is O(columns × bins), independent of row count.
+  * shuffled data is O(columns × bins), independent of row count. Both are
+  * long format, keyed by column as the reference computes them, so each
+  * aggregate stays about a dozen fields wide at any column count (see
+  * [[statsAggregate]] for what a row-wide aggregate costs).
   */
 object StatsPipeline {
 
@@ -42,28 +46,73 @@ object StatsPipeline {
       else None
   }
 
-  /** The shared six moment aggregates per column — ONE definition so the
-    * lean and full stats passes can never diverge on the null/miss
-    * convention. */
-  private def momentAggs(c: String): Seq[Column] =
-    Seq(count(col(c)).as(s"${c}__cnt"),
-      sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}__miss"),
-      sum(col(c)).as(s"${c}__sum"),
-      sum(col(c) * col(c)).as(s"${c}__sumsq"),
-      min(col(c)).as(s"${c}__min"),
-      max(col(c)).as(s"${c}__max"))
-  private def decodeMoments(r: org.apache.spark.sql.Row, c: String): NumStats =
+  /** The shared six moment aggregates over one value column — ONE
+    * definition so the lean and full stats passes can never diverge on
+    * the null/miss convention. */
+  private def momentAggs(v: Column): Seq[Column] =
+    Seq(count(v).as("cnt"),
+      sum(when(v.isNull, 1L).otherwise(0L)).as("miss"),
+      sum(v).as("sum"),
+      sum(v * v).as("sumsq"),
+      min(v).as("min"),
+      max(v).as("max"))
+  private def decodeMoments(r: Row, c: String): NumStats =
     NumStats(c,
-      r.getAs[Long](s"${c}__cnt"), r.getAs[Long](s"${c}__miss"),
-      r.getAs[Double](s"${c}__sum"), r.getAs[Double](s"${c}__sumsq"),
-      r.getAs[Double](s"${c}__min"), r.getAs[Double](s"${c}__max"))
+      r.getAs[Long]("cnt"), r.getAs[Long]("miss"),
+      r.getAs[Double]("sum"), r.getAs[Double]("sumsq"),
+      r.getAs[Double]("min"), r.getAs[Double]("max"))
+
+  /** The stats aggregate in long format: `stack` unpivots the columns to
+    * (column index `ci`, value `v`) rows and one `groupBy(ci)` runs the
+    * aggregates — one output row per column, about a dozen fields wide.
+    * A row-wide `df.agg` needs ~11 functions per column — 275 for 25
+    * columns, past `spark.sql.codegen.maxFields` — and every task then
+    * regenerated projection code for the whole width. Within a partition
+    * each column's values arrive in the same order as in a one-column
+    * aggregate, so every output is bit-identical to it. Past 128 columns
+    * the full pass's object-hash aggregate sorts the rest of each task's
+    * input instead of hashing it
+    * (`spark.sql.objectHashAggregate.sortBased.fallbackThreshold`).
+    * `full` adds the 3rd/4th moment sums and the HLL distinct, and the
+    * sketched quartiles unless `pctAccuracy = Int.MaxValue` (exact
+    * quantiles are computed outside). */
+  private[graft] def statsAggregate(df: DataFrame, cols: Seq[String],
+                                    full: Boolean,
+                                    pctAccuracy: Int = 10000): DataFrame = {
+    // quoted: a name with '.', '|' or a backtick is one plain column here
+    def ref(c: String) = col("`" + c.replace("`", "``") + "`")
+    val unpivot = stack(lit(cols.length) +: cols.zipWithIndex.flatMap {
+      case (c, i) => Seq(lit(i), ref(c).cast("double")) }: _*)
+    val v = col("v")
+    val tail =
+      if (!full) Nil
+      else Seq(sum(v * v * v).as("sum3"), sum(v * v * v * v).as("sum4")) ++
+        (if (pctAccuracy == Int.MaxValue) Nil
+         else Seq(percentile_approx(v,
+           array(lit(0.25), lit(0.5), lit(0.75)), lit(pctAccuracy)).as("pct"))) :+
+        approx_count_distinct(v).as("dist")
+    val aggs = momentAggs(v) ++ tail
+    df.select(unpivot.as(Seq("ci", "v"))).groupBy("ci")
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Runs [[statsAggregate]] and returns each column's row, by position
+    * in `cols`. A column with no input rows (an empty frame) gets no
+    * group; it decodes from an all-null row, exactly as the one-row
+    * aggregate of an empty frame did: count 0, sums 0.0, no quartiles. */
+  private def statsRows(df: DataFrame, cols: Seq[String], full: Boolean,
+                        pctAccuracy: Int = 10000): IndexedSeq[Row] = {
+    val agg = statsAggregate(df, cols, full, pctAccuracy)
+    val byIndex = agg.collect().map(r => r.getAs[Int]("ci") -> r).toMap
+    val empty = new GenericRowWithSchema(
+      new Array[Any](agg.schema.length), agg.schema)
+    cols.indices.map(i => byIndex.getOrElse(i, empty))
+  }
 
   /** Pass 1: moments for all numeric columns in ONE aggregation. */
-  def numericStats(df: DataFrame, cols: Seq[String]): Map[String, NumStats] = {
-    val aggs = cols.flatMap(momentAggs)
-    val r = df.agg(aggs.head, aggs.tail: _*).head()
-    cols.map(c => c -> decodeMoments(r, c)).toMap
-  }
+  def numericStats(df: DataFrame, cols: Seq[String]): Map[String, NumStats] =
+    cols.zip(statsRows(df, cols, full = false))
+      .map { case (c, r) => c -> decodeMoments(r, c) }.toMap
 
   /** Pass 1 extended: the FULL ColumnStats field family for all columns,
     * ONE aggregation / one scan at the (default) sketched accuracy.
@@ -80,20 +129,7 @@ object StatsPipeline {
                          ExactQuantiles.DefaultDispatchThreshold)
       : Map[String, FullNumStats] = {
     val exact = pctAccuracy == Int.MaxValue
-    val aggs = cols.flatMap { c =>
-      momentAggs(c) ++ Seq(
-        sum(col(c) * col(c) * col(c)).as(s"${c}__sum3"),
-        sum(col(c) * col(c) * col(c) * col(c)).as(s"${c}__sum4")) ++
-        (if (exact) Nil
-         else Seq(
-           // Column API, not string SQL: hostile column names (backticks,
-           // '|', spaces) never reach a parser here
-           percentile_approx(col(c),
-             array(lit(0.25), lit(0.5), lit(0.75)),
-             lit(pctAccuracy)).as(s"${c}__pct"))) :+
-        approx_count_distinct(col(c)).as(s"${c}__dist")
-    }
-    val r = df.agg(aggs.head, aggs.tail: _*).head()
+    val rows = statsRows(df, cols, full = true, pctAccuracy)
     // the main agg already carries counts + approx_count_distinct —
     // dispatch on them directly (see ExactQuantiles.quantilesAuto): the
     // in-agg exact sketch's cost grows with rows × buffer, so past a few
@@ -101,9 +137,9 @@ object StatsPipeline {
     // stays linear
     val exactPct: Map[String, Seq[Double]] =
       if (!exact) Map.empty
-      else if (cols.map(c => r.getAs[Long](s"${c}__dist")).max >
+      else if (rows.map(_.getAs[Long]("dist")).max >
             exactDispatchThreshold ||
-          cols.map(c => r.getAs[Long](s"${c}__cnt")).max >
+          rows.map(_.getAs[Long]("cnt")).max >
             exactDispatchThreshold)
         ExactQuantiles.quantiles(df, cols, Seq(0.25, 0.5, 0.75))
       else {
@@ -121,17 +157,16 @@ object StatsPipeline {
                 else pr.getSeq[Double](i).toSeq)
         }.toMap
       }
-    cols.map { c =>
-      val basic = decodeMoments(r, c)
+    cols.zip(rows).map { case (c, r) =>
       // arrays come back as mutable.ArraySeq — use the collection root type
       val pct =
         if (exact) Some(exactPct(c)).filter(_.forall(!_.isNaN))
-        else Option(r.getAs[scala.collection.Seq[Double]](s"${c}__pct"))
+        else Option(r.getAs[scala.collection.Seq[Double]]("pct"))
           .filter(_.length == 3).map(_.toSeq)
-      c -> FullNumStats(basic,
-        r.getAs[Double](s"${c}__sum3"), r.getAs[Double](s"${c}__sum4"),
+      c -> FullNumStats(decodeMoments(r, c),
+        r.getAs[Double]("sum3"), r.getAs[Double]("sum4"),
         p25 = pct.map(_(0)), median = pct.map(_(1)), p75 = pct.map(_(2)),
-        distinct = r.getAs[Long](s"${c}__dist"))
+        distinct = r.getAs[Long]("dist"))
     }.toMap
   }
 
@@ -162,10 +197,13 @@ object StatsPipeline {
     * scans total. With `full = true` the first scan additionally fills
     * the long tail of the reference's per-column ColumnStats
     * (`udf/CalculateNewStatsUDF.java:86-117`): quartiles,
-    * skewness/kurtosis, HLL distinct, missing percentage. The tail costs
-    * real time (two TypedImperative sketches per column), so the
-    * lifecycle `stats` step opts in while binning-only callers (norm,
-    * varsel ranking, posttrain) stay on the lean pass.
+    * skewness/kurtosis, HLL distinct, missing percentage. The tail's
+    * quartile sketch is a typed-imperative aggregate, which keeps the
+    * pass out of whole-stage codegen; because the pass is long format
+    * ([[statsAggregate]]), the projections each task generates are one
+    * value wide whatever the column count. The lifecycle `stats` step
+    * opts in while binning-only callers (norm, varsel ranking,
+    * posttrain) stay on the lean, moments-only pass.
     * `weight` defaults to 1.0, which makes the weighted duals equal the
     * count metrics (the reference's no-weightColumnName convention). */
   def profileNumeric(df: DataFrame, cols: Seq[String], isPos: Column,

@@ -1,6 +1,9 @@
 package graft.sim
 
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.ScalaReflection
+import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder,
+  ExpressionEncoder}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -53,11 +56,12 @@ object Pca {
       (a._1 + b._1, a._2, a._3)
     }
     override def finish(r: CovBuf): CovBuf = r
-    override def bufferEncoder: Encoder[CovBuf] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-    override def outputEncoder: Encoder[CovBuf] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
+    override def bufferEncoder: Encoder[CovBuf] = ExpressionEncoder(CovEncoder)
+    override def outputEncoder: Encoder[CovBuf] = ExpressionEncoder(CovEncoder)
   }
+  /** Derived once per JVM, not per task — see `TopKAgg.BufEncoder`. */
+  private val CovEncoder: AgnosticEncoder[CovBuf] =
+    ScalaReflection.encoderFor[CovBuf]
 
   /** Sample covariance of a d-dim array column: (i, j, cov) upper
     * triangle (i ≤ j), rounded at `scale` digits. ONE corpus scan. */

@@ -130,4 +130,54 @@ class TrainDotSpec extends AnyFunSuite {
     assert(Train.randomForest(d, Seq("x1", "x2"), col("label"),
       numTrees = 5).auc > 0.7)
   }
+
+  test("bagged fits its bags concurrently with the same models as " +
+    "sequential logistic fits of the same bag filters") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(17)
+    val d = (1 to 3000).map { i =>
+      val pos = rnd.nextDouble() < 0.2
+      (i.toLong, rnd.nextGaussian() + (if (pos) 0.8 else 0.0),
+        rnd.nextGaussian(), rnd.nextGaussian() * 3, pos)
+    }.toDF("id", "x1", "x2", "x3", "label").repartition(4)
+    val feats = Seq("x1", "x2", "x3")
+    def lr(t: Train.Trained) = t.model.stages.last
+      .asInstanceOf[org.apache.spark.ml.classification.LogisticRegressionModel]
+    val bags = Train.bagged(d, feats, col("label"), col("id"), k = 3)
+    val seq = (0 until 3).map(i =>
+      Train.logistic(Train.bag(d, col("id"), i), feats, col("label")))
+    assert(bags.length === 3)
+    bags.zip(seq).zipWithIndex.foreach { case ((b, s), i) =>
+      assert(lr(b).coefficients.toArray.toSeq ===
+        lr(s).coefficients.toArray.toSeq, s"bag $i coefficients")
+      assert(lr(b).intercept === lr(s).intercept, s"bag $i intercept")
+      // not ===: MLlib's evaluator bins the ROC curve after a sort whose
+      // range bounds are sampled with a seed taken from the RDD id, so
+      // two sequential evaluations of one model differ by ~1e-5 too
+      assert(math.abs(b.auc - s.auc) < 1e-4, s"bag $i auc ${b.auc} ${s.auc}")
+    }
+  }
+
+  test("bagged raises a failing bag's error after the other bags finish, " +
+    "and does not hang") {
+    import spark.implicits._
+    val d = (1 to 300).map(i => (i.toLong, i % 7 * 1.0, i % 3 == 0))
+      .toDF("id", "x1", "label")
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val done = new java.util.concurrent.atomic.AtomicInteger
+    val run = scala.concurrent.Future(Train.bagged(d, Seq("x1"),
+      col("label"), col("id"), k = 3, trainOne = (sub, f, l) =>
+        if (calls.incrementAndGet() == 2)
+          throw new IllegalStateException("bag failed")
+        else {
+          val t = Train.logistic(sub, f, l, maxIter = 2)
+          done.incrementAndGet(); t
+        }))(scala.concurrent.ExecutionContext.global)
+    val ex = intercept[IllegalStateException] {
+      scala.concurrent.Await.result(run,
+        scala.concurrent.duration.Duration(120, "s"))
+    }
+    assert(ex.getMessage === "bag failed")
+    assert(done.get() === 2, "bagged returned while a bag was still fitting")
+  }
 }
