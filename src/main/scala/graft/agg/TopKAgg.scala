@@ -24,27 +24,15 @@ import org.apache.spark.sql.functions.udaf
 final class TopKAgg(k: Int)
     extends Aggregator[(Double, Long), Seq[(Double, Long)], Seq[(Double, Long)]] {
 
-  private def lt(a: (Double, Long), b: (Double, Long)): Boolean =
-    a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
-
-  /** Insert into a (small, ≤k) descending-sorted buffer. */
-  private def insert(buf: Seq[(Double, Long)],
-                     x: (Double, Long)): Seq[(Double, Long)] = {
-    if (buf.length >= k && !lt(x, buf.last)) buf
-    else {
-      val (pre, post) = buf.span(lt(_, x))
-      (pre :+ x) ++ post.take(k - pre.length - 1)
-    }
-  }
-
   override def zero: Seq[(Double, Long)] = Vector.empty
 
   override def reduce(b: Seq[(Double, Long)],
-                      a: (Double, Long)): Seq[(Double, Long)] = insert(b, a)
+                      a: (Double, Long)): Seq[(Double, Long)] =
+    TopKAgg.insert(b, a, k)
 
   override def merge(x: Seq[(Double, Long)],
                      y: Seq[(Double, Long)]): Seq[(Double, Long)] =
-    y.foldLeft(x)(insert)
+    TopKAgg.merge(x, y, k)
 
   override def finish(r: Seq[(Double, Long)]): Seq[(Double, Long)] = r
 
@@ -55,6 +43,26 @@ final class TopKAgg(k: Int)
 }
 
 object TopKAgg {
+  /** The selection order: score DESC, then id ASC. */
+  def before(a: (Double, Long), b: (Double, Long)): Boolean =
+    a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
+
+  /** Insert `x` into a descending-sorted buffer of at most `k` entries —
+    * the one bounded top-k step: this aggregator, the ANN query's
+    * per-partition loop and its driver merge all select through it. */
+  def insert(buf: Seq[(Double, Long)], x: (Double, Long),
+             k: Int): Seq[(Double, Long)] =
+    if (buf.length >= k && !before(x, buf.last)) buf
+    else {
+      val (pre, post) = buf.span(before(_, x))
+      (pre :+ x) ++ post.take(k - pre.length - 1)
+    }
+
+  /** Merge two bounded buffers into one of at most `k` entries. */
+  def merge(x: Seq[(Double, Long)], y: Seq[(Double, Long)],
+            k: Int): Seq[(Double, Long)] =
+    y.foldLeft(x)(insert(_, _, k))
+
   /** The buffer/output type's encoder, derived from its TypeTag ONCE per
     * JVM. Spark asks the aggregator for its encoders in every task that
     * runs it, and a TypeTag derivation walks Scala runtime reflection:

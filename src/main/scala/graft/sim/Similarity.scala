@@ -42,16 +42,14 @@ object Similarity {
       .withColumn("norm", sqrt(dot(col("e"), col("e"))))
   }
 
-  /** Cosine with the zero-vector contract: a zero-norm side has no
-    * direction, so its similarity to ANYTHING is defined as 0.0 —
-    * never NaN, never an ANSI division-by-zero crash (zero vectors DO
-    * occur in real corpora: dead embeddings, padded rows). A zero
-    * vector therefore never outranks a real neighbor; it can still
-    * appear in a top-k tail at cos 0, tie-broken by id as usual.
+  /** Cosine with the zero-vector contract ([[graft.expr.Cosine.of]]):
+    * a zero-norm side has no direction, so its similarity to ANYTHING
+    * is 0.0 — never NaN, never an ANSI division-by-zero crash (zero
+    * vectors DO occur in real corpora: dead embeddings, padded rows).
     * Found by the differential fuzz gate (edge-mode zero vectors took
     * down the whole ANN family under ANSI mode). */
   def cosine(dotCol: Column, na: Column, nb: Column): Column =
-    when(na * nb > lit(0.0), dotCol / (na * nb)).otherwise(lit(0.0))
+    graft.expr.Cosine.cosine(dotCol, na, nb)
 
   /** (vec_id, rank, nb_id, cos_r) from candidate pair rows carrying a
     * `cos` column — bounded top-k agg + posexplode, ordering identical to

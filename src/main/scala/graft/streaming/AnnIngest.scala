@@ -6,7 +6,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.expr.DotProduct.dot
 import graft.streaming.IngestIndex.{Manifest, Run}
 
 /** Streaming ANN index ingest — the similarity-family counterpart of
@@ -56,8 +55,12 @@ import graft.streaming.IngestIndex.{Manifest, Run}
   * assigned on the driver against the in-memory quantizer; the probed
   * cell set (≤ nCells values) becomes a partition filter on every run
   * scan, so a query touches `nProbe / nCells` of the corpus regardless
-  * of index size. Every run, delta and tombstone read uses the index's
-  * fixed at-rest schema (`vecSchema`, `tombSchema`) instead of
+  * of index size. A steady query is ONE Spark job: the probe table rides
+  * in the scan's task closure, each task keeps a bounded top-k per
+  * query, and the driver merges them; a live tombstone set of at most
+  * `TombBroadcastMax` rows is collected once per set and applied as a
+  * task-side predicate, not re-read by every query. Every run, delta
+  * and tombstone read uses the index's fixed at-rest schema (`vecSchema`, `tombSchema`) instead of
   * inferring one per directory, and the live runs and deltas are read
   * as ONE scan relation, so the number of Spark jobs a query or
   * compaction launches does not grow with the number of live dirs.
@@ -399,43 +402,103 @@ object AnnIngest {
         .select(col("vec_id"), col("cell"), applied.as("tb_applied"))
     }.reduce(_ union _)
 
-  /** Anti-join `rows` (must carry vec_id + cell + src_id) against
-    * normalized tombstone rows: match on vec_id, scoped to the row's
-    * cell when the tombstone names one, and to sources older than the
-    * tombstone's application when it carries an applied-at id. Small
-    * tombstone sets broadcast (shuffle-free BroadcastHashJoin — the
-    * vec_id equality is the hash key, the cell/source scopes ride
-    * along as the join's extra condition). */
-  private def antiTombs(rows: DataFrame, tombs: DataFrame,
-      small: Boolean): DataFrame = {
-    val t = (if (small) broadcast(tombs) else tombs)
+  /** The tombstone scope rule, the one definition both exclusion forms
+    * ([[antiTombs]] and [[TombSet]]) evaluate: a tombstone row
+    * (`tCell`, `tApplied`) excludes an index row with its vec_id from
+    * cell `cell` and source `src` when it names no cell or that cell, and
+    * carries no applied-at id or one above the row's source. The two
+    * scopes are INDEPENDENT: a split tombstone carries both (stale
+    * old-cell copy, pre-split sources); a scoped takedown carries only
+    * the source bound (every cell, pre-delete sources); a legacy takedown
+    * carries neither (exclude everywhere). A NULL row side never matches
+    * a scope that names it — SQL comparison semantics. */
+  private def inScope(tCell: Integer, tApplied: java.lang.Long,
+      cell: Integer, src: java.lang.Long): Boolean =
+    (tCell == null || (cell != null && tCell.intValue == cell.intValue)) &&
+      (tApplied == null || (src != null && src.longValue < tApplied.longValue))
+
+  private lazy val inScopeUdf = udf(inScope _)
+
+  /** Shuffled anti-join of `rows` (must carry vec_id + cell + src_id)
+    * against normalized tombstone rows — the form for tombstone sets
+    * above [[IngestIndex.TombBroadcastMax]] rows: vec_id equality is the
+    * join key, the [[inScope]] rule rides along as its extra
+    * condition. */
+  private def antiTombs(rows: DataFrame, tombs: DataFrame): DataFrame = {
+    val t = tombs
       .withColumnRenamed("vec_id", "tb_vid")
       .withColumnRenamed("cell", "tb_cell")
-    // cell scope and source scope are INDEPENDENT: a split tombstone
-    // carries both (stale old-cell copy, pre-split sources); a scoped
-    // takedown carries only the source bound (every cell, pre-delete
-    // sources); a legacy takedown carries neither (exclude everywhere)
     rows.join(t,
       rows("vec_id") === t("tb_vid") &&
-        (t("tb_cell").isNull || t("tb_cell") === rows("cell")) &&
-        (t("tb_applied").isNull || rows("src_id") < t("tb_applied")),
+        inScopeUdf(t("tb_cell"), t("tb_applied"), rows("cell"),
+          rows("src_id")),
       "left_anti")
   }
 
+  /** A live tombstone set of at most [[IngestIndex.TombBroadcastMax]]
+    * rows, held on the driver: vec_id → its (cell, applied-at) scopes.
+    * Its [[keep]] predicate ships with each task, so a read under it
+    * launches no tombstone job. */
+  private final class TombSet(rows: Array[org.apache.spark.sql.Row])
+      extends Serializable {
+    private val byId: Map[Long, Array[(Integer, java.lang.Long)]] =
+      rows.filterNot(_.isNullAt(0)).groupBy(_.getLong(0)).map {
+        case (id, rs) => id -> rs.map(r => (
+          if (r.isNullAt(1)) null else Integer.valueOf(r.getInt(1)),
+          if (r.isNullAt(2)) null else java.lang.Long.valueOf(r.getLong(2))))
+      }
+
+    /** Does the row (vec_id, cell, src_id) survive every tombstone? */
+    def keeps(id: java.lang.Long, cell: Integer,
+        src: java.lang.Long): Boolean =
+      id == null || byId.get(id.longValue).forall(!_.exists {
+        case (tc, ta) => inScope(tc, ta, cell, src)
+      })
+
+    @transient lazy val keep =
+      udf((id: java.lang.Long, cell: Integer, src: java.lang.Long) =>
+        keeps(id, cell, src))
+  }
+
+  /** The tombstone exclusion for the live tombstone dirs `dirs` (rows
+    * must carry vec_id + cell + src_id) — identity when none are live.
+    * A set of at most [[IngestIndex.TombBroadcastMax]] rows is collected
+    * ONCE per tombstone-set key ([[IngestIndex.tombKey]]: each dir's
+    * mtime, file count and bytes, plus the manifest's tombs/tswept
+    * ledger, from which split tombstones take their applied-at id) and
+    * applied as a [[TombSet]] predicate, so a steady reader launches no
+    * tombstone job; a larger set keeps the shuffled [[antiTombs]]. */
+  private def tombFilter(m: Manifest, sp: SparkSession,
+      dirs: Seq[String]): DataFrame => DataFrame =
+    if (dirs.isEmpty) identity
+    else {
+      val t = tombRows(m, sp, dirs)
+      val ledger = (m.runs.getOrElse("tombs", Nil) ++
+        m.runs.getOrElse("tswept", Nil)).map(r => s"${r.name}=${r.rows}")
+        .sorted.mkString(",")
+      val held: Option[TombSet] =
+        IngestIndex.tombCached(sp, dirs, "ann", ledger) {
+          // one partition: a limit over several would take rows with
+          // one job per partition batch
+          val rs = t.coalesce(1)
+            .limit(IngestIndex.TombBroadcastMax.toInt + 1).collect()
+          if (rs.length > IngestIndex.TombBroadcastMax) None
+          else Some(new TombSet(rs))
+        }
+      held match {
+        case Some(set) => rows =>
+          rows.filter(set.keep(col("vec_id"), col("cell"), col("src_id")))
+        case None => rows => antiTombs(rows, t)
+      }
+    }
 
   /** Exclude tombstoned rows from `rows` — a no-op plan when no
     * tombstones are live (the common case pays nothing). Takes the
     * SAME manifest the caller planned its run set against, both for
     * read consistency and for the split-tombstone gating. */
   private def minusTombs(m: Manifest, sp: SparkSession, indexDir: String,
-      rows: DataFrame): DataFrame = {
-    val dirs = tombDirsWith(m, sp, indexDir)
-    if (dirs.isEmpty) rows
-    else {
-      val t = tombRows(m, sp, dirs)
-      antiTombs(rows, t, IngestIndex.tombsSmall(sp, dirs, t))
-    }
-  }
+      rows: DataFrame): DataFrame =
+    tombFilter(m, sp, tombDirsWith(m, sp, indexDir))(rows)
 
   /** Live (run dirs, delta dirs) under the manifest, batch deltas
     * strictly below `beforeBatch` (Long.MaxValue = everything). */
@@ -768,13 +831,7 @@ object AnnIngest {
       val n = d.split("/").last
       prevTombs.find(_.name == n).getOrElse(Run(n, upTo))
     }
-    val clean: DataFrame => DataFrame =
-      if (liveTombPaths.isEmpty) identity
-      else {
-        val ids = tombRows(m, sp, liveTombPaths)
-        val small = IngestIndex.tombsSmall(sp, liveTombPaths, ids)
-        df => antiTombs(df, ids, small)
-      }
+    val clean: DataFrame => DataFrame = tombFilter(m, sp, liveTombPaths)
     if (retrain) {
       if (runDirs.isEmpty && deltaDirs.isEmpty) return
       // clean BEFORE dropping the cell column: relocation tombstones
@@ -1125,31 +1182,38 @@ object AnnIngest {
   }
 
   /** Top-k cosine neighbors of `queries` (vec_id, embedding) against
-    * the persisted index, probing each query's `nProbe` nearest cells.
-    * Self-matches (same vec_id) are kept — callers screening a corpus
-    * against itself filter them.
+    * the persisted index, probing each query's `nProbe` nearest cells:
+    * (vec_id, rank, nb_id, cos_r) rows, ranked by (cos desc, nb_id asc),
+    * `cos_r` = `round(cos, 6)`. Self-matches (same vec_id) are kept —
+    * callers screening a corpus against itself filter them.
     *
-    * The query set is small by contract, so it is prepared and
-    * COLLECTED once: that driver copy is the query's only snapshot of
-    * `queries`. A caller frame with a non-deterministic row set (an
-    * unordered `limit`, a `sample`) is therefore evaluated exactly
-    * once, and every query row's probes and vector come from the same
-    * evaluation — re-executing such a frame in several subplans
-    * returns a different row set per use on real executor JVMs and
-    * silently joins to empty or partial results. Probes are assigned
-    * on the driver against the in-memory quantizer
-    * ([[graft.sim.Ivf.probeCells]], the same nearest-first, id-tie
-    * order as [[graft.sim.Ivf.assignProbes]]), so the probed cell set
-    * (≤ nCells values) is known before any index read: it prunes every
-    * run scan to the slices that can match, and the (vec_id, cell, ea,
-    * na) probe rows broadcast into the join on `cell` — candidate
-    * volume is ~n·nProbe/nCells, never n². One query is the collect
-    * plus the scoring plan's own jobs, whatever the number of runs,
-    * deltas and tombstones. */
+    * EAGER: the query set is collected and the index scanned when this
+    * is called, and the result is a local frame — a snapshot of the
+    * index at the call, which a later ingest, delete or compaction does
+    * not change. The driver copy of `queries` is the call's only
+    * evaluation of it, so a caller frame with a non-deterministic row
+    * set (an unordered `limit`, a `sample`) yields consistent probes and
+    * vectors per row. Probes are assigned on the driver against the
+    * in-memory quantizer ([[graft.sim.Ivf.probeCells]], the same
+    * nearest-first, id-tie order as [[graft.sim.Ivf.assignProbes]]), so
+    * the probed cell set (≤ nCells values) prunes every run scan before
+    * any index read ([[queryScan]]).
+    *
+    * ONE Spark job per steady query: the probe table (cell → query id,
+    * vector, norm) ships in the task closure; each task scores its
+    * pruned rows against the probes for the row's cell (the same
+    * [[graft.expr.DotProduct.fold]] and [[graft.expr.Cosine.of]] the
+    * Catalyst forms run) and keeps a bounded [[graft.agg.TopKAgg]]
+    * buffer per query; the driver merges the buffers — at most
+    * partitions × queries × k pairs come back. The first query after a
+    * tombstone-set change adds one job, which collects the set
+    * ([[tombFilter]]). */
   def queryTopK(sp: SparkSession, indexDir: String, queries: DataFrame,
                 k: Int = 3, nProbe: Int = 1): DataFrame = {
     import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
     import org.apache.spark.sql.types._
+    import graft.agg.TopKAgg
     // ONE manifest read for both the quantizer and the run set: a
     // retrain commit between two separate reads would pair old
     // centroids with new-quantizer cell ids — same value range,
@@ -1158,30 +1222,54 @@ object AnnIngest {
     val cents = centroidsOf(m, sp, indexDir).getOrElse(
       throw new IllegalStateException(
         s"no centroids at $indexDir — ingest at least one batch first"))
+    // (cell, (query vec_id, vector, norm)) per probe
     val probes = graft.sim.Similarity.prep(queries)
       .select(col("vec_id").cast("long"), col("e"), col("norm"))
       .collect().toSeq
       .flatMap { r =>
         val e = r.getSeq[Double](1).toArray
+        val ea = UnsafeArrayData.fromPrimitiveArray(e)
         graft.sim.Ivf.probeCells(cents, e, nProbe)
-          .map(c => Row(r.getLong(0), c, e.toSeq, r.getDouble(2)))
+          .map(c => c -> (r.getLong(0), ea, r.getDouble(2)))
       }
-    val cells = probes.map(_.getInt(1)).distinct
-    val q = sp.createDataFrame(probes.asJava, StructType(Seq(
-      StructField("vec_id", LongType), StructField("cell", IntegerType),
-      StructField("ea", ArrayType(DoubleType)),
-      StructField("na", DoubleType))))
-    val idx = readIndexWith(m, sp, indexDir, Some(cells))
-      .select(col("cell"), col("vec_id").as("nb_id"), col("e").as("eb"),
-        col("norm").as("nb"))
-    val pairs = broadcast(q).join(idx, Seq("cell"))
-      .withColumn("cos", graft.sim.Similarity.cosine(dot(col("ea"), col("eb")), col("na"), col("nb")))
-    pairs.groupBy("vec_id")
-      .agg(graft.agg.TopKAgg.topK(k)(col("cos"), col("nb_id")).as("nn"))
-      .select(col("vec_id"), posexplode(col("nn")).as(Seq("p", "nb")))
-      .select(col("vec_id"), (col("p") + 1).cast("int").as("rank"),
-        col("nb._2").as("nb_id"), round(col("nb._1"), 6).as("cos_r"))
+    val byCell = probes.groupBy(_._1)
+      .map { case (c, ps) => c -> ps.map(_._2).toArray }
+    val partial = queryScan(m, sp, indexDir, probes.map(_._1).distinct)
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val bufs = scala.collection.mutable.HashMap
+          .empty[Long, Seq[(Double, Long)]]
+        rows.foreach { r =>
+          if (!r.isNullAt(0)) byCell.get(r.getInt(0)).foreach { ps =>
+            val (nbId, eb, nb) = (r.getLong(1), r.getArray(2), r.getDouble(3))
+            ps.foreach { case (q, ea, na) =>
+              val cos = graft.expr.Cosine.of(
+                graft.expr.DotProduct.fold(ea, eb), na, nb)
+              bufs(q) = TopKAgg.insert(
+                bufs.getOrElse(q, Vector.empty), (cos, nbId), k)
+            }
+          }
+        }
+        Iterator.single(bufs.toArray)
+      }.collect()
+    val merged = partial.flatten.groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (q, bs) =>
+        q -> bs.map(_._2).reduce(TopKAgg.merge(_, _, k)) }
+    val out = merged.flatMap { case (q, buf) =>
+      buf.zipWithIndex.map { case ((cos, nb), i) => Row(q, i + 1, nb, cos) }
+    }
+    sp.createDataFrame(out.asJava, StructType(Seq(
+      StructField("vec_id", LongType), StructField("rank", IntegerType),
+      StructField("nb_id", LongType), StructField("cos", DoubleType))))
+      .select(col("vec_id"), col("rank"), col("nb_id"),
+        round(col("cos"), 6).as("cos_r"))
   }
+
+  /** The index rows a query over `cells` scores: (cell, vec_id, e, norm),
+    * partition-pruned to `cells`, tombstones excluded. */
+  private[streaming] def queryScan(m: Manifest, sp: SparkSession,
+      indexDir: String, cells: Seq[Int]): DataFrame =
+    readIndexWith(m, sp, indexDir, Some(cells))
+      .select(col("cell"), col("vec_id"), col("e"), col("norm"))
 
   /** Skew ratio recorded by the most recent compaction (None before
     * the first one). One tiny JSON read — the consumer side of

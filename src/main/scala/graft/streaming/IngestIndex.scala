@@ -943,48 +943,67 @@ object IngestIndex {
     * sweep, EVERY probe/read pays the exclusion — with a handful of
     * tombstoned keys the shuffled anti-join would repartition the whole
     * pruned index scan just to drop a few rows. Broadcasting turns it
-    * into a shuffle-free BroadcastHashJoin on the probe side; larger
-    * tombstone sets (bulk takedowns) keep the shuffled join. */
+    * into a shuffle-free BroadcastHashJoin on the probe side (the ANN
+    * index instead holds such a set on the driver and ships it as a
+    * task-side predicate); larger tombstone sets (bulk takedowns) keep
+    * the shuffled join. */
   val TombBroadcastMax = 10000L
 
-  /** Driver-side cache of the broadcast-or-shuffle sizing decision,
-    * keyed by the tombstone DIR SET plus each dir's modification
-    * time, file count, and total byte length:
-    * the serving path would otherwise pay one (tiny) sizing job per
-    * probe for as long as a tombstone is live. A new retraction
-    * changes the dir set; an overwrite — a not-yet-applied-tag retry,
-    * or a tag legitimately REUSED after its sweep (the applied-set
-    * check only covers the current manifest) — bumps the mtime, so a
-    * reused tag with different content can never ride a stale verdict
-    * into an oversized broadcast. Bounded by a hard cap like
-    * [[bloomCache]]. */
-  private val tombSizeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  /** Driver-side cache of what was derived from a live tombstone set —
+    * the gate's broadcast-or-shuffle sizing verdict, the ANN index's
+    * collected exclusion set — keyed by [[tombKey]]: the serving path
+    * would otherwise pay one (tiny) job per probe for as long as a
+    * tombstone is live. Bounded by a hard cap like [[bloomCache]]. */
+  private val tombCache =
+    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
-  private[streaming] def tombsSmall(sp: SparkSession, dirs: Seq[String],
-      tombs: => DataFrame): Boolean = {
-    // key = dir + mtime + file count + total bytes: mtime alone has
-    // 1-second granularity on many filesystems, so a tag overwritten
-    // twice within the same second with a much larger id set could
-    // ride the first write's stale "small" verdict into broadcasting
-    // an oversized tombstone set — the size fields catch that
-    val k = dirs.sorted.map { d =>
+  /** Cache key of a tombstone DIR SET: each dir's path, modification
+    * time, file count and total byte length, plus `extra` (state the
+    * cached value also derives from, e.g. a manifest ledger). A new
+    * retraction changes the dir set; an overwrite — a not-yet-applied-tag
+    * retry, or a tag legitimately REUSED after its sweep (the
+    * applied-set check only covers the current manifest) — bumps the
+    * mtime, and since mtime alone has 1-second granularity on many
+    * filesystems, the size fields catch a tag overwritten twice within
+    * one second with a different id set. None when a dir cannot be read:
+    * such a set has no trustworthy identity, so nothing is cached under
+    * it (a placeholder key would pin whatever the first caller derived
+    * to every later unreadable state). */
+  private[streaming] def tombKey(sp: SparkSession, dirs: Seq[String],
+      extra: String): Option[String] =
+    try Some(dirs.sorted.map { d =>
       val fs = fsFor(sp, d)
-      val (mt, cnt, len) = try {
-        val st = fs.getFileStatus(new Path(d))
-        val files = fs.listStatus(new Path(d))
-        (st.getModificationTime, files.length, files.map(_.getLen).sum)
-      } catch { case _: Throwable => (-1L, -1, -1L) }
-      s"$d@$mt@$cnt@$len"
-    }.mkString("|")
-    Option(tombSizeCache.get(k)).map(_.booleanValue).getOrElse {
-      if (tombSizeCache.size > 256) tombSizeCache.clear()
-      val v = tombs
-        .limit(TombBroadcastMax.toInt + 1).count() <= TombBroadcastMax
-      tombSizeCache.put(k, v)
-      v
+      val st = fs.getFileStatus(new Path(d))
+      val files = fs.listStatus(new Path(d))
+      s"$d@${st.getModificationTime}@${files.length}@${files.map(_.getLen).sum}"
+    }.mkString("|") + "#" + extra)
+    catch { case _: java.io.IOException => None }
+
+  /** `derive()` for the tombstone set `dirs` (+ `extra`), computed once
+    * per [[tombKey]] and recomputed on every call when the key cannot be
+    * built. `kind` separates the callers' value types in one cache. */
+  private[streaming] def tombCached[T <: AnyRef](sp: SparkSession,
+      dirs: Seq[String], kind: String, extra: String)(derive: => T): T =
+    tombKey(sp, dirs, extra) match {
+      case None => derive
+      case Some(k0) =>
+        val k = s"$kind:$k0"
+        Option(tombCache.get(k)).map(_.asInstanceOf[T]).getOrElse {
+          if (tombCache.size > 256) tombCache.clear()
+          val v = derive
+          tombCache.put(k, v)
+          v
+        }
     }
-  }
+
+  /** Is the tombstone set `dirs` (rows `tombs`) at most
+    * [[TombBroadcastMax]] rows? An early-exit limit+count, cached per
+    * [[tombKey]]. */
+  private[streaming] def tombsSmall(sp: SparkSession, dirs: Seq[String],
+      tombs: => DataFrame): Boolean =
+    tombCached(sp, dirs, "small", "")(java.lang.Boolean.valueOf(
+      tombs.limit(TombBroadcastMax.toInt + 1).count() <= TombBroadcastMax))
+      .booleanValue
 
   /** Anti-join `rows` (which must carry a `src_id` column) against
     * normalized (`keyName`, tb_bound) tombstones, broadcasting the

@@ -59,8 +59,8 @@ object Train {
 
   /** SVM (reference `ALGORITHM.SVM`, `ModelTrainConf.java:43-45`; Encog
     * SVMTrainer under `core/alg/`): MLlib LinearSVC — distributed hinge
-    * loss. rawPrediction is the margin, so the AUC evaluator applies
-    * unchanged. */
+    * loss. rawPrediction is the margin, so the AUC pass ([[rankAuc]])
+    * applies unchanged. */
   def svm(df: DataFrame, features: Seq[String], label: Column,
           maxIter: Int = 20, regParam: Double = 0.01): Trained = {
     val s = new LinearSVC().setMaxIter(maxIter).setRegParam(regParam)
@@ -127,14 +127,60 @@ object Train {
       // unlabeled rows can't be trained on (MLlib raises on NULL/NaN
       // labels): exclude them, the reference's invalid-tag filter shape
       .filter(col("label").isNotNull && !isnan(col("label")))
-      // fit, transform and the AUC evaluator each replay this projection
+      // fit, transform and the AUC pass each replay this projection
       // from the scan otherwise — materialize it once
       .transform(graft.Ckpt.truncate(_))
     val model = pipeline.fit(data)
-    val scored = model.transform(data)
-    val auc = new BinaryClassificationEvaluator().setLabelCol("label")
-      .setRawPredictionCol("rawPrediction").evaluate(scored)
-    Trained(model, auc)
+    Trained(model, rankAuc(model.transform(data)))
+  }
+
+  /** Exact ROC AUC of scored rows (`label`, `rawPrediction`): the
+    * Mann–Whitney statistic over the margin `rawPrediction[1]` — the
+    * score MLlib's binary evaluator reads — with `label > 0.5` positive
+    * and tied scores counted half, summed as 2U in `Long`s. Repeatable
+    * under any partitioning, where the evaluator bins its ROC curve
+    * after a sort whose range bounds are sampled with a seed taken from
+    * the RDD id. Ranks like [[graft.eval.Eval]]'s bucket sweep: a range
+    * repartition on the score keeps equal scores in one partition, each
+    * sorted partition returns (positives, negatives, local 2U), and the
+    * driver adds the cross-partition term — every negative of an
+    * earlier partition scores strictly lower — from prefix counts. No
+    * per-score table comes to the driver. NaN when a class is empty. */
+  private[graft] def rankAuc(scored: DataFrame): Double = {
+    val parts = math.max(scored.rdd.getNumPartitions, 1)
+    val perPart = scored
+      .select(org.apache.spark.ml.functions.vector_to_array(
+        col("rawPrediction")).getItem(1).as("s"),
+        (col("label") > 0.5).as("pos"))
+      .repartitionByRange(parts, col("s").asc)
+      .sortWithinPartitions(col("s").asc)
+      .queryExecution.toRdd.mapPartitions { rows =>
+        // per run of equal scores: its positives each beat the negatives
+        // below it (2 each) and tie its own negatives (1 each)
+        var pos, neg, u2, runPos, runNeg = 0L
+        var prev = 0.0
+        def close(): Unit = {
+          u2 += runPos * (2 * neg + runNeg)
+          pos += runPos; neg += runNeg; runPos = 0L; runNeg = 0L
+        }
+        rows.foreach { r =>
+          val x = r.getDouble(0)
+          if ((runPos + runNeg) > 0 && !(x == prev || (x.isNaN && prev.isNaN)))
+            close()
+          prev = x
+          if (r.getBoolean(1)) runPos += 1 else runNeg += 1
+        }
+        close()
+        Iterator.single((pos, neg, u2))
+      }.collect() // in partition order, i.e. ascending score ranges
+    var negBelow, u2 = 0L
+    perPart.foreach { case (p, n, local) =>
+      u2 += local + 2 * p * negBelow
+      negBelow += n
+    }
+    val (nPos, nNeg) = (perPart.map(_._1).sum, negBelow)
+    if (nPos == 0 || nNeg == 0) Double.NaN
+    else u2.toDouble / (2.0 * nPos.toDouble * nNeg.toDouble)
   }
 
   /** Grid search + k-fold cross validation (reference `gs/` grid configs +
@@ -429,10 +475,8 @@ object Train {
       .setLabelCol("label").setFeaturesCol("features")
     val wideModel = new Pipeline()
       .setStages(Array(hasher, outAssembler, outLr)).fit(withLogit)
-    val scored = wideModel.transform(withLogit)
-    val auc = new BinaryClassificationEvaluator().setLabelCol("label")
-      .setRawPredictionCol("rawPrediction").evaluate(scored)
-    WideDeep(deep, wideModel, wideCols, auc)
+    WideDeep(deep, wideModel, wideCols,
+      rankAuc(wideModel.transform(withLogit)))
   }
 
   /** k models over deterministic hash-split bags (~70% of the rows
@@ -442,10 +486,8 @@ object Train {
     * planning, the optimizer's driver loop) dominates at bench scale, so
     * overlapping the bags overlaps that residue. Each bag reads the same
     * filtered rows under the same partitioning as a sequential fit would,
-    * so the models equal sequential fits'. (`auc` can differ by ~1e-5
-    * between ANY two fits of one bag, sequential ones too: MLlib's
-    * evaluator samples its sort bounds with a seed taken from the RDD
-    * id.) If a fit throws, the other bags are awaited and the first
+    * so the models and their exact AUCs ([[rankAuc]]) equal sequential
+    * fits'. If a fit throws, the other bags are awaited and the first
     * failure (in bag order) is raised. */
   def bagged(df: DataFrame, features: Seq[String], label: Column,
              key: Column, k: Int = 3,

@@ -151,11 +151,31 @@ class TrainDotSpec extends AnyFunSuite {
       assert(lr(b).coefficients.toArray.toSeq ===
         lr(s).coefficients.toArray.toSeq, s"bag $i coefficients")
       assert(lr(b).intercept === lr(s).intercept, s"bag $i intercept")
-      // not ===: MLlib's evaluator bins the ROC curve after a sort whose
-      // range bounds are sampled with a seed taken from the RDD id, so
-      // two sequential evaluations of one model differ by ~1e-5 too
-      assert(math.abs(b.auc - s.auc) < 1e-4, s"bag $i auc ${b.auc} ${s.auc}")
+      assert(b.auc === s.auc, s"bag $i auc")
     }
+  }
+
+  test("rankAuc is the exact Mann-Whitney AUC, ties counted half, under " +
+    "any partitioning; one class gives NaN") {
+    import spark.implicits._
+    import org.apache.spark.ml.linalg.Vectors
+    val rnd = new scala.util.Random(5)
+    // few distinct scores, so ties cross partition boundaries
+    val rows = (1 to 2000).map { _ =>
+      val pos = rnd.nextDouble() < 0.3
+      ((rnd.nextInt(40) + (if (pos) 8 else 0)) / 4.0, pos)
+    }
+    val (ps, ns) = (rows.filter(_._2).map(_._1), rows.filterNot(_._2).map(_._1))
+    val u2 = ps.map(p => ns.map(n =>
+      if (p > n) 2L else if (p == n) 1L else 0L).sum).sum
+    val exact = u2.toDouble / (2.0 * ps.length * ns.length)
+    val df = rows.map { case (x, pos) =>
+      (Vectors.dense(-x, x), if (pos) 1.0 else 0.0)
+    }.toDF("rawPrediction", "label")
+    Seq(1, 3, 8).foreach { n =>
+      assert(Train.rankAuc(df.repartition(n)) === exact, s"$n partitions")
+    }
+    assert(Train.rankAuc(df.filter($"label" === 0.0)).isNaN)
   }
 
   test("bagged raises a failing bag's error after the other bags finish, " +

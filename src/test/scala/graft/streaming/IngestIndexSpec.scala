@@ -947,8 +947,44 @@ class IngestIndexSpec extends AnyFunSuite {
     AnnIngest.ingestBatch(emb.filter(col("vec_id") >= 30), 1L, aidx, 4)
     AnnIngest.compact(spark, aidx, 1L)
     lint("ann_read", AnnIngest.readIndex(spark, aidx, None))
-    lint("ann_query", AnnIngest.queryTopK(spark, aidx,
-      emb.filter(expr("vec_id % 7 = 0")), k = 3, nProbe = 2))
+    // the query's result is a local frame; lint the scan it executes,
+    // with a live takedown applied to it
+    AnnIngest.delete(spark, aidx,
+      emb.filter(expr("vec_id % 7 = 0")).select("vec_id"), "lint")
+    val scan = AnnIngest.queryScan(IngestIndex.readManifest(spark, aidx),
+      spark, aidx, Seq(0, 1))
+    assert(scan.queryExecution.sparkPlan.collectFirst {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }.exists(_.partitionFilters.nonEmpty), "the query scan is cell-pruned")
+    lint("ann_query", scan)
+  }
+
+  test("the tombstone-set cache never caches under a key built from an " +
+    "unreadable dir: every call derives afresh, while a readable set " +
+    "derives once") {
+    val root = java.nio.file.Files.createTempDirectory("graft_tk").toString
+    val gone = s"$root/t_gone"
+    var n = 0
+    def derive(): String = { n += 1; s"v$n" }
+    assert(IngestIndex.tombKey(spark, Seq(gone), "") === None)
+    IngestIndex.tombCached(spark, Seq(gone), "spec", "")(derive())
+    IngestIndex.tombCached(spark, Seq(gone), "spec", "")(derive())
+    assert(n === 2)
+    var probes = 0
+    def tombs() = { probes += 1; spark.range(3).toDF("vec_id") }
+    assert(IngestIndex.tombsSmall(spark, Seq(gone), tombs()))
+    assert(IngestIndex.tombsSmall(spark, Seq(gone), tombs()))
+    assert(probes === 2)
+    val live = s"$root/t_live"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(live))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$live/part"),
+      Array[Byte](1, 2, 3))
+    assert(IngestIndex.tombKey(spark, Seq(live), "").isDefined)
+    val a = IngestIndex.tombCached(spark, Seq(live), "spec", "")(derive())
+    val b = IngestIndex.tombCached(spark, Seq(live), "spec", "")(derive())
+    assert(n === 3 && a === b)
+    // a dir of the set vanishing makes the key unbuildable again
+    assert(IngestIndex.tombKey(spark, Seq(live, gone), "") === None)
   }
 
   test("readTombs selects the key BY NAME: a tombstone dir with extra " +
