@@ -1,8 +1,10 @@
 package graft.eval
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+
+import graft.ops.RangeScan
 
 /** Distributed evaluation operators.
   *
@@ -10,10 +12,10 @@ import org.apache.spark.sql.functions._
   * (`Eval.pig:39`) then streams them SINGLE-THREADED through the driver
   * (`core/ConfusionMatrix.java:276-520`
   * bufferedComputeConfusionMatrixAndPerformance) — a non-starter at 100 TB.
-  * Here the whole sweep is a window cumulative sum over the score order:
-  * one range-partitioned sort shuffle, per-bucket aggregation, and only the
-  * ≤ numBucket+1 bucket rows ever reach the driver (for AUC trapezoids,
-  * `core/eval/AreaUnderCurve.java:9-60`).
+  * Here every ranking (the bucket sweep and [[Eval.rankAuc]]) runs over
+  * the one distributed total order, [[graft.ops.RangeScan]], and only the
+  * ≤ numBucket+1 bucket rows ever reach the driver, where the ROC/PR
+  * trapezoids are summed (`core/eval/AreaUnderCurve.java:9-60`).
   */
 object Eval {
 
@@ -24,11 +26,9 @@ object Eval {
     * Math mirrors `core/PerformanceEvaluator.java:201-330`.
     *
     * Scale note: `ntile().over(Window.orderBy(...))` would funnel every row
-    * through ONE partition. Instead: range-repartition on the sort key (the
-    * same distributed total-order sort Spark uses for `orderBy`), rank via
-    * `zipWithIndex` (one partition-count job), assign ntile buckets in
-    * closed form, and aggregate per partition — only `buckets` tiny rows
-    * ever leave the executors. */
+    * through ONE partition. Instead ranks come from the range scan's
+    * per-partition prefixes, ntile buckets are assigned in closed form,
+    * and only `buckets` tiny rows per partition leave the executors. */
   def confusionSweep(df: DataFrame, score: Column, isPos: Column,
                      tieBreak: Seq[Column], buckets: Int = 10): DataFrame = {
     val spark = df.sparkSession
@@ -65,23 +65,10 @@ object Eval {
   def operatingPoints(df: DataFrame, score: Column, isPos: Column,
                       tieBreak: Seq[Column], buckets: Int = 100,
                       fprTargetsPct: Seq[Int] = (10 to 90 by 10))
-      : DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val rows = confusionSweep(df, score, isPos, tieBreak, buckets)
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4)))
-      .sortBy(_._1)
-    val picked = fprTargetsPct.flatMap { t =>
-      rows.find { case (_, _, fp, _, tn) =>
-        fp.toDouble / (fp + tn) >= t / 100.0
-      }.map { case (b, tp, fp, fn, tn) =>
-        (t.toLong, b.toLong, tp, fp, fn, tn)
-      }
+      : DataFrame =
+    firstReaching(df, score, isPos, tieBreak, buckets, fprTargetsPct) {
+      (_, fp, _, tn) => fp.toDouble / (fp + tn)
     }
-    picked.toDF("target_pct", "bucket", "tp", "fp", "fn", "tn")
-  }
 
   /** Recall-bucketed dual of [[operatingPoints]] (the reference's other
     * PerformanceObject bucketing mode): first bucket reaching each
@@ -89,27 +76,29 @@ object Eval {
   def recallPoints(df: DataFrame, score: Column, isPos: Column,
                    tieBreak: Seq[Column], buckets: Int = 100,
                    recallTargetsPct: Seq[Int] = (10 to 90 by 10))
-      : DataFrame = {
+      : DataFrame =
+    firstReaching(df, score, isPos, tieBreak, buckets, recallTargetsPct) {
+      (tp, _, fn, _) => tp.toDouble / (tp + fn)
+    }
+
+  /** (target_pct, bucket, tp, fp, fn, tn): per target, the first bucket
+    * whose `rate(tp, fp, fn, tn)` reaches target_pct / 100. */
+  private def firstReaching(df: DataFrame, score: Column, isPos: Column,
+      tieBreak: Seq[Column], buckets: Int, targetsPct: Seq[Int])(
+      rate: (Long, Long, Long, Long) => Double): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val rows = confusionSweep(df, score, isPos, tieBreak, buckets)
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4)))
-      .sortBy(_._1)
-    val picked = recallTargetsPct.flatMap { t =>
-      rows.find { case (_, tp, _, fn, _) =>
-        tp.toDouble / (tp + fn) >= t / 100.0
-      }.map { case (b, tp, fp, fn, tn) =>
-        (t.toLong, b.toLong, tp, fp, fn, tn)
-      }
-    }
-    picked.toDF("target_pct", "bucket", "tp", "fp", "fn", "tn")
+    val rows = sweepBuckets(df, score, isPos, tieBreak, lit(1.0), buckets)
+    targetsPct.flatMap { t =>
+      rows.find(r => rate(r._2, r._3, r._4, r._5) >= t / 100.0)
+        .map(r => (t.toLong, r._1.toLong, r._2, r._3, r._4, r._5))
+    }.toDF("target_pct", "bucket", "tp", "fp", "fn", "tn")
   }
 
-  /** Shared distributed sweep core: range-sort + zipWithIndex ranking,
-    * closed-form ntile buckets, per-bucket (count, weight) partials, and
-    * the tiny cumulative pass on the driver. */
+  /** Shared distributed sweep core over [[graft.ops.RangeScan]]: the
+    * range scan's prefixes are row ranks, which place each row in its
+    * closed-form ntile bucket; each task returns per-bucket partials and
+    * the driver runs the cumulative pass over ≤ buckets rows. */
   private def sweepBuckets(df: DataFrame, score: Column, isPos: Column,
                            tieBreak: Seq[Column], weight: Column,
                            buckets: Int): Array[(Int, Long, Long, Long, Long,
@@ -122,49 +111,39 @@ object Eval {
       coalesce(weight.cast("double"), lit(0.0)).as("w"), score.as("s")) ++
       tieBreak.zipWithIndex.map { case (c, i) => c.as(s"tb_$i") }
     val order = col("s").desc +: tieBreak.indices.map(i => col(s"tb_$i").asc)
-    val parts = math.max(df.rdd.getNumPartitions, 1)
-    val ranked = df.select(cols: _*)
-      .repartitionByRange(parts, order: _*)
-      .sortWithinPartitions(order: _*)
-      .select("pos", "w").rdd
-      .map(r => (r.getLong(0), r.getDouble(1)))
-    ranked.cache()
-    // job 1 (fills the cache): per-partition row counts → rank offsets
-    val partCounts = ranked
-      .mapPartitionsWithIndex((i, it) => Iterator((i, it.size.toLong)))
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = partCounts.scanLeft(0L)(_ + _)
-    val n = offsets.last
-    val base = n / buckets
-    val rem = (n % buckets).toInt
-    val cut = rem * (base + 1) // ranks below this are in the +1-sized buckets
-    // job 2 (from cache): per-partition per-bucket partials — ≤ buckets
-    // tiny tuples per task come to the driver, no shuffle at all
-    val perBucket = ranked.mapPartitionsWithIndex { (i, it) =>
-      var r = offsets(i)
-      val acc = new java.util.TreeMap[Int, Array[Double]]()
-      it.foreach { case (pos, w) =>
-        val b = if (base == 0 || r < cut) (r / (base + 1)).toInt + 1
-                else rem + ((r - cut) / base).toInt + 1
-        val slot = acc.computeIfAbsent(b, _ => new Array[Double](4))
-        slot(0) += pos; slot(1) += 1
-        if (pos == 1L) slot(2) += w
-        slot(3) += w
-        r += 1
-      }
-      import scala.jdk.CollectionConverters._
-      acc.asScala.iterator.map { case (b, s) =>
-        (b, (s(0).toLong, s(1).toLong, s(2), s(3)))
-      }
-    }.collect()
-      .groupBy(_._1).map { case (b, xs) =>
+    val ranked = RangeScan.sorted(df.select(cols: _*), order,
+      df.rdd.getNumPartitions)(r => (r.getLong(0), r.getDouble(1)))
+    val perBucket = RangeScan.prefixed(ranked, 0L)(_ + _, _.size.toLong) {
+      p =>
+        val n = p.total
+        val base = n / buckets
+        val rem = (n % buckets).toInt
+        val cut = rem * (base + 1) // ranks below this: the +1-sized buckets
+        // ≤ buckets tiny tuples per task come to the driver, no shuffle
+        p.emit { (first, it) =>
+          var r = first
+          val acc = new java.util.TreeMap[Int, Array[Double]]()
+          it.foreach { case (pos, w) =>
+            val b = if (base == 0 || r < cut) (r / (base + 1)).toInt + 1
+                    else rem + ((r - cut) / base).toInt + 1
+            val slot = acc.computeIfAbsent(b, _ => new Array[Double](4))
+            slot(0) += pos; slot(1) += 1
+            if (pos == 1L) slot(2) += w
+            slot(3) += w
+            r += 1
+          }
+          import scala.jdk.CollectionConverters._
+          acc.asScala.iterator.map { case (b, s) =>
+            (b, (s(0).toLong, s(1).toLong, s(2), s(3)))
+          }
+        }.collect()
+    }.groupBy(_._1).map { case (b, xs) =>
         // partitions are rank-contiguous: merge order is by partition, and
         // all weights per bucket are integer-valued → sums exact anyway
         (b, xs.map(_._2).reduce((a, c) =>
           (a._1 + c._1, a._2 + c._2, a._3 + c._3, a._4 + c._4)))
       }
       .toArray.sortBy(_._1)
-    ranked.unpersist(false)
     // cumulative sweep over <= buckets rows: driver math, like the
     // reference's ColumnStatsCalculator pattern
     val totPos = perBucket.map(_._2._1).sum
@@ -179,6 +158,49 @@ object Eval {
         cumWPos, cumW - cumWPos, totWPos - cumWPos,
         (totW - totWPos) - (cumW - cumWPos))
     }
+  }
+
+  /** Exact ROC AUC of scored rows: the Mann–Whitney statistic of `score`
+    * (NULL scores skipped) with `isPos` positive (NULL is not), ties
+    * counted half, summed as 2U in `Long`s — repeatable under any
+    * partitioning, unlike MLlib's evaluator, whose ROC bins follow a
+    * sampled sort. One pass over [[graft.ops.RangeScan]]'s sorted rows:
+    * equal scores share a partition, each returns (positives, negatives,
+    * local 2U), and the driver adds the cross-partition term — every
+    * negative of an earlier partition scores strictly lower. NaN when a
+    * class is empty. */
+  private[graft] def rankAuc(df: DataFrame, score: Column,
+                             isPos: Column): Double = {
+    val scored = df.select(score.cast("double").as("s"),
+      coalesce(isPos, lit(false)).as("pos")).filter(col("s").isNotNull)
+    val perPart = RangeScan.sorted(scored, Seq(col("s").asc),
+      df.rdd.getNumPartitions)(r => (r.getDouble(0), r.getBoolean(1)))
+      .mapPartitions { rows =>
+        // per run of equal scores: its positives each beat the negatives
+        // below it (2 each) and tie its own negatives (1 each)
+        var pos, neg, u2, runPos, runNeg = 0L
+        var prev = 0.0
+        def close(): Unit = {
+          u2 += runPos * (2 * neg + runNeg)
+          pos += runPos; neg += runNeg; runPos = 0L; runNeg = 0L
+        }
+        rows.foreach { case (x, isP) =>
+          if ((runPos + runNeg) > 0 && !(x == prev || (x.isNaN && prev.isNaN)))
+            close()
+          prev = x
+          if (isP) runPos += 1 else runNeg += 1
+        }
+        close()
+        Iterator.single((pos, neg, u2))
+      }.collect() // in partition order, i.e. ascending score ranges
+    var negBelow, u2 = 0L
+    perPart.foreach { case (p, n, local) =>
+      u2 += local + 2 * p * negBelow
+      negBelow += n
+    }
+    val (nPos, nNeg) = (perPart.map(_._1).sum, negBelow)
+    if (nPos == 0 || nNeg == 0) Double.NaN
+    else u2.toDouble / (2.0 * nPos.toDouble * nNeg.toDouble)
   }
 
   /** Gain-chart rows per bucket (reference `core/eval/GainChart.java` /
@@ -259,25 +281,11 @@ object Eval {
   /** PR AUC by trapezoid over the bucket boundaries
     * (`AreaUnderCurve.ofPr`): recall on x, precision on y; the first
     * segment extends flat from recall 0 at the first bucket's precision
-    * (lag-coalesce — identical formulation in the SQL oracle). */
-  def prAuc(sweep: DataFrame): DataFrame = {
-    // constant partition key: the sweep is ≤ buckets+1 rows BY DESIGN, so
-    // a single-partition window is bounded — but a bare orderBy window
-    // emits a "No Partition Defined" WARN on every run, burying real
-    // warnings in test/bench logs
-    val w = Window.partitionBy(lit(1)).orderBy("bucket")
-    sweep.select(
-      col("bucket"),
-      (col("tp").cast("double") / (col("tp") + col("fn"))).as("recall"),
-      (col("tp").cast("double") / (col("tp") + col("fp"))).as("precision"))
-      .select(
-        col("recall"), col("precision"),
-        lag("recall", 1, 0.0).over(w).as("r0"),
-        lag("precision", 1).over(w).as("p0"))
-      .agg(round(sum((col("recall") - col("r0")) *
-        (col("precision") + coalesce(col("p0"), col("precision"))) / 2), 6)
-        .as("pr_auc"))
-  }
+    * (the SQL oracle's lag-coalesce). NaN without positives. */
+  def prAuc(sweep: DataFrame): DataFrame =
+    trapezoids(sweep, "pr_auc") { (tp, fp, fn, _) =>
+      (tp.toDouble / (tp + fn), tp.toDouble / (tp + fp))
+    }(firstY = y => y)
 
   /** Reliability-diagram bins (calibration curve): equal-width bins over
     * a [0,1] probability, per-bin count, mean predicted probability, and
@@ -316,21 +324,36 @@ object Eval {
         sum("n").cast("long").as("n_rows"))
   }
 
-  /** ROC AUC by trapezoid over the bucket boundaries, with the (0,0) origin
-    * prepended (`AreaUnderCurve.ofRoc`). Driver gets only bucket rows. */
-  def rocAuc(sweep: DataFrame): DataFrame = {
-    // bounded single-partition window; constant key suppresses the
-    // misleading WindowExec WARN (see prAuc)
-    val w = Window.partitionBy(lit(1)).orderBy("bucket")
-    sweep.select(
-      col("bucket"),
-      (col("fp").cast("double") / (col("fp") + col("tn"))).as("fpr"),
-      (col("tp").cast("double") / (col("tp") + col("fn"))).as("tpr"))
-      .select(
-        col("fpr"), col("tpr"),
-        lag("fpr", 1, 0.0).over(w).as("fpr0"),
-        lag("tpr", 1, 0.0).over(w).as("tpr0"))
-      .agg(round(sum((col("fpr") - col("fpr0")) *
-        (col("tpr") + col("tpr0")) / 2), 6).as("auc"))
+  /** ROC AUC by trapezoid over the bucket boundaries, with the (0,0)
+    * origin prepended (`AreaUnderCurve.ofRoc`). NaN unless both classes
+    * are present. */
+  def rocAuc(sweep: DataFrame): DataFrame =
+    trapezoids(sweep, "auc") { (tp, fp, fn, tn) =>
+      (fp.toDouble / (fp + tn), tp.toDouble / (tp + fn))
+    }(firstY = _ => 0.0)
+
+  /** Trapezoid area under the points `xy(tp, fp, fn, tn)` of a sweep's
+    * ≤ buckets rows, computed on the driver in bucket order from
+    * (0, `firstY`) — the reference's AreaUnderCurve loop and the SQL
+    * oracles' `round(sum(...), 6)` over lagged points, with Spark's
+    * `round` (HALF_UP on the double's shortest decimal form; NaN and
+    * ±Inf pass through). One-row local frame; NaN for an empty sweep. */
+  private def trapezoids(sweep: DataFrame, name: String)(
+      xy: (Long, Long, Long, Long) => (Double, Double))(
+      firstY: Double => Double): DataFrame = {
+    val pts = sweep.select(Seq("bucket", "tp", "fp", "fn", "tn")
+        .map(c => col(c).cast("long")): _*).collect()
+      .sortBy(_.getLong(0)).map(r => xy(r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4)))
+    // each point paired with the one before it, the first with (0, firstY)
+    val sum = if (pts.isEmpty) Double.NaN
+      else ((0.0, firstY(pts.head._2)) +: pts).zip(pts).foldLeft(0.0) {
+        case (acc, ((x0, y0), (x, y))) => acc + (x - x0) * (y + y0) / 2
+      }
+    val area = if (sum.isNaN || sum.isInfinite) sum
+      else java.math.BigDecimal.valueOf(sum)
+        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+    sweep.sparkSession.createDataFrame(java.util.List.of(Row(area)),
+      StructType(Seq(StructField(name, DoubleType))))
   }
 }

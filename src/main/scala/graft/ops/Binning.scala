@@ -90,8 +90,8 @@ object Binning {
     * WeightEqualPositive/Negative/Total): value v_j such that the running
     * INTEGER weight first reaches j/k of the total. Fully distributed:
     * groupBy(value) compresses ties (RANGE-frame semantics for free),
-    * range-repartition orders the distinct values, per-partition totals →
-    * driver offsets → one flatMap emits each crossed threshold. All
+    * [[RangeScan]] orders the distinct values and hands each partition
+    * its mass prefix, and one flatMap emits each crossed threshold. All
     * comparisons are exact integer arithmetic (`cw·k ≥ j·tot`) — no FP
     * summation order anywhere, so any engine agrees bit-for-bit. */
   def weightedEqualBounds(df: DataFrame, valueCol: String, weight: Column,
@@ -111,35 +111,29 @@ object Binning {
       .groupBy(col(valueCol).as("v"))
       .agg(coalesce(sum(longWeight(weight).cast(dec)),
         lit(0).cast(dec)).as("wv"))
-    val parts = math.max(df.rdd.getNumPartitions, 1)
-    val rdd = g.repartitionByRange(parts, col("v"))
-      .sortWithinPartitions("v")
-      .select("v", "wv").rdd
-      .map(r => (r.getDouble(0),
-        BigInt(r.getDecimal(1).toBigInteger)))
-    rdd.cache()
-    val partTotals = rdd
-      .mapPartitionsWithIndex((i, it) => Iterator((i, it.map(_._2).sum)))
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = partTotals.scanLeft(BigInt(0))(_ + _)
-    val tot = offsets.last
-    // zero/negative total mass (all-zero or net-negative weights) has no
-    // meaningful j/k thresholds — the crossing predicate below would never
-    // fire while a naive `cw·k ≥ j·tot` oracle still selects min(v). Both
-    // sides declare the quantile axis undefined and return no bounds
-    // (oracle mirrors with `tot > 0` in its WHERE).
-    if (tot <= 0) { rdd.unpersist(false); return Seq.empty }
-    val crossings = rdd.mapPartitionsWithIndex { (i, it) =>
-      var cum = offsets(i)
-      it.flatMap { case (v, w) =>
-        val prev = cum
-        cum += w
-        // thresholds j with prev·k < j·tot ≤ cum·k, 1 ≤ j ≤ k-1
-        (1 until k).filter(j => prev * k < tot * j &&
-          tot * j <= cum * k).map(j => (j, v))
-      }
-    }.collect()
-    rdd.unpersist(false)
+    val sorted = RangeScan.sorted(g, Seq(col("v").asc),
+      df.rdd.getNumPartitions)(r => (r.getDouble(0),
+        BigInt(r.getDecimal(1, 38, 0).toJavaBigDecimal.toBigInteger)))
+    val crossings = RangeScan.prefixed(sorted, BigInt(0))(
+        _ + _, _.map(_._2).sum) { p =>
+      val tot = p.total
+      // zero/negative total mass (all-zero or net-negative weights) has
+      // no meaningful j/k thresholds — the crossing predicate below would
+      // never fire while a naive `cw·k ≥ j·tot` oracle still selects
+      // min(v). Both sides declare the quantile axis undefined and return
+      // no bounds (oracle mirrors with `tot > 0` in its WHERE).
+      if (tot <= 0) Array.empty[(Int, Double)]
+      else p.emit { (first, it) =>
+        var cum = first
+        it.flatMap { case (v, w) =>
+          val prev = cum
+          cum += w
+          // thresholds j with prev·k < j·tot ≤ cum·k, 1 ≤ j ≤ k-1
+          (1 until k).filter(j => prev * k < tot * j &&
+            tot * j <= cum * k).map(j => (j, v))
+        }
+      }.collect()
+    }
     // NEGATIVE weights make the running sum non-monotone, so one
     // threshold can be crossed several times (fuzz gate) — the bound is
     // the FIRST crossing in value order, i.e. min v per j, which is

@@ -15,11 +15,11 @@ import org.apache.spark.sql.functions._
   *
   *  1. ONE scan: stacked (feature, value) distinct counts — a plain
   *     groupBy, map-side combined, O(distinct) ROWS not driver bytes;
-  *  2. range-repartition by (feature, value) + in-partition sort — the
-  *     per-feature value runs are contiguous across ordered partitions;
-  *  3. per-(partition, feature) masses to the driver (partitions ×
-  *     features longs), prefix offsets computed driver-side;
-  *  4. one more pass over the cached distinct table emits ONLY the
+  *  2. [[RangeScan]] orders the distinct table by (feature, value) —
+  *     the per-feature value runs are contiguous across ordered
+  *     partitions — and folds per-(partition, feature) masses into
+  *     each partition's prefix on the driver;
+  *  3. one more pass over the cached distinct table emits ONLY the
   *     values whose cumulative range covers a target rank — ≤
   *     features × probs rows cross to the driver.
   *
@@ -70,7 +70,6 @@ object ExactQuantiles {
     require(cols.nonEmpty, "need at least one column")
     require(probs.nonEmpty && probs.forall(p => p >= 0.0 && p <= 1.0),
       s"probs must be in [0,1], got $probs")
-    val spark = df.sparkSession
     // Column API explode, never string SQL: hostile column names ('|',
     // quotes, spaces) must not reach a parser
     val pairs = explode(array(cols.map(c =>
@@ -84,60 +83,35 @@ object ExactQuantiles {
       // the value-for-value parity spec holds on all real data
       .filter(col("v").isNotNull && !isnan(col("v")))
       .groupBy("f", "v").agg(count(lit(1)).as("cnt"))
-    val parts = math.max(counts.rdd.getNumPartitions, 1)
-    val sorted = counts
-      .repartitionByRange(parts, col("f").asc, col("v").asc)
-      .sortWithinPartitions(col("f").asc, col("v").asc)
-      .select("f", "v", "cnt").rdd
-      .map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
-    sorted.cache()
-    try {
-      val partMasses: Array[Map[String, Long]] = sorted
-        .mapPartitionsWithIndex { (i, it) =>
-          val m = collection.mutable.HashMap.empty[String, Long]
-          it.foreach { case (f, _, cnt) =>
-            m.update(f, m.getOrElse(f, 0L) + cnt)
-          }
-          Iterator((i, m.toMap))
-        }
-        .collect().sortBy(_._1).map(_._2)
-      val totals: Map[String, Long] =
-        partMasses.flatten.groupMapReduce(_._1)(_._2)(_ + _)
-      // offsets(i)(f) = f's mass in partitions strictly before i
-      val offsets: Array[Map[String, Long]] = partMasses
-        .scanLeft(Map.empty[String, Long]) { (acc, m) =>
-          m.foldLeft(acc) { case (a, (f, s)) =>
-            a.updated(f, a.getOrElse(f, 0L) + s)
-          }
-        }
-        .dropRight(1)
-      val targets: Map[String, Seq[Long]] = totals.map { case (f, n) =>
+    type Masses = Map[String, Long]
+    def add(a: Masses, f: String, n: Long): Masses =
+      a.updated(f, a.getOrElse(f, 0L) + n)
+    val sorted = RangeScan.sorted(counts, Seq(col("f").asc, col("v").asc),
+      df.rdd.getNumPartitions)(r =>
+      (r.getUTF8String(0).toString, r.getDouble(1), r.getLong(2)))
+    val picks = RangeScan.prefixed(sorted, Map.empty: Masses)(
+      (a, m) => m.foldLeft(a) { case (acc, (f, n)) => add(acc, f, n) },
+      _.foldLeft(Map.empty: Masses) { case (m, (f, _, cnt)) =>
+        add(m, f, cnt)
+      }) { pre =>
+      val targets: Map[String, Seq[Long]] = pre.total.map { case (f, n) =>
         f -> probs.map(p => math.max(1L, math.ceil(p * n).toLong))
       }
-      val bT = spark.sparkContext.broadcast(targets)
-      val bO = spark.sparkContext.broadcast(offsets)
-      try {
-      val picks = sorted.mapPartitionsWithIndex { (i, it) =>
-        val off = collection.mutable.HashMap.empty[String, Long] ++=
-          bO.value(i)
+      pre.emit { (first, it) =>
+        // first(f) = f's mass in the partitions before this one
+        val off = collection.mutable.HashMap.empty[String, Long] ++= first
         it.flatMap { case (f, v, cnt) =>
           val below = off.getOrElse(f, 0L)
           off.update(f, below + cnt)
-          bT.value.getOrElse(f, Nil).zipWithIndex.collect {
+          targets.getOrElse(f, Nil).zipWithIndex.collect {
             case (r, pi) if r > below && r <= below + cnt => ((f, pi), v)
           }
         }
       }.collect().toMap
-      cols.map(c =>
-        c -> probs.indices.map(pi =>
-          picks.getOrElse((c, pi), Double.NaN)).toSeq).toMap
-      } finally {
-        // deterministic release: a leaked broadcast per call would
-        // accumulate across a shared bench session until a GC lets
-        // ContextCleaner reap it (the documented bench-hygiene hazard)
-        bT.destroy(); bO.destroy()
-      }
-    } finally { sorted.unpersist(false); () }
+    }
+    cols.map(c =>
+      c -> probs.indices.map(pi =>
+        picks.getOrElse((c, pi), Double.NaN)).toSeq).toMap
   }
 
   /** [[quantiles]] with a cost dispatch: on SMALL inputs the

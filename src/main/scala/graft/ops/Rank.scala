@@ -15,10 +15,9 @@ import org.apache.spark.sql.functions._
   * The scale problem is the RANK, not the correlation: a naive
   * `row_number() OVER (ORDER BY x)` is a single-partition global sort.
   * [[avgRanks]] instead ranks the DISTINCT-value table (never the corpus):
-  * groupBy-count per value, range-repartition the bounded (value, count)
-  * rows, then a two-pass per-partition prefix sum with driver offsets —
-  * the same offset-ranking shape as the confusion-matrix sweep
-  * (`graft.eval.Eval.sweepBuckets`). Ties get the textbook average rank
+  * groupBy-count per value, then [[RangeScan]] — the engine's one
+  * distributed total order — orders the bounded (value, count) rows and
+  * hands each partition its count prefix. Ties get the textbook average rank
   * `below + (cnt+1)/2`, exact in IEEE double (a multiple of 0.5 below
   * 2^52), so rank values are engine-reproducible bit for bit.
   */
@@ -42,31 +41,21 @@ object Rank {
     * distributed drop-in for a would-be single-partition
     * `percent_rank() OVER (ORDER BY v)`). */
   def rankCounts(df: DataFrame, c: String): DataFrame = {
-    val spark = df.sparkSession
     val counts = df.select(col(c).cast("double").as("v"))
       .filter(col("v").isNotNull)
       .groupBy("v").agg(count(lit(1)).as("cnt"))
-    val parts = math.max(counts.rdd.getNumPartitions, 1)
-    val sorted = counts.repartitionByRange(parts, col("v").asc)
-      .sortWithinPartitions(col("v").asc)
-      .select("v", "cnt").rdd
-      .map(r => (r.getDouble(0), r.getLong(1)))
-    sorted.cache()
-    val partSums = sorted
-      .mapPartitionsWithIndex((i, it) => Iterator((i, it.map(_._2).sum)))
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = partSums.scanLeft(0L)(_ + _)
-    val ranked = sorted.mapPartitionsWithIndex { (i, it) =>
-      var below = offsets(i)
-      it.map { case (v, cnt) =>
-        val r = (v, below, cnt)
-        below += cnt
-        r
-      }
-    }
-    val out = spark.createDataFrame(ranked).toDF("v", "n_below", "cnt")
-    sorted.unpersist(false)
-    out
+    val sorted = RangeScan.sorted(counts, Seq(col("v").asc),
+      df.rdd.getNumPartitions)(r => (r.getDouble(0), r.getLong(1)))
+    val ranked = RangeScan.prefixed(sorted, 0L)(_ + _, _.map(_._2).sum)(
+      _.emit { (first, it) =>
+        var below = first
+        it.map { case (v, cnt) =>
+          val r = (v, below, cnt)
+          below += cnt
+          r
+        }
+      })
+    df.sparkSession.createDataFrame(ranked).toDF("v", "n_below", "cnt")
   }
 
   /** Spearman rank correlation of `x` vs `y` over `df`, rounded to

@@ -924,8 +924,9 @@ object AnnIngest {
     // a cheap no-op even while skewReport's PHYSICAL counts still show
     // the stale copies.
     // Known upgrade path if heals become frequent: the mover scan is
-    // ONE full read pass (narrow map, no shuffle — SplitProbe shows
-    // the write savings dominate from ~500k vectors up). A per-run
+    // ONE full read pass (narrow map, no shuffle — BENCH_SCALE.md's
+    // "split heal vs full rebuild" row shows the write savings dominate
+    // from ~500k vectors up). A per-run
     // per-cell max-radius sidecar would prune it to at-risk cells via
     // the bisector bound (cell d can lose rows to new centroid k only
     // if dist(c_d, k) < 2·R_d), honored only for runs stamped with the

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -65,25 +67,21 @@ object StreamOps {
     * dedup 0.90× at the derived width vs the declared 8). Width =
     * ceil(rows / 32k) footer-counted off `srcPaths` (driver-side, no
     * job), capped at `declared` — production feed sizes keep today's
-    * declared width, only small inputs narrow. State width is a
-    * semantics-free knob (results identical); the session conf
-    * override exists for A/B probes and deployment tuning without a
-    * rebuild. RocksDB as the store provider was A/B'd the same way
-    * and REJECTED at these state sizes (1.1–1.5× worse: native store
-    * open/commit per partition per batch dwarfs the in-memory map). */
+    * declared width, only small inputs narrow (results identical at
+    * any width). An unreadable footer counts as unknown size and keeps
+    * the declared width. RocksDB as the store provider was A/B'd the
+    * same way and REJECTED at these state sizes (1.1–1.5× worse: native
+    * store open/commit per partition per batch dwarfs the in-memory
+    * map). */
   private def withStatePartitions[T](spark: SparkSession,
       srcPaths: Seq[String], declared: Int = 8)(body: => T): T = {
-    val w = spark.conf.get("spark.sql.graft.statewidth", "").trim match {
-      case "" =>
-        val rows =
-          try IngestIndex.footerRows(spark, srcPaths)
-          catch { case _: Throwable => Long.MaxValue }
-        val cap = declared.toLong
-        // saturating (rows can be the Long.MaxValue unknown-size flag)
-        (if (rows >= cap * 32768L) cap
-         else math.max(1L, (rows + 32767) / 32768)).toInt
-      case s => s.toInt
-    }
+    val rows =
+      try IngestIndex.footerRows(spark, srcPaths)
+      catch { case NonFatal(_) => Long.MaxValue }
+    val cap = declared.toLong
+    // saturating (rows can be the Long.MaxValue unknown-size flag)
+    val w = (if (rows >= cap * 32768L) cap
+             else math.max(1L, (rows + 32767) / 32768)).toInt
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, w.toString)

@@ -1,7 +1,6 @@
 package graft.text
 
 import org.apache.spark.ml.classification.LogisticRegression
-import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -88,12 +87,8 @@ object QualityModel {
       round(p1(col("probability")), 6).as("quality_score"))
   }
 
-  /** Training-set ROC AUC of [[trainScore]] output — contract helper. */
-  def aucOf(scored: DataFrame): Double = {
-    val p1 = udf((s: Double) => Vectors.dense(1.0 - s, s))
-    new BinaryClassificationEvaluator()
-      .setLabelCol("label").setRawPredictionCol("raw")
-      .setMetricName("areaUnderROC")
-      .evaluate(scored.withColumn("raw", p1(col("quality_score"))))
-  }
+  /** Training-set ROC AUC of [[trainScore]] output — contract helper,
+    * the exact rank-sum AUC ([[graft.eval.Eval.rankAuc]]). */
+  def aucOf(scored: DataFrame): Double =
+    graft.eval.Eval.rankAuc(scored, col("quality_score"), col("label") > 0.5)
 }

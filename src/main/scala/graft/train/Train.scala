@@ -134,54 +134,13 @@ object Train {
     Trained(model, rankAuc(model.transform(data)))
   }
 
-  /** Exact ROC AUC of scored rows (`label`, `rawPrediction`): the
-    * Mann–Whitney statistic over the margin `rawPrediction[1]` — the
-    * score MLlib's binary evaluator reads — with `label > 0.5` positive
-    * and tied scores counted half, summed as 2U in `Long`s. Repeatable
-    * under any partitioning, where the evaluator bins its ROC curve
-    * after a sort whose range bounds are sampled with a seed taken from
-    * the RDD id. Ranks like [[graft.eval.Eval]]'s bucket sweep: a range
-    * repartition on the score keeps equal scores in one partition, each
-    * sorted partition returns (positives, negatives, local 2U), and the
-    * driver adds the cross-partition term — every negative of an
-    * earlier partition scores strictly lower — from prefix counts. No
-    * per-score table comes to the driver. NaN when a class is empty. */
-  private[graft] def rankAuc(scored: DataFrame): Double = {
-    val parts = math.max(scored.rdd.getNumPartitions, 1)
-    val perPart = scored
-      .select(org.apache.spark.ml.functions.vector_to_array(
-        col("rawPrediction")).getItem(1).as("s"),
-        (col("label") > 0.5).as("pos"))
-      .repartitionByRange(parts, col("s").asc)
-      .sortWithinPartitions(col("s").asc)
-      .queryExecution.toRdd.mapPartitions { rows =>
-        // per run of equal scores: its positives each beat the negatives
-        // below it (2 each) and tie its own negatives (1 each)
-        var pos, neg, u2, runPos, runNeg = 0L
-        var prev = 0.0
-        def close(): Unit = {
-          u2 += runPos * (2 * neg + runNeg)
-          pos += runPos; neg += runNeg; runPos = 0L; runNeg = 0L
-        }
-        rows.foreach { r =>
-          val x = r.getDouble(0)
-          if ((runPos + runNeg) > 0 && !(x == prev || (x.isNaN && prev.isNaN)))
-            close()
-          prev = x
-          if (r.getBoolean(1)) runPos += 1 else runNeg += 1
-        }
-        close()
-        Iterator.single((pos, neg, u2))
-      }.collect() // in partition order, i.e. ascending score ranges
-    var negBelow, u2 = 0L
-    perPart.foreach { case (p, n, local) =>
-      u2 += local + 2 * p * negBelow
-      negBelow += n
-    }
-    val (nPos, nNeg) = (perPart.map(_._1).sum, negBelow)
-    if (nPos == 0 || nNeg == 0) Double.NaN
-    else u2.toDouble / (2.0 * nPos.toDouble * nNeg.toDouble)
-  }
+  /** Exact ROC AUC ([[graft.eval.Eval.rankAuc]]) of scored rows over
+    * the margin `rawPrediction[1]` — the score MLlib's binary evaluator
+    * reads — with `label > 0.5` positive. */
+  private def rankAuc(scored: DataFrame): Double =
+    graft.eval.Eval.rankAuc(scored,
+      org.apache.spark.ml.functions.vector_to_array(col("rawPrediction"))
+        .getItem(1), col("label") > 0.5)
 
   /** Grid search + k-fold cross validation (reference `gs/` grid configs +
     * `ModelTrainConf` numKFold → `ParamGridBuilder` + `CrossValidator`). */

@@ -172,10 +172,13 @@ class TrainDotSpec extends AnyFunSuite {
     val df = rows.map { case (x, pos) =>
       (Vectors.dense(-x, x), if (pos) 1.0 else 0.0)
     }.toDF("rawPrediction", "label")
+    def auc(d: org.apache.spark.sql.DataFrame) = graft.eval.Eval.rankAuc(d,
+      org.apache.spark.ml.functions.vector_to_array($"rawPrediction")(1),
+      $"label" > 0.5)
     Seq(1, 3, 8).foreach { n =>
-      assert(Train.rankAuc(df.repartition(n)) === exact, s"$n partitions")
+      assert(auc(df.repartition(n)) === exact, s"$n partitions")
     }
-    assert(Train.rankAuc(df.filter($"label" === 0.0)).isNaN)
+    assert(auc(df.filter($"label" === 0.0)).isNaN)
   }
 
   test("bagged raises a failing bag's error after the other bags finish, " +
