@@ -112,7 +112,7 @@ object Eval {
       tieBreak.zipWithIndex.map { case (c, i) => c.as(s"tb_$i") }
     val order = col("s").desc +: tieBreak.indices.map(i => col(s"tb_$i").asc)
     val ranked = RangeScan.sorted(df.select(cols: _*), order,
-      df.rdd.getNumPartitions)(r => (r.getLong(0), r.getDouble(1)))
+      RangeScan.width(df))(r => (r.getLong(0), r.getDouble(1)))
     val perBucket = RangeScan.prefixed(ranked, 0L)(_ + _, _.size.toLong) {
       p =>
         val n = p.total
@@ -174,7 +174,7 @@ object Eval {
     val scored = df.select(score.cast("double").as("s"),
       coalesce(isPos, lit(false)).as("pos")).filter(col("s").isNotNull)
     val perPart = RangeScan.sorted(scored, Seq(col("s").asc),
-      df.rdd.getNumPartitions)(r => (r.getDouble(0), r.getBoolean(1)))
+      RangeScan.width(df))(r => (r.getDouble(0), r.getBoolean(1)))
       .mapPartitions { rows =>
         // per run of equal scores: its positives each beat the negatives
         // below it (2 each) and tie its own negatives (1 each)
@@ -350,9 +350,7 @@ object Eval {
       else ((0.0, firstY(pts.head._2)) +: pts).zip(pts).foldLeft(0.0) {
         case (acc, ((x0, y0), (x, y))) => acc + (x - x0) * (y + y0) / 2
       }
-    val area = if (sum.isNaN || sum.isInfinite) sum
-      else java.math.BigDecimal.valueOf(sum)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+    val area = graft.ops.StatsMath.round(sum, 6)
     sweep.sparkSession.createDataFrame(java.util.List.of(Row(area)),
       StructType(Seq(StructField(name, DoubleType))))
   }

@@ -112,7 +112,7 @@ object Binning {
       .agg(coalesce(sum(longWeight(weight).cast(dec)),
         lit(0).cast(dec)).as("wv"))
     val sorted = RangeScan.sorted(g, Seq(col("v").asc),
-      df.rdd.getNumPartitions)(r => (r.getDouble(0),
+      RangeScan.width(df))(r => (r.getDouble(0),
         BigInt(r.getDecimal(1, 38, 0).toJavaBigDecimal.toBigInteger)))
     val crossings = RangeScan.prefixed(sorted, BigInt(0))(
         _ + _, _.map(_._2).sum) { p =>

@@ -139,21 +139,15 @@ object Correlation {
         r.getAs[org.apache.spark.ml.linalg.Vector](0))))
     val cov = rm.computeCovariance()
     val sig = cols.indices.map(i => math.sqrt(cov(i, i)))
-    def round6(v: Double): Double =
-      if (v.isNaN || v.isInfinite) v
-      // valueOf (decimal-string repr) mirrors Spark's Round expression on
-      // DoubleType, not the exact-binary scala BigDecimal(double)
-      else java.math.BigDecimal.valueOf(v)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     for {
       i <- cols.indices; j <- (i + 1) until cols.length
-    } yield (i, j, round6(
+    } yield (i, j, StatsMath.round(
       // an overflowed σ (Inf) must surface as NaN-undefined, not as
       // finite/Inf = 0.0 "uncorrelated" — the oracle's one-formula
       // arithmetic lands on NaN via Inf − Inf
       if (!java.lang.Double.isFinite(sig(i)) ||
         !java.lang.Double.isFinite(sig(j))) Double.NaN
-      else cov(i, j) / (sig(i) * sig(j))))
+      else cov(i, j) / (sig(i) * sig(j)), 6))
   }
 
   /** Narrow-k stack-unpivot path (see object doc). */

@@ -87,7 +87,7 @@ object ExactQuantiles {
     def add(a: Masses, f: String, n: Long): Masses =
       a.updated(f, a.getOrElse(f, 0L) + n)
     val sorted = RangeScan.sorted(counts, Seq(col("f").asc, col("v").asc),
-      df.rdd.getNumPartitions)(r =>
+      RangeScan.width(df))(r =>
       (r.getUTF8String(0).toString, r.getDouble(1), r.getLong(2)))
     val picks = RangeScan.prefixed(sorted, Map.empty: Masses)(
       (a, m) => m.foldLeft(a) { case (acc, (f, n)) => add(acc, f, n) },

@@ -1,5 +1,8 @@
 package graft.ops
 
+import java.util.concurrent.{SynchronousQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
@@ -12,24 +15,29 @@ import scala.concurrent.duration.Duration
   * cluster. Results are whatever each thunk computes — determinism is
   * untouched, only WHEN the jobs run changes.
   *
-  * Cached (elastic) daemon pool: a driver thread per in-flight job
-  * chain, NOT per task. A FIXED pool here can deadlock: QueriesR8
-  * already peaks at 8 concurrent chains and Rank.spearman itself
-  * forks, so a forking operator called from inside a forked chain
-  * would starve a bounded pool with every thread blocked in
-  * Await.result. The cached pool grows on demand (threads are cheap,
-  * they just block on Spark actions; actual job concurrency is
-  * bounded by the call sites, ≤ ~10 chains) and shrinks when idle. */
-object Jobs {
+  * Daemon pool of at most `cap` threads with no queue: a driver thread
+  * per in-flight job chain, NOT per task, and a fork that finds every
+  * thread busy runs inline on the forking thread (`CallerRunsPolicy`).
+  * A queue could deadlock: QueriesR8 peaks at 8 concurrent chains and
+  * Rank.spearman itself forks, so a forking operator called from inside
+  * a forked chain could wait on a queued task while every thread blocks
+  * in Await.result. Without one, every forked body is running on some
+  * thread, and the cap bounds driver threads even for a per-row or
+  * per-partition fork. Idle threads exit after a minute. */
+class Jobs private[graft] (cap: Int) {
+  private val started = new AtomicInteger
+
   private lazy val pool = ExecutionContext.fromExecutorService(
-    java.util.concurrent.Executors.newCachedThreadPool(
-      new java.util.concurrent.ThreadFactory {
-        private val n = new java.util.concurrent.atomic.AtomicInteger
-        def newThread(r: Runnable): Thread = {
-          val t = new Thread(r, s"graft-jobs-${n.incrementAndGet()}")
-          t.setDaemon(true); t
-        }
-      }))
+    new ThreadPoolExecutor(0, cap, 60L, TimeUnit.SECONDS,
+      new SynchronousQueue[Runnable],
+      (r: Runnable) => {
+        val t = new Thread(r, s"graft-jobs-${started.incrementAndGet()}")
+        t.setDaemon(true); t
+      },
+      new ThreadPoolExecutor.CallerRunsPolicy))
+
+  /** Threads this pool has started so far. */
+  private[graft] def threadsStarted: Int = started.get
 
   def fork[T](body: => T): Future[T] = Future(body)(pool)
 
@@ -43,3 +51,7 @@ object Jobs {
     fs.map(join)
   }
 }
+
+/** The engine's pool: 64 threads, several times the ~10 chains the call
+  * sites start at most. */
+object Jobs extends Jobs(64)

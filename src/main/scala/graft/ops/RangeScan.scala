@@ -5,6 +5,8 @@ import scala.reflect.ClassTag
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** The engine's one distributed total order, behind every offset-ranking
   * operator (bucket sweep, rank AUC, rank counts, weighted bounds, exact
@@ -17,6 +19,25 @@ import org.apache.spark.sql.catalyst.InternalRow
   * (one element of a partition-aligned collection zipped with the rows),
   * never the offsets of every partition. */
 private[graft] object RangeScan {
+
+  /** The partition count of `df`, the callers' scan width, read without
+    * running `df`. Under AQE, `df.rdd` runs every exchange of the plan
+    * as its own job just to report the count, and the scan built over
+    * `df` then runs it again. So the RDD is asked only when the plan has
+    * no exchange, which builds it with no job; otherwise the physical
+    * plan's declared output partitioning gives the count, or the
+    * session's shuffle width where the plan declares none. */
+  def width(df: DataFrame): Int = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    if (!plan.exists(_.isInstanceOf[Exchange])) df.rdd.getNumPartitions
+    else plan.outputPartitioning.numPartitions match {
+      case n if n > 0 => n
+      case _ => df.sparkSession.sessionState.conf.numShufflePartitions
+    }
+  }
 
   /** `df` range-partitioned on `order` into `parts` ordered partitions,
     * sorted within each, every row decoded once by `decode` (which must

@@ -45,7 +45,7 @@ object Rank {
       .filter(col("v").isNotNull)
       .groupBy("v").agg(count(lit(1)).as("cnt"))
     val sorted = RangeScan.sorted(counts, Seq(col("v").asc),
-      df.rdd.getNumPartitions)(r => (r.getDouble(0), r.getLong(1)))
+      RangeScan.width(df))(r => (r.getDouble(0), r.getLong(1)))
     val ranked = RangeScan.prefixed(sorted, 0L)(_ + _, _.map(_._2).sum)(
       _.emit { (first, it) =>
         var below = first

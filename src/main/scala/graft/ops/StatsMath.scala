@@ -10,6 +10,15 @@ package graft.ops
 object StatsMath {
   val Eps = 1e-10 // ColumnStatsCalculator.java:29
 
+  /** Spark's `round(x, scale)` on a double, on the driver: HALF_UP on
+    * the double's shortest decimal form (`BigDecimal.valueOf`, not the
+    * exact binary value); NaN and ±Inf pass through, as BigDecimal
+    * cannot hold them. */
+  def round(x: Double, scale: Int): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue
+
   final case class ColumnMetrics(
       ks: Double, iv: Double, woe: Double, binWoe: Vector[Double])
 

@@ -59,7 +59,15 @@ import graft.streaming.IngestIndex.{Manifest, Run}
   * in the scan's task closure, each task keeps a bounded top-k per
   * query, and the driver merges them; a live tombstone set of at most
   * `TombBroadcastMax` rows is collected once per set and applied as a
-  * task-side predicate, not re-read by every query. Every run, delta
+  * task-side predicate, not re-read by every query; a cached set plans
+  * no tombstone read. That predicate tests `vec_id` membership first, so
+  * the scope rule — and the row's source id, derived per row from its
+  * file path — is evaluated only for the few rows whose id is held; a
+  * query pays for the rows it scores, not for the index's deletion
+  * history. The query's prologue (vector and norm of each query row)
+  * and epilogue (the `cos_r` rounding) run on the driver: the query
+  * frame is only collected, and the result is a plain local frame.
+  * Every run, delta
   * and tombstone read uses the index's fixed at-rest schema (`vecSchema`, `tombSchema`) instead of
   * inferring one per directory, and the live runs and deltas are read
   * as ONE scan relation, so the number of Spark jobs a query or
@@ -435,25 +443,39 @@ object AnnIngest {
       "left_anti")
   }
 
+  /** Name of a held tombstone set's membership test ([[TombSet]]'s
+    * `free`) in a plan — what `tools.PlanLint` looks for to check that
+    * the per-row source id is derived only under its short-circuit. */
+  private[graft] val TombFreeUdf = "ann_tomb_free"
+
   /** A live tombstone set of at most [[IngestIndex.TombBroadcastMax]]
     * rows, held on the driver: vec_id → its (cell, applied-at) scopes.
-    * Its [[keep]] predicate ships with each task, so a read under it
-    * launches no tombstone job. */
+    * Its predicate `free(vec_id) || keep(vec_id, cell, src_id)` ships
+    * with each task, so a read under it launches no tombstone job, and
+    * the `Or` evaluates `keep` — with its source-id argument — only for
+    * a row whose id is held. */
   private final class TombSet(rows: Array[org.apache.spark.sql.Row])
       extends Serializable {
-    private val byId: Map[Long, Array[(Integer, java.lang.Long)]] =
+    private val byId: Map[java.lang.Long, Array[(Integer, java.lang.Long)]] =
       rows.filterNot(_.isNullAt(0)).groupBy(_.getLong(0)).map {
-        case (id, rs) => id -> rs.map(r => (
+        case (id, rs) => java.lang.Long.valueOf(id) -> rs.map(r => (
           if (r.isNullAt(1)) null else Integer.valueOf(r.getInt(1)),
           if (r.isNullAt(2)) null else java.lang.Long.valueOf(r.getLong(2))))
       }
 
-    /** Does the row (vec_id, cell, src_id) survive every tombstone? */
+    /** Is no tombstone held for `id`? A null id matches none. */
+    def frees(id: java.lang.Long): Boolean = id == null || !byId.contains(id)
+
+    /** Does the row (vec_id, cell, src_id) survive every tombstone held
+      * for its id? */
     def keeps(id: java.lang.Long, cell: Integer,
         src: java.lang.Long): Boolean =
-      id == null || byId.get(id.longValue).forall(!_.exists {
+      byId.get(id).forall(!_.exists {
         case (tc, ta) => inScope(tc, ta, cell, src)
       })
+
+    @transient lazy val free =
+      udf((id: java.lang.Long) => frees(id)).withName(TombFreeUdf)
 
     @transient lazy val keep =
       udf((id: java.lang.Long, cell: Integer, src: java.lang.Long) =>
@@ -467,12 +489,17 @@ object AnnIngest {
     * mtime, file count and bytes, plus the manifest's tombs/tswept
     * ledger, from which split tombstones take their applied-at id) and
     * applied as a [[TombSet]] predicate, so a steady reader launches no
-    * tombstone job; a larger set keeps the shuffled [[antiTombs]]. */
+    * tombstone job; a larger set keeps the shuffled [[antiTombs]]. The
+    * tombstone relation is built only to collect a set or to anti-join
+    * it: a cached set plans no tombstone read. The held predicate tests
+    * membership first, so the optimizer inlines the src_id expression
+    * (a regex over each row's file path, see [[readDirs]]) under the
+    * `Or`'s right branch, evaluated for held ids only. */
   private def tombFilter(m: Manifest, sp: SparkSession,
       dirs: Seq[String]): DataFrame => DataFrame =
     if (dirs.isEmpty) identity
     else {
-      val t = tombRows(m, sp, dirs)
+      lazy val t = tombRows(m, sp, dirs)
       val ledger = (m.runs.getOrElse("tombs", Nil) ++
         m.runs.getOrElse("tswept", Nil)).map(r => s"${r.name}=${r.rows}")
         .sorted.mkString(",")
@@ -487,7 +514,8 @@ object AnnIngest {
         }
       held match {
         case Some(set) => rows =>
-          rows.filter(set.keep(col("vec_id"), col("cell"), col("src_id")))
+          rows.filter(set.free(col("vec_id")) ||
+            set.keep(col("vec_id"), col("cell"), col("src_id")))
         case None => rows => antiTombs(rows, t)
       }
     }
@@ -1206,9 +1234,10 @@ object AnnIngest {
     * [[graft.expr.DotProduct.fold]] and [[graft.expr.Cosine.of]] the
     * Catalyst forms run) and keeps a bounded [[graft.agg.TopKAgg]]
     * buffer per query; the driver merges the buffers — at most
-    * partitions × queries × k pairs come back. The first query after a
-    * tombstone-set change adds one job, which collects the set
-    * ([[tombFilter]]). */
+    * partitions × queries × k pairs come back, and `cos_r` is rounded
+    * there with Spark's `round` rule ([[graft.ops.StatsMath.round]]).
+    * The first query after a tombstone-set change adds one job, which
+    * collects the set ([[tombFilter]]). */
   def queryTopK(sp: SparkSession, indexDir: String, queries: DataFrame,
                 k: Int = 3, nProbe: Int = 1): DataFrame = {
     import org.apache.spark.sql.Row
@@ -1223,15 +1252,20 @@ object AnnIngest {
     val cents = centroidsOf(m, sp, indexDir).getOrElse(
       throw new IllegalStateException(
         s"no centroids at $indexDir — ingest at least one batch first"))
-    // (cell, (query vec_id, vector, norm)) per probe
-    val probes = graft.sim.Similarity.prep(queries)
-      .select(col("vec_id").cast("long"), col("e"), col("norm"))
-      .collect().toSeq
+    // (cell, (query vec_id, vector, norm)) per probe. The query rows are
+    // collected as given and `e`/`norm` derived here, bit-identical to
+    // Similarity.prep: a null embedding is dropped, elements are cast to
+    // double, a null element reads 0.0 (as prep's dot reads it) and the
+    // norm is the same left-fold dot under sqrt
+    val probes = queries.select(col("vec_id").cast("long"),
+        col("embedding").cast("array<double>"))
+      .collect().toSeq.filterNot(_.isNullAt(1))
       .flatMap { r =>
         val e = r.getSeq[Double](1).toArray
         val ea = UnsafeArrayData.fromPrimitiveArray(e)
+        val norm = math.sqrt(graft.expr.DotProduct.fold(ea, ea))
         graft.sim.Ivf.probeCells(cents, e, nProbe)
-          .map(c => c -> (r.getLong(0), ea, r.getDouble(2)))
+          .map(c => c -> (r.getLong(0), ea, norm))
       }
     val byCell = probes.groupBy(_._1)
       .map { case (c, ps) => c -> ps.map(_._2).toArray }
@@ -1256,13 +1290,12 @@ object AnnIngest {
       .map { case (q, bs) =>
         q -> bs.map(_._2).reduce(TopKAgg.merge(_, _, k)) }
     val out = merged.flatMap { case (q, buf) =>
-      buf.zipWithIndex.map { case ((cos, nb), i) => Row(q, i + 1, nb, cos) }
+      buf.zipWithIndex.map { case ((cos, nb), i) =>
+        Row(q, i + 1, nb, graft.ops.StatsMath.round(cos, 6)) }
     }
     sp.createDataFrame(out.asJava, StructType(Seq(
       StructField("vec_id", LongType), StructField("rank", IntegerType),
-      StructField("nb_id", LongType), StructField("cos", DoubleType))))
-      .select(col("vec_id"), col("rank"), col("nb_id"),
-        round(col("cos"), 6).as("cos_r"))
+      StructField("nb_id", LongType), StructField("cos_r", DoubleType))))
   }
 
   /** The index rows a query over `cells` scores: (cell, vec_id, e, norm),

@@ -16,6 +16,10 @@ import org.apache.spark.sql.execution.SparkPlan
   *  - `scan_unpushed` — a parquet scan with data filters that pushed
   *    NOTHING down: the filter runs post-materialization, so the scan
   *    reads every row group it could have skipped.
+  *  - `tomb_eager_src` — a plan applying a held ANN tombstone set whose
+  *    per-row source id (a regex over the row's file path) is computed
+  *    outside the set's membership short-circuit, i.e. for every row
+  *    scanned instead of only for rows whose id is held.
   *
   * Queries whose `fn` is eager (contract queries that collect
   * driver-side and return a local frame) lint as `LocalTableScan` —
@@ -149,6 +153,33 @@ object PlanLint {
     }
   }
 
+  /** Expressions over file metadata (`_metadata.file_path`: the ANN
+    * reader's source id) that a plan holding a [[graft.streaming.
+    * AnnIngest.TombFreeUdf]] membership test evaluates outside that
+    * test's short-circuit `free(vec_id) || keep(…)`. Empty for plans
+    * without the test. */
+  private def eagerSrcIds(plan: SparkPlan): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions._
+    def isFree(e: Expression) = e.exists {
+      case u: ScalaUDF =>
+        u.udfName.contains(graft.streaming.AnnIngest.TombFreeUdf)
+      case _ => false
+    }
+    // an expression over the `_metadata` column, not under the right
+    // branch of a membership short-circuit
+    def eager(e: Expression): Seq[Expression] = e match {
+      case Or(l, _) if isFree(l) => eager(l)
+      case x if x.children.exists {
+            case a: Attribute => a.name == "_metadata"
+            case _ => false
+          } => Seq(x)
+      case x => x.children.flatMap(eager)
+    }
+    val exprs = plan.flatMap(_.expressions)
+    if (!exprs.exists(isFree)) Nil
+    else exprs.flatMap(eager).map(_.sql).distinct
+  }
+
   def lintPlan(name: String, plan: SparkPlan): Seq[Finding] = {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.joins.{
@@ -181,7 +212,10 @@ object PlanLint {
             "different legal row set on real executors; snapshot it " +
             "(localCheckpoint) or sort before the limit")
       }.toSeq
-    structural ++ nondetReuse
+    val eagerSrc = eagerSrcIds(plan).map(e =>
+      Finding(name, "tomb_eager_src", s"per-row $e outside the held " +
+        "tombstone set's membership short-circuit"))
+    structural ++ nondetReuse ++ eagerSrc
   }
 
   def main(args: Array[String]): Unit = {

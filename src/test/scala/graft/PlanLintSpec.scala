@@ -120,6 +120,26 @@ class PlanLintSpec extends AnyFunSuite {
       s"got ${lint(sortedPick.unionByName(sortedPick))}")
   }
 
+  test("tomb_eager_src: a file-path derivation outside a held tombstone " +
+    "set's membership short-circuit flags; under its right branch, or in " +
+    "a plan without the test, it does not") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pl_src")
+      .toString
+    spark.range(20).toDF("vec_id").write.mode("overwrite").parquet(dir)
+    val rows = spark.read.parquet(dir)
+    val free = udf((id: java.lang.Long) => id == null || id % 7 != 0)
+      .withName(graft.streaming.AnnIngest.TombFreeUdf)
+    val src = regexp_extract(col("_metadata.file_path"), "([^/]+)$", 1)
+    def kinds(df: org.apache.spark.sql.DataFrame) = lint(df).map(_.kind)
+    assert(kinds(rows.filter(free(col("vec_id")) || src =!= lit("x")))
+      .isEmpty)
+    assert(kinds(rows.filter(free(col("vec_id")) && src =!= lit("x")))
+      .contains("tomb_eager_src"))
+    assert(kinds(rows.filter(free(col("vec_id"))).select(col("vec_id"),
+      src.as("src"))).contains("tomb_eager_src"))
+    assert(kinds(rows.select(col("vec_id"), src.as("src"))).isEmpty)
+  }
+
   test("the shipped whitelist matches the committed PLAN_LINT.md " +
     "verdict: every allowed key names a registered query, no key " +
     "repeats, and the committed report's whitelist count equals its " +

@@ -141,6 +141,35 @@ class RangeScanSpec extends AnyFunSuite {
     assert(!areas._1.isNaN && !areas._2.isNaN)
   }
 
+  test("an input holding a shuffle is scanned at its planned width: " +
+    "reading it launches no job, rankCounts and confusionSweep over a " +
+    ".repartition(8) frame run one job more than over its source (the " +
+    "input's own shuffle), and the results are equal") {
+    val base = spark.range(0, 20000, 1, 4).select(col("id"),
+      (col("id") * 7919 % 1000).cast("double").as("score"),
+      (col("id") % 5 === 0).as("pos"))
+    // a fresh frame per use: a Dataset keeps the RDD it built
+    def shuffled = base.repartition(8)
+    var width = 0
+    assert(jobsOf { width = RangeScan.width(shuffled) } === 0)
+    assert(width === 8)
+    assert(jobsOf { shuffled.rdd.getNumPartitions; () } === 1,
+      "the RDD's count runs the shuffle")
+    assert(RangeScan.width(base) === 4)
+    def ranks(d: DataFrame) = graft.ops.Rank.rankCounts(d, "score")
+      .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Double]).toSeq
+    def sweep(d: DataFrame) = sweepOf(d, 10).collect().map(_.toSeq)
+      .sortBy(_.head.asInstanceOf[Int]).toSeq
+    var got = Seq.empty[Seq[Any]]
+    var want = Seq.empty[Seq[Any]]
+    assert(jobsOf { want = ranks(base) } === 5)
+    assert(jobsOf { got = ranks(shuffled) } === 6)
+    assert(got === want)
+    assert(jobsOf { want = sweep(base) } === 4)
+    assert(jobsOf { got = sweep(shuffled) } === 5)
+    assert(got === want)
+  }
+
   test("a throwing emit or summary leaves the persistent RDDs as found") {
     val sc = spark.sparkContext
     val d = spark.range(0, 500, 1, 3).select(col("id").cast("double").as("v"))

@@ -1233,10 +1233,13 @@ class AnnIngestSpec extends AnyFunSuite {
 
   /** The query formulation before the one-job rewrite, kept as the
     * reference: probes broadcast into a join on cell, the `when` cosine,
-    * a TopKAgg groupBy and posexplode — over [[liveByHand]]. */
+    * a TopKAgg groupBy and posexplode — over `liveRows` of the index,
+    * [[liveByHand]] unless given. */
   private def referenceTopK(idx: String,
       queries: org.apache.spark.sql.DataFrame, k: Int,
-      nProbe: Int): Seq[(Long, Int, Long, Double)] = {
+      nProbe: Int,
+      liveRows: String => org.apache.spark.sql.DataFrame = liveByHand)
+      : Seq[(Long, Int, Long, Double)] = {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
@@ -1256,7 +1259,7 @@ class AnnIngestSpec extends AnyFunSuite {
     val cos = when(col("na") * col("nb") > lit(0.0),
       dot(col("ea"), col("eb")) / (col("na") * col("nb")))
       .otherwise(lit(0.0))
-    broadcast(q).join(liveByHand(idx), Seq("cell"))
+    broadcast(q).join(liveRows(idx), Seq("cell"))
       .withColumn("cos", cos)
       .groupBy("vec_id")
       .agg(graft.agg.TopKAgg.topK(k)(col("cos"), col("nb_id")).as("nn"))
@@ -1266,6 +1269,39 @@ class AnnIngestSpec extends AnyFunSuite {
       .collect().toSeq
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
       .sorted
+  }
+
+  /** Live index rows (nb_id, eb, nb, cell) by the shuffled anti-join
+    * form of the tombstone rule, without the engine's held set: every
+    * live run and delta read with its source id, every live tombstone
+    * dir read with its scopes (a column a dir lacks reads NULL; a split
+    * tombstone's applied-at id comes from the manifest ledger), and one
+    * left-anti join on vec_id whose extra condition is the scope rule. */
+  private def liveByAntiJoin(idx: String): org.apache.spark.sql.DataFrame = {
+    val m = IngestIndex.readManifest(spark, idx)
+    val ledger = (m.runs.getOrElse("tombs", Nil) ++
+      m.runs.getOrElse("tswept", Nil)).map(r => r.name -> r.rows).toMap
+    val (runs, deltas) = AnnIngest.live(spark, idx, Long.MaxValue)
+    val rows = (runs ++ deltas).map { d =>
+      spark.read.parquet(d).select(col("vec_id"),
+        col("e").cast("array<double>"), col("norm"), col("cell"),
+        lit(IngestIndex.srcIdOf(d)).as("src_id"))
+    }.reduce(_ union _)
+    val tombs = AnnIngest.tombDirs(spark, idx).map { d =>
+      val name = d.split("/").last
+      val t = spark.read.parquet(d)
+      def opt(c: String, tpe: String) =
+        if (t.columns.contains(c)) col(c) else lit(null).cast(tpe)
+      t.select(col("vec_id").as("t_id"), opt("cell", "int").as("t_cell"),
+        (if (name.startsWith("t_split_")) lit(ledger(name))
+         else opt("tb_bound", "long")).as("t_applied"))
+    }.reduce(_ union _)
+    rows.join(tombs, rows("vec_id") === tombs("t_id") &&
+        (tombs("t_cell").isNull || tombs("t_cell") === rows("cell")) &&
+        (tombs("t_applied").isNull || rows("src_id") < tombs("t_applied")),
+        "left_anti")
+      .select(col("vec_id").as("nb_id"), col("e").as("eb"),
+        col("norm").as("nb"), col("cell"))
   }
 
   private def topK(idx: String, queries: org.apache.spark.sql.DataFrame,
@@ -1402,5 +1438,85 @@ class AnnIngestSpec extends AnyFunSuite {
     AnnIngest.compact(spark, idx, 3L) // physical sweep: the dir goes
     assert(!dir.exists())
     check(1, Set(3L, 4L, 5L), "swept")
+  }
+
+  test("the held tombstone set excludes exactly the rows of the anti-join " +
+    "form: readIndex, queryTopK and a compaction's output over a source-" +
+    "scoped takedown re-ingested after the delete, a committed split " +
+    "tombstone, a legacy takedown without tb_bound and a null id among the " +
+    "tombstoned ids") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val s = spark
+    import s.implicits._
+    val t = java.nio.file.Files.createTempDirectory("graft_annheld").toString
+    val idx = s"$t/idx"
+    def cluster(ids: Range, base: Double) = ids.map { i =>
+      (i.toLong, Array.tabulate(8)(d =>
+        (base + 0.01 * math.sin(i * 31 + d * 7)).toFloat))
+    }.toDF("vec_id", "embedding")
+    AnnIngest.ingestBatch(vecs(0 until 300), 0L, idx, nCells = 16)
+    AnnIngest.ingestBatch(cluster(300 until 340, -5.0), 1L, idx, nCells = 16)
+    AnnIngest.compact(spark, idx, 1L)
+    AnnIngest.compact(spark, idx, 2L, splitHot = 2.0)
+    assert(IngestIndex.readManifest(spark, idx).runs("tombs").map(_.name)
+      .contains("t_split_2"))
+    // a source-scoped takedown (with a null id among its ids), then id 5
+    // re-ingested with new content: only the old copy is excluded
+    AnnIngest.delete(spark, idx,
+      Seq(Some(5L), Some(12L), Some(301L), None).toDF("vec_id"), "gone")
+    val fresh = Seq((5L, Array.tabulate(8)(d => (0.5 - 0.1 * d).toFloat)))
+      .toDF("vec_id", "embedding")
+    AnnIngest.ingestBatch(fresh.union(cluster(400 until 410, 3.0)), 3L, idx,
+      nCells = 16)
+    // a legacy takedown: vec_id alone, no tb_bound — every source
+    Seq(20L, 405L).toDF("vec_id").write.parquet(s"$idx/tombs/t_legacy")
+    assert(AnnIngest.tombDirs(spark, idx).map(_.split("/").last).toSet ===
+      Set("t_gone", "t_legacy", "t_split_2"))
+
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1),
+        r.getDouble(2), r.getInt(3))).sortBy(_.toString)
+    def read() = AnnIngest.readIndex(spark, idx, None)
+      .select("vec_id", "e", "norm", "cell")
+    assert(read().queryExecution.executedPlan.toString
+      .contains(AnnIngest.TombFreeUdf), "the held form is applied")
+    val want = rowsOf(liveByAntiJoin(idx))
+    assert(rowsOf(read()) === want)
+    val ids = want.map(_._1)
+    assert(ids.count(_ == 5L) === 1, "the re-ingested 5 stays")
+    assert(!ids.exists(Set(12L, 20L, 301L, 405L)))
+
+    // query rows as given: a null embedding is dropped, a null element
+    // reads 0.0, exactly as Similarity.prep derives them
+    val odd = spark.createDataFrame(java.util.List.of(
+        Row(900L, null),
+        Row(901L, Seq[java.lang.Float](0.5f, null, -0.25f, 0.1f, 0f, 0.3f,
+          null, 0.7f))),
+      StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(FloatType)))))
+    val queries = vecs(0 until 30).union(cluster(300 until 310, -5.0))
+      .union(fresh).union(cluster(400 until 410, 3.0)).union(odd)
+    for ((k, nProbe) <- Seq((3, 2), (10, 16))) {
+      val got = topK(idx, queries, k, nProbe)
+      val ref = referenceTopK(idx, queries, k, nProbe, liveByAntiJoin)
+      assert(got.nonEmpty && !got.exists(_._1 == 900L) &&
+        got.exists(_._1 == 901L))
+      assert(sameBits(got, ref), s"k $k nProbe $nProbe: " +
+        got.diff(ref).take(5) + " vs " + ref.diff(got).take(5))
+    }
+
+    // a compaction writes only rows the anti-join keeps, and leaves the
+    // live set as it was
+    val before = AnnIngest.live(spark, idx, Long.MaxValue)._1.toSet
+    AnnIngest.compact(spark, idx, 3L)
+    val written = AnnIngest.live(spark, idx, Long.MaxValue)._1
+      .filterNot(before)
+    assert(written.nonEmpty)
+    val physical = rowsOf(written.map(d => spark.read.parquet(d)
+      .select(col("vec_id"), col("e").cast("array<double>"), col("norm"),
+        col("cell"))).reduce(_ union _))
+    assert(physical.diff(want).isEmpty, physical.diff(want).take(3))
+    assert(rowsOf(read()) === want)
   }
 }

@@ -956,6 +956,10 @@ class IngestIndexSpec extends AnyFunSuite {
     assert(scan.queryExecution.sparkPlan.collectFirst {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }.exists(_.partitionFilters.nonEmpty), "the query scan is cell-pruned")
+    // the takedown is held on the driver, so the lint's short-circuit
+    // check (tomb_eager_src) has a membership test to check against
+    assert(scan.queryExecution.sparkPlan.toString
+      .contains(AnnIngest.TombFreeUdf), "the held set's membership test")
     lint("ann_query", scan)
   }
 
