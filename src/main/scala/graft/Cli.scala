@@ -136,6 +136,23 @@ object Cli {
       s"unknown normtype '$other' (zscale|woe|onehot|woezscore|hybrid|raw)")
   }
 
+  /** Write a stats sidecar (`<catalog>.quantiles`, `<catalog>.hll`):
+    * one `<col>\t<serialized>` line per column, sorted by column. */
+  private def writeSidecar[T](path: String, byCol: Map[String, T])(
+      ser: T => String): Unit =
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
+      byCol.toSeq.sortBy(_._1).map { case (c, v) => s"$c\t${ser(v)}" }
+        .mkString("\n"))
+
+  /** Read a sidecar written by [[writeSidecar]]. */
+  private def readSidecar[T](f: java.io.File)(de: String => T)
+      : Map[String, T] =
+    java.nio.file.Files.readAllLines(f.toPath).asScala
+      .filter(_.nonEmpty).map { line =>
+        val Array(c, s) = line.split("\t", 2)
+        c -> de(s)
+      }.toMap
+
   /** Testable entry: returns the lines it would print. */
   def run(spark: SparkSession, verb: String,
           opts: Map[String, String]): Seq[String] = {
@@ -296,13 +313,8 @@ object Cli {
         val sidecars = paths.map(p => new java.io.File(s"$p.quantiles"))
         val (withQ, sketchLine) =
           if (sidecars.forall(_.exists())) {
-            val maps = sidecars.map { f =>
-              java.nio.file.Files.readAllLines(f.toPath).asScala
-                .filter(_.nonEmpty).map { line =>
-                  val Array(c, s) = line.split("\t", 2)
-                  c -> graft.ops.QuantileSketch.deserialize(s)
-                }.toMap
-            }
+            val maps = sidecars.map(
+              readSidecar(_)(graft.ops.QuantileSketch.deserialize))
             val mergedSketches = maps.reduce { (ma, mb) =>
               ma.flatMap { case (c, s) =>
                 mb.get(c).map(o => c -> s.compress().merge(o.compress()))
@@ -318,10 +330,8 @@ object Cli {
               }
             }
             val out = s"${opts("catalog")}.quantiles"
-            java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
-              mergedSketches.toSeq.sortBy(_._1).map { case (c, s) =>
-                s"$c\t${graft.ops.QuantileSketch.serialize(s)}"
-              }.mkString("\n"))
+            writeSidecar(out, mergedSketches)(
+              graft.ops.QuantileSketch.serialize)
             (filled,
               Seq(s"quantiles: ${mergedSketches.size} sketches merged -> " +
                 out))
@@ -333,13 +343,8 @@ object Cli {
         val hllSidecars = paths.map(p => new java.io.File(s"$p.hll"))
         val (withH, hllLine) =
           if (hllSidecars.forall(_.exists())) {
-            val maps = hllSidecars.map { f =>
-              java.nio.file.Files.readAllLines(f.toPath).asScala
-                .filter(_.nonEmpty).map { line =>
-                  val Array(c, s) = line.split("\t", 2)
-                  c -> graft.agg.Hll.deserialize(s)
-                }.toMap
-            }
+            val maps =
+              hllSidecars.map(readSidecar(_)(graft.agg.Hll.deserialize))
             val mergedRegs = maps.reduce { (ma, mb) =>
               ma.flatMap { case (c, r) =>
                 mb.get(c).map(o => c -> graft.agg.Hll.merge(r, o))
@@ -354,10 +359,7 @@ object Cli {
               }
             }
             val out = s"${opts("catalog")}.hll"
-            java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
-              mergedRegs.toSeq.sortBy(_._1).map { case (c, r) =>
-                s"$c\t${graft.agg.Hll.serialize(r)}"
-              }.mkString("\n"))
+            writeSidecar(out, mergedRegs)(graft.agg.Hll.serialize)
             (filled,
               Seq(s"hll: ${mergedRegs.size} sketches merged -> $out"))
           } else (withQ, Nil)
@@ -475,10 +477,7 @@ object Cli {
             .map(_.columnName)
           val sketches = graft.ops.QuantileSketch.buildFor(clean, numCols)
           val out = s"${opts("catalog")}.quantiles"
-          java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
-            sketches.toSeq.sortBy(_._1).map { case (c, s) =>
-              s"$c\t${graft.ops.QuantileSketch.serialize(s)}"
-            }.mkString("\n"))
+          writeSidecar(out, sketches)(graft.ops.QuantileSketch.serialize)
           s"quantiles: ${sketches.size} sketches -> $out"
         }
         val hllLine = opts.get("hll").map { _ =>
@@ -488,10 +487,7 @@ object Cli {
           val allCols = catalog.map(_.columnName)
           val regs = graft.agg.Hll.buildFor(clean, allCols)
           val out = s"${opts("catalog")}.hll"
-          java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
-            regs.toSeq.sortBy(_._1).map { case (c, r) =>
-              s"$c\t${graft.agg.Hll.serialize(r)}"
-            }.mkString("\n"))
+          writeSidecar(out, regs)(graft.agg.Hll.serialize)
           s"hll: ${regs.size} sketches -> $out"
         }
         val topkLine = opts.get("topk").map { c =>

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** All-pairs Pearson correlation.
@@ -41,6 +41,15 @@ object Correlation {
   private def qlit(s: String): String =
     "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
+  /** The closed-form Pearson r (see the object doc) over one stacked
+    * pair's (x, y) rows, rounded to 6 — the aggregate of both stack
+    * paths. */
+  private def pearsonAgg: Column = round(
+    (count(lit(1)) * sum(col("x") * col("y")) - sum("x") * sum("y")) /
+      sqrt((count(lit(1)) * sum(col("x") * col("x")) - sum("x") * sum("x")) *
+           (count(lit(1)) * sum(col("y") * col("y")) - sum("y") * sum("y"))),
+    6).as("corr")
+
   /** Pairwise Pearson over the given numeric columns; output
     * (pair, corr) rounded to 6, pair = "a|b" with a before b in `cols`.
     * Dispatches to the gramian single-pass path at `wideK`+ columns. */
@@ -80,13 +89,7 @@ object Correlation {
       df.select(expr(stackExpr))
         .filter(col("x").isNotNull && col("y").isNotNull)
         .groupBy("col_a", "col_b")
-        .agg(round(
-          (count(lit(1)) * sum(col("x") * col("y")) - sum("x") * sum("y")) /
-            sqrt((count(lit(1)) * sum(col("x") * col("x")) -
-                   sum("x") * sum("x")) *
-                 (count(lit(1)) * sum(col("y") * col("y")) -
-                   sum("y") * sum("y"))),
-          6).as("corr"))
+        .agg(pearsonAgg)
     }
   }
 
@@ -171,10 +174,6 @@ object Correlation {
       // nulls, corrupting r whenever a column had missing values
       .filter(col("x").isNotNull && col("y").isNotNull)
       .groupBy("pair")
-      .agg(round(
-        (count(lit(1)) * sum(col("x") * col("y")) - sum("x") * sum("y")) /
-          sqrt((count(lit(1)) * sum(col("x") * col("x")) - sum("x") * sum("x")) *
-               (count(lit(1)) * sum(col("y") * col("y")) - sum("y") * sum("y"))),
-        6).as("corr"))
+      .agg(pearsonAgg)
   }
 }

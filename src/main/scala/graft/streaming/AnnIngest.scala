@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.streaming.IngestIndex.{Manifest, Run}
+import graft.streaming.IngestIndex.{AnnFamily, Manifest, Run}
 
 /** Streaming ANN index ingest — the similarity-family counterpart of
   * the dedup ingest gate ([[StreamOps.dedupIngestStream]]): a continuous
@@ -235,13 +235,17 @@ object AnnIngest {
     * and append under `vectors/batch=<id>`, partitioned by cell.
     * Overwrite mode → a foreachBatch retry leaves the index
     * bit-identical. No prior index state is read — ingest cost is
-    * O(batch) whatever the corpus size. */
+    * O(batch) whatever the corpus size. A row with a null `vec_id` is
+    * dropped, as [[graft.sim.Similarity.prep]] drops a null embedding:
+    * it has no identity to query, delete or return, and one such row
+    * must not fail the batch (and with it the stream). */
   def ingestBatch(batch: DataFrame, batchId: Long, indexDir: String,
                   nCells: Int = DefaultCells): Unit =
       IngestIndex.withWriterLease(batch.sparkSession, indexDir) {
-    val cents = ensureCentroids(batch, indexDir, nCells)
+    val rows = batch.filter(col("vec_id").isNotNull)
+    val cents = ensureCentroids(rows, indexDir, nCells)
     val assigned = graft.sim.Ivf.assignCells(
-      graft.sim.Similarity.prep(batch), cents)
+      graft.sim.Similarity.prep(rows), cents)
     val sp = batch.sparkSession
     // ~one file per populated cell partition. The exchange width is
     // bounded by the quantizer size (there are at most |cells| distinct
@@ -290,39 +294,17 @@ object AnnIngest {
   def delete(sp: SparkSession, indexDir: String, ids: DataFrame,
              tag: String): Unit =
       IngestIndex.withWriterLease(sp, indexDir) {
-    require(tag.matches("[A-Za-z0-9_\\-]+"),
-      s"tombstone tag must be [A-Za-z0-9_-]+, got '$tag'")
+    val m = IngestIndex.readManifest(sp, indexDir)
+    AnnFamily.requireNewTag(m, tag)
     // the split_ namespace is reserved: split-retrain tombstones are
     // MANIFEST-GATED (a dir is honored only when committed), which
     // would silently defer a user takedown issued under such a tag
     require(!tag.startsWith("split_"),
       s"tag '$tag' collides with the reserved split-retrain namespace " +
         "(t_split_*); pick another tag")
-    // an APPLIED tag must not be re-issued with more ids: the sweep
-    // proof covers what was applied under that name, so extending it
-    // could sweep before the new ids are removed — silently undoing a
-    // takedown. Overwriting a not-yet-applied tag stays allowed (the
-    // idempotent-retry shape).
-    val m = IngestIndex.readManifest(sp, indexDir)
-    val applied = (m.runs.getOrElse("tombs", Nil) ++
-      m.runs.getOrElse("tswept", Nil)).map(_.name).toSet
-    if (applied.contains(s"t_$tag"))
-      throw new IllegalArgumentException(
-        s"tombstone tag '$tag' was already applied by a compaction — " +
-          "issue the additional ids under a fresh tag")
-    // SOURCE-SCOPE the takedown: it removes the id's copies from
-    // sources that exist NOW. Without the bound a vec_id re-ingested
-    // AFTER the delete (fresh content under a recycled id) was
-    // silently hidden until the tombstone swept — and a compaction in
-    // that window physically dropped the fresh row. Writers are
-    // lease-serialized, so every future batch/compaction id is > the
-    // max source id observed here.
-    val bound = 1L + math.max(m.maxCompacted,
-      liveWith(m, sp, indexDir, Long.MaxValue)._2
-        .map(d => srcIdOf(d)).maxOption.getOrElse(-1L))
     ids.select(col("vec_id").cast("long"))
       .distinct()
-      .withColumn("tb_bound", lit(bound))
+      .withColumn("tb_bound", lit(AnnFamily.sourceBound(sp, indexDir, m)))
       .write.mode("overwrite").parquet(s"${tombsDir(indexDir)}/t_$tag")
   }
 
@@ -349,8 +331,7 @@ object AnnIngest {
     val p = new Path(tombsDir(indexDir))
     val f = fs(sp, indexDir)
     if (!f.exists(p)) return Nil
-    val recognized = (m.runs.getOrElse("tombs", Nil) ++
-      m.runs.getOrElse("tswept", Nil)).map(_.name).toSet
+    val recognized = AnnFamily.applied(m).map(_.name).toSet
     f.listStatus(p).toSeq.map(_.getPath.toString)
       .filter { d =>
         val n = d.split("/").last
@@ -400,8 +381,7 @@ object AnnIngest {
           // has a ledger record; a missing one (impossible by
           // construction) reads MaxValue = exclude from every source,
           // the pre-scoping behavior
-          lit((m.runs.getOrElse("tombs", Nil) ++
-            m.runs.getOrElse("tswept", Nil))
+          lit(AnnFamily.applied(m)
             .find(_.name == n).map(_.rows).getOrElse(Long.MaxValue))
         // source-scoped takedown ([[delete]] stamps the bound); a
         // legacy dir without it reads NULL = every source
@@ -500,8 +480,7 @@ object AnnIngest {
     if (dirs.isEmpty) identity
     else {
       lazy val t = tombRows(m, sp, dirs)
-      val ledger = (m.runs.getOrElse("tombs", Nil) ++
-        m.runs.getOrElse("tswept", Nil)).map(r => s"${r.name}=${r.rows}")
+      val ledger = AnnFamily.applied(m).map(r => s"${r.name}=${r.rows}")
         .sorted.mkString(",")
       val held: Option[TombSet] =
         IngestIndex.tombCached(sp, dirs, "ann", ledger) {
@@ -548,16 +527,8 @@ object AnnIngest {
       .foreach(d => throw new IllegalStateException(
         s"index run $d is referenced by the manifest but missing on " +
           "disk — the index is corrupted; restore it or re-ingest"))
-    val deltas = {
-      val p = new Path(vectorsDir(indexDir))
-      if (!f.exists(p)) Nil
-      else f.listStatus(p).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith("batch="))
-        .map(d => (d.getName.stripPrefix("batch=").toLong, d.toString))
-        .filter { case (id, _) => id > m.maxCompacted && id < beforeBatch }
-        .sortBy(_._1).map(_._2)
-    }
-    (runs, deltas)
+    (runs, IngestIndex.deltaDirs(sp, indexDir, AnnFamily.runs,
+      m.maxCompacted, beforeBatch).map(_._2))
   }
 
   /** All live index rows (vec_id, e, norm, cell), cell-pruned when
@@ -646,9 +617,6 @@ object AnnIngest {
         .option("ignoreInvalidPartitionPaths", "true").parquet(dirs: _*)
         .withColumn("src_id", coalesce(srcIds(dir), lit(0L)))
     }
-
-  private def sizeClass(rows: Long): Int =
-    63 - java.lang.Long.numberOfLeadingZeros(math.max(rows, 1L))
 
   /** Nearest-centroid REassignment that carries each row's current cell
     * through ([[graft.sim.Ivf.assignCells]] drops extra columns): the
@@ -754,14 +722,16 @@ object AnnIngest {
     acc.toMap
   }
 
-  /** Fold the new deltas (id ≤ `upTo`) into a run and binary-counter
-    * merge same-size-class runs — O(deltas) for a normal cycle, biggest
-    * run rewritten only when the corpus doubles — then commit via the
-    * manifest pointer and sweep folded deltas (ALL ids ≤ upTo, so a
-    * retry-rewritten delta whose compaction already committed cannot be
-    * orphaned), superseded runs, and crashed-compaction orphans.
-    * Decision-invariant by construction (same rows, same cells;
-    * spec-asserted on query results).
+  /** Fold the new deltas (id ≤ `upTo`) into a run, merge same-size-class
+    * runs, apply and sweep tombstones, commit via the manifest pointer,
+    * then delete what it superseded: the run and tombstone policy shared
+    * with the dedup gate ([[IngestIndex.mergeSameClass]],
+    * [[IngestIndex.Cycle]]) — O(deltas) for a normal cycle, biggest run
+    * rewritten only when the corpus doubles. Decision-invariant by
+    * construction (same rows, same cells; spec-asserted on query
+    * results). Family-specific here: the heal tombstones a split or
+    * fold adds to the ledger, orphan heal tombstones, centroid files
+    * and skew reports.
     *
     * `retrain = true` is the quantizer-drift escape hatch: re-train the
     * coarse quantizer on the CURRENT corpus (deterministic hash-stride
@@ -845,20 +815,8 @@ object AnnIngest {
       cents = Some(centsName)
       healedCounts = Some(adjustCounts(counts, movers))
     }
-    // tombstone ledger: every run written from here on excludes the
-    // live tombstones' ids, so a run's creation id (run_<id>_*) ≥ a
-    // tombstone's first-applied id proves the run is physically clean
-    // of it. `rows` in the "tombs" manifest kind records that
-    // first-applied compaction id; dirs in "tswept" were logically
-    // swept last cycle and await physical deletion (not live).
-    val prevTombs = m.runs.getOrElse("tombs", Nil)
-    val sweptPending = m.runs.getOrElse("tswept", Nil)
-    val liveTombPaths = tombDirsWith(m, sp, indexDir)
-      .filterNot(d => sweptPending.exists(_.name == d.split("/").last))
-    val tombRecords = liveTombPaths.map { d =>
-      val n = d.split("/").last
-      prevTombs.find(_.name == n).getOrElse(Run(n, upTo))
-    }
+    val cycle = AnnFamily.open(m, tombDirsWith(m, sp, indexDir), upTo)
+    val liveTombPaths = cycle.live
     val clean: DataFrame => DataFrame = tombFilter(m, sp, liveTombPaths)
     if (retrain) {
       if (runDirs.isEmpty && deltaDirs.isEmpty) return
@@ -893,35 +851,13 @@ object AnnIngest {
         cents = Some(centsName)
       }
     } else {
-      if (deltaDirs.nonEmpty) {
-        val folded = writeRun(sp, indexDir, nextName(),
-          clean(readDirs(sp, deltaDirs)),
-          preSlots)
-        if (folded.rows > 0) runs :+= folded
-      }
-      // merge ANY adjacent same-size-class pair, not just the bottom
-      // one: a fold can land directly in a higher class that already
-      // has an occupant (runs [2,5] + a new class-5 fold), and the
-      // bottom-pair-only loop would leave that 5/5 pair unmerged
-      // forever — breaking the <= log2(n) run-count bound
-      var sorted = runs.sortBy(r => (r.rows, r.name))
-      def samePair(rs: Seq[Run]): Option[Int] =
-        (0 until rs.length - 1).find(i =>
-          sizeClass(rs(i).rows) == sizeClass(rs(i + 1).rows))
-      var pair = samePair(sorted)
-      while (pair.isDefined) {
-        val i = pair.get
-        val (a, b) = (sorted(i), sorted(i + 1))
-        val merged = writeRun(sp, indexDir, nextName(), clean(readDirs(sp,
+      val fold = if (deltaDirs.isEmpty) None
+        else Some(writeRun(sp, indexDir, nextName(),
+          clean(readDirs(sp, deltaDirs)), preSlots))
+      runs = IngestIndex.mergeSameClass(runs ++ fold.filter(_.rows > 0)) {
+        (a, b) => writeRun(sp, indexDir, nextName(), clean(readDirs(sp,
           Seq(a, b).map(r => s"${vectorsDir(indexDir)}/${r.name}"))), preSlots)
-        // a fully-tombstoned merge yields zero rows — drop it instead
-        // of looping on an empty size class
-        sorted = (sorted.patch(i,
-          if (merged.rows > 0) Seq(merged) else Nil, 2))
-          .sortBy(r => (r.rows, r.name))
-        pair = samePair(sorted)
-      }
-      runs = sorted.sortBy(-_.rows)
+      }._1
     }
     // ---- split-cell LOCAL retrain ------------------------------------------
     // The affordable self-heal for moderate drift: instead of the
@@ -1109,74 +1045,19 @@ object AnnIngest {
         }
       }
     }
-    // tombstone lifecycle, two-phase so readers get the same
-    // one-generation grace as runs: LOGICALLY sweepable once every
-    // live run postdates-or-equals its first application AND that
-    // already held at the previous manifest; it then moves to "tswept"
-    // (files stay — in-flight readers still anti-join them,
-    // harmlessly) and is PHYSICALLY deleted at the NEXT compaction.
-    def allClean(rs: Seq[Run], appliedAt: Long): Boolean =
-      rs.forall(r => "run_(\\d+)_".r.findFirstMatchIn(r.name)
-        .exists(_.group(1).toLong >= appliedAt))
-    val (sweep, keepTombs) = tombRecords.partition { tb =>
-      prevTombs.exists(_.name == tb.name) &&
-        allClean(m.runs.getOrElse("vectors", Nil), tb.rows) &&
-        allClean(runs, tb.rows)
-    }
-    // physical deletion of LAST cycle's logically-swept tombstones,
-    // BEFORE publishing the manifest that drops their tswept records:
-    // the reverse order leaves a crash window (manifest published, dirs
-    // still on disk with no record) where the next compaction would
-    // read the undeleted dir as a brand-new LIVE tombstone and silently
-    // re-delete ids that were legitimately re-ingested after the sweep.
-    // Deletion-first leaves at worst dirs-gone + old-manifest-names-
-    // them-in-tswept, which the next cycle drops as a no-op.
-    sweptPending.foreach { tb =>
-      f.delete(new Path(s"${tombsDir(indexDir)}/${tb.name}"), true); ()
-    }
-    IngestIndex.writeManifest(sp, indexDir,
-      Manifest(upTo,
-        Map("vectors" -> runs,
-          "tombs" -> (keepTombs ++ healTombs),
-          // the tswept record KEEPS the first-applied id: readers
-          // still anti-join the dir for one generation, and tombRows
-          // resolves tb_applied from tombs ++ tswept — recording the
-          // sweep id here would inflate the source scope and eat a
-          // row legitimately re-ingested into its old cell (src >=
-          // first-applied but < sweep id) for exactly that window
-          "tswept" -> sweep.map(tb => Run(tb.name, tb.rows)))
-          .filter(_._2.nonEmpty),
-        cents))
-    // cleanup AFTER commit, with ONE-GENERATION retention (MVCC-lite,
-    // same contract as [[IngestIndex.compact]]): dirs superseded by
-    // THIS compaction stay until the NEXT one, so a concurrent
-    // [[queryTopK]] that planned its scan against the previous
-    // manifest survives this cleanup — the serving path only needs to
-    // finish within one compaction interval. Deleted now: deltas the
-    // PREVIOUS manifest had folded (swept from the disk listing, not
-    // the manifest-filtered live set — a retry-rewritten delta is
-    // still collected one generation later, never orphaned forever)
-    // and run dirs neither the new nor the previous manifest names.
+    cycle.deleteSwept(f, tombsDir(indexDir))
+    val next = Manifest(upTo, cycle.entries(runs, healTombs.toSeq), cents)
+    IngestIndex.writeManifest(sp, indexDir, next)
     val p = new Path(vectorsDir(indexDir))
-    if (f.exists(p)) {
-      val retained = runs.map(_.name).toSet ++
-        m.runs.getOrElse("vectors", Nil).map(_.name)
-      f.listStatus(p).toSeq.map(_.getPath).foreach { d =>
-        val n = d.getName
-        val stale =
-          (n.startsWith("batch=") &&
-            n.stripPrefix("batch=").toLong <= m.maxCompacted) ||
-          ((n.startsWith("run_") || n.startsWith("base_v")) &&
-            !retained(n))
-        if (stale) { f.delete(d, true); () }
-      }
-    }
+    if (f.exists(p))
+      f.listStatus(p).map(_.getPath)
+        .filter(d => cycle.superseded(runs)(d.getName))
+        .foreach { d => f.delete(d, true); () }
     // orphan split-tombstone dirs — a crash between a previous split's
     // tombstone write and its manifest publish: inert for every reader
     // and compaction (manifest-gated in tombDirs), collected here so
     // they do not accumulate
-    val keptTombNames =
-      (keepTombs ++ healTombs ++ sweep).map(_.name).toSet
+    val keptTombNames = AnnFamily.applied(next).map(_.name).toSet
     val tombsRoot = new Path(tombsDir(indexDir))
     if (f.exists(tombsRoot)) {
       f.listStatus(tombsRoot).toSeq.map(_.getPath).foreach { d =>

@@ -666,39 +666,16 @@ object IngestIndex {
     * plus one reader-retention generation. Overwrite mode per tag →
     * idempotent re-issue. NOTE the key-sharing caveat: a hash/band key
     * shared with OTHER documents is removed for them too (that is what
-    * retracting content means for an index keyed by content). */
+    * retracting content means for an index keyed by content). The
+    * caller holds the writer lease, read `m` under it and checked `tag`
+    * with [[Family.requireNewTag]]. */
   private[streaming] def retractKeys(sp: SparkSession, indexDir: String,
-      kind: String, keys: DataFrame, tag: String): Unit = {
-    require(tag.matches("[A-Za-z0-9_\\-]+"),
-      s"retraction tag must be [A-Za-z0-9_-]+, got '$tag'")
-    // a tag the manifest has already APPLIED must not be re-issued
-    // with different content: the sweep condition proves runs are
-    // clean of what was applied UNDER THAT NAME, so extending an
-    // applied tag could sweep before the new keys are removed —
-    // silently undoing a takedown. (Overwriting a not-yet-applied tag
-    // remains allowed: that is the idempotent-retry shape.)
-    val m = readManifest(sp, indexDir)
-    val applied = (m.runs.getOrElse(s"tombs_$kind", Nil) ++
-      m.runs.getOrElse(s"tswept_$kind", Nil)).map(_.name).toSet
-    if (applied.contains(s"t_$tag"))
-      throw new IllegalArgumentException(
-        s"retraction tag '$tag' was already applied by a compaction — " +
-          "issue the additional keys under a fresh tag")
-    // SOURCE-SCOPE the retraction: it excludes keys only from sources
-    // (deltas/runs) that exist NOW. Without the bound, the exclusion
-    // also ate the key's own RE-INGESTION — the admitted re-arrival's
-    // key vanished from every probe view (and compaction physically
-    // dropped it), so each further arrival of retracted-then-re-added
-    // content was admitted as a duplicate until the sweep. Writers are
-    // lease-serialized, so every future batch/compaction id is > the
-    // max source id observed here.
-    val bound = 1L + math.max(m.maxCompacted,
-      deltaDirs(sp, indexDir, kind, Long.MinValue, Long.MaxValue)
-        .map(_._1).maxOption.getOrElse(-1L))
-    keys.distinct().withColumn("tb_bound", lit(bound))
+      kind: String, keys: DataFrame, tag: String, m: Manifest): Unit =
+    keys.distinct()
+      .withColumn("tb_bound",
+        lit(gateFamily(kind).sourceBound(sp, indexDir, m)))
       .write.mode("overwrite")
       .parquet(s"${tombsDir(indexDir, kind)}/t_$tag")
-  }
 
   /** Source id of a run or delta dir name — the compaction id that
     * wrote a run (`run_<id>_…`) or a delta's batch id (`batch=<id>`),
@@ -752,7 +729,7 @@ object IngestIndex {
     }.reduce(_ unionByName _)
     if (!fast.columns.contains(keyName)) slow
     else {
-      val ck = (keyName +: dirs.sorted).mkString(" ")
+      val ck = (keyName +: dirs.sorted).mkString(DirSetSep.toString)
       val fastOk = Option(tombFastOk.get(ck)).map(_.booleanValue)
         .getOrElse {
           val v = fast.filter(col(keyName).isNull).isEmpty
@@ -773,9 +750,16 @@ object IngestIndex {
   /** Per-dir-set verdict cache for [[readTombs]]'s fast path: true =
     * every dir carries the key under the index's key name, the single
     * mergeSchema scan is sound; false = mixed legacy naming, per-dir
-    * loop. Bounded the same way as the Bloom sidecar cache. */
+    * loop. Keyed by the key name and the sorted dir set joined with
+    * [[DirSetSep]]; a swept dir's entries are evicted when it is deleted
+    * ([[Cycle.deleteSwept]]), and a hard cap bounds the rest the same way
+    * as the Bloom sidecar cache. */
   private val tombFastOk =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+
+  /** Separator of a [[tombFastOk]] key's dir set: a character no path
+    * holds, so eviction splits the key back into exactly its dirs. */
+  private val DirSetSep = '\u0000'
 
   /** Live (not yet swept) tombstone dirs of `kind`. */
   private[streaming] def tombDirs(sp: SparkSession, indexDir: String,
@@ -836,8 +820,8 @@ object IngestIndex {
   private[graft] def liveTombDirs(sp: SparkSession, indexDir: String,
       kind: String, manifest: Manifest = null): Seq[String] = {
     val m = if (manifest != null) manifest else readManifest(sp, indexDir)
-    val swept = m.runs.getOrElse(s"tswept_$kind", Nil).map(_.name).toSet
-    tombDirs(sp, indexDir, kind).filterNot(d => swept(d.split("/").last))
+    val swept = gateFamily(kind).swept(m)
+    tombDirs(sp, indexDir, kind).filterNot(d => swept(nameOf(d)))
   }
 
   /** Exact copy of a Bloom filter (serialize round-trip — the public
@@ -1046,11 +1030,192 @@ object IngestIndex {
     else readPruned(sp, pr, keyName, hps)
   }
 
-  // ---- compaction ---------------------------------------------------------
+  // ---- run tiering and tombstone ledger -----------------------------------
+  //
+  // The one manifest policy of both streaming indexes, this gate and
+  // [[AnnIngest]]: a compaction folds the new deltas into a run, merges
+  // runs binary-counter style ([[mergeSameClass]]), applies and sweeps
+  // tombstones through the family's two-phase ledger ([[Cycle]]), and
+  // keeps superseded dirs one generation. What each index keeps to
+  // itself: how it reads and writes its dirs and which tombstone dirs it
+  // lists, the gate's Bloom sidecars, and the ANN index's centroid
+  // files, skew reports and heal tombstones.
+
+  /** Last path segment of a dir: a run, delta or tombstone dir's name. */
+  private[streaming] def nameOf(dir: String): String = dir.split("/").last
 
   /** Power-of-two size class for the binary-counter merge policy. */
   private def sizeClass(rows: Long): Int =
     63 - java.lang.Long.numberOfLeadingZeros(math.max(rows, 1L))
+
+  /** Binary-counter merge (Bentley–Saxe): while ANY adjacent pair of the
+    * size-sorted `runs` shares a size class, `merge` writes that pair as
+    * one run (dedup shrinks: a row in both counts once), so the live set
+    * keeps ≤ log₂(n) runs of geometrically separated sizes and the
+    * biggest run is rewritten only when the index doubles. Scanning ALL
+    * positions, not just the two smallest, matters when a fold lands
+    * directly in an occupied HIGHER class (runs [2,5] + a new class-5
+    * fold): a bottom-pair-only loop exits on the 2-vs-5 mismatch and
+    * leaves the 5/5 pair unmerged forever. A fully-tombstoned merge
+    * comes out with zero rows and is dropped (its unreferenced dir is
+    * collected as superseded) instead of looping on an empty class.
+    * Returns the runs, biggest first, and the rows the merges read —
+    * [[CompactStats]]' `merged`. */
+  private[streaming] def mergeSameClass(runs: Seq[Run])(
+      merge: (Run, Run) => Run): (Seq[Run], Long) = {
+    @annotation.tailrec
+    def loop(rs: Seq[Run], mergedRows: Long): (Seq[Run], Long) = {
+      val sorted = rs.sortBy(r => (r.rows, r.name))
+      (0 until sorted.length - 1).find(i =>
+        sizeClass(sorted(i).rows) == sizeClass(sorted(i + 1).rows)) match {
+        case None => (sorted.sortBy(-_.rows), mergedRows)
+        case Some(i) =>
+          val (a, b) = (sorted(i), sorted(i + 1))
+          val merged = merge(a, b)
+          loop(sorted.patch(i, Seq(merged).filter(_.rows > 0), 2),
+            mergedRows + a.rows + b.rows)
+      }
+    }
+    loop(runs, 0L)
+  }
+
+  /** The manifest keys of one index family: its run list (`runs`) and its
+    * tombstone ledger. `tombs` records each applied, live tombstone dir
+    * with the id of the compaction that FIRST applied it; `tswept` each
+    * logically swept dir awaiting physical deletion, with the same
+    * first-applied id (readers of the ANN index still anti-join a swept
+    * dir for one generation and take a heal tombstone's source scope
+    * from this record; a sweep id there would widen the scope and hide a
+    * row re-ingested into its old cell for that window). */
+  private[streaming] final case class Family(runs: String, tombs: String,
+      tswept: String) {
+
+    /** Every tombstone record of `m`, live or swept. */
+    def applied(m: Manifest): Seq[Run] =
+      m.runs.getOrElse(tombs, Nil) ++ m.runs.getOrElse(tswept, Nil)
+
+    /** Names of `m`'s logically swept tombstone dirs. */
+    def swept(m: Manifest): Set[String] =
+      m.runs.getOrElse(tswept, Nil).map(_.name).toSet
+
+    /** Check a new tombstone's `tag` against `m`: the name must be a
+      * plain dir token, and a tag a compaction already APPLIED is
+      * refused. The sweep proves runs clean of what was applied UNDER
+      * THAT NAME, so extending an applied tag could sweep before the new
+      * keys are removed, silently undoing a takedown. Overwriting a
+      * not-yet-applied tag stays allowed (the idempotent-retry shape). */
+    def requireNewTag(m: Manifest, tag: String): Unit = {
+      require(tag.matches("[A-Za-z0-9_\\-]+"),
+        s"tombstone tag must be [A-Za-z0-9_-]+, got '$tag'")
+      if (applied(m).exists(_.name == s"t_$tag"))
+        throw new IllegalArgumentException(
+          s"tombstone tag '$tag' was already applied by a compaction — " +
+            "issue the additional keys under a fresh tag")
+    }
+
+    /** Source bound (`tb_bound`) of a tombstone written now, under the
+      * lease that read `m`: one past every run and delta id that exists,
+      * so the tombstone removes its keys from the sources that exist NOW
+      * only. Without the bound it also hid the keys' own RE-INGESTION
+      * until the sweep (fresh content under a recycled id, or
+      * re-admitted retracted content whose later arrivals must screen
+      * as its duplicates), and a compaction in that window physically
+      * dropped the fresh copy. Writers are lease-serialized, so every
+      * later batch or compaction id is above it. */
+    def sourceBound(sp: SparkSession, indexDir: String, m: Manifest): Long =
+      1L + math.max(m.maxCompacted,
+        deltaDirs(sp, indexDir, runs, m.maxCompacted, Long.MaxValue)
+          .map(_._1).maxOption.getOrElse(-1L))
+
+    /** Open compaction `upTo` over the previous manifest `m`, `dirs`
+      * being the family's tombstone dirs on disk. */
+    def open(m: Manifest, dirs: Seq[String], upTo: Long): Cycle =
+      new Cycle(this, m, dirs, upTo)
+  }
+
+  /** The gate's family for key kind `kind`, and the ANN index's. */
+  private[streaming] def gateFamily(kind: String): Family =
+    Family(kind, s"tombs_$kind", s"tswept_$kind")
+  private[streaming] val AnnFamily = Family("vectors", "tombs", "tswept")
+
+  /** One compaction `upTo` of one family against the previous manifest
+    * `m`. */
+  private[streaming] final class Cycle(fam: Family, m: Manifest,
+      dirs: Seq[String], upTo: Long) {
+    private val prevTombs = m.runs.getOrElse(fam.tombs, Nil)
+
+    /** The tombstone dirs every run this compaction writes excludes: all
+      * on disk except the logically swept ones, which are not re-applied. */
+    val live: Seq[String] = {
+      val swept = fam.swept(m)
+      dirs.filterNot(d => swept(nameOf(d)))
+    }
+
+    /** Ledger records of [[live]]: the first-applied id carried over, or
+      * `upTo` for a tombstone this compaction applies first. Every run
+      * written from here on excludes it, so a run whose creation id
+      * (`run_<id>_…`) is ≥ that id is physically clean of it. */
+    private val records = live.map { d =>
+      val n = nameOf(d)
+      prevTombs.find(_.name == n).getOrElse(Run(n, upTo))
+    }
+
+    /** Delete the dirs (under `root`) that `m` swept logically, BEFORE
+      * the manifest dropping their `tswept` records is published. The
+      * reverse order leaves a crash window (manifest published, dirs
+      * still on disk with no record) in which the next compaction reads
+      * an undeleted dir as a brand-new LIVE tombstone and silently
+      * re-removes keys legitimately re-ingested after the sweep; this
+      * order leaves at worst gone dirs still named in `tswept`, which the
+      * next cycle drops as a no-op. The [[readTombs]] verdicts naming a
+      * deleted dir are evicted with it. */
+    def deleteSwept(fs: FileSystem, root: String): Unit =
+      fam.swept(m).foreach { name =>
+        val dir = fs.makeQualified(new Path(s"$root/$name"))
+        fs.delete(dir, true)
+        tombFastOk.keySet.removeIf(_.split(DirSetSep).contains(dir.toString))
+      }
+
+    /** Is the dir `name` of this family superseded once the new manifest
+      * (run set `runsNow`) is published? One-generation retention
+      * (MVCC-lite): a delta `m` had already folded, or a run neither `m`
+      * nor the new manifest references (2-generations-old merges and
+      * crashed-compaction orphans). Dirs superseded by THIS compaction
+      * stay until the next one, so a reader that planned its scan
+      * against `m` only needs to finish within one compaction interval.
+      * Deltas are judged by id, not by `m`'s live set, so a
+      * retry-rewritten delta is still collected, never orphaned. */
+    def superseded(runsNow: Seq[Run])(name: String): Boolean =
+      if (name.startsWith("batch="))
+        name.stripPrefix("batch=").toLong <= m.maxCompacted
+      else (name.startsWith("run_") || name.startsWith("base_v")) &&
+        !(runsNow ++ m.runs.getOrElse(fam.runs, Nil)).exists(_.name == name)
+
+    /** The family's entries of the new manifest: `runsNow`, the live
+      * tombstones still pending plus `added` (tombstones written by this
+      * compaction itself), and the newly swept ones. Two-phase sweep, so
+      * readers get the same one-generation grace as runs: a tombstone is
+      * LOGICALLY swept once every live run postdates-or-equals its first
+      * application AND that already held at `m`; it moves to `tswept`
+      * (its files stay, in-flight readers still anti-join them
+      * harmlessly) and is PHYSICALLY deleted by the next cycle's
+      * [[deleteSwept]]. */
+    def entries(runsNow: Seq[Run], added: Seq[Run] = Nil)
+        : Map[String, Seq[Run]] = {
+      def allClean(rs: Seq[Run], appliedAt: Long): Boolean =
+        rs.forall(r => "run_(\\d+)_".r.findFirstMatchIn(r.name)
+          .exists(_.group(1).toLong >= appliedAt))
+      val (sweep, keep) = records.partition { tb =>
+        prevTombs.exists(_.name == tb.name) &&
+          allClean(m.runs.getOrElse(fam.runs, Nil), tb.rows) &&
+          allClean(runsNow, tb.rows)
+      }
+      Map(fam.runs -> runsNow, fam.tombs -> (keep ++ added),
+        fam.tswept -> sweep).filter(_._2.nonEmpty)
+    }
+  }
+
+  // ---- compaction ---------------------------------------------------------
 
   /** Write `df`'s distinct keys as an hp-partitioned run named
     * `<baseName>_w<width>`, sidecar sized to the true row count. One
@@ -1120,17 +1285,18 @@ object IngestIndex {
     * over the index lifetime), `total` is the live index size. */
   final case class CompactStats(folded: Long, merged: Long, total: Long)
 
-  /** Fold every delta with id ≤ `upTo` into a new run per kind, then
-    * merge runs of the same power-of-two size class (binary counter:
-    * two ~equal runs merge into the next class, cascading), commit the
-    * new run set via the manifest pointer, then delete the folded
-    * deltas, superseded runs, and any orphan dirs. Safe to re-run
-    * (idempotent: the same version rewrites the same run names with
-    * the same content; probes meanwhile see the committed manifest's
-    * runs + still-present deltas, and duplicate membership rows cannot
-    * change a decision). NOT a full-base rewrite: a normal cycle costs
-    * O(deltas); the biggest run is only rewritten when the corpus has
-    * doubled since it was built. */
+  /** Fold every delta with id ≤ `upTo` into a new run per kind, merge
+    * same-size-class runs, apply and sweep retraction tombstones, commit
+    * the new run set via the manifest pointer, then delete what it
+    * superseded: the run and tombstone policy shared with the ANN index
+    * ([[mergeSameClass]], [[Cycle]]). Safe to re-run (idempotent: the
+    * same version rewrites the same run names with the same content;
+    * probes meanwhile see the committed manifest's runs + still-present
+    * deltas, and duplicate membership rows cannot change a decision).
+    * NOT a full-base rewrite: a normal cycle costs O(deltas); the biggest
+    * run is only rewritten when the corpus has doubled since it was
+    * built. Bloom sidecars of the written runs are this index's own, and
+    * are deleted with their dirs. */
   def compact(sp: SparkSession, indexDir: String, upTo: Long)
       : Map[String, CompactStats] =
     withWriterLease(sp, indexDir)(compactLocked(sp, indexDir, upTo))
@@ -1145,20 +1311,8 @@ object IngestIndex {
       val deltas = deltaDirs(sp, indexDir, kind, m.maxCompacted, upTo + 1)
       var seq = 0
       def nextName(): String = { val n = s"run_${upTo}_$seq"; seq += 1; n }
-      var runs = m.runs.getOrElse(kind, Nil)
-      // retraction tombstones: every run written below excludes the
-      // live tombstones' keys; `rows` in the manifest's tombs_<kind>
-      // entry records the first compaction id that applied it. Dirs in
-      // tswept_<kind> were LOGICALLY swept last cycle and await
-      // physical deletion below — they are not live (not re-applied).
-      val prevTombs = m.runs.getOrElse(s"tombs_$kind", Nil)
-      val sweptPending = m.runs.getOrElse(s"tswept_$kind", Nil)
-      val tombPaths = tombDirs(sp, indexDir, kind)
-        .filterNot(d => sweptPending.exists(_.name == d.split("/").last))
-      val tombRecords = tombPaths.map { d =>
-        val n = d.split("/").last
-        prevTombs.find(_.name == n).getOrElse(Run(n, upTo))
-      }
+      val cycle = gateFamily(kind).open(m, tombDirs(sp, indexDir, kind), upTo)
+      val tombPaths = cycle.live
       // SOURCE-SCOPED clean (input rows carry src_id): only pre-bound
       // copies of a retracted key are dropped — a key re-ingested
       // after the retraction keeps living in the index as dup-screen
@@ -1173,9 +1327,7 @@ object IngestIndex {
           val ids = readTombs(sp, tombPaths, keyName)
           df => antiJoinTombs(df, ids, keyName, tombPaths).drop("src_id")
         }
-      var folded = 0L
-      var mergedRows = 0L
-      if (deltas.nonEmpty) {
+      val fold = if (deltas.isEmpty) None else {
         // input-row upper bound straight off the parquet footers —
         // driver-side, no job (the count() this replaces was one more
         // serialized job per compaction per kind); derives the fold's
@@ -1184,7 +1336,7 @@ object IngestIndex {
         val deltaRows =
           try footerRows(sp, deltas.map(_._2))
           catch { case _: Throwable => Long.MaxValue }
-        val r = writeRun(sp, indexDir, kind, keyName, nextName(),
+        Some(writeRun(sp, indexDir, kind, keyName, nextName(),
           clean(
             if (tombPaths.isEmpty)
               sp.read.parquet(deltas.map(_._2): _*).select(keyName)
@@ -1197,122 +1349,36 @@ object IngestIndex {
                 dirs.head.lastIndexOf('/'))
               sp.read.option("basePath", parent).parquet(dirs: _*)
                 .select(col(keyName), col("batch").cast("long").as("src_id"))
-            }), rowsHint = Some(deltaRows))
-        folded = r.rows
-        if (r.rows > 0) runs :+= r
+            }), rowsHint = Some(deltaRows)))
       }
-      // binary-counter merge: while ANY adjacent pair in the
-      // size-sorted run list shares a size class, fold that pair into
-      // one (dedup shrinks: a key present in both counts once).
-      // Scanning ALL positions — not just the two smallest — matters
-      // when a fold lands a run directly in a HIGHER class that already
-      // has an occupant (e.g. runs [2,5] + a new class-5 fold): the
-      // bottom-pair-only loop would exit on the 2-vs-5 mismatch and
-      // leave the 5/5 pair unmerged forever, breaking the <= log2(n)
-      // run-count bound that keeps probe cost flat.
-      var sorted = runs.sortBy(r => (r.rows, r.name))
-      def samePair(rs: Seq[Run]): Option[Int] =
-        (0 until rs.length - 1).find(i =>
-          sizeClass(rs(i).rows) == sizeClass(rs(i + 1).rows))
-      var pair = samePair(sorted)
-      while (pair.isDefined) {
-        val i = pair.get
-        val (a, b) = (sorted(i), sorted(i + 1))
+      val (runs, mergedRows) = mergeSameClass(
+          m.runs.getOrElse(kind, Nil) ++ fold.filter(_.rows > 0)) { (a, b) =>
         def side(r: Run) = {
           val df = readRun(sp, indexDir, kind, keyName, r)
           if (tombPaths.isEmpty) df
           else df.withColumn("src_id", lit(srcIdOf(r.name)))
         }
-        val merged = writeRun(sp, indexDir, kind, keyName, nextName(),
+        writeRun(sp, indexDir, kind, keyName, nextName(),
           clean(side(a).union(side(b))), rowsHint = Some(a.rows + b.rows))
-        mergedRows += a.rows + b.rows
-        // a fully-tombstoned merge yields zero rows — drop it (the
-        // unreferenced dir is swept below) instead of looping on an
-        // empty size class
-        sorted = (sorted.patch(i,
-          if (merged.rows > 0) Seq(merged) else Nil, 2))
-          .sortBy(r => (r.rows, r.name))
-        pair = samePair(sorted)
       }
-      kind -> (sorted.sortBy(-_.rows),
-        CompactStats(folded, mergedRows, sorted.map(_.rows).sum),
-        tombRecords)
-    }.toMap
-    // tombstone lifecycle, two-phase so readers get the same
-    // one-generation grace as runs: a tombstone is LOGICALLY sweepable
-    // once every live run of its kind postdates-or-equals its first
-    // application AND that already held at the previous manifest; it
-    // then moves to tswept_<kind> (files stay on disk — in-flight
-    // readers still anti-join them, harmlessly) and is PHYSICALLY
-    // deleted at the NEXT compaction.
-    def allClean(rs: Seq[Run], appliedAt: Long): Boolean =
-      rs.forall(r => "run_(\\d+)_".r.findFirstMatchIn(r.name)
-        .exists(_.group(1).toLong >= appliedAt))
-    val tombSplit = Kinds.map { kind =>
-      val (runsNow, _, tombRecords) = results(kind)
-      kind -> tombRecords.partition { tb =>
-        m.runs.getOrElse(s"tombs_$kind", Nil).exists(_.name == tb.name) &&
-          allClean(m.runs.getOrElse(kind, Nil), tb.rows) &&
-          allClean(runsNow, tb.rows)
-      }
-    }.toMap
-    // physical deletion of LAST cycle's logically-swept tombstones,
-    // BEFORE publishing the manifest that drops their tswept records:
-    // their one-generation reader grace already elapsed, and the
-    // reverse order leaves a crash window (manifest published, dirs
-    // still on disk with no record) in which the next compaction would
-    // read the undeleted dir as a brand-new LIVE tombstone and silently
-    // re-retract keys that were legitimately re-ingested after the
-    // sweep. With deletion first, a crash leaves dirs gone + the OLD
-    // manifest still naming them in tswept — the next compaction's
-    // delete of a missing dir is a no-op and nothing is re-applied.
-    Kinds.foreach { kind =>
-      m.runs.getOrElse(s"tswept_$kind", Nil).foreach { tb =>
-        val dir = s"${tombsDir(indexDir, kind)}/${tb.name}"
-        fs.delete(new Path(dir), true)
-        // evict the fast-path verdicts that referenced this dir —
-        // without it the cache grows one dir-SET key per retraction
-        // wave until the wholesale 256-cap clear (the r15 soak's
-        // driver-state gauge caught the linear creep)
-        // exact dir-token match: the key is the space-joined dir SET, and
-        // substring matching would also evict .../t_10 when .../t_1 dies
-        // (over-eviction is correct but re-runs the validation job)
-        tombFastOk.keySet.removeIf(_.split(' ').contains(dir))
-        ()
-      }
+      (kind, cycle, runs, CompactStats(fold.map(_.rows).getOrElse(0L),
+        mergedRows, runs.map(_.rows).sum))
     }
-    writeManifest(sp, indexDir,
-      Manifest(upTo,
-        (results.map { case (k, v) => k -> v._1 } ++
-          tombSplit.map { case (k, v) => s"tombs_$k" -> v._2 } ++
-          Kinds.map(k => s"tswept_$k" ->
-            tombSplit(k)._1.map(tb => Run(tb.name, upTo))))
-          .filter(_._2.nonEmpty),
-        m.cents))
-    // cleanup AFTER commit, with ONE-GENERATION retention (MVCC-lite):
-    // dirs superseded by THIS compaction stay on disk until the NEXT
-    // one, so a reader that planned its scan against the previous
-    // manifest survives this cleanup — it only needs to finish within
-    // one compaction interval. Deleted now: deltas the PREVIOUS
-    // manifest had already folded (swept from -1, so a retry-rewritten
-    // delta whose compaction committed long ago is still collected one
-    // generation later, never orphaned forever) and run dirs that
-    // neither the new nor the previous manifest references
-    // (2-generations-old merges and crashed-compaction orphans).
-    Kinds.foreach { kind =>
-      deltaDirs(sp, indexDir, kind, -1L, m.maxCompacted + 1)
-        .foreach { case (id, d) =>
-          fs.delete(new Path(d), true)
-          deleteBloom(fs, bloomPath(indexDir, kind, s"batch=$id"))
-        }
-      val retained = results(kind)._1.map(_.name).toSet ++
-        m.runs.getOrElse(kind, Nil).map(_.name)
-      runDirsOnDisk(sp, indexDir, kind).filterNot(retained).foreach { n =>
-        fs.delete(new Path(s"$indexDir/$kind/$n"), true)
-        deleteBloom(fs, bloomPath(indexDir, kind, n))
-      }
+    results.foreach { case (kind, cycle, _, _) =>
+      cycle.deleteSwept(fs, tombsDir(indexDir, kind)) }
+    writeManifest(sp, indexDir, Manifest(upTo,
+      results.flatMap { case (_, cycle, runs, _) => cycle.entries(runs) }
+        .toMap, m.cents))
+    results.foreach { case (kind, cycle, runs, _) =>
+      val dir = new Path(s"$indexDir/$kind")
+      if (fs.exists(dir))
+        fs.listStatus(dir).map(_.getPath.getName)
+          .filter(cycle.superseded(runs)).foreach { n =>
+            fs.delete(new Path(dir, n), true)
+            deleteBloom(fs, bloomPath(indexDir, kind, n))
+          }
     }
-    results.map { case (k, v) => k -> v._2 }
+    results.map { case (kind, _, _, stats) => kind -> stats }.toMap
   }
 
   /** Does `indexDir` hold state from a previous run? (Restart-guard

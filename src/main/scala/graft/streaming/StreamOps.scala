@@ -626,21 +626,16 @@ object StreamOps {
     // (their run histories differ), and failing between the two writes
     // would leave a partial retraction
     val m = IngestIndex.readManifest(sp, indexDir)
-    val applied = Seq("hashes", "bands").flatMap(k =>
-      m.runs.getOrElse(s"tombs_$k", Nil) ++
-        m.runs.getOrElse(s"tswept_$k", Nil)).map(_.name).toSet
-    if (applied.contains(s"t_$tag"))
-      throw new IllegalArgumentException(
-        s"retraction tag '$tag' was already applied by a compaction — " +
-          "issue the additional content under a fresh tag")
+    IngestIndex.Kinds.foreach(k =>
+      IngestIndex.gateFamily(k).requireNewTag(m, tag))
     val b = docs.persist()
     try {
       IngestIndex.retractKeys(sp, indexDir, "hashes",
-        b.select(md5(col("text").cast("binary")).as("h")).distinct(), tag)
+        b.select(md5(col("text").cast("binary")).as("h")).distinct(), tag, m)
       IngestIndex.retractKeys(sp, indexDir, "bands",
         graft.text.TextOps.minhashBands(graft.text.TextOps.minhash(b))
           .select(concat(col("band_hash"), lit(":"), col("band_id"))
-            .as("bk")).distinct(), tag)
+            .as("bk")).distinct(), tag, m)
     } finally { b.unpersist(false); () }
   }
 

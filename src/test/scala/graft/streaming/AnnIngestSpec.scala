@@ -1519,4 +1519,72 @@ class AnnIngestSpec extends AnyFunSuite {
     assert(physical.diff(want).isEmpty, physical.diff(want).take(3))
     assert(rowsOf(read()) === want)
   }
+
+  test("a null vec_id row is dropped at ingest: its batch commits, and " +
+    "neither readIndex nor queryTopK returns it") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val t = java.nio.file.Files.createTempDirectory("graft_ann_nullid")
+      .toString
+    val idx = s"$t/idx"
+    val emb = Array.tabulate(8)(d => math.cos(d * 3.0).toFloat).toSeq
+    val nullId = spark.createDataFrame(
+      java.util.List.of(Row(null, emb)),
+      StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(FloatType)))))
+    AnnIngest.ingestBatch(vecs(0 until 20).union(nullId), 0L, idx,
+      nCells = 4)
+    def ids() = AnnIngest.readIndex(spark, idx, None).select("vec_id")
+      .collect().map(r => Option.when(!r.isNullAt(0))(r.getLong(0))).toSeq
+    assert(!ids().contains(None) && ids().flatten.sorted === (0L until 20L))
+    // the null row's own vector as a query, probing every cell, returns
+    // the 20 live rows and nothing else
+    val s = spark
+    import s.implicits._
+    val q = Seq((999L, emb.toArray)).toDF("vec_id", "embedding")
+    val nbs = AnnIngest.queryTopK(spark, idx, q, k = 25, nProbe = 4)
+      .collect()
+    assert(!nbs.exists(_.isNullAt(2)))
+    assert(nbs.map(_.getLong(2)).sorted.toSeq === (0L until 20L))
+    AnnIngest.compact(spark, idx, 0L)
+    assert(!ids().contains(None) && ids().flatten.sorted === (0L until 20L))
+  }
+
+  test("a hand-written manifest in today's key layout compacts: the " +
+    "tombs record keeps its first-applied id into tswept, and the swept " +
+    "dir is deleted a generation later") {
+    val s = spark
+    import s.implicits._
+    val t = java.nio.file.Files.createTempDirectory("graft_ann_mf").toString
+    val idx = s"$t/idx"
+    val mf = java.nio.file.Paths.get(s"$idx/manifest.json")
+    def text = java.nio.file.Files.readString(mf)
+    AnnIngest.ingestBatch(vecs(0 until 20), 0L, idx, nCells = 4)
+    AnnIngest.delete(spark, idx, Seq(3L).toDF("vec_id"), "old")
+    AnnIngest.compact(spark, idx, 0L)
+    val hand = "{\"maxCompacted\": 0, \"runs\": {" +
+      "\"tombs\": [{\"name\": \"t_old\", \"rows\": 0}], " +
+      "\"vectors\": [{\"name\": \"run_0_0\", \"rows\": 19}]}}"
+    assert(text === hand)
+    // written through the Hadoop FS, so its checksum stays valid
+    val p = new org.apache.hadoop.fs.Path(mf.toString)
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(p, true)
+    try out.write(hand.getBytes("UTF-8")) finally out.close()
+    def ids() = AnnIngest.readIndex(spark, idx, None).select("vec_id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    // the 20-row fold lands in the 19-row run's size class and merges
+    AnnIngest.ingestBatch(vecs(20 until 40), 1L, idx, nCells = 4)
+    AnnIngest.compact(spark, idx, 1L)
+    assert(text === "{\"maxCompacted\": 1, \"runs\": {" +
+      "\"tswept\": [{\"name\": \"t_old\", \"rows\": 0}], " +
+      "\"vectors\": [{\"name\": \"run_1_1\", \"rows\": 39}]}}")
+    assert(ids() === (0L until 40L).filterNot(_ == 3L))
+    AnnIngest.compact(spark, idx, 2L)
+    assert(AnnIngest.tombDirs(spark, idx).isEmpty)
+    assert(text === "{\"maxCompacted\": 2, \"runs\": {" +
+      "\"vectors\": [{\"name\": \"run_1_1\", \"rows\": 39}]}}")
+    AnnIngest.ingestBatch(vecs(3 until 4), 3L, idx, nCells = 4)
+    assert(ids() === (0L until 40L))
+  }
 }

@@ -1018,4 +1018,80 @@ class IngestIndexSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("no 'h' column"))
   }
+
+  /** Read and (over)write `<idx>/manifest.json` as text — writes go
+    * through the Hadoop FS so its checksum stays valid. */
+  private def manifestText(idx: String): String =
+    java.nio.file.Files.readString(java.nio.file.Paths.get(s"$idx/manifest.json"))
+  private def writeManifestText(idx: String, txt: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(s"$idx/manifest.json")
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(p, true)
+    try out.write(txt.getBytes("UTF-8")) finally out.close()
+  }
+
+  test("deleting a swept tombstone dir evicts the readTombs verdicts " +
+    "that named it, so the verdict cache shrinks instead of creeping " +
+    "to its cap") {
+    val t = java.nio.file.Files.createTempDirectory("graft_ii_evict").toString
+    val idx = s"$t/idx"; val out = s"$t/out"
+    val seed = "a document whose retraction verdicts must be evicted"
+    StreamOps.ingestBatch(docs(1L -> seed,
+      2L -> "unrelated filler that stays in the index"), 0L, idx, out)
+    StreamOps.retractDocs(docs(9L -> seed), idx, "evict")
+    // the probe and the applying compaction read the live tombstones
+    StreamOps.ingestBatch(docs(3L -> seed), 1L, idx, out)
+    IngestIndex.compact(spark, idx, 1L)
+    StreamOps.ingestBatch(docs(4L -> "a second filler document"), 2L,
+      idx, out)
+    IngestIndex.compact(spark, idx, 2L) // logical sweep
+    assert(IngestIndex.readManifest(spark, idx).runs("tswept_hashes")
+      .map(_.name) === Seq("t_evict"))
+    val before = IngestIndex.driverCacheSizes._2
+    IngestIndex.compact(spark, idx, 3L) // physical deletion
+    assert(IngestIndex.tombDirs(spark, idx, "hashes").isEmpty)
+    assert(IngestIndex.driverCacheSizes._2 < before)
+  }
+
+  test("a hand-written manifest in today's key layout compacts: the " +
+    "tombs_<kind> records keep their first-applied id into " +
+    "tswept_<kind>, and a tswept record holding the sweep id (as earlier " +
+    "versions wrote it) is still deleted on schedule") {
+    val t = java.nio.file.Files.createTempDirectory("graft_ii_mf").toString
+    val idx = s"$t/idx"; val out = s"$t/out"
+    val seed = "hand written manifest document to be retracted"
+    StreamOps.ingestBatch(docs(1L -> seed,
+      2L -> "hand manifest filler number one"), 0L, idx, out)
+    StreamOps.retractDocs(docs(9L -> seed), idx, "old")
+    StreamOps.ingestBatch(docs(3L -> "hand manifest filler number two"),
+      1L, idx, out)
+    IngestIndex.compact(spark, idx, 1L)
+    val bandRows = IngestIndex.footerRows(spark,
+      Seq(s"$idx/bands/run_1_0_w1"))
+    val applied = "{\"maxCompacted\": 1, \"runs\": {" +
+      s"\"bands\": [{\"name\": \"run_1_0_w1\", \"rows\": $bandRows}], " +
+      "\"hashes\": [{\"name\": \"run_1_0_w1\", \"rows\": 2}], " +
+      "\"tombs_bands\": [{\"name\": \"t_old\", \"rows\": 1}], " +
+      "\"tombs_hashes\": [{\"name\": \"t_old\", \"rows\": 1}]}}"
+    assert(manifestText(idx) === applied)
+    writeManifestText(idx, applied)
+    StreamOps.ingestBatch(docs(4L -> "hand manifest filler number three"),
+      2L, idx, out)
+    IngestIndex.compact(spark, idx, 2L)
+    val swept = manifestText(idx)
+    for (kind <- Seq("hashes", "bands"))
+      assert(swept.contains(
+        s"\"tswept_$kind\": [{\"name\": \"t_old\", \"rows\": 1}]"), swept)
+    assert(!swept.contains("\"tombs_"), swept)
+    writeManifestText(idx, swept.replace(
+      "{\"name\": \"t_old\", \"rows\": 1}", "{\"name\": \"t_old\", \"rows\": 2}"))
+    IngestIndex.compact(spark, idx, 3L)
+    assert(IngestIndex.tombDirs(spark, idx, "hashes").isEmpty &&
+      IngestIndex.tombDirs(spark, idx, "bands").isEmpty)
+    assert(!manifestText(idx).contains("t_old"))
+    // the retracted content is new to the index again
+    StreamOps.ingestBatch(docs(5L -> seed), 4L, idx, out)
+    assert(spark.read.parquet(out).filter(col("doc_id") === 5L)
+      .select("kept").head().getBoolean(0))
+  }
 }
