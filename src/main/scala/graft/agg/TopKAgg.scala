@@ -43,9 +43,16 @@ final class TopKAgg(k: Int)
 }
 
 object TopKAgg {
-  /** The selection order: score DESC, then id ASC. */
-  def before(a: (Double, Long), b: (Double, Long)): Boolean =
-    a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
+  /** The selection order: score DESC, then id ASC, over Spark's total
+    * order of doubles — NaN above every other score (so `desc` puts it
+    * first) and -0.0 equal to 0.0. A NaN score (`Cosine.of` over an
+    * overflowing pair, Inf/Inf) must still be ordered: with `>` alone it
+    * ties with nothing, and the entries `insert` keeps would depend on
+    * arrival order, so on the partitioning. */
+  def before(a: (Double, Long), b: (Double, Long)): Boolean = {
+    val c = if (a._1 == b._1) 0 else java.lang.Double.compare(a._1, b._1)
+    c > 0 || (c == 0 && a._2 < b._2)
+  }
 
   /** Insert `x` into a descending-sorted buffer of at most `k` entries —
     * the one bounded top-k step: this aggregator, the ANN query's

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, NumericType}
 
 import graft.catalog._
 import graft.expr.Jexl
@@ -211,13 +212,25 @@ object Pipeline {
   /** `init -autotype`: decide numeric vs categorical per candidate column
     * (reference `InitModelProcessor.java:105-210` thresholds via
     * [[graft.ops.AutoType]]) — returns (numericCols, categoricalCols) in
-    * the candidates' order. */
+    * the candidates' order. A numeric- or boolean-typed column is kind N
+    * from its schema alone, with no job: every non-null numeric value
+    * parses back from its string form (an all-null column gives 0 ≥ 0),
+    * and a boolean has at most 2 distinct values. Only the other
+    * candidates are profiled. */
   def autoColumns(df: DataFrame, candidates: Seq[String],
                   approxDistinct: Boolean = false): (Seq[String], Seq[String]) = {
-    val kinds = graft.ops.AutoType.profile(df, candidates, approxDistinct)
-      .select("col_name", "col_kind").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    (candidates.filter(kinds(_) == "N"), candidates.filter(kinds(_) == "C"))
+    val typedN = df.schema.fields.collect {
+      case f if f.dataType.isInstanceOf[NumericType] ||
+        f.dataType == BooleanType => f.name
+    }.toSet
+    val rest = candidates.filterNot(typedN)
+    val kinds =
+      if (rest.isEmpty) Map.empty[String, String]
+      else graft.ops.AutoType.profile(df, rest, approxDistinct)
+        .select("col_name", "col_kind").collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+    def kind(c: String) = if (typedN(c)) "N" else kinds(c)
+    (candidates.filter(kind(_) == "N"), candidates.filter(kind(_) == "C"))
   }
 
   /** Lifecycle with auto-typing: columns split by [[autoColumns]] first. */

@@ -4,6 +4,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 import graft.streaming.IngestIndex.{AnnFamily, Manifest, Run}
@@ -52,17 +54,27 @@ import graft.streaming.IngestIndex.{AnnFamily, Manifest, Run}
   * (broadcast centroids, narrow assignment map, one cell-partitioned
   * write). Queries probe nProbe cells per vector: the query set is
   * small by contract, so it is collected once and its probes are
-  * assigned on the driver against the in-memory quantizer; the probed
-  * cell set (≤ nCells values) becomes a partition filter on every run
-  * scan, so a query touches `nProbe / nCells` of the corpus regardless
-  * of index size. A steady query is ONE Spark job: the probe table rides
-  * in the scan's task closure, each task keeps a bounded top-k per
-  * query, and the driver merges them; a live tombstone set of at most
-  * `TombBroadcastMax` rows is collected once per set and applied as a
-  * task-side predicate, not re-read by every query; a cached set plans
-  * no tombstone read. That predicate tests `vec_id` membership first, so
-  * the scope rule — and the row's source id, derived per row from its
-  * file path — is evaluated only for the few rows whose id is held; a
+  * assigned on the driver against the in-memory quantizer. A steady
+  * query launches NO Spark job: runs and deltas never change once
+  * published, so the decoded rows of each live run or delta dir are
+  * held on the driver, one entry per dir keyed by the dir's files
+  * ([[IngestIndex.dirKey]]), and the probed cells are scored there in
+  * plain Scala. The first query after an ingest or a compaction reads
+  * the new dir(s) whole in one job; an entry whose dir left the live set
+  * is dropped at the next query of its index. The held rows of every
+  * index together are capped at `HeldMaxValues` vector values
+  * (least recently queried index evicted first). An index above the cap,
+  * or with a tombstone set above `TombBroadcastMax` rows, is served by
+  * ONE distributed scan job instead: the probed cell set (≤ nCells
+  * values) becomes a partition filter on every run scan, so a query
+  * touches `nProbe / nCells` of the corpus regardless of index size; the
+  * probe table rides in the scan's task closure, each task keeps a
+  * bounded top-k per query, and the driver merges them. Both paths score
+  * through one per-row function, so their rows are bit-identical. A
+  * live tombstone set of at most `TombBroadcastMax` rows is collected
+  * once per set and applied as a membership test first — on the held
+  * rows, or as a task-side predicate — so the scope rule, and the row's
+  * source id, is evaluated only for the few rows whose id is held; a
   * query pays for the rows it scores, not for the index's deletion
   * history. The query's prologue (vector and norm of each query row)
   * and epilogue (the `cos_r` rounding) run on the driver: the query
@@ -443,6 +455,8 @@ object AnnIngest {
           if (r.isNullAt(2)) null else java.lang.Long.valueOf(r.getLong(2))))
       }
 
+    def isEmpty: Boolean = byId.isEmpty
+
     /** Is no tombstone held for `id`? A null id matches none. */
     def frees(id: java.lang.Long): Boolean = id == null || !byId.contains(id)
 
@@ -462,50 +476,48 @@ object AnnIngest {
         keeps(id, cell, src))
   }
 
-  /** The tombstone exclusion for the live tombstone dirs `dirs` (rows
-    * must carry vec_id + cell + src_id) — identity when none are live.
-    * A set of at most [[IngestIndex.TombBroadcastMax]] rows is collected
-    * ONCE per tombstone-set key ([[IngestIndex.tombKey]]: each dir's
-    * mtime, file count and bytes, plus the manifest's tombs/tswept
-    * ledger, from which split tombstones take their applied-at id) and
-    * applied as a [[TombSet]] predicate, so a steady reader launches no
-    * tombstone job; a larger set keeps the shuffled [[antiTombs]]. The
-    * tombstone relation is built only to collect a set or to anti-join
-    * it: a cached set plans no tombstone read. The held predicate tests
-    * membership first, so the optimizer inlines the src_id expression
-    * (a regex over each row's file path, see [[readDirs]]) under the
-    * `Or`'s right branch, evaluated for held ids only. */
-  private def tombFilter(m: Manifest, sp: SparkSession,
-      dirs: Seq[String]): DataFrame => DataFrame =
-    if (dirs.isEmpty) identity
+  /** The live tombstone set of the tombstone dirs `dirs`: a held
+    * [[TombSet]] (empty when no dir is live), or the tombstone rows when
+    * the set is above [[IngestIndex.TombBroadcastMax]] rows. A small set
+    * is collected ONCE per tombstone-set key ([[IngestIndex.tombKey]]:
+    * each dir's files, plus the manifest's tombs/tswept ledger, from
+    * which split tombstones take their applied-at id), so a steady reader
+    * launches no tombstone job. The tombstone relation is built only to
+    * collect a set or to anti-join it: a cached set plans no tombstone
+    * read. */
+  private def tombsOf(m: Manifest, sp: SparkSession, dirs: Seq[String])
+      : Either[DataFrame, TombSet] =
+    if (dirs.isEmpty) Right(new TombSet(Array.empty))
     else {
       lazy val t = tombRows(m, sp, dirs)
       val ledger = AnnFamily.applied(m).map(r => s"${r.name}=${r.rows}")
         .sorted.mkString(",")
-      val held: Option[TombSet] =
-        IngestIndex.tombCached(sp, dirs, "ann", ledger) {
-          // one partition: a limit over several would take rows with
-          // one job per partition batch
-          val rs = t.coalesce(1)
-            .limit(IngestIndex.TombBroadcastMax.toInt + 1).collect()
-          if (rs.length > IngestIndex.TombBroadcastMax) None
-          else Some(new TombSet(rs))
-        }
-      held match {
-        case Some(set) => rows =>
-          rows.filter(set.free(col("vec_id")) ||
-            set.keep(col("vec_id"), col("cell"), col("src_id")))
-        case None => rows => antiTombs(rows, t)
-      }
+      IngestIndex.tombCached(sp, dirs, "ann", ledger) {
+        // one partition: a limit over several would take rows with
+        // one job per partition batch
+        val rs = t.coalesce(1)
+          .limit(IngestIndex.TombBroadcastMax.toInt + 1).collect()
+        if (rs.length > IngestIndex.TombBroadcastMax) None
+        else Some(new TombSet(rs))
+      }.toRight(t)
     }
 
-  /** Exclude tombstoned rows from `rows` — a no-op plan when no
-    * tombstones are live (the common case pays nothing). Takes the
-    * SAME manifest the caller planned its run set against, both for
-    * read consistency and for the split-tombstone gating. */
-  private def minusTombs(m: Manifest, sp: SparkSession, indexDir: String,
-      rows: DataFrame): DataFrame =
-    tombFilter(m, sp, tombDirsWith(m, sp, indexDir))(rows)
+  /** The tombstone exclusion of a live tombstone set ([[tombsOf]]) over
+    * rows that carry vec_id + cell + src_id: identity for an empty set,
+    * the held set's predicate for a small one, the shuffled
+    * [[antiTombs]] for a large one. The held predicate tests membership
+    * first, so the optimizer inlines the src_id expression (a regex over
+    * each row's file path, see [[readDirs]]) under the `Or`'s right
+    * branch, evaluated for held ids only. */
+  private def tombFilter(tombs: Either[DataFrame, TombSet])
+      : DataFrame => DataFrame =
+    tombs match {
+      case Right(set) if set.isEmpty => identity
+      case Right(set) => rows =>
+        rows.filter(set.free(col("vec_id")) ||
+          set.keep(col("vec_id"), col("cell"), col("src_id")))
+      case Left(t) => rows => antiTombs(rows, t)
+    }
 
   /** Live (run dirs, delta dirs) under the manifest, batch deltas
     * strictly below `beforeBatch` (Long.MaxValue = everything). */
@@ -539,17 +551,28 @@ object AnnIngest {
     readIndexWith(IngestIndex.readManifest(sp, indexDir), sp, indexDir,
       cells)
 
+  /** Takes the SAME manifest the caller planned its run set against,
+    * both for read consistency and for the split-tombstone gating. */
   private def readIndexWith(m: Manifest, sp: SparkSession,
       indexDir: String, cells: Option[Seq[Int]]): DataFrame = {
     val (runs, deltas) = liveWith(m, sp, indexDir, Long.MaxValue)
-    val all = readDirs(sp, runs ++ deltas)
+    scanOf(sp, runs ++ deltas,
+      tombFilter(tombsOf(m, sp, tombDirsWith(m, sp, indexDir))), cells)
+  }
+
+  /** The rows (vec_id, e, norm, cell) of the run/delta dirs `dirs`,
+    * cell-pruned when `cells` is given, with the tombstone exclusion
+    * `clean` applied — a no-op plan when no tombstones are live. */
+  private def scanOf(sp: SparkSession, dirs: Seq[String],
+      clean: DataFrame => DataFrame, cells: Option[Seq[Int]]): DataFrame = {
+    val all = readDirs(sp, dirs)
     // array_contains over an array LITERAL, not isin: generated code
     // inlines an IN list's values, so each distinct cell set would
     // compile a fresh predicate class — once per query, since the
     // optimizer also infers this filter onto the probe side of the
     // query's cell join. An array literal is referenced, not inlined,
     // so every cell set shares one class.
-    minusTombs(m, sp, indexDir, cells.fold(all)(cs =>
+    clean(cells.fold(all)(cs =>
       all.filter(array_contains(lit(cs.toArray), col("cell")))))
       .drop("src_id")
   }
@@ -606,17 +629,19 @@ object AnnIngest {
       sp.createDataFrame(sp.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         vecSchema.add("src_id", org.apache.spark.sql.types.LongType))
     else {
-      // a row's dir is its file's grandparent: `<dir>/cell=<c>/<file>`
-      val dir = regexp_extract(col("_metadata.file_path"),
-        "([^/]+)/[^/]+/[^/]+$", 1)
       val srcIds =
         typedLit(dirs.map(d => new Path(d).getName -> srcIdOf(d)).toMap)
       // every dir is its own partition root; Spark refuses several
       // roots unless told to skip that check
       sp.read.schema(vecSchema)
         .option("ignoreInvalidPartitionPaths", "true").parquet(dirs: _*)
-        .withColumn("src_id", coalesce(srcIds(dir), lit(0L)))
+        .withColumn("src_id", coalesce(srcIds(dirName), lit(0L)))
     }
+
+  /** The name of a [[readDirs]] row's dir: its file's grandparent,
+    * `<dir>/cell=<c>/<file>`. */
+  private def dirName: Column =
+    regexp_extract(col("_metadata.file_path"), "([^/]+)/[^/]+/[^/]+$", 1)
 
   /** Nearest-centroid REassignment that carries each row's current cell
     * through ([[graft.sim.Ivf.assignCells]] drops extra columns): the
@@ -817,7 +842,7 @@ object AnnIngest {
     }
     val cycle = AnnFamily.open(m, tombDirsWith(m, sp, indexDir), upTo)
     val liveTombPaths = cycle.live
-    val clean: DataFrame => DataFrame = tombFilter(m, sp, liveTombPaths)
+    val clean = tombFilter(tombsOf(m, sp, liveTombPaths))
     if (retrain) {
       if (runDirs.isEmpty && deltaDirs.isEmpty) return
       // clean BEFORE dropping the cell column: relocation tombstones
@@ -1093,11 +1118,12 @@ object AnnIngest {
 
   /** Top-k cosine neighbors of `queries` (vec_id, embedding) against
     * the persisted index, probing each query's `nProbe` nearest cells:
-    * (vec_id, rank, nb_id, cos_r) rows, ranked by (cos desc, nb_id asc),
-    * `cos_r` = `round(cos, 6)`. Self-matches (same vec_id) are kept —
-    * callers screening a corpus against itself filter them.
+    * (vec_id, rank, nb_id, cos_r) rows, ranked by (cos desc, nb_id asc;
+    * a NaN cos first, see [[graft.agg.TopKAgg.before]]), `cos_r` =
+    * `round(cos, 6)`. Self-matches (same vec_id) are kept — callers
+    * screening a corpus against itself filter them.
     *
-    * EAGER: the query set is collected and the index scanned when this
+    * EAGER: the query set is collected and the index scored when this
     * is called, and the result is a local frame — a snapshot of the
     * index at the call, which a later ingest, delete or compaction does
     * not change. The driver copy of `queries` is the call's only
@@ -1105,22 +1131,41 @@ object AnnIngest {
     * set (an unordered `limit`, a `sample`) yields consistent probes and
     * vectors per row. Probes are assigned on the driver against the
     * in-memory quantizer ([[graft.sim.Ivf.probeCells]], the same
-    * nearest-first, id-tie order as [[graft.sim.Ivf.assignProbes]]), so
-    * the probed cell set (≤ nCells values) prunes every run scan before
-    * any index read ([[queryScan]]).
+    * nearest-first, id-tie order as [[graft.sim.Ivf.assignProbes]]).
     *
-    * ONE Spark job per steady query: the probe table (cell → query id,
-    * vector, norm) ships in the task closure; each task scores its
-    * pruned rows against the probes for the row's cell (the same
+    * Two paths score the probed cells, with bit-identical rows; both run
+    * every index row of a probed cell through [[scoreRow]] (the same
     * [[graft.expr.DotProduct.fold]] and [[graft.expr.Cosine.of]] the
-    * Catalyst forms run) and keeps a bounded [[graft.agg.TopKAgg]]
-    * buffer per query; the driver merges the buffers — at most
-    * partitions × queries × k pairs come back, and `cos_r` is rounded
-    * there with Spark's `round` rule ([[graft.ops.StatsMath.round]]).
+    * Catalyst forms run, into a bounded [[graft.agg.TopKAgg]] buffer
+    * per query), and `cos_r` is rounded on the driver with Spark's
+    * `round` rule ([[graft.ops.StatsMath.round]]).
+    *  - HELD, no Spark job on a hit: the decoded rows of every live run
+    *    and delta dir are held on the driver ([[heldDirs]]), one entry
+    *    per dir keyed by [[IngestIndex.dirKey]]; runs and deltas do not
+    *    change once published, so a dir is decoded once. A query whose
+    *    dirs are all held scores them in plain Scala under the held
+    *    tombstone set; one that finds a dir missing (after an ingest or
+    *    a compaction) first reads every missing dir — all its cells — in
+    *    one job. This path serves an index whose rows × dim fit under
+    *    [[HeldMaxValues]] with a tombstone set of at most
+    *    [[IngestIndex.TombBroadcastMax]] rows.
+    *  - DISTRIBUTED, one Spark job: otherwise the probed cell set
+    *    (≤ nCells values) prunes one scan relation over every live dir
+    *    ([[queryScan]]); the probe table (cell → query id, vector, norm)
+    *    ships in the task closure, each task keeps its bounded buffers,
+    *    and the driver merges them — at most partitions × queries × k
+    *    pairs come back.
     * The first query after a tombstone-set change adds one job, which
-    * collects the set ([[tombFilter]]). */
+    * collects the set ([[tombsOf]]). */
   def queryTopK(sp: SparkSession, indexDir: String, queries: DataFrame,
-                k: Int = 3, nProbe: Int = 1): DataFrame = {
+                k: Int = 3, nProbe: Int = 1): DataFrame =
+    queryTopKWith(sp, indexDir, queries, k, nProbe, HeldMaxValues)
+
+  /** [[queryTopK]] with the held path's cap `heldMax` (vector values of
+    * the held rows over every index); an index above it is served
+    * distributed. */
+  private[streaming] def queryTopKWith(sp: SparkSession, indexDir: String,
+      queries: DataFrame, k: Int, nProbe: Int, heldMax: Long): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
     import org.apache.spark.sql.types._
@@ -1146,27 +1191,39 @@ object AnnIngest {
         val ea = UnsafeArrayData.fromPrimitiveArray(e)
         val norm = math.sqrt(graft.expr.DotProduct.fold(ea, ea))
         graft.sim.Ivf.probeCells(cents, e, nProbe)
-          .map(c => c -> (r.getLong(0), ea, norm))
+          .map(c => c -> (r.getLong(0), ea: ArrayData, norm))
       }
     val byCell = probes.groupBy(_._1)
       .map { case (c, ps) => c -> ps.map(_._2).toArray }
-    val partial = queryScan(m, sp, indexDir, probes.map(_._1).distinct)
-      .queryExecution.toRdd.mapPartitions { rows =>
-        val bufs = scala.collection.mutable.HashMap
-          .empty[Long, Seq[(Double, Long)]]
-        rows.foreach { r =>
-          if (!r.isNullAt(0)) byCell.get(r.getInt(0)).foreach { ps =>
-            val (nbId, eb, nb) = (r.getLong(1), r.getArray(2), r.getDouble(3))
-            ps.foreach { case (q, ea, na) =>
-              val cos = graft.expr.Cosine.of(
-                graft.expr.DotProduct.fold(ea, eb), na, nb)
-              bufs(q) = TopKAgg.insert(
-                bufs.getOrElse(q, Vector.empty), (cos, nbId), k)
-            }
-          }
+    val partial: Seq[Array[(Long, Seq[(Double, Long)])]] =
+      if (byCell.isEmpty) Nil
+      else {
+        val (runs, deltas) = liveWith(m, sp, indexDir, Long.MaxValue)
+        val dirs = runs ++ deltas
+        val tombs = tombsOf(m, sp, tombDirsWith(m, sp, indexDir))
+        val held = tombs.toOption.flatMap(set => heldDirs(sp, indexDir, m,
+          dirs, cents.headOption.fold(0)(_.length), heldMax).map(set -> _))
+        held match {
+          case Some((set, hs)) =>
+            val bufs = scala.collection.mutable.HashMap
+              .empty[Long, Seq[(Double, Long)]]
+            for (c <- byCell.keys; h <- hs;
+                 r <- h.byCell.getOrElse(c, Array.empty[InternalRow]))
+              if (r.isNullAt(1) || set.frees(r.getLong(1)) ||
+                  set.keeps(r.getLong(1), c, h.src))
+                scoreRow(byCell, k, bufs, r)
+            Seq(bufs.toArray)
+          case None =>
+            scanOf(sp, dirs, tombFilter(tombs), Some(byCell.keys.toSeq))
+              .select(col("cell"), col("vec_id"), col("e"), col("norm"))
+              .queryExecution.toRdd.mapPartitions { rows =>
+                val bufs = scala.collection.mutable.HashMap
+                  .empty[Long, Seq[(Double, Long)]]
+                rows.foreach(scoreRow(byCell, k, bufs, _))
+                Iterator.single(bufs.toArray)
+              }.collect().toSeq
         }
-        Iterator.single(bufs.toArray)
-      }.collect()
+      }
     val merged = partial.flatten.groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (q, bs) =>
         q -> bs.map(_._2).reduce(TopKAgg.merge(_, _, k)) }
@@ -1179,12 +1236,137 @@ object AnnIngest {
       StructField("nb_id", LongType), StructField("cos_r", DoubleType))))
   }
 
-  /** The index rows a query over `cells` scores: (cell, vec_id, e, norm),
-    * partition-pruned to `cells`, tombstones excluded. */
+  /** Score one index row (cell, vec_id, e, norm) against every probe of
+    * its cell — the per-row body of both query paths: for each probe,
+    * `Cosine.of(DotProduct.fold(..))` enters the query's bounded top-k
+    * buffer in `bufs`. A row with a null cell scores nothing. */
+  private def scoreRow(
+      byCell: Map[Int, Array[(Long, ArrayData, Double)]], k: Int,
+      bufs: scala.collection.mutable.HashMap[Long, Seq[(Double, Long)]],
+      r: InternalRow): Unit =
+    if (!r.isNullAt(0)) byCell.get(r.getInt(0)).foreach { ps =>
+      val (nbId, eb, nb) = (r.getLong(1), r.getArray(2), r.getDouble(3))
+      ps.foreach { case (q, ea, na) =>
+        val cos = graft.expr.Cosine.of(
+          graft.expr.DotProduct.fold(ea, eb), na, nb)
+        bufs(q) = graft.agg.TopKAgg.insert(
+          bufs.getOrElse(q, Vector.empty), (cos, nbId), k)
+      }
+    }
+
+  /** The index rows a query over `cells` scores on the distributed path:
+    * (cell, vec_id, e, norm), partition-pruned to `cells`, tombstones
+    * excluded. */
   private[streaming] def queryScan(m: Manifest, sp: SparkSession,
       indexDir: String, cells: Seq[Int]): DataFrame =
     readIndexWith(m, sp, indexDir, Some(cells))
       .select(col("cell"), col("vec_id"), col("e"), col("norm"))
+
+  /** Cap of the held query path ([[queryTopK]]): the vector values
+    * (rows × dim) of the decoded rows held over every index in the JVM —
+    * 2^22 doubles, 32 MB. The largest catalog ANN corpus is 2,000
+    * vectors at sf0.1; the repo benchmark's 64-d index ends near 2,500. */
+  private[streaming] val HeldMaxValues = 1L << 22
+
+  /** The decoded rows of one run or delta dir, as the query scan
+    * projects them — (cell, vec_id, e, norm, dir name), `e` the scan's
+    * own array copied — grouped by cell; with the dir's source id
+    * ([[srcIdOf]]) and its count of vector values. */
+  private final class HeldDir(val src: Long,
+      val byCell: Map[Int, Array[InternalRow]], val values: Long)
+
+  /** The held dirs: qualified index path → ([[IngestIndex.dirKey]] →
+    * rows), least recently queried index first. Guarded by itself. */
+  private val held =
+    new java.util.LinkedHashMap[String, Map[String, HeldDir]](16, 0.75f, true)
+
+  /** (dirs held, vector values held) for `indexDir` — the held path's
+    * gauge, beside [[IngestIndex.driverCacheSizes]]. Reading it leaves
+    * the eviction order as it was. */
+  private[graft] def heldSizes(sp: SparkSession, indexDir: String)
+      : (Int, Long) = {
+    val ix = qualified(sp, indexDir)
+    held.synchronized {
+      held.entrySet.asScala.find(_.getKey == ix).map(_.getValue)
+        .fold((0, 0L))(ds => (ds.size, ds.values.map(_.values).sum))
+    }
+  }
+
+  private def qualified(sp: SparkSession, dir: String): String =
+    fs(sp, dir).makeQualified(new Path(dir)).toString
+
+  /** The held rows of the live dirs `dirs` of `indexDir`, in order, or
+    * None when the index is served distributed: its rows × `dim` would
+    * exceed `cap`, or a dir has no readable key. Entries of dirs that
+    * left the live set are dropped first. Missing dirs are read whole —
+    * every cell, so a later query probing other cells hits — in ONE job,
+    * through the same [[readDirs]] relation and pinned [[vecSchema]] as
+    * the scan: an f32 run upcasts exactly as the scan does, and a null
+    * element keeps the zero the scan reads. The size is checked first:
+    * the runs' rows are in the manifest, so an index whose runs alone are
+    * above the cap is sent to the distributed path before any listing;
+    * a missing delta's rows come off its footers. Least recently queried
+    * indexes are evicted until the held total fits under `cap`. */
+  private def heldDirs(sp: SparkSession, indexDir: String, m: Manifest,
+      dirs: Seq[String], dim: Int, cap: Long): Option[Seq[HeldDir]] = {
+    val ix = qualified(sp, indexDir)
+    def unheld: Option[Seq[HeldDir]] = {
+      held.synchronized(held.remove(ix))
+      None
+    }
+    val runRows = m.runs.getOrElse("vectors", Nil)
+      .map(r => r.name -> r.rows).toMap
+    if (runRows.values.sum * dim > cap) return unheld
+    val keyed = dirs.map(d => d -> IngestIndex.dirKey(sp, d))
+    if (keyed.exists(_._2.isEmpty)) return None
+    val live = keyed.map { case (d, key) => d -> key.get }
+    val liveKeys = live.map(_._2).toSet
+    val kept = held.synchronized {
+      val k = Option(held.remove(ix)).getOrElse(Map.empty[String, HeldDir])
+        .filter { case (key, _) => liveKeys(key) }
+      if (k.nonEmpty) held.put(ix, k)
+      k
+    }
+    val missing = live.filterNot { case (_, key) => kept.contains(key) }
+    val want = kept.values.map(_.values).sum + missing.map { case (d, _) =>
+      runRows.getOrElse(new Path(d).getName,
+        cellFootersOf(sp, Seq(d)).values.sum) * dim
+    }.sum
+    if (want > cap) return unheld
+    val all = kept ++ loadDirs(sp, missing)
+    held.synchronized {
+      held.put(ix, all)
+      def size(e: Map[String, HeldDir]) = e.values.map(_.values).sum
+      var total = held.values.asScala.map(size).sum
+      val it = held.entrySet.iterator
+      while (total > cap && it.hasNext) {
+        val e = it.next()
+        if (e.getKey != ix) { total -= size(e.getValue); it.remove() }
+      }
+      // the estimate undercounted (rows of another dim): keep the bound
+      if (total > cap) held.remove(ix)
+    }
+    Some(live.map { case (_, key) => all(key) })
+  }
+
+  /** Read the run/delta dirs `dirs` (dir → its key) whole in one job and
+    * decode them into [[HeldDir]]s by key. */
+  private def loadDirs(sp: SparkSession, dirs: Seq[(String, String)])
+      : Map[String, HeldDir] =
+    if (dirs.isEmpty) Map.empty
+    else {
+      val rows = readDirs(sp, dirs.map(_._1))
+        .select(col("cell"), col("vec_id"), col("e"), col("norm"), dirName)
+        .queryExecution.toRdd.mapPartitions(_.map(_.copy())).collect()
+        .groupBy(_.getUTF8String(4).toString)
+      dirs.map { case (d, key) =>
+        val rs = rows.getOrElse(new Path(d).getName, Array.empty[InternalRow])
+        key -> new HeldDir(srcIdOf(d),
+          rs.filterNot(_.isNullAt(0)).groupBy(_.getInt(0)),
+          rs.map(r => if (r.isNullAt(2)) 0L
+            else r.getArray(2).numElements.toLong).sum)
+      }.toMap
+    }
 
   /** Skew ratio recorded by the most recent compaction (None before
     * the first one). One tiny JSON read — the consumer side of

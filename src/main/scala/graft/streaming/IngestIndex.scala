@@ -569,17 +569,6 @@ object IngestIndex {
       .sortBy(_._1)
   }
 
-  /** Run dirs of `kind` present on disk (live or orphaned — the caller
-    * diffs against the manifest). */
-  private[streaming] def runDirsOnDisk(sp: SparkSession, indexDir: String,
-      kind: String): Seq[String] = {
-    val fs = fsFor(sp, indexDir)
-    val p = new Path(s"$indexDir/$kind")
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("run_") || n.startsWith("base_v"))
-  }
-
   private def bloomPath(indexDir: String, kind: String, name: String) =
     new Path(s"$indexDir/blooms/${kind}_$name.bloom")
 
@@ -941,27 +930,45 @@ object IngestIndex {
   private val tombCache =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
-  /** Cache key of a tombstone DIR SET: each dir's path, modification
-    * time, file count and total byte length, plus `extra` (state the
-    * cached value also derives from, e.g. a manifest ledger). A new
-    * retraction changes the dir set; an overwrite — a not-yet-applied-tag
-    * retry, or a tag legitimately REUSED after its sweep (the
-    * applied-set check only covers the current manifest) — bumps the
-    * mtime, and since mtime alone has 1-second granularity on many
-    * filesystems, the size fields catch a tag overwritten twice within
-    * one second with a different id set. None when a dir cannot be read:
-    * such a set has no trustworthy identity, so nothing is cached under
-    * it (a placeholder key would pin whatever the first caller derived
-    * to every later unreadable state). */
+  /** Cache key of a tombstone DIR SET: each dir's [[dirKey]], plus
+    * `extra` (state the cached value also derives from, e.g. a manifest
+    * ledger). A new retraction changes the dir set; an overwrite — a
+    * not-yet-applied-tag retry, or a tag legitimately REUSED after its
+    * sweep (the applied-set check only covers the current manifest) —
+    * changes the dir's files. None when a dir cannot be read: such a set
+    * has no trustworthy identity, so nothing is cached under it (a
+    * placeholder key would pin whatever the first caller derived to
+    * every later unreadable state). */
   private[streaming] def tombKey(sp: SparkSession, dirs: Seq[String],
-      extra: String): Option[String] =
-    try Some(dirs.sorted.map { d =>
-      val fs = fsFor(sp, d)
-      val st = fs.getFileStatus(new Path(d))
-      val files = fs.listStatus(new Path(d))
-      s"$d@${st.getModificationTime}@${files.length}@${files.map(_.getLen).sum}"
-    }.mkString("|") + "#" + extra)
-    catch { case _: java.io.IOException => None }
+      extra: String): Option[String] = {
+    val keys = dirs.sorted.map(dirKey(sp, _))
+    if (keys.exists(_.isEmpty)) None
+    else Some(keys.flatten.mkString("|") + "#" + extra)
+  }
+
+  /** Identity of one written dir — a tombstone dir, or an ANN run or
+    * delta with its `cell=` subdirs: its qualified path and modification
+    * time, and the relative path and byte length of every file under it.
+    * A rewrite in place (an overwrite-mode retry, a delta rewritten under
+    * its batch id) changes it even within one mtime tick: Spark names each
+    * written file after its write job, and the lengths catch a rewrite
+    * that keeps the names. None when the dir cannot be read. */
+  private[streaming] def dirKey(sp: SparkSession, dir: String)
+      : Option[String] =
+    try {
+      val fs = fsFor(sp, dir)
+      val root = fs.makeQualified(new Path(dir))
+      val files = scala.collection.mutable.ArrayBuffer.empty[String]
+      def walk(p: Path, rel: String): Unit =
+        fs.listStatus(p).sortBy(_.getPath.getName).foreach { st =>
+          val r = rel + st.getPath.getName
+          if (st.isDirectory) walk(st.getPath, r + "/")
+          else files += s"$r:${st.getLen}"
+        }
+      walk(root, "")
+      Some(s"$root@${fs.getFileStatus(root).getModificationTime}@" +
+        files.mkString(","))
+    } catch { case _: java.io.IOException => None }
 
   /** `derive()` for the tombstone set `dirs` (+ `extra`), computed once
     * per [[tombKey]] and recomputed on every call when the key cannot be

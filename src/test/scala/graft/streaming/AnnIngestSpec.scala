@@ -1104,7 +1104,7 @@ class AnnIngestSpec extends AnyFunSuite {
   test("job budget: over 2 runs, 2 deltas and a takedown tombstone, " +
     "queryTopK and compact launch no per-dir schema-inference job, the " +
     "first query after the tombstone change launches at most 2 jobs and " +
-    "the next exactly 1, and a non-deterministic query frame is " +
+    "the next none, and a non-deterministic query frame is " +
     "evaluated once (every returned id has its full rank list)") {
     val s = spark
     import s.implicits._
@@ -1140,7 +1140,7 @@ class AnnIngestSpec extends AnyFunSuite {
       again = AnnIngest.queryTopK(spark, idx, vecs(0 until 70), k = k,
         nProbe = 2).collect()
     }
-    assert(steadyJobs === 1, s"steady queryTopK launched $steadyJobs " +
+    assert(steadyJobs === 0, s"steady queryTopK launched $steadyJobs " +
       "jobs: " + steadyStages.map(_._1).mkString(", "))
     assert(again.toSeq === rows.toSeq)
 
@@ -1311,6 +1311,14 @@ class AnnIngestSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
       .sorted
 
+  /** [[topK]] on the distributed path: a held cap of 0 values. */
+  private def distTopK(idx: String, queries: org.apache.spark.sql.DataFrame,
+      k: Int, nProbe: Int): Seq[(Long, Int, Long, Double)] =
+    AnnIngest.queryTopKWith(spark, idx, queries, k, nProbe, 0L)
+      .collect().toSeq
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+      .sorted
+
   private def sameBits(a: Seq[(Long, Int, Long, Double)],
       b: Seq[(Long, Int, Long, Double)]): Boolean =
     a.map(x => x.copy(_4 = java.lang.Double.doubleToLongBits(x._4))) ===
@@ -1390,7 +1398,8 @@ class AnnIngestSpec extends AnyFunSuite {
   test("the held tombstone set follows the tombstone state: the query " +
     "after a new delete, after a same-tag overwrite with more ids within " +
     "one second, and after a compaction's apply and sweep each sees the " +
-    "current set, and a query after no change to the set reuses it") {
+    "current set, and a query after no change to the set reuses it, on " +
+    "both query paths") {
     val s = spark
     import s.implicits._
     val t = java.nio.file.Files.createTempDirectory("graft_anntc").toString
@@ -1404,12 +1413,15 @@ class AnnIngestSpec extends AnyFunSuite {
     // answer are exactly the live ids
     val q = vecs(0 until 70)
     var ingested = 64L
+    // `jobs` counts the distributed path's: the set's collect, if any,
+    // and the scan; the held path then answers from the same held set
     def check(jobs: Int, gone: Set[Long], step: String): Unit = {
       var got = Seq.empty[(Long, Int, Long, Double)]
-      val (n, stages) = jobsOf { got = topK(idx, q, 70, 4) }
+      val (n, stages) = jobsOf { got = distTopK(idx, q, 70, 4) }
       assert(n === jobs, s"$step: $n jobs " + stages.map(_._1).mkString(", "))
       assert(sameBits(got, referenceTopK(idx, q, 70, 4)), step)
       assert(got.map(_._3).toSet === (0L until ingested).toSet -- gone, step)
+      assert(sameBits(topK(idx, q, 70, 4), got), s"$step: held path")
     }
     check(1, Set.empty, "no tombstone")
     AnnIngest.delete(spark, idx, Seq(3L).toDF("vec_id"), "a")
@@ -1586,5 +1598,175 @@ class AnnIngestSpec extends AnyFunSuite {
       "\"vectors\": [{\"name\": \"run_1_1\", \"rows\": 39}]}}")
     AnnIngest.ingestBatch(vecs(3 until 4), 3L, idx, nCells = 4)
     assert(ids() === (0L until 40L))
+  }
+
+  test("the held and the distributed query paths return the same bits " +
+    "over a split and a fold heal, a source-scoped takedown with a " +
+    "re-ingested id, an f32 delta, and null elements in an indexed row " +
+    "and in a query") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val s = spark
+    import s.implicits._
+    val t = java.nio.file.Files.createTempDirectory("graft_annhd").toString
+    val idx = s"$t/idx"
+    def cluster(ids: Range, base: Double) = ids.map { i =>
+      (i.toLong, Array.tabulate(8)(d =>
+        (base + 0.01 * math.sin(i * 31 + d * 7)).toFloat))
+    }.toDF("vec_id", "embedding")
+    // split the hot far cluster, then drain it and fold its sub-cells
+    AnnIngest.ingestBatch(vecs(0 until 300), 0L, idx, nCells = 16)
+    AnnIngest.ingestBatch(cluster(300 until 340, -5.0), 1L, idx, nCells = 16)
+    AnnIngest.compact(spark, idx, 1L)
+    AnnIngest.compact(spark, idx, 2L, splitHot = 2.0)
+    AnnIngest.delete(spark, idx, (300L until 332L).toDF("vec_id"), "drain")
+    AnnIngest.compact(spark, idx, 3L, foldColdBelow = 0.5)
+    val healed = IngestIndex.readManifest(spark, idx).runs("tombs")
+      .map(_.name)
+    assert(healed.contains("t_split_2") && healed.contains("t_split_f3"),
+      healed)
+    // a takedown, then id 5 re-ingested under the f32 codec
+    AnnIngest.delete(spark, idx, Seq(5L, 12L, 40L).toDF("vec_id"), "gone")
+    def emb(rows: Row*) = spark.createDataFrame(java.util.List.of(rows: _*),
+      StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(FloatType)))))
+    val fresh = emb(Row(5L, Seq[java.lang.Float](0.5f, 0.4f, 0.3f, 0.2f,
+      0.1f, 0f, -0.1f, -0.2f)))
+    graft.TestSpark.withConf(AnnIngest.VectorCodecKey, "f32") {
+      AnnIngest.ingestBatch(fresh.union(vecs(500 until 520)), 4L, idx,
+        nCells = 16)
+    }
+    // ingest refuses a null element, so another writer's delta holds one:
+    // row 700 in the cell its query probes first
+    val withNull = Seq[java.lang.Double](0.3, null, -0.2, 0.6, null, 0.1,
+      0.2, 0.4)
+    val e700 = withNull.map(x => if (x == null) 0.0 else x.doubleValue)
+    val cell700 = graft.sim.Ivf.probeCells(
+      AnnIngest.readCentroids(spark, idx).get, e700.toArray, 1).head
+    spark.createDataFrame(java.util.List.of(Row(700L, withNull,
+        math.sqrt(e700.map(x => x * x).sum), cell700)),
+      StructType(Seq(StructField("vec_id", LongType),
+        StructField("e", ArrayType(DoubleType)),
+        StructField("norm", DoubleType), StructField("cell", IntegerType))))
+      .write.partitionBy("cell").parquet(s"$idx/vectors/batch=5")
+    val nullQuery = emb(
+      Row(700L, withNull.map(x => if (x == null) null
+        else java.lang.Float.valueOf(x.floatValue))),
+      Row(901L, Seq[java.lang.Float](0.5f, null, -0.25f, 0.1f, 0f, 0.3f,
+        null, 0.7f)))
+    val queries = vecs(0 until 30).union(cluster(330 until 340, -5.0))
+      .union(fresh).union(vecs(500 until 505)).union(nullQuery)
+    val (runs, deltas) = AnnIngest.live(spark, idx, Long.MaxValue)
+    val nCells = AnnIngest.readCentroids(spark, idx).get.length
+    for ((k, nProbe) <- Seq((3, 2), (10, nCells))) {
+      val held = topK(idx, queries, k, nProbe)
+      assert(AnnIngest.heldSizes(spark, idx)._1 === runs.length +
+        deltas.length, "the held path served the query")
+      val dist = distTopK(idx, queries, k, nProbe)
+      assert(AnnIngest.heldSizes(spark, idx) === ((0, 0L)),
+        "an index above the cap is not held")
+      assert(held.exists(_._1 == 901L) && held.exists(_._3 == 700L))
+      assert(held.count(x => x._3 == 5L) > 0)
+      assert(!held.exists(x => Set(12L, 40L, 300L)(x._3)))
+      assert(sameBits(held, dist), s"k $k nProbe $nProbe: " +
+        held.diff(dist).take(5) + " vs " + dist.diff(held).take(5))
+      assert(sameBits(held, referenceTopK(idx, queries, k, nProbe,
+        liveByAntiJoin)), s"k $k nProbe $nProbe: reference")
+    }
+  }
+
+  test("a delta overwritten under its batch id with other rows is never " +
+    "served stale from the held rows, even with its old mtimes") {
+    val t = java.nio.file.Files.createTempDirectory("graft_annow").toString
+    val idx = s"$t/idx"
+    AnnIngest.ingestBatch(vecs(0 until 40), 0L, idx, nCells = 4)
+    AnnIngest.ingestBatch(vecs(40 until 60), 1L, idx, nCells = 4)
+    // every cell probed and k above the corpus: the neighbor ids are
+    // exactly the live ids
+    val q = vecs(0 until 60)
+    def ids() = topK(idx, q, 80, 4).map(_._3).toSet
+    assert(ids() === (0L until 60L).toSet)
+    assert(AnnIngest.heldSizes(spark, idx)._1 === 2)
+    val dir = new java.io.File(s"$idx/vectors/batch=1")
+    def tree(f: java.io.File): Seq[java.io.File] =
+      f +: Option(f.listFiles).toSeq.flatten.filter(_.isDirectory)
+        .flatMap(tree)
+    val mtimes = tree(dir).map(f => f.getName -> f.lastModified).toMap
+    AnnIngest.ingestBatch(vecs(100 until 120), 1L, idx, nCells = 4)
+    // as on a filesystem with 1-second mtimes: only the files differ
+    tree(dir).foreach(f => mtimes.get(f.getName).foreach(f.setLastModified))
+    assert(ids() === ((0L until 40L) ++ (100L until 120L)).toSet)
+    assert(AnnIngest.heldSizes(spark, idx)._1 === 2)
+    assert(sameBits(topK(idx, q, 5, 2), distTopK(idx, q, 5, 2)))
+  }
+
+  test("the held rows follow the live set: a steady query launches no " +
+    "job, a compaction's superseded dirs leave the held map at the next " +
+    "query, and the cap evicts the least recently queried index") {
+    val t = java.nio.file.Files.createTempDirectory("graft_annlru").toString
+    val (a, b) = (s"$t/a", s"$t/b")
+    AnnIngest.ingestBatch(vecs(0 until 40), 0L, a, nCells = 4)
+    AnnIngest.ingestBatch(vecs(40 until 60), 1L, a, nCells = 4)
+    val q = vecs(0 until 10)
+    var got = Seq.empty[(Long, Int, Long, Double)]
+    def jobs(idx: String, cap: Long = AnnIngest.HeldMaxValues): Int =
+      jobsOf {
+        got = AnnIngest.queryTopKWith(spark, idx, q, 3, 2, cap).collect()
+          .toSeq.map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+            r.getDouble(3))).sorted
+      }._1
+    assert(jobs(a) === 1, "both deltas are read in one job")
+    assert(AnnIngest.heldSizes(spark, a) === ((2, 60L * 8)))
+    assert(jobs(a) === 0)
+    assert(sameBits(got, distTopK(a, q, 3, 2)))
+    AnnIngest.compact(spark, a, 1L)
+    assert(jobs(a) === 1, "the new run is read")
+    assert(AnnIngest.heldSizes(spark, a) === ((1, 60L * 8)),
+      "the folded deltas are dropped")
+    assert(sameBits(got, distTopK(a, q, 3, 2)))
+    // a (480 values) and b (240) fit together under 720, not under 719;
+    // the distributed call above left a unheld
+    AnnIngest.ingestBatch(vecs(0 until 30), 0L, b, nCells = 4)
+    assert(jobs(a, 720L) === 1 && jobs(b, 720L) === 1)
+    assert(AnnIngest.heldSizes(spark, a) === ((1, 480L)) &&
+      AnnIngest.heldSizes(spark, b) === ((1, 240L)))
+    assert(jobs(b, 719L) === 0)
+    assert(AnnIngest.heldSizes(spark, a) === ((0, 0L)),
+      "the least recently queried index is evicted")
+    assert(AnnIngest.heldSizes(spark, b) === ((1, 240L)))
+    // an index above the cap on its own is served distributed
+    assert(jobs(a, 479L) === 1 && AnnIngest.heldSizes(spark, a) === ((0, 0L)))
+    assert(sameBits(got, distTopK(a, q, 3, 2)))
+  }
+
+  test("a NaN score ranks first, ties by id: queryTopK rows for an " +
+    "Inf-norm vector are the same under any partitioning of its batch, " +
+    "on both paths, and equal the reference") {
+    val s = spark
+    import s.implicits._
+    val t = java.nio.file.Files.createTempDirectory("graft_annnan").toString
+    // elements past ~1e155 square to Inf: the norm is Inf, and the cosine
+    // of two such vectors is Inf/Inf = NaN
+    val big = (0 until 6).map { i =>
+      (1000L + i, Array.tabulate(8)(d => 1e200 * (1 + 0.1 * i + 0.01 * d)))
+    }.toDF("vec_id", "embedding")
+    def dbl(ids: Range) = vecs(ids).select(col("vec_id"),
+      col("embedding").cast("array<double>").as("embedding"))
+    val q = big.union(dbl(0 until 5))
+    val got = Seq(1, 4).map { parts =>
+      val idx = s"$t/p$parts"
+      AnnIngest.ingestBatch(dbl(0 until 40), 0L, idx, nCells = 4)
+      AnnIngest.ingestBatch(big.union(dbl(40 until 60)).repartition(parts),
+        1L, idx, nCells = 4)
+      val held = topK(idx, q, 3, 1)
+      assert(sameBits(held, distTopK(idx, q, 3, 1)), s"$parts partitions")
+      assert(sameBits(held, referenceTopK(idx, q, 3, 1)),
+        s"$parts partitions: reference")
+      held
+    }
+    assert(sameBits(got(0), got(1)))
+    val self = got(0).filter(_._1 == 1000L)
+    assert(self.map(_._3) === Seq(1000L, 1001L, 1002L) &&
+      self.forall(_._4.isNaN), self)
   }
 }

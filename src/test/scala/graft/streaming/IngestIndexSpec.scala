@@ -26,6 +26,12 @@ class IngestIndexSpec extends AnyFunSuite {
         r.getBoolean(3)))
       .sorted.toSeq
 
+  /** Run dirs of `kind` on disk, live or retained: the kind dir's
+    * `run_*` and `base_v*` entries. */
+  private def runDirsOnDisk(idx: String, kind: String): Seq[String] =
+    Option(new java.io.File(s"$idx/$kind").list()).toSeq.flatten
+      .filter(n => n.startsWith("run_") || n.startsWith("base_v"))
+
   private def mkBatches(n: Int): Seq[(Long, org.apache.spark.sql.DataFrame)] =
     (0 until n).map { b =>
       b.toLong -> docs(
@@ -68,7 +74,7 @@ class IngestIndexSpec extends AnyFunSuite {
         Long.MaxValue).map(_._1)
       assert(onDisk === Seq(2L, 3L, 4L),
         s"$kind one-generation delta retention")
-      assert(IngestIndex.runDirsOnDisk(spark, s"$t2/idx", kind)
+      assert(runDirsOnDisk(s"$t2/idx", kind)
         .sorted === (m.runs(kind).map(_.name) :+ "run_1_0_w1").sorted,
         s"$kind retains the previous manifest's run one generation")
     }
@@ -239,7 +245,7 @@ class IngestIndexSpec extends AnyFunSuite {
     // ...but after ANOTHER compaction the K generation is collected
     StreamOps.ingestBatch(batch(4L), 4L, idx, s"$t/out")
     IngestIndex.compact(spark, idx, 4L)
-    val names = IngestIndex.runDirsOnDisk(spark, idx, "hashes")
+    val names = runDirsOnDisk(idx, "hashes")
     assert(!names.exists(_.startsWith("run_1_")),
       s"version-K run must be collected two generations later: $names")
     // the live view is intact through all of it
