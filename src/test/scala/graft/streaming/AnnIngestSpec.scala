@@ -1104,8 +1104,10 @@ class AnnIngestSpec extends AnyFunSuite {
   test("job budget: over 2 runs, 2 deltas and a takedown tombstone, " +
     "queryTopK and compact launch no per-dir schema-inference job, the " +
     "first query after the tombstone change launches at most 2 jobs and " +
-    "the next none, and a non-deterministic query frame is " +
+    "the next exactly 1, and a non-deterministic query frame is " +
     "evaluated once (every returned id has its full rank list)") {
+    // the budget above is the distributed path's; the held path then
+    // answers the same query with at most 2 jobs and the next none
     val s = spark
     import s.implicits._
     val t = java.nio.file.Files.createTempDirectory("graft_annj").toString
@@ -1126,23 +1128,25 @@ class AnnIngestSpec extends AnyFunSuite {
     }.map(_._1)
 
     val k = 3
-    var rows = Array.empty[org.apache.spark.sql.Row]
-    val (qJobs, qStages) = jobsOf {
-      rows = AnnIngest.queryTopK(spark, idx, vecs(0 until 70), k = k,
-        nProbe = 2).collect()
+    import org.apache.spark.sql.Row
+    def budget(heldMax: Long, first: Int, steady: Int): Seq[Row] = {
+      val path = if (heldMax == 0L) "distributed" else "held"
+      def query() = AnnIngest.queryTopKWith(spark, idx, vecs(0 until 70),
+        k, 2, heldMax).collect()
+      var rows = Array.empty[Row]
+      val (qJobs, qStages) = jobsOf { rows = query() }
+      assert(inferred(qStages).isEmpty, inferred(qStages).mkString("\n"))
+      assert(qJobs <= first, s"$path queryTopK launched $qJobs jobs: " +
+        qStages.map(_._1).mkString(", "))
+      assert(rows.map(_.getLong(0)).distinct.length === 70)
+      var again = Array.empty[Row]
+      val (steadyJobs, steadyStages) = jobsOf { again = query() }
+      assert(steadyJobs === steady, s"steady $path queryTopK launched " +
+        s"$steadyJobs jobs: " + steadyStages.map(_._1).mkString(", "))
+      assert(again.toSeq === rows.toSeq)
+      rows.toSeq
     }
-    assert(inferred(qStages).isEmpty, inferred(qStages).mkString("\n"))
-    assert(qJobs <= 2, s"queryTopK launched $qJobs jobs: " +
-      qStages.map(_._1).mkString(", "))
-    assert(rows.map(_.getLong(0)).distinct.length === 70)
-    var again = Array.empty[org.apache.spark.sql.Row]
-    val (steadyJobs, steadyStages) = jobsOf {
-      again = AnnIngest.queryTopK(spark, idx, vecs(0 until 70), k = k,
-        nProbe = 2).collect()
-    }
-    assert(steadyJobs === 0, s"steady queryTopK launched $steadyJobs " +
-      "jobs: " + steadyStages.map(_._1).mkString(", "))
-    assert(again.toSeq === rows.toSeq)
+    assert(budget(0L, 2, 1) === budget(AnnIngest.HeldMaxValues, 2, 0))
 
     // a frame whose row set changes per evaluation: every id the query
     // returns must come with ranks 1..k, and a live indexed id must be
@@ -1398,8 +1402,8 @@ class AnnIngestSpec extends AnyFunSuite {
   test("the held tombstone set follows the tombstone state: the query " +
     "after a new delete, after a same-tag overwrite with more ids within " +
     "one second, and after a compaction's apply and sweep each sees the " +
-    "current set, and a query after no change to the set reuses it, on " +
-    "both query paths") {
+    "current set, and a query after no change to the set reuses it") {
+    // checked on both query paths: the distributed one, then the held one
     val s = spark
     import s.implicits._
     val t = java.nio.file.Files.createTempDirectory("graft_anntc").toString
