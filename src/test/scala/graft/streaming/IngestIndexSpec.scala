@@ -1100,4 +1100,19 @@ class IngestIndexSpec extends AnyFunSuite {
     assert(spark.read.parquet(out).filter(col("doc_id") === 5L)
       .select("kept").head().getBoolean(0))
   }
+
+  test("footerRows sums the footers of every part file under a " +
+    "partitioned dir, skips non-data files, and reads 0 for an absent " +
+    "dir") {
+    val t = java.nio.file.Files.createTempDirectory("graft_ii_ft").toString
+    val s = spark
+    import s.implicits._
+    (0 until 300).map(i => (i.toLong, i % 5)).toDF("id", "p")
+      .repartition(3).write.partitionBy("p").parquet(s"$t/d")
+    (0 until 7).map(_.toLong).toDF("id").write.parquet(s"$t/e")
+    assert(new java.io.File(s"$t/d/_SUCCESS").exists)
+    assert(IngestIndex.footerRows(spark, Seq(s"$t/d")) === 300L)
+    assert(IngestIndex.footerRows(spark,
+      Seq(s"$t/d/p=0", s"$t/e", s"$t/absent")) === 60L + 7L)
+  }
 }
