@@ -1,7 +1,13 @@
 package graft.sim
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType}
 
 import graft.expr.DotProduct.dot
 
@@ -63,19 +69,13 @@ object Ivf {
     // tiny corpora (fuzz gate, tiny mode)
     var cents = sample.take(nCells)
     val k = cents.length
+    val data = sample.map(UnsafeArrayData.fromPrimitiveArray(_): ArrayData)
     for (_ <- 0 until iters) {
       val sums = Array.fill(k)(new Array[Double](cents(0).length))
       val cnts = new Array[Long](k)
-      sample.foreach { e =>
-        var best = 0; var bestD = Double.PositiveInfinity
-        var c = 0
-        while (c < cents.length) {
-          var d = 0.0; var i = 0
-          val cv = cents(c)
-          while (i < e.length) { val t = e(i) - cv(i); d += t * t; i += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
+      sample.indices.foreach { j =>
+        val e = sample(j)
+        val best = nearestCell(cents, data(j))
         val s = sums(best); var i = 0
         while (i < e.length) { s(i) += e(i); i += 1 }
         cnts(best) += 1
@@ -103,31 +103,43 @@ object Ivf {
     d2
   }
 
-  /** Nearest-centroid assignment: broadcast centroids, narrow map.
-    * Allocation-free running-min loop — this is the per-row hot path over
-    * the whole corpus, so it must not share the array-returning
-    * [[distances]] helper (2 KB of garbage per row at nCells=256). */
-  def assignCells(v: DataFrame, cents: Array[Array[Double]]): DataFrame = {
-    val spark = v.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(cents)
-    v.select(col("vec_id"), col("e"), col("norm"))
-      .as[(Long, Array[Double], Double)]
-      .map { case (id, e, norm) =>
-        val cs = bc.value
-        var best = 0; var bestD = Double.PositiveInfinity
-        var c = 0
-        while (c < cs.length) {
-          var d = 0.0; var i = 0
-          val cv = cs(c)
-          while (i < e.length) { val t = e(i) - cv(i); d += t * t; i += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        (id, e, norm, best)
+  /** Index of the centroid of `cs` nearest to `e` (squared L2 distance
+    * over `e`'s length; the first minimum wins): the one argmin of
+    * training, ingest, heal reassignment and the ANN index's driver-side
+    * ingest. A null element reads 0.0, as [[graft.expr.DotProduct]] and
+    * the queries read it. A DEAD slot (an all-NaN centroid) never wins:
+    * NaN never beats a running min. Allocation-free — this is the per-row
+    * hot path over the whole corpus, so it must not share the
+    * array-returning [[distances]] helper (2 KB of garbage per row at
+    * nCells=256). */
+  def nearestCell(cs: Array[Array[Double]], e: ArrayData): Int = {
+    val n = e.numElements()
+    var best = 0; var bestD = Double.PositiveInfinity
+    var c = 0
+    while (c < cs.length) {
+      var d = 0.0; var i = 0
+      val cv = cs(c)
+      while (i < n) {
+        val t = (if (e.isNullAt(i)) 0.0 else e.getDouble(i)) - cv(i)
+        d += t * t; i += 1
       }
-      .toDF("vec_id", "e", "norm", "cell")
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
   }
+
+  /** `v` plus a `cell` column: the [[nearestCell]] of its `e` under the
+    * broadcast centroids, a narrow per-row expression. */
+  def withCell(v: DataFrame, cents: Array[Array[Double]]): DataFrame = {
+    val bc = v.sparkSession.sparkContext.broadcast(cents)
+    v.withColumn("cell",
+      GraftBridge.column(NearestCell(GraftBridge.expression(col("e")), bc)))
+  }
+
+  /** Nearest-centroid assignment: (vec_id, e, norm, cell). */
+  def assignCells(v: DataFrame, cents: Array[Array[Double]]): DataFrame =
+    withCell(v.select(col("vec_id"), col("e"), col("norm")), cents)
 
   /** The `nProbe` nearest cells of `e`, nearest first, ties broken by
     * cell id. DEAD slots (all-NaN centroids left by a cold-cell fold —
@@ -205,4 +217,19 @@ object Ivf {
       .withColumn("cos", Similarity.cosine(dot(col("ea"), col("eb")), col("na"), col("nb")))
     Similarity.topKSelect(pairs, k)
   }
+}
+
+/** [[Ivf.nearestCell]] of an `array<double>` column under broadcast
+  * centroids; a null vector has no cell. */
+private[sim] case class NearestCell(child: Expression,
+    cents: Broadcast[Array[Array[Double]]])
+    extends UnaryExpression with CodegenFallback {
+
+  override def dataType: DataType = IntegerType
+
+  override def nullSafeEval(e: Any): Any =
+    Ivf.nearestCell(cents.value, e.asInstanceOf[ArrayData])
+
+  override protected def withNewChildInternal(c: Expression): NearestCell =
+    copy(child = c)
 }

@@ -3,9 +3,10 @@ package graft.streaming
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 
 import graft.streaming.IngestIndex.{AnnFamily, Manifest, Run}
@@ -50,20 +51,26 @@ import graft.streaming.IngestIndex.{AnnFamily, Manifest, Run}
   *    moment a real corpus faces takedowns.
   *
   * Scale shape: ingest is APPEND-ONLY — unlike the dedup gate it never
-  * probes prior state, so per-batch cost is O(batch) by construction
-  * (broadcast centroids, narrow assignment map, one cell-partitioned
-  * write). Queries probe nProbe cells per vector: the query set is
+  * probes prior state, so per-batch cost is O(batch) by construction:
+  * a batch that fits the held cap is collected once, assigned on the
+  * driver and written in one job; a larger one runs a narrow
+  * assignment map over broadcast centroids and one cell-partitioned
+  * write. Queries probe nProbe cells per vector: the query set is
   * small by contract, so it is collected once and its probes are
   * assigned on the driver against the in-memory quantizer. A steady
   * query launches NO Spark job: runs and deltas never change once
   * published, so the decoded rows of each live run or delta dir are
   * held on the driver, one entry per dir keyed by the dir's files
   * ([[IngestIndex.dirKey]]), and the probed cells are scored there in
-  * plain Scala. The first query after an ingest or a compaction reads
-  * the new dir(s) whole in one job; an entry whose dir left the live set
-  * is dropped at the next query of its index. The held rows of every
+  * plain Scala. The writers keep them current: an ingest that fits the
+  * cap, and a compaction's fold and merges over held inputs, hold the
+  * rows they write, and a small delete holds the new tombstone set, so
+  * no query reads back what was just written. A dir the held rows lack
+  * (an index that was not held, a large batch, a heal's runs) is read
+  * whole in one job by the next query; an entry whose dir left the live
+  * set is dropped at the next query of its index. The held rows of every
   * index together are capped at `HeldMaxValues` vector values
-  * (least recently queried index evicted first). An index above the cap,
+  * (least recently used index evicted first). An index above the cap,
   * or with a tombstone set above `TombBroadcastMax` rows, is served by
   * ONE distributed scan job instead: the probed cell set (≤ nCells
   * values) becomes a partition filter on every run scan, so a query
@@ -113,15 +120,19 @@ object AnnIngest {
     * writers, and a reader session needs no conf at all. */
   val VectorCodecKey = "spark.sql.graft.ann.vectorCodec"
 
-  /** Apply the session's at-rest codec to a (vec_id, e, norm, cell)
-    * frame about to be written as a run/delta. */
-  private def encodeVec(sp: SparkSession, df: DataFrame): DataFrame =
+  /** Does the session write the f32 codec ([[VectorCodecKey]])? */
+  private def f32(sp: SparkSession): Boolean =
     sp.conf.getOption(VectorCodecKey).getOrElse("f64") match {
-      case "f64" => df
-      case "f32" => df.withColumn("e", col("e").cast("array<float>"))
+      case "f64" => false
+      case "f32" => true
       case other => throw new IllegalArgumentException(
         s"$VectorCodecKey must be f64|f32, got '$other'")
     }
+
+  /** Apply the session's at-rest codec to a (vec_id, e, norm, cell)
+    * frame about to be written as a run/delta. */
+  private def encodeVec(sp: SparkSession, df: DataFrame): DataFrame =
+    if (f32(sp)) df.withColumn("e", col("e").cast("array<float>")) else df
 
   /** Standard IVF cell count for an EXPECTED corpus size: ~sqrt(n)
     * (cell size ≈ cell count balances probe cost against assignment
@@ -244,32 +255,62 @@ object AnnIngest {
   }
 
   /** Ingest one batch: assign each vector to its (frozen) nearest cell
-    * and append under `vectors/batch=<id>`, partitioned by cell.
+    * ([[graft.sim.Ivf.nearestCell]]) and append under
+    * `vectors/batch=<id>`, partitioned by cell, one file per cell.
     * Overwrite mode → a foreachBatch retry leaves the index
     * bit-identical. No prior index state is read — ingest cost is
     * O(batch) whatever the corpus size. A row with a null `vec_id` is
     * dropped, as [[graft.sim.Similarity.prep]] drops a null embedding:
     * it has no identity to query, delete or return, and one such row
-    * must not fail the batch (and with it the stream). */
+    * must not fail the batch (and with it the stream).
+    *
+    * Once the quantizer exists, a batch of at most `HeldMaxValues / dim`
+    * rows is collected once and assigned on the driver, and the delta is
+    * written from the driver in one job. When the index's rows are held
+    * for queries ([[queryTopK]]), the decoded delta is held too, so the
+    * next query reads nothing back. The first batch, which trains the
+    * quantizer, and a larger batch run the distributed assignment and
+    * cell shuffle instead. */
   def ingestBatch(batch: DataFrame, batchId: Long, indexDir: String,
                   nCells: Int = DefaultCells): Unit =
+    ingestBatchWith(batch, batchId, indexDir, nCells, HeldMaxValues)
+
+  /** [[ingestBatch]] with the driver path's cap `heldMax` in vector
+    * values: a batch above `heldMax / dim` rows is written distributed. */
+  private[streaming] def ingestBatchWith(batch: DataFrame, batchId: Long,
+      indexDir: String, nCells: Int, heldMax: Long): Unit =
       IngestIndex.withWriterLease(batch.sparkSession, indexDir) {
-    val rows = batch.filter(col("vec_id").isNotNull)
-    val cents = ensureCentroids(rows, indexDir, nCells)
-    val assigned = graft.sim.Ivf.assignCells(
-      graft.sim.Similarity.prep(rows), cents)
     val sp = batch.sparkSession
-    // ~one file per populated cell partition. The exchange width is
-    // bounded by the quantizer size (there are at most |cells| distinct
-    // keys): a full configured-width exchange (AQE is off inside
-    // foreachBatch) is mostly empty tasks when |cells| is small, and
-    // capping at the session width changes nothing at production cell
-    // counts
-    val w = graft.ops.Spread.cellWidth(sp, cents.length)
-    encodeVec(sp, assigned)
-      .repartition(w, col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$indexDir/vectors/batch=$batchId")
+    val rows = batch.filter(col("vec_id").isNotNull)
+    val v = graft.sim.Similarity.prep(rows)
+    val dir = s"${vectorsDir(indexDir)}/batch=$batchId"
+    val small = readCentroids(sp, indexDir).filter(_.nonEmpty).flatMap { cs =>
+      val cap = heldMax / math.max(cs(0).length, 1)
+      val got = v.limit(math.min(cap + 1, Int.MaxValue).toInt).collect()
+      Option.when(got.length <= cap)(cs -> got)
+    }
+    small match {
+      case Some((cents, got)) =>
+        val toHeld = UnsafeProjection.create(heldSchema)
+        val rs = got.toSeq.map { r =>
+          val e = new GenericArrayData(r.getSeq[Any](1).toArray)
+          toHeld(InternalRow(graft.sim.Ivf.nearestCell(cents, e),
+            r.getLong(0), e, r.getDouble(2))).copy(): InternalRow
+        }
+        holdWritten(sp, indexDir, dir, writeLocal(sp, dir, rs, cents.length),
+          Nil)
+      case None =>
+        val cents = ensureCentroids(rows, indexDir, nCells)
+        // ~one file per populated cell partition. The exchange width is
+        // bounded by the quantizer size (there are at most |cells|
+        // distinct keys): a full configured-width exchange (AQE is off
+        // inside foreachBatch) is mostly empty tasks when |cells| is
+        // small, and capping at the session width changes nothing at
+        // production cell counts
+        val w = graft.ops.Spread.cellWidth(sp, cents.length)
+        writeCells(sp, dir,
+          graft.sim.Ivf.assignCells(v, cents).repartition(w, col("cell")))
+    }
   }
 
   private def vectorsDir(indexDir: String) = s"$indexDir/vectors"
@@ -293,7 +334,10 @@ object AnnIngest {
   /** Register vectors for deletion (takedowns, dedup corrections): a
     * TOMBSTONE — `ids` (single `vec_id` column) written under
     * `tombs/t_<tag>` in overwrite mode, so re-issuing the same tag is
-    * idempotent. Readers anti-join live tombstones immediately (the
+    * idempotent. Up to [[IngestIndex.TombBroadcastMax]] ids are collected
+    * and written in one job, and when the live set before them is held
+    * the new set is held in its place: the next query collects nothing.
+    * Readers anti-join live tombstones immediately (the
     * ids vanish from every readIndex/queryTopK result as soon as this
     * returns); the next [[compact]] APPLIES them (the rebuilt runs
     * physically exclude the rows) and the one after SWEEPS the applied
@@ -306,6 +350,8 @@ object AnnIngest {
   def delete(sp: SparkSession, indexDir: String, ids: DataFrame,
              tag: String): Unit =
       IngestIndex.withWriterLease(sp, indexDir) {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val m = IngestIndex.readManifest(sp, indexDir)
     AnnFamily.requireNewTag(m, tag)
     // the split_ namespace is reserved: split-retrain tombstones are
@@ -314,10 +360,37 @@ object AnnIngest {
     require(!tag.startsWith("split_"),
       s"tag '$tag' collides with the reserved split-retrain namespace " +
         "(t_split_*); pick another tag")
-    ids.select(col("vec_id").cast("long"))
-      .distinct()
-      .withColumn("tb_bound", lit(AnnFamily.sourceBound(sp, indexDir, m)))
-      .write.mode("overwrite").parquet(s"${tombsDir(indexDir)}/t_$tag")
+    val name = s"t_$tag"
+    val dir = s"${tombsDir(indexDir)}/$name"
+    val bound = AnnFamily.sourceBound(sp, indexDir, m)
+    val vid = ids.select(col("vec_id").cast("long"))
+    val got = vid.limit(IngestIndex.TombBroadcastMax.toInt + 1).collect()
+    if (got.length > IngestIndex.TombBroadcastMax)
+      vid.distinct().withColumn("tb_bound", lit(bound))
+        .write.mode("overwrite").parquet(dir)
+    else {
+      // a set small enough to hold: distinct on the driver, one write
+      // task, and — when the set before it is held and this tag is new —
+      // the new live set held in its place, as a collect would build it
+      val before = tombDirsWith(m, sp, indexDir)
+      val prev =
+        if (before.exists(IngestIndex.nameOf(_) == name)) None
+        else if (before.isEmpty) Some(new TombSet(Array.empty))
+        else IngestIndex.tombHeld[Option[TombSet]](sp, before, "ann",
+          ledgerOf(m)).flatten
+      val added = got.map(r => if (r.isNullAt(0)) null
+        else java.lang.Long.valueOf(r.getLong(0))).distinct
+      sp.createDataFrame(
+          sp.sparkContext.parallelize(added.toSeq.map(Row(_, bound)), 1),
+          StructType(Seq(StructField("vec_id", LongType),
+            StructField("tb_bound", LongType, nullable = false))))
+        .write.mode("overwrite").parquet(dir)
+      prev.map(_.rows ++ added.map(Row(_, null, bound)))
+        .filter(_.length <= IngestIndex.TombBroadcastMax)
+        .foreach(rs => IngestIndex.tombHold(sp,
+          tombDirsWith(m, sp, indexDir), "ann", ledgerOf(m),
+          Some(new TombSet(rs))))
+    }
   }
 
   /** Live (not yet swept) tombstone dirs on disk. Bounded: tombstones
@@ -446,7 +519,8 @@ object AnnIngest {
     * with each task, so a read under it launches no tombstone job, and
     * the `Or` evaluates `keep` — with its source-id argument — only for
     * a row whose id is held. */
-  private final class TombSet(rows: Array[org.apache.spark.sql.Row])
+  private final class TombSet(
+      @transient val rows: Array[org.apache.spark.sql.Row])
       extends Serializable {
     private val byId: Map[java.lang.Long, Array[(Integer, java.lang.Long)]] =
       rows.filterNot(_.isNullAt(0)).groupBy(_.getLong(0)).map {
@@ -467,6 +541,11 @@ object AnnIngest {
       byId.get(id).forall(!_.exists {
         case (tc, ta) => inScope(tc, ta, cell, src)
       })
+
+    /** `frees(vec_id) || keeps(vec_id, cell, src)` for a held index row
+      * `r` ([[heldSchema]]) of cell `cell` from source `src`. */
+    def admits(r: InternalRow, cell: Int, src: Long): Boolean =
+      r.isNullAt(1) || frees(r.getLong(1)) || keeps(r.getLong(1), cell, src)
 
     @transient lazy val free =
       udf((id: java.lang.Long) => frees(id)).withName(TombFreeUdf)
@@ -490,9 +569,7 @@ object AnnIngest {
     if (dirs.isEmpty) Right(new TombSet(Array.empty))
     else {
       lazy val t = tombRows(m, sp, dirs)
-      val ledger = AnnFamily.applied(m).map(r => s"${r.name}=${r.rows}")
-        .sorted.mkString(",")
-      IngestIndex.tombCached(sp, dirs, "ann", ledger) {
+      IngestIndex.tombCached(sp, dirs, "ann", ledgerOf(m)) {
         // one partition: a limit over several would take rows with
         // one job per partition batch
         val rs = t.coalesce(1)
@@ -501,6 +578,11 @@ object AnnIngest {
         else Some(new TombSet(rs))
       }.toRight(t)
     }
+
+  /** The manifest state a tombstone set also derives from: split
+    * tombstones take their applied-at id from the ledger. */
+  private def ledgerOf(m: Manifest): String =
+    AnnFamily.applied(m).map(r => s"${r.name}=${r.rows}").sorted.mkString(",")
 
   /** The tombstone exclusion of a live tombstone set ([[tombsOf]]) over
     * rows that carry vec_id + cell + src_id: identity for an empty set,
@@ -607,14 +689,63 @@ object AnnIngest {
     // compaction was re-reading manifest + centroids JSON per run it
     // wrote (per-call FS round-trips that add up on an object store).
     val w = graft.ops.Spread.cellWidth(sp, math.max(nCells, 1))
-    encodeVec(sp, df.select(col("vec_id"), col("e"), col("norm"),
-        col("cell")))
-      .repartition(w, col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(dir)
+    writeCells(sp, dir, df.select(col("vec_id"), col("e"), col("norm"),
+      col("cell")).repartition(w, col("cell")))
     // run row count off the just-written footers — saves one Spark job
     // per run written (the drill wall is job-count × dispatch overhead)
     Run(name, IngestIndex.footerRows(sp, Seq(dir)))
   }
+
+  /** Write `df` (vec_id, e, norm, cell), each partition holding whole
+    * cells, as the cell-partitioned dir `dir` under the session's codec:
+    * one file per cell. */
+  private def writeCells(sp: SparkSession, dir: String, df: DataFrame): Unit =
+    encodeVec(sp, df).write.mode("overwrite").partitionBy("cell").parquet(dir)
+
+  /** Layout of a held index row: (cell, vec_id, e, norm) — what
+    * [[scoreRow]] reads. */
+  private val heldSchema = org.apache.spark.sql.types.StructType(
+    vecSchema.fields.last +: vecSchema.fields.init)
+
+  /** Write `rows` (held layout, no null cell) as the dir `dir` in ONE job
+    * from a local frame whose slices each hold whole cells — so, like
+    * the shuffled write, one file per cell — and return the dir as a
+    * read of it decodes: under the f32 codec every element rounds to a
+    * float. */
+  private def writeLocal(sp: SparkSession, dir: String,
+      rows: Seq[InternalRow], nCells: Int): HeldDir = {
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    val toVec = UnsafeProjection.create(vecSchema.fields.toSeq.map { f =>
+      BoundReference(heldSchema.fieldIndex(f.name), f.dataType, true)
+    })
+    val w = graft.ops.Spread.cellWidth(sp, math.max(nCells, 1))
+    val byCell = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+    val slices = byCell.zipWithIndex.groupBy(_._2 % w).values.toSeq
+      .map(_.flatMap(_._1._2).map(r => toVec(r).copy()))
+    writeCells(sp, dir, GraftBridge.frame(sp,
+      sp.sparkContext.parallelize(slices, math.max(slices.length, 1))
+        .flatMap(identity), vecSchema))
+    val round = f32(sp)
+    val toHeld = UnsafeProjection.create(heldSchema)
+    new HeldDir(srcIdOf(dir), byCell.map { case (c, rs) =>
+      c -> (if (!round) rs.toArray else rs.map { r =>
+        toHeld(InternalRow(c, if (r.isNullAt(1)) null else r.getLong(1),
+          if (r.isNullAt(2)) null else f32Decoded(r.getArray(2)),
+          if (r.isNullAt(3)) null else r.getDouble(3))).copy(): InternalRow
+      }.toArray)
+    }.toMap, rows.map(valuesOf).sum, whole = true)
+  }
+
+  /** `e` as a read of it decodes under the f32 codec: each element cast
+    * to a float and widened back, a null element kept. */
+  private def f32Decoded(e: ArrayData): ArrayData =
+    new GenericArrayData(Array.tabulate[Any](e.numElements()) { i =>
+      if (e.isNullAt(i)) null else e.getDouble(i).toFloat.toDouble
+    })
+
+  /** Vector values of a held row. */
+  private def valuesOf(r: InternalRow): Long =
+    if (r.isNullAt(2)) 0L else r.getArray(2).numElements.toLong
 
   /** Read run/delta dirs as ONE scan relation under [[vecSchema]],
     * each row carrying its dir's source id ([[srcIdOf]]) so downstream
@@ -644,32 +775,13 @@ object AnnIngest {
     regexp_extract(col("_metadata.file_path"), "([^/]+)/[^/]+/[^/]+$", 1)
 
   /** Nearest-centroid REassignment that carries each row's current cell
-    * through ([[graft.sim.Ivf.assignCells]] drops extra columns): the
-    * split step needs (old_cell, new cell) per row to find movers as a
-    * narrow map — no corpus-wide self-join. Same allocation-free
-    * running-min loop as assignCells (per-row hot path). */
+    * through as `old_cell` ([[graft.sim.Ivf.assignCells]] drops extra
+    * columns): the split step needs (old_cell, new cell) per row to find
+    * movers as a narrow map — no corpus-wide self-join. */
   private def reassign(v: DataFrame, cents: Array[Array[Double]])
-      : DataFrame = {
-    val sp = v.sparkSession
-    import sp.implicits._
-    val bc = sp.sparkContext.broadcast(cents)
-    v.select(col("vec_id"), col("e"), col("norm"), col("cell"))
-      .as[(Long, Array[Double], Double, Int)]
-      .map { case (id, e, norm, old) =>
-        val cs = bc.value
-        var best = 0; var bestD = Double.PositiveInfinity
-        var c = 0
-        while (c < cs.length) {
-          var d = 0.0; var i = 0
-          val cv = cs(c)
-          while (i < e.length) { val t = e(i) - cv(i); d += t * t; i += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        (id, e, norm, old, best)
-      }
-      .toDF("vec_id", "e", "norm", "old_cell", "cell")
-  }
+      : DataFrame =
+    graft.sim.Ivf.withCell(v.select(col("vec_id"), col("e"), col("norm"),
+      col("cell").as("old_cell")), cents)
 
   /** Cell-occupancy skew report, written as `skew_v<upTo>.json` at each
     * compaction. Counts the PHYSICAL runs/deltas directly — a
@@ -691,7 +803,7 @@ object AnnIngest {
       : (Double, Map[Int, Long]) = {
     val counts = liveCounts.getOrElse {
       val (runs, deltas) = live(sp, indexDir, Long.MaxValue)
-      cellFootersOf(sp, runs ++ deltas)
+      physicalCounts(sp, indexDir, runs ++ deltas)
     }
     // skew = max / mean over the QUANTIZER's LIVE cell count, empty
     // cells counting as zero occupancy. Dividing by the populated-cell
@@ -721,6 +833,15 @@ object AnnIngest {
     finally out.close()
     (skew, counts)
   }
+
+  /** Per-cell PHYSICAL occupancy of `dirs` (physical rows per cell, no
+    * tombstone anti-join): from the held rows when every dir is held, no
+    * file opened; else off the parquet footers ([[cellFootersOf]]). */
+  private def physicalCounts(sp: SparkSession, indexDir: String,
+      dirs: Seq[String]): Map[Int, Long] =
+    heldOf(sp, indexDir, dirs).fold(cellFootersOf(sp, dirs))(
+      _.flatMap(_.byCell.map { case (c, rs) => c -> rs.length.toLong })
+        .groupMapReduce(_._1)(_._2)(_ + _))
 
   /** Per-cell PHYSICAL occupancy straight off the parquet footers —
     * driver-side, no Spark job: the cell id is the partition dir name
@@ -757,6 +878,16 @@ object AnnIngest {
     * results). Family-specific here: the heal tombstones a split or
     * fold adds to the ledger, orphan heal tombstones, centroid files
     * and skew reports.
+    *
+    * A fold or merge whose input dirs are all held ([[queryTopK]]),
+    * under a held tombstone set, takes its rows from the held rows,
+    * keeps those the query paths' rule admits, writes the run from the
+    * driver in one job and holds it; the skew report then counts cells
+    * from the held rows. A compaction that writes no heal tombstone and
+    * deletes no swept one holds the unchanged tombstone set under the
+    * new ledger. Otherwise — inputs not held, a tombstone set
+    * above [[IngestIndex.TombBroadcastMax]] — the run is read, cleaned
+    * and written distributed, as are every heal and the retrain.
     *
     * `retrain = true` is the quantizer-drift escape hatch: re-train the
     * coarse quantizer on the CURRENT corpus (deterministic hash-stride
@@ -842,7 +973,8 @@ object AnnIngest {
     }
     val cycle = AnnFamily.open(m, tombDirsWith(m, sp, indexDir), upTo)
     val liveTombPaths = cycle.live
-    val clean = tombFilter(tombsOf(m, sp, liveTombPaths))
+    val tombs = tombsOf(m, sp, liveTombPaths)
+    val clean = tombFilter(tombs)
     if (retrain) {
       if (runDirs.isEmpty && deltaDirs.isEmpty) return
       // clean BEFORE dropping the cell column: relocation tombstones
@@ -876,12 +1008,16 @@ object AnnIngest {
         cents = Some(centsName)
       }
     } else {
-      val fold = if (deltaDirs.isEmpty) None
-        else Some(writeRun(sp, indexDir, nextName(),
-          clean(readDirs(sp, deltaDirs)), preSlots))
+      // a fold or merge over held inputs is written from the held rows
+      def written(inputs: Seq[String]): Run = {
+        val name = nextName()
+        heldRun(sp, indexDir, name, inputs, tombs, preSlots).getOrElse(
+          writeRun(sp, indexDir, name, clean(readDirs(sp, inputs)), preSlots))
+      }
+      val fold = if (deltaDirs.isEmpty) None else Some(written(deltaDirs))
       runs = IngestIndex.mergeSameClass(runs ++ fold.filter(_.rows > 0)) {
-        (a, b) => writeRun(sp, indexDir, nextName(), clean(readDirs(sp,
-          Seq(a, b).map(r => s"${vectorsDir(indexDir)}/${r.name}"))), preSlots)
+        (a, b) => written(
+          Seq(a, b).map(r => s"${vectorsDir(indexDir)}/${r.name}"))
       }._1
     }
     // ---- split-cell LOCAL retrain ------------------------------------------
@@ -1025,7 +1161,7 @@ object AnnIngest {
         val counts: Option[Map[Int, Long]] = healedCounts.orElse {
           // physical pre-check straight off the footers (driver-side,
           // no job)
-          val footer = cellFootersOf(sp,
+          val footer = physicalCounts(sp, indexDir,
             runs.map(r => s"${vectorsDir(indexDir)}/${r.name}"))
           val fMean = footer.values.sum.toDouble / math.max(live.size, 1)
           // while tombstones are LIVE, physical counts overstate live
@@ -1091,6 +1227,14 @@ object AnnIngest {
         }
       }
     }
+    // with no heal tombstone added and no swept dir deleted, the live
+    // tombstone dirs are the ones the set was collected from, and a
+    // ledger record only moves from tombs to tswept with its id: the set
+    // is unchanged, so hold it under the new ledger too
+    if (liveTombPaths.nonEmpty && healTombs.isEmpty &&
+        AnnFamily.swept(m).isEmpty)
+      tombs.foreach(set => IngestIndex.tombHold(sp,
+        tombDirsWith(next, sp, indexDir), "ann", ledgerOf(next), Some(set)))
     // this compaction's skew report is written BEFORE older ones are
     // deleted, and the cleanup filter excludes the new file by name: the
     // reverse order (delete-all, then write) had a crash window in which
@@ -1144,18 +1288,23 @@ object AnnIngest {
     *    per dir keyed by [[IngestIndex.dirKey]]; runs and deltas do not
     *    change once published, so a dir is decoded once. A query whose
     *    dirs are all held scores them in plain Scala under the held
-    *    tombstone set; one that finds a dir missing (after an ingest or
-    *    a compaction) first reads every missing dir — all its cells — in
-    *    one job. This path serves an index whose rows × dim fit under
-    *    [[HeldMaxValues]] with a tombstone set of at most
-    *    [[IngestIndex.TombBroadcastMax]] rows.
+    *    tombstone set. The writers hold what they write: a driver-side
+    *    [[ingestBatch]], a [[compact]] fold or merge over held inputs and
+    *    a small [[delete]], so the query after them reads nothing. A
+    *    query that finds a dir missing (the index was not held when it
+    *    was written, or a distributed write or heal wrote it) first reads
+    *    every missing dir — all its cells — in one job. This path serves
+    *    an index whose rows × dim fit under [[HeldMaxValues]] with a
+    *    tombstone set of at most [[IngestIndex.TombBroadcastMax]] rows.
     *  - DISTRIBUTED, one Spark job: otherwise the probed cell set
     *    (≤ nCells values) prunes one scan relation over every live dir
     *    ([[queryScan]]); the probe table (cell → query id, vector, norm)
     *    ships in the task closure, each task keeps its bounded buffers,
     *    and the driver merges them — at most partitions × queries × k
     *    pairs come back.
-    * The first query after a tombstone-set change adds one job, which
+    * The first query after a tombstone-set change that no writer held —
+    * a same-tag overwrite, a set above the cap, a compaction that writes
+    * a heal tombstone or deletes a swept one — adds one job, which
     * collects the set ([[tombsOf]]). */
   def queryTopK(sp: SparkSession, indexDir: String, queries: DataFrame,
                 k: Int = 3, nProbe: Int = 1): DataFrame =
@@ -1209,9 +1358,7 @@ object AnnIngest {
               .empty[Long, Seq[(Double, Long)]]
             for (c <- byCell.keys; h <- hs;
                  r <- h.byCell.getOrElse(c, Array.empty[InternalRow]))
-              if (r.isNullAt(1) || set.frees(r.getLong(1)) ||
-                  set.keeps(r.getLong(1), c, h.src))
-                scoreRow(byCell, k, bufs, r)
+              if (set.admits(r, c, h.src)) scoreRow(byCell, k, bufs, r)
             Seq(bufs.toArray)
           case None =>
             scanOf(sp, dirs, tombFilter(tombs), Some(byCell.keys.toSeq))
@@ -1268,12 +1415,14 @@ object AnnIngest {
     * vectors at sf0.1; the repo benchmark's 64-d index ends near 2,500. */
   private[streaming] val HeldMaxValues = 1L << 22
 
-  /** The decoded rows of one run or delta dir, as the query scan
-    * projects them — (cell, vec_id, e, norm, dir name), `e` the scan's
-    * own array copied — grouped by cell; with the dir's source id
-    * ([[srcIdOf]]) and its count of vector values. */
+  /** The decoded rows of one run or delta dir in the held layout
+    * ([[heldSchema]], as the query scan projects them; a row read back
+    * carries its dir name after them), grouped by cell; with the dir's
+    * source id ([[srcIdOf]]), its count of vector values, and whether it
+    * is `whole`: no row with a null cell was left out. */
   private final class HeldDir(val src: Long,
-      val byCell: Map[Int, Array[InternalRow]], val values: Long)
+      val byCell: Map[Int, Array[InternalRow]], val values: Long,
+      val whole: Boolean)
 
   /** The held dirs: qualified index path → ([[IngestIndex.dirKey]] →
     * rows), least recently queried index first. Guarded by itself. */
@@ -1334,8 +1483,16 @@ object AnnIngest {
     }.sum
     if (want > cap) return unheld
     val all = kept ++ loadDirs(sp, missing)
+    hold(ix, all, cap)
+    Some(live.map { case (_, key) => all(key) })
+  }
+
+  /** Hold `dirs` as the rows of index `ix`, then evict least recently
+    * used indexes until the held total fits under `cap` — and `ix` too if
+    * it alone is above it. */
+  private def hold(ix: String, dirs: Map[String, HeldDir], cap: Long): Unit =
     held.synchronized {
-      held.put(ix, all)
+      held.put(ix, dirs)
       def size(e: Map[String, HeldDir]) = e.values.map(_.values).sum
       var total = held.values.asScala.map(size).sum
       val it = held.entrySet.iterator
@@ -1343,11 +1500,56 @@ object AnnIngest {
         val e = it.next()
         if (e.getKey != ix) { total -= size(e.getValue); it.remove() }
       }
-      // the estimate undercounted (rows of another dim): keep the bound
+      // `ix` alone is above the cap (a size estimate undercounted, rows
+      // of another dim): keep the bound
       if (total > cap) held.remove(ix)
     }
-    Some(live.map { case (_, key) => all(key) })
+
+  /** The held rows of `dirs` of `indexDir`, in order, when every one is
+    * held. */
+  private def heldOf(sp: SparkSession, indexDir: String, dirs: Seq[String])
+      : Option[Seq[HeldDir]] =
+    held.synchronized(Option(held.get(qualified(sp, indexDir)))).flatMap {
+      hs =>
+        val got = dirs.flatMap(d => IngestIndex.dirKey(sp, d).flatMap(hs.get))
+        Option.when(got.length == dirs.length)(got)
+    }
+
+  /** Hold `h`, the rows just written as `dir` of `indexDir`, in place of
+    * what was held for an earlier write of `dir` and for the dirs `drop`
+    * it replaces — only for an index whose rows are held already, and
+    * under the held cap. */
+  private def holdWritten(sp: SparkSession, indexDir: String, dir: String,
+      h: HeldDir, drop: Seq[String]): Unit = {
+    val ix = qualified(sp, indexDir)
+    if (held.synchronized(held.containsKey(ix)))
+      IngestIndex.dirKey(sp, dir).foreach { key =>
+        val gone = (dir +: drop).map(d => qualified(sp, d) + "@")
+        held.synchronized(Option(held.get(ix)).foreach { hs =>
+          hold(ix, hs.filterNot { case (k, _) => gone.exists(k.startsWith) } +
+            (key -> h), HeldMaxValues)
+        })
+      }
   }
+
+  /** The run `name` of `indexDir` from the held rows of `inputs`, when
+    * each is held whole and the live tombstone set `tombs` is held: the
+    * rows it admits — the rule of both query paths — written from the
+    * driver ([[writeLocal]]) and held in turn. None when the distributed
+    * read and write must serve. */
+  private def heldRun(sp: SparkSession, indexDir: String, name: String,
+      inputs: Seq[String], tombs: Either[DataFrame, TombSet], nCells: Int)
+      : Option[Run] =
+    tombs.toOption.flatMap { set =>
+      heldOf(sp, indexDir, inputs).filter(_.forall(_.whole)).map { hs =>
+        val rows = for (h <- hs; (c, rs) <- h.byCell.toSeq;
+                        r <- rs.toSeq if set.admits(r, c, h.src)) yield r
+        val dir = s"${vectorsDir(indexDir)}/$name"
+        holdWritten(sp, indexDir, dir, writeLocal(sp, dir, rows, nCells),
+          inputs)
+        Run(name, rows.length)
+      }
+    }
 
   /** Read the run/delta dirs `dirs` (dir → its key) whole in one job and
     * decode them into [[HeldDir]]s by key. */
@@ -1363,8 +1565,7 @@ object AnnIngest {
         val rs = rows.getOrElse(new Path(d).getName, Array.empty[InternalRow])
         key -> new HeldDir(srcIdOf(d),
           rs.filterNot(_.isNullAt(0)).groupBy(_.getInt(0)),
-          rs.map(r => if (r.isNullAt(2)) 0L
-            else r.getArray(2).numElements.toLong).sum)
+          rs.map(valuesOf).sum, whole = !rs.exists(_.isNullAt(0)))
       }.toMap
     }
 

@@ -988,12 +988,30 @@ object IngestIndex {
       case Some(k0) =>
         val k = s"$kind:$k0"
         Option(tombCache.get(k)).map(_.asInstanceOf[T]).getOrElse {
-          if (tombCache.size > 256) tombCache.clear()
           val v = derive
-          tombCache.put(k, v)
+          tombPut(k, v)
           v
         }
     }
+
+  private def tombPut(k: String, v: AnyRef): Unit = {
+    if (tombCache.size > 256) tombCache.clear()
+    tombCache.put(k, v); ()
+  }
+
+  /** What [[tombCached]] holds for the tombstone set `dirs` (+ `extra`),
+    * without deriving it. */
+  private[streaming] def tombHeld[T <: AnyRef](sp: SparkSession,
+      dirs: Seq[String], kind: String, extra: String): Option[T] =
+    tombKey(sp, dirs, extra)
+      .flatMap(k => Option(tombCache.get(s"$kind:$k")).map(_.asInstanceOf[T]))
+
+  /** Hold `v` as what [[tombCached]] derives for the tombstone set `dirs`
+    * (+ `extra`): a writer that knows the new set's content puts it in
+    * place, so the next reader derives nothing. */
+  private[streaming] def tombHold(sp: SparkSession, dirs: Seq[String],
+      kind: String, extra: String, v: AnyRef): Unit =
+    tombKey(sp, dirs, extra).foreach(k => tombPut(s"$kind:$k", v))
 
   /** Is the tombstone set `dirs` (rows `tombs`) at most
     * [[TombBroadcastMax]] rows? An early-exit limit+count, cached per
