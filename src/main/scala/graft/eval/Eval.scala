@@ -287,43 +287,6 @@ object Eval {
       (tp.toDouble / (tp + fn), tp.toDouble / (tp + fp))
     }(firstY = y => y)
 
-  /** Reliability-diagram bins (calibration curve): equal-width bins over
-    * a [0,1] probability, per-bin count, mean predicted probability, and
-    * observed positive rate. The modern companion to the score-stats /
-    * gain-chart family: a model can rank well (high AUC) and still be
-    * mis-calibrated, and calibration is what decision thresholds consume.
-    * One map-combined scan; intermediate is `bins` rows. */
-  def calibrationBins(df: DataFrame, p: Column, isPos: Column,
-                      bins: Int = 10): DataFrame = {
-    require(bins > 0, s"bins must be positive, got $bins")
-    df.select(p.as("p"), isPos.cast("int").cast("double").as("y"))
-      .groupBy(least(floor(col("p") * bins), lit(bins - 1))
-        .cast("int").as("bin"))
-      .agg(count(lit(1)).as("n"),
-        round(avg("p"), 6).as("mean_pred_r"),
-        round(avg("y"), 6).as("pos_rate_r"))
-  }
-
-  /** Expected calibration error (bin-weighted |observed − predicted|)
-    * and Brier score (mean squared probability error) in ONE scan: the
-    * per-bin partial agg carries (n, Σp, Σy, Σ(p−y)²), so both summary
-    * numbers reduce from `bins` rows — no second pass over the data. */
-  def calibrationSummary(df: DataFrame, p: Column, isPos: Column,
-                         bins: Int = 10): DataFrame = {
-    require(bins > 0, s"bins must be positive, got $bins")
-    df.select(p.as("p"), isPos.cast("int").cast("double").as("y"))
-      .groupBy(least(floor(col("p") * bins), lit(bins - 1))
-        .cast("int").as("bin"))
-      .agg(count(lit(1)).cast("double").as("n"),
-        sum("p").as("sp"), sum("y").as("sy"),
-        sum(pow(col("p") - col("y"), 2)).as("sq"))
-      .agg(
-        round(sum(abs(col("sy") / col("n") - col("sp") / col("n")) *
-          col("n")) / sum("n"), 6).as("ece_r"),
-        round(sum("sq") / sum("n"), 6).as("brier_r"),
-        sum("n").cast("long").as("n_rows"))
-  }
-
   /** ROC AUC by trapezoid over the bucket boundaries, with the (0,0)
     * origin prepended (`AreaUnderCurve.ofRoc`). NaN unless both classes
     * are present. */

@@ -39,27 +39,6 @@ object Binning {
   def equalInterval(min: Double, max: Double, k: Int): Seq[Double] =
     Double.NegativeInfinity +: (1 until k).map(i => min + (max - min) * i / k)
 
-  /** Equal-population boundaries via exact percentiles — the oracle-parity
-    * path (reference Native binning, `core/binning/NativeBinning.java`).
-    * Returns a 1-row DataFrame with an array column `bounds`.
-    *
-    * SCALE CONTRACT: `percentile_approx` accuracy bounds the
-    * QuantileSummaries memory at O(accuracy·log(ε·N)) per partial — 10⁶ is
-    * exact for ≤10⁶ distinct-rank inputs and a few MB of state beyond; do
-    * NOT raise it to Int.MaxValue on a large corpus (the sketch would grow
-    * toward the partition size). The 100 TB equal-population path is the
-    * bounded-state SPDT/Munro-Paterson Aggregator family (`graft.agg`),
-    * whose memory is fixed by construction; this exact variant is for
-    * small-to-mid data and cross-engine parity checks. */
-  def equalTotalExact(df: DataFrame, valueCol: String, k: Int): Array[Double] = {
-    val qs = (1 until k).map(i => i.toDouble / k)
-    val row = df.select(
-      percentile_approx(col(valueCol), array(qs.map(lit): _*), lit(1000000))
-        .as("bounds")).head()
-    val raw = row.getSeq[Double](0)
-    (Double.NegativeInfinity +: raw).distinct.toArray
-  }
-
   /** ANSI-safe integer weight: floor of the double, clamped to ±2^62
     * (exactly double-representable, safely inside long range) instead
     * of an ANSI CAST_OVERFLOW crash on an absurd-but-present weight —

@@ -25,9 +25,11 @@ import org.apache.spark.sql.functions._
   *
   * Rank convention: `rank = ceil(p·n)`, 1-based into the sorted
   * multiset — empirically the ONLY convention matching exact
-  * `percentile_approx` across random multisets
-  * (`tools.QuantileConvention`), and what DuckDB `quantile_disc`
-  * returns, so results are drop-in for the oracle-parity queries.
+  * `percentile_approx` across random multisets (the first case of
+  * `ExactQuantilesSpec` checks it bit for bit; the probe main that first
+  * found it, `tools.QuantileConvention`, was last carried by `b88db51`),
+  * and what DuckDB `quantile_disc` returns, so results are drop-in for
+  * the oracle-parity queries.
   * Nulls and NaNs are skipped (finite values only; the built-in ranks
   * NaN greatest but with boundary fuzz from its internal targetError —
   * see the inline note) — spec'd value-for-value against the built-in

@@ -98,13 +98,6 @@ object Normalize {
     known :+ missing
   }
 
-  /** Numeric one-hot over bins: indicator per bin incl. missing bin. */
-  def oneHotNumeric(v: Column, boundaries: Seq[Double]): Seq[Column] = {
-    val idx = Binning.binIndex(v, boundaries)
-    val nBins = boundaries.dropWhile(_.isNegInfinity).length + 2
-    (0 until nBins).map(i => when(idx === lit(i), 1).otherwise(0))
-  }
-
   /** DISCRETE_ZSCORE: z-score of the bin's lower boundary
     * (reference `Normalizer.java:260`). */
   def discreteZScore(v: Column, boundaries: Seq[Double], mean: Double,

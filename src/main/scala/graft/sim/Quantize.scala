@@ -115,17 +115,6 @@ object Quantize {
                embCol: String = "embedding"): DataFrame =
     emb.select(col(idCol), binarizeExpr(col(embCol), dims).as("code"))
 
-  /** Hamming distance between two packed code arrays:
-    * Σ_w bit_count(a_w ⊕ b_w). The word count is static, so the sum is
-    * UNROLLED into plain column arithmetic — a `zip_with`+`aggregate`
-    * lambda pair here runs interpreted and allocates an array per
-    * comparison, which measured 35× slower than codegen on the n² pair
-    * stream (58 s vs 1.7 s at 15k vectors). */
-  def hammingExpr(a: Column, b: Column, words: Int): Column =
-    (0 until words).map(w =>
-      bit_count(element_at(a, w + 1).bitwiseXOR(element_at(b, w + 1)))
-        .cast("long")).reduce(_ + _)
-
   /** Exact top-k neighbors under the binary-code Hamming metric:
     * (vec_id, rank, nb_id, dist), ties broken by nb_id ascending —
     * fully deterministic, so the WHOLE ANN result is value-checkable

@@ -30,15 +30,6 @@ object Delimited {
     nullifyMissing(raw, missingValues)
   }
 
-  /** First-line header sniffing (CSV-with-header). */
-  def readWithHeaderLine(spark: SparkSession, path: String,
-                         delimiter: String,
-                         missingValues: Set[String] = Set("", "?")): DataFrame =
-    nullifyMissing(
-      spark.read.option("delimiter", delimiter).option("header", "true")
-        .option("inferSchema", "false").csv(path),
-      missingValues)
-
   /** Missing sentinels → null, on every column (done at scan so the
     * missing-last-bin convention holds downstream without re-checks). */
   def nullifyMissing(df: DataFrame, missing: Set[String]): DataFrame =

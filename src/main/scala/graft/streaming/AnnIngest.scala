@@ -1430,7 +1430,7 @@ object AnnIngest {
     new java.util.LinkedHashMap[String, Map[String, HeldDir]](16, 0.75f, true)
 
   /** (dirs held, vector values held) for `indexDir` — the held path's
-    * gauge, beside [[IngestIndex.driverCacheSizes]]. Reading it leaves
+    * gauge, beside [[IngestIndex.bloomCacheSize]]. Reading it leaves
     * the eviction order as it was. */
   private[graft] def heldSizes(sp: SparkSession, indexDir: String)
       : (Int, Long) = {

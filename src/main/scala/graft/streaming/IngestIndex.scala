@@ -1,8 +1,9 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Physical layout of the streaming ingest-gate's dedup index — the
@@ -46,6 +47,12 @@ import org.apache.spark.util.sketch.BloomFilter
   *     (`PartitionFilters` in the scan, spec-asserted), instead of the
   *     whole corpus index.
   *
+  * Every read of an index dir goes through one reader per dir shape —
+  * delta, run, source-scoped delta, tombstone — each under that shape's
+  * pinned at-rest schema, as [[AnnIngest]] reads its own dirs: no read
+  * launches a schema-inference job, and a column an older dir lacks
+  * (a tombstone's `tb_bound`) reads NULL instead of changing the plan.
+  *
   * Bloom sizing: delta sidecars share a fixed [[BloomItems]] geometry
   * so they OR-merge into one probe filter; each run's sidecar is sized
   * to its true row count at write (runs of different sizes probe
@@ -84,10 +91,11 @@ object IngestIndex {
     "_w(\\d+)$".r.findFirstMatchIn(runName).map(_.group(1).toInt)
       .getOrElse(HashPrefixLen)
 
-  /** `hp` partition value for a key at `width` hex chars: a letter
-    * prefix keeps an all-digit prefix ("07") from being type-inferred
-    * back as an INT partition column, which would silently break the
-    * string `isin` pruning filter. */
+  /** `hp` partition value for a key at `width` hex chars. The letter
+    * prefix is part of the on-disk layout: it once kept an all-digit
+    * prefix ("07") from being type-inferred back as an INT partition
+    * column; every read now pins `hp` as a string ([[readRun]]), and the
+    * prefix stays so existing runs keep their partition values. */
   private[streaming] def hpOf(key: Column,
       width: Int = HashPrefixLen): Column =
     concat(lit("x"), substring(key, 1, width))
@@ -615,12 +623,68 @@ object IngestIndex {
     bloomCache.remove(p.toString); ()
   }
 
-  /** Driver-resident cache sizes, for the soak harnesses' leak gauges
-    * (tools.IngestSoak records them per compaction): Bloom sidecars
-    * must track the live run/delta set (log n by size-tiering + hard
-    * cap), tombFastOk the live tombstone dir-sets. */
-  private[graft] def driverCacheSizes: (Int, Int) =
-    (bloomCache.size, tombFastOk.size)
+  /** Driver-resident Bloom sidecars, the soak harnesses' leak gauge
+    * (tools.IngestSoak records it per compaction): it must track the
+    * live run/delta set (log n by size-tiering + hard cap). */
+  private[graft] def bloomCacheSize: Int = bloomCache.size
+
+  // ---- readers ------------------------------------------------------------
+  //
+  // At-rest schemas: a delta holds `(key)`, a run `(key, hp)` with `hp`
+  // its partition column, a tombstone `(key, tb_bound)`.
+
+  private def keySchema(keyName: String): StructType =
+    StructType(Seq(StructField(keyName, StringType)))
+
+  /** Zero rows of `schema`: a read of no dirs. */
+  private def noRows(sp: SparkSession, schema: StructType): DataFrame =
+    sp.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
+  /** Delta dirs as one scan relation of `keyName`; `scoped` adds each
+    * row's source id as `src_id`. Delta dirs are NAMED `batch=<id>`, so
+    * with their parent as basePath the source id reads back as the
+    * partition column `batch` — one scan however many dirs are live
+    * (per-dir reads made sustained takedown pressure cost ~1.6x and GROW
+    * with the live-dir count; IngestSoak retractEvery A/B). */
+  private def readDeltas(sp: SparkSession, dirs: Seq[String],
+      keyName: String, scoped: Boolean): DataFrame = {
+    val schema =
+      if (scoped) keySchema(keyName).add("batch", LongType)
+      else keySchema(keyName)
+    val rows =
+      if (dirs.isEmpty) noRows(sp, schema)
+      else if (!scoped) sp.read.schema(schema).parquet(dirs: _*)
+      else {
+        // the basePath trick REQUIRES every delta dir to be named
+        // `batch=<id>` — guaranteed today because deltaDirs lists only
+        // batch=* dirs; if delta naming ever changes, fail here rather
+        // than silently reading a wrong src_id scope
+        require(dirs.forall(nameOf(_).startsWith("batch=")),
+          s"delta dirs must be batch=<id>-named for the partition-" +
+            s"column src_id recovery: ${dirs.mkString(", ")}")
+        val parent = dirs.head.substring(0, dirs.head.lastIndexOf('/'))
+        sp.read.schema(schema).option("basePath", parent).parquet(dirs: _*)
+      }
+    if (scoped) rows.select(col(keyName), col("batch").as("src_id"))
+    else rows
+  }
+
+  /** One run dir as `keyName` rows, only the `hp` partitions whose
+    * prefix is in `hps` when given; `scoped` adds the run's source id
+    * as `src_id`. Suspect prefixes are collected at the MAX width and
+    * truncated to the run's own width (self-described by its name), so
+    * the `isin` values match its coarser partition values. */
+  private def readRun(sp: SparkSession, dir: String,
+      keyName: String, scoped: Boolean,
+      hps: Option[Seq[String]] = None): DataFrame = {
+    val full = sp.read.schema(keySchema(keyName).add("hp", StringType))
+      .option("basePath", dir).parquet(dir)
+    val w = widthOf(nameOf(dir))
+    val rows = hps.fold(full)(ps =>
+      full.filter(col("hp").isin(ps.map(_.take(1 + w)).distinct: _*)))
+    if (scoped) rows.select(col(keyName), lit(srcIdOf(dir)).as("src_id"))
+    else rows.select(col(keyName))
+  }
 
   /** Write one batch's delta of `kind` (distinct single-column `key`
     * rows) plus its Bloom sidecar, both in overwrite mode so a
@@ -641,7 +705,7 @@ object IngestIndex {
     val dir = s"$indexDir/$kind/batch=$batchId"
     keys.write.mode("overwrite").parquet(dir)
     val keyCol = keys.columns.head
-    val bf = sp.read.parquet(dir).stat
+    val bf = readDeltas(sp, Seq(dir), keyCol, scoped = false).stat
       .bloomFilter(keyCol, BloomItems, BloomFpp)
     writeBloom(fsFor(sp, indexDir),
       bloomPath(indexDir, kind, s"batch=$batchId"), bf)
@@ -687,76 +751,16 @@ object IngestIndex {
   }
 
   /** Live retraction tombstones of one kind, normalized to
-    * (`keyName`, tb_bound).
-    *
-    * Fast path: production dirs all carry the key under `keyName`, so
-    * ONE mergeSchema multi-path read covers every live dir (under
-    * sustained takedown pressure the per-dir loop put one scan relation
-    * per live dir into EVERY probe plan — part of the measured
-    * wave-regime tax). mergeSchema reconciles legacy dirs missing
-    * `tb_bound` (their rows read null → MaxValue = "exclude from every
-    * source", the pre-scoping behavior). A null key in the fast read
-    * means some dir holds its key under a DIFFERENT (legacy) name —
-    * silently keeping the null row would stop that tombstone from
-    * excluding anything, so such a set is served by the per-dir loop
-    * (which renames a single-column legacy dir to `keyName`) instead.
-    * The null-key validation is one small job, cached per live dir-set
-    * (tombstone dirs are immutable; sweeps change the SET and thus the
-    * cache key), so steady-state probe-plan builds stay lazy. */
+    * (`keyName`, tb_bound): ONE multi-path read of every live dir. A dir
+    * written before retractions were source-scoped holds no `tb_bound`;
+    * its rows read NULL → MaxValue = "exclude from every source", the
+    * pre-scoping behavior. */
   private[streaming] def readTombs(sp: SparkSession, dirs: Seq[String],
-      keyName: String): DataFrame = {
-    val fast = sp.read.option("mergeSchema", "true").parquet(dirs: _*)
-    def slow = dirs.map { d =>
-      val df = sp.read.parquet(d)
-      val nonBound = df.columns.filterNot(_ == "tb_bound")
-      // select the key BY NAME when present; a single-column legacy dir
-      // (written under the caller's own key name) stays readable, but a
-      // dir with extra columns and no `keyName` fails loudly instead of
-      // silently treating an arbitrary column as the retraction key
-      val keyCol =
-        if (nonBound.contains(keyName)) keyName
-        else if (nonBound.length == 1) nonBound.head
-        else throw new IllegalStateException(
-          s"tombstone dir $d has no '$keyName' column and an ambiguous " +
-            s"schema [${df.columns.mkString(", ")}]")
-      val bound =
-        if (df.columns.contains("tb_bound")) col("tb_bound").cast("long")
-        else lit(Long.MaxValue)
-      df.select(col(keyCol).as(keyName), bound.as("tb_bound"))
-    }.reduce(_ unionByName _)
-    if (!fast.columns.contains(keyName)) slow
-    else {
-      val ck = (keyName +: dirs.sorted).mkString(DirSetSep.toString)
-      val fastOk = Option(tombFastOk.get(ck)).map(_.booleanValue)
-        .getOrElse {
-          val v = fast.filter(col(keyName).isNull).isEmpty
-          if (tombFastOk.size > 256) tombFastOk.clear()
-          tombFastOk.put(ck, java.lang.Boolean.valueOf(v))
-          v
-        }
-      if (fastOk) {
-        val bound =
-          if (fast.columns.contains("tb_bound"))
-            coalesce(col("tb_bound").cast("long"), lit(Long.MaxValue))
-          else lit(Long.MaxValue)
-        fast.select(col(keyName), bound.as("tb_bound"))
-      } else slow
-    }
-  }
-
-  /** Per-dir-set verdict cache for [[readTombs]]'s fast path: true =
-    * every dir carries the key under the index's key name, the single
-    * mergeSchema scan is sound; false = mixed legacy naming, per-dir
-    * loop. Keyed by the key name and the sorted dir set joined with
-    * [[DirSetSep]]; a swept dir's entries are evicted when it is deleted
-    * ([[Cycle.deleteSwept]]), and a hard cap bounds the rest the same way
-    * as the Bloom sidecar cache. */
-  private val tombFastOk =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Separator of a [[tombFastOk]] key's dir set: a character no path
-    * holds, so eviction splits the key back into exactly its dirs. */
-  private val DirSetSep = '\u0000'
+      keyName: String): DataFrame =
+    sp.read.schema(keySchema(keyName).add("tb_bound", LongType))
+      .parquet(dirs: _*)
+      .select(col(keyName),
+        coalesce(col("tb_bound"), lit(Long.MaxValue)).as("tb_bound"))
 
   /** Live (not yet swept) tombstone dirs of `kind`. */
   private[streaming] def tombDirs(sp: SparkSession, indexDir: String,
@@ -865,58 +869,21 @@ object IngestIndex {
     * are anti-joined out — a no-op plan when none exist. */
   private[streaming] def readPruned(sp: SparkSession, pr: Prior,
       keyName: String, hps: Option[Seq[String]]): DataFrame = {
-    def prunedRun(d: String) = {
-      val full = sp.read.option("basePath", d).parquet(d)
-      // suspect prefixes are collected at the MAX width; truncate to
-      // this run's own width (self-described by its name) so the isin
-      // values match its coarser partition values
-      val w = widthOf(d.split("/").last)
-      hps.fold(full)(ps =>
-        full.filter(col("hp").isin(ps.map(_.take(1 + w)).distinct: _*)))
-    }
-    if (pr.tombs.isEmpty) {
-      // the steady no-retraction path keeps the cheapest plan: one
-      // multi-path delta scan, no per-source bookkeeping
-      (pr.runs.map(prunedRun(_).select(col(keyName))) ++ (
-        if (pr.deltas.isEmpty) None
-        else Some(sp.read.parquet(pr.deltas: _*).select(col(keyName)))))
-        .reduceOption(_ union _)
-        .getOrElse(sp.emptyDataFrame
-          .select(lit("").as(keyName)).limit(0))
-    } else {
-      // a retraction is pending: every key carries its SOURCE id so
-      // the anti-join can scope the exclusion to pre-retraction
-      // sources (a key re-ingested after the retraction must stay
-      // visible as dup-screen prior state). Delta dirs are NAMED
-      // `batch=<id>`, so ONE multi-path read with their parent as
-      // basePath recovers the source id as a partition column — the
-      // same single-scan shape as the no-tombstone path (per-dir
-      // reads here made sustained takedown pressure cost ~1.6x and
-      // GROW with the live-dir count; IngestSoak retractEvery A/B)
-      val frames =
-        pr.runs.map(d => prunedRun(d)
-          .select(col(keyName), lit(srcIdOf(d)).as("src_id"))) ++ (
-          if (pr.deltas.isEmpty) Nil
-          else {
-            // the basePath trick REQUIRES every delta dir to be named
-            // `batch=<id>` — guaranteed today because deltaDirs lists
-            // only batch=* dirs; if delta naming ever changes, fail
-            // here rather than silently reading a wrong src_id scope
-            require(pr.deltas.forall(_.split("/").last.startsWith("batch=")),
-              s"delta dirs must be batch=<id>-named for the partition-" +
-                s"column src_id recovery: ${pr.deltas.mkString(", ")}")
-            val parent = pr.deltas.head.substring(0,
-              pr.deltas.head.lastIndexOf('/'))
-            Seq(sp.read.option("basePath", parent)
-              .parquet(pr.deltas: _*)
-              .select(col(keyName), col("batch").cast("long").as("src_id")))
-          })
-      val all = frames.reduceOption(_ union _)
-        .getOrElse(sp.emptyDataFrame
-          .select(lit("").as(keyName), lit(0L).as("src_id")).limit(0))
-      antiJoinTombs(all, readTombs(sp, pr.tombs, keyName),
-        keyName, pr.tombs).drop("src_id")
-    }
+    // the steady no-retraction path keeps the cheapest plan: no
+    // per-source bookkeeping. While a retraction is pending every key
+    // carries its SOURCE id, so the anti-join can scope the exclusion to
+    // pre-retraction sources (a key re-ingested after the retraction
+    // must stay visible as dup-screen prior state)
+    val scoped = pr.tombs.nonEmpty
+    val deltas =
+      if (pr.deltas.isEmpty) Nil
+      else Seq(readDeltas(sp, pr.deltas, keyName, scoped))
+    val all = (pr.runs.map(readRun(sp, _, keyName, scoped, hps)) ++ deltas)
+      .reduceOption(_ union _)
+      .getOrElse(readDeltas(sp, Nil, keyName, scoped))
+    if (!scoped) all
+    else antiJoinTombs(all, readTombs(sp, pr.tombs, keyName),
+      keyName, pr.tombs).drop("src_id")
   }
 
   /** Row-count ceiling under which a live tombstone set is broadcast
@@ -1048,7 +1015,7 @@ object IngestIndex {
   private[streaming] def probeRows(sp: SparkSession, pr: Prior,
       keys: DataFrame, keyName: String): DataFrame = {
     if (pr.runs.isEmpty && pr.deltas.isEmpty)
-      return sp.emptyDataFrame.select(lit("").as(keyName)).limit(0)
+      return noRows(sp, keySchema(keyName))
     val hps: Option[Seq[String]] = pr.blooms match {
       case Some(bfs) =>
         val suspects = keys
@@ -1058,8 +1025,7 @@ object IngestIndex {
           .distinct().collect().map(_.getString(0)).toSeq)
       case None => None // incomplete sidecars: exact unpruned fallback
     }
-    if (hps.exists(_.isEmpty))
-      sp.emptyDataFrame.select(lit("").as(keyName)).limit(0)
+    if (hps.exists(_.isEmpty)) noRows(sp, keySchema(keyName))
     else readPruned(sp, pr, keyName, hps)
   }
 
@@ -1200,14 +1166,9 @@ object IngestIndex {
       * an undeleted dir as a brand-new LIVE tombstone and silently
       * re-removes keys legitimately re-ingested after the sweep; this
       * order leaves at worst gone dirs still named in `tswept`, which the
-      * next cycle drops as a no-op. The [[readTombs]] verdicts naming a
-      * deleted dir are evicted with it. */
+      * next cycle drops as a no-op. */
     def deleteSwept(fs: FileSystem, root: String): Unit =
-      fam.swept(m).foreach { name =>
-        val dir = fs.makeQualified(new Path(s"$root/$name"))
-        fs.delete(dir, true)
-        tombFastOk.keySet.removeIf(_.split(DirSetSep).contains(dir.toString))
-      }
+      fam.swept(m).foreach(name => fs.delete(new Path(s"$root/$name"), true))
 
     /** Is the dir `name` of this family superseded once the new manifest
       * (run set `runsNow`) is published? One-generation retention
@@ -1283,18 +1244,8 @@ object IngestIndex {
         .repartition(col("hp"))
         .write.mode("overwrite").partitionBy("hp").parquet(dir)
       if (n > 0) {
-        // explicit schema: a fully-tombstoned input writes an empty
-        // partitioned dir, and a schema-INFERRING read of that throws —
-        // which would wedge compaction permanently
-        val written = sp.read.option("basePath", dir)
-          .schema(org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(keyName,
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("hp",
-              org.apache.spark.sql.types.StringType))))
-          .parquet(dir)
-        val bf = written.stat.bloomFilter(keyName,
-          math.max(n, BloomItems), BloomFpp)
+        val bf = readRun(sp, dir, keyName, scoped = false).stat
+          .bloomFilter(keyName, math.max(n, BloomItems), BloomFpp)
         writeBloom(fsFor(sp, indexDir), bloomPath(indexDir, kind, name), bf)
       }
       Run(name, n)
@@ -1305,11 +1256,6 @@ object IngestIndex {
       case None => body()
     }
   }
-
-  private def readRun(sp: SparkSession, indexDir: String, kind: String,
-      keyName: String, r: Run): DataFrame =
-    sp.read.option("basePath", s"$indexDir/$kind/${r.name}")
-      .parquet(s"$indexDir/$kind/${r.name}").select(col(keyName))
 
   /** Per-kind wall-cost summary of one [[compact]] call — what the
     * leveled-compaction soak reports: `folded` rows came from deltas
@@ -1370,27 +1316,13 @@ object IngestIndex {
           try footerRows(sp, deltas.map(_._2))
           catch { case _: Throwable => Long.MaxValue }
         Some(writeRun(sp, indexDir, kind, keyName, nextName(),
-          clean(
-            if (tombPaths.isEmpty)
-              sp.read.parquet(deltas.map(_._2): _*).select(keyName)
-            else {
-              // same single multi-path scan as readPruned's scoped
-              // branch: `batch=<id>` dir names ARE the source ids, so
-              // basePath recovers them as a partition column
-              val dirs = deltas.map(_._2)
-              val parent = dirs.head.substring(0,
-                dirs.head.lastIndexOf('/'))
-              sp.read.option("basePath", parent).parquet(dirs: _*)
-                .select(col(keyName), col("batch").cast("long").as("src_id"))
-            }), rowsHint = Some(deltaRows)))
+          clean(readDeltas(sp, deltas.map(_._2), keyName,
+            scoped = tombPaths.nonEmpty)), rowsHint = Some(deltaRows)))
       }
       val (runs, mergedRows) = mergeSameClass(
           m.runs.getOrElse(kind, Nil) ++ fold.filter(_.rows > 0)) { (a, b) =>
-        def side(r: Run) = {
-          val df = readRun(sp, indexDir, kind, keyName, r)
-          if (tombPaths.isEmpty) df
-          else df.withColumn("src_id", lit(srcIdOf(r.name)))
-        }
+        def side(r: Run) = readRun(sp, s"$indexDir/$kind/${r.name}",
+          keyName, scoped = tombPaths.nonEmpty)
         writeRun(sp, indexDir, kind, keyName, nextName(),
           clean(side(a).union(side(b))), rowsHint = Some(a.rows + b.rows))
       }

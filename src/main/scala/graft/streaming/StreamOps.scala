@@ -463,8 +463,9 @@ object StreamOps {
   /** Streaming ingestion dedup gate — the continuous-crawl admission
     * step: each micro-batch of documents is screened against a PERSISTED
     * index of everything previously seen (exact md5 hash set + MinHash
-    * band index, the [[graft.text.TextOps.incrementalDedupAgainstIndex]]
-    * probe), per-doc decisions (dup_exact, dup_near, kept) are appended
+    * band index: the two probes of [[graft.text.TextOps.incrementalDedup]],
+    * run against index keys instead of a prior corpus), per-doc
+    * decisions (dup_exact, dup_near, kept) are appended
     * to `outDir`, and the batch's OWN hashes/bands are appended to the
     * index before the next batch runs (foreachBatch is synchronous, so
     * batch N+1 always sees batch N's rows).
@@ -630,12 +631,15 @@ object StreamOps {
       IngestIndex.gateFamily(k).requireNewTag(m, tag))
     val b = docs.persist()
     try {
+      // a null-text doc has no key (md5(NULL) = NULL), as in the deltas:
+      // a NULL tombstone key could never match an index row
       IngestIndex.retractKeys(sp, indexDir, "hashes",
-        b.select(md5(col("text").cast("binary")).as("h")).distinct(), tag, m)
+        b.select(md5(col("text").cast("binary")).as("h"))
+          .filter(col("h").isNotNull).distinct(), tag, m)
       IngestIndex.retractKeys(sp, indexDir, "bands",
         graft.text.TextOps.minhashBands(graft.text.TextOps.minhash(b))
           .select(concat(col("band_hash"), lit(":"), col("band_id"))
-            .as("bk")).distinct(), tag, m)
+            .as("bk")).filter(col("bk").isNotNull).distinct(), tag, m)
     } finally { b.unpersist(false); () }
   }
 

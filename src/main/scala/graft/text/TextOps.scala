@@ -267,33 +267,12 @@ object TextOps {
     * reuse every batch), not a rescan; both joins are key-co-partitioned
     * id/hash joins — batch-linear work, no pair explosion, no corpus
     * text on the wire. */
-  def incrementalDedup(newDocs: DataFrame, prior: DataFrame): DataFrame =
-    incrementalDedupAgainstIndex(newDocs,
-      prior.select(md5(col("text").cast("binary")).as("h")),
-      minhashBands(minhash(prior)))
-
-  /** The index-probing core of [[incrementalDedup]]: screen `newDocs`
-    * against an ALREADY-BUILT index — `priorHashes` with an `h` md5
-    * column, `priorBands` with (band_id, band_hash) — instead of a prior
-    * corpus that would be re-hashed per batch. This is the shape the
-    * persisted-index deployment and the streaming ingestion gate
-    * ([[graft.streaming.StreamOps.dedupIngestStream]]) call: index rows
-    * are tiny (32-hex strings), both probes are key-equi joins. */
-  def incrementalDedupAgainstIndex(newDocs: DataFrame,
-      priorHashes: DataFrame, priorBands: DataFrame): DataFrame =
-    incrementalDedupWithBands(newDocs, minhashBands(minhash(newDocs)),
-      priorHashes, priorBands)
-
-  /** [[incrementalDedupAgainstIndex]] with the new batch's band rows
-    * supplied by the caller — lets a caller that ALSO appends the
-    * batch's bands to the index (the streaming gate) compute the
-    * MinHash pass once instead of twice. */
-  def incrementalDedupWithBands(newDocs: DataFrame, newBands: DataFrame,
-      priorHashes: DataFrame, priorBands: DataFrame): DataFrame = {
-    val ph = priorHashes.select(col("h")).distinct()
+  def incrementalDedup(newDocs: DataFrame, prior: DataFrame): DataFrame = {
+    val ph = prior.select(md5(col("text").cast("binary")).as("h")).distinct()
       .withColumn("pe", lit(true))
-    val pb = priorBands.select(col("band_id"), col("band_hash")).distinct()
-    val nearIds = newBands
+    val pb = minhashBands(minhash(prior))
+      .select(col("band_id"), col("band_hash")).distinct()
+    val nearIds = minhashBands(minhash(newDocs))
       .join(pb, Seq("band_id", "band_hash"))
       .select("doc_id").distinct()
       .withColumn("dup_near", lit(true))
@@ -375,7 +354,19 @@ object TextOps {
   def dedupClustersIterative(pairs: DataFrame,
                              maxRounds: Int = 40,
                              checkpointDir: Option[String] = None)
-      : DataFrame = {
+      : DataFrame =
+    dedupClustersIterativeWith(pairs, CcLocalEdges, maxRounds, checkpointDir)
+
+  /** Edge count up to which [[dedupClustersIterative]] labels components
+    * on the driver: 1M edges ≈ 16 MB collected, broadcast-relation
+    * territory. */
+  private val CcLocalEdges = 1000000
+
+  /** [[dedupClustersIterative]] with the small-graph cut's edge cap
+    * `localEdges`; 0 always runs the distributed loop. */
+  private[graft] def dedupClustersIterativeWith(pairs: DataFrame,
+      localEdges: Int, maxRounds: Int = 40,
+      checkpointDir: Option[String] = None): DataFrame = {
     // explicit param wins; otherwise the session-level
     // spark.sql.graft.checkpointDir conf decides (reliable vs local)
     def ckpt(df: DataFrame): DataFrame =
@@ -388,25 +379,21 @@ object TextOps {
     // usually tiny relative to the corpus (edges = confirmed near-dup
     // pairs), and each distributed round costs 2 checkpoints + a
     // convergence count — a serialized job stream that dominates the
-    // drill-family wall. Up to `spark.sql.graft.ccLocalEdges` edges
-    // (default 1M ≈ 16 MB collected — broadcast-relation territory)
-    // the component minimum is computed exactly by a driver union-find
-    // instead: same labels, any diameter, one bounded collect of the
-    // raw edges and no checkpoint write. 0 disables (the specs pin the
-    // distributed loop through it); long-id graphs only — any other id
-    // type falls through to the loop.
-    val localCap = math.min(Int.MaxValue - 1L,
-      sp.conf.get("spark.sql.graft.ccLocalEdges", "1000000").toLong).toInt
+    // drill-family wall. Up to `localEdges` edges the component minimum
+    // is computed exactly by a driver union-find instead: same labels,
+    // any diameter, one bounded collect of the raw edges and no
+    // checkpoint write. Long-id graphs only — any other id type falls
+    // through to the loop.
     val longIds = raw.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
     // at most cap+1 rows come back, and more than cap decides "big":
     // a big graph then evaluates `pairs` once more for its checkpoint,
     // a cost the round loop that follows dwarfs
     val local =
-      if (longIds && localCap > 0) {
+      if (longIds && localEdges > 0) {
         import sp.implicits._
-        Some(raw.as[(Long, Long)].limit(localCap + 1).collect())
-          .filter(_.length <= localCap)
+        Some(raw.as[(Long, Long)].limit(localEdges + 1).collect())
+          .filter(_.length <= localEdges)
       } else None
     if (local.isDefined) {
       val es = local.get

@@ -79,11 +79,10 @@ object CkptDrill {
       })
       killer.setDaemon(true)
       killer.start()
+      val t0 = System.nanoTime()
       // this drill exists to exercise the DISTRIBUTED loop across
       // executor loss — disable the small-graph driver cut
-      spark.conf.set("spark.sql.graft.ccLocalEdges", "0")
-      val t0 = System.nanoTime()
-      val res = graft.text.TextOps.dedupClustersIterative(pairs)
+      val res = graft.text.TextOps.dedupClustersIterativeWith(pairs, 0)
       val expected = (floor(col("doc_id") / 1000000L) * 1000000L)
         .cast("long")
       val n = res.count()
@@ -107,7 +106,7 @@ object CkptDrill {
       killer2.setDaemon(true)
       killer2.start()
       try {
-        val r2 = graft.text.TextOps.dedupClustersIterative(pairs)
+        val r2 = graft.text.TextOps.dedupClustersIterativeWith(pairs, 0)
         val bad2 = r2.filter(col("label") =!= expected).count()
         println(s"[ckptdrill] localCheckpoint survived the kill " +
           s"(bad=$bad2) — blocks were consumed/replicated in time")

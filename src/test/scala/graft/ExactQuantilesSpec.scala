@@ -4,8 +4,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ExactQuantiles must equal exact percentile_approx VALUE-FOR-VALUE
-  * (rank = ceil(p·n), the convention tools.QuantileConvention proved),
-  * under duplicates, skew, nulls/NaNs, and any partitioning. */
+  * (rank = ceil(p·n)), under duplicates, skew, nulls/NaNs, and any
+  * partitioning. The first case is the evidence for that rank
+  * convention: random multisets with duplicates and nulls, across
+  * repartitionings (the one-off probe main `tools.QuantileConvention`
+  * that first found it was last carried by `b88db51`). */
 class ExactQuantilesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 

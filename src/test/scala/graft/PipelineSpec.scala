@@ -101,32 +101,16 @@ class PipelineSpec extends AnyFunSuite {
   test("autoColumns types numeric- and boolean-typed candidates from the " +
     "schema with no job, and gives a mixed list the kinds of " +
     "AutoType.profile") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val s0 = spark
     import s0.implicits._
     val df = (0 until 100).map { i =>
       (if (i % 5 < 2) None else Some(i * 0.25), i % 7, i % 3 == 0,
         s"${i % 4}", if (i % 2 == 0) "a" else s"b$i")
     }.toDF("d", "n", "b", "s_num", "s_txt")
-    val sc = spark.sparkContext
-    val group = s"autotype_${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-            j.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "autotype jobs")
-    val typed = try Pipeline.autoColumns(df, Seq("d", "n", "b"))
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.TestBus.drain(sc)
-      sc.removeSparkListener(l)
-    }
+    val (typed, jobs) = org.apache.spark.TestBus.jobsOf(spark.sparkContext)(
+      Pipeline.autoColumns(df, Seq("d", "n", "b")))
     assert(typed === ((Seq("d", "n", "b"), Seq.empty[String])))
-    assert(jobs.get === 0)
+    assert(jobs.isEmpty)
     val mixed = Seq("s_txt", "d", "s_num", "b", "n")
     val kinds = graft.ops.AutoType.profile(df, mixed)
       .select("col_name", "col_kind").collect()

@@ -162,11 +162,12 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  /** Run `body` with the CC small-graph cut DISABLED so the test
+  /** Iterative CC with the small-graph cut DISABLED, so the test
     * exercises the DISTRIBUTED hook+jump loop (the cut would otherwise
     * take every test-sized graph down the driver union-find path). */
-  private def withDistributedCc[T](body: => T): T =
-    TestSpark.withConf("spark.sql.graft.ccLocalEdges", "0")(body)
+  private def distributedCc(pairs: org.apache.spark.sql.DataFrame,
+      maxRounds: Int = 40) =
+    graft.text.TextOps.dedupClustersIterativeWith(pairs, 0, maxRounds)
 
   test("dedupClustersIterative: exact on a 10-node chain (diameter 9)") {
     val spark = TestSpark.spark
@@ -175,10 +176,7 @@ class PropertySpec extends AnyFunSuite {
     // cannot close (3 rounds only reach distance 3); the iterative variant
     // must converge to one cluster labeled by the minimum id
     val chain = (1L until 10L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val got = withDistributedCc {
-      graft.text.TextOps.dedupClustersIterative(chain)
-        .as[(Long, Long)].collect().toMap
-    }
+    val got = distributedCc(chain).as[(Long, Long)].collect().toMap
     assert(got.keySet === (1L to 10L).toSet)
     assert(got.values.toSet === Set(1L), s"chain split into $got")
     // and document WHY the iterative variant exists: the bounded version
@@ -196,11 +194,8 @@ class PropertySpec extends AnyFunSuite {
     // diameter 119 >> maxRounds: plain neighbor-min propagation would
     // silently return split clusters; hook+jump closes it in O(log d)
     val chain = (1L until 120L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val got = withDistributedCc {
-      graft.text.TextOps
-        .dedupClustersIterative(chain, maxRounds = 15)
-        .as[(Long, Long)].collect().toMap
-    }
+    val got = distributedCc(chain, maxRounds = 15)
+      .as[(Long, Long)].collect().toMap
     assert(got.keySet === (1L to 120L).toSet)
     assert(got.values.toSet === Set(1L), s"chain split: ${got.values.toSet}")
   }
@@ -214,11 +209,8 @@ class PropertySpec extends AnyFunSuite {
       val edges = raw.collect { case (a, b) if a != b =>
         (math.min(a, b), math.max(a, b)) }.distinct
       if (edges.nonEmpty) {
-        val got = withDistributedCc {
-          graft.text.TextOps
-            .dedupClustersIterative(edges.toDF("doc_a", "doc_b"))
-            .as[(Long, Long)].collect().toMap
-        }
+        val got = distributedCc(edges.toDF("doc_a", "doc_b"))
+          .as[(Long, Long)].collect().toMap
         // and the SMALL-GRAPH CUT (driver union-find, default conf)
         // returns the identical labeling
         val gotLocal = graft.text.TextOps

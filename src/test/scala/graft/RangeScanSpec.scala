@@ -106,27 +106,8 @@ class RangeScanSpec extends AnyFunSuite {
     assert(Eval.prAuc(allNeg).columns.toSeq === Seq("pr_auc"))
   }
 
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"range_scan_${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-            j.properties.getProperty("spark.jobGroup.id") == group)
-          seen.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "range scan job budget")
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.TestBus.drain(sc)
-      sc.removeSparkListener(l)
-    }
-    seen.get
-  }
+  private def jobsOf(body: => Unit): Int =
+    org.apache.spark.TestBus.jobsOf(spark.sparkContext)(body)._2.size
 
   test("job budget: confusionSweep + rocAuc + prAuc run at most 4 jobs") {
     val d = spark.range(0, 3000, 1, 4).select(col("id"),

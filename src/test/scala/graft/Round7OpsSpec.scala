@@ -43,9 +43,9 @@ class Round7OpsSpec extends AnyFunSuite {
     // iterative CC with NO explicit dir — the session conf decides;
     // small-graph cut disabled so the ROUND materializations (the
     // thing this test asserts) actually run
-    try TestSpark.withConf("spark.sql.graft.ccLocalEdges", "0") {
+    try {
       val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("doc_a", "doc_b")
-      val got = graft.text.TextOps.dedupClustersIterative(pairs)
+      val got = graft.text.TextOps.dedupClustersIterativeWith(pairs, 0)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       assert(got === Seq((1L, 1L), (2L, 1L), (3L, 1L), (7L, 7L), (8L, 7L)))
       assert(fileCount() > 0,
@@ -104,11 +104,9 @@ class Round7OpsSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     // distributed loop pinned (the small-graph cut would skip the
     // per-round reliable materializations this test asserts)
-    val got = TestSpark.withConf("spark.sql.graft.ccLocalEdges", "0") {
-      graft.text.TextOps
-        .dedupClustersIterative(pairs, checkpointDir = Some(dir))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
+    val got = graft.text.TextOps
+      .dedupClustersIterativeWith(pairs, 0, checkpointDir = Some(dir))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expected = ((0L to 11L).map(_ -> 0L) ++
       Seq(100L -> 100L, 101L -> 100L)).toMap
     assert(got === expected)

@@ -1075,30 +1075,10 @@ class AnnIngestSpec extends AnyFunSuite {
   }
 
   /** Run `body` and return (jobs it launched, the (name, details) of
-    * every stage of those jobs). Jobs are matched by a job group set on
-    * this thread, so a stray job from elsewhere never counts. */
+    * every stage of those jobs). */
   private def jobsOf(body: => Unit): (Int, Seq[(String, String)]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"ann_budget_${java.util.UUID.randomUUID()}"
-    val seen =
-      new java.util.concurrent.ConcurrentLinkedQueue[Seq[(String, String)]]()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-            j.properties.getProperty("spark.jobGroup.id") == group)
-          seen.add(j.stageInfos.map(si => (si.name, si.details)))
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "ANN job budget")
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.TestBus.drain(sc)
-      sc.removeSparkListener(l)
-    }
-    import scala.jdk.CollectionConverters._
-    (seen.size, seen.asScala.toSeq.flatten)
+    val jobs = org.apache.spark.TestBus.jobsOf(spark.sparkContext)(body)._2
+    (jobs.size, jobs.flatten.map(si => (si.name, si.details)))
   }
 
   test("job budget: over 2 runs, 2 deltas and a takedown tombstone, " +

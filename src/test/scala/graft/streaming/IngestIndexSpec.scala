@@ -997,32 +997,87 @@ class IngestIndexSpec extends AnyFunSuite {
     assert(IngestIndex.tombKey(spark, Seq(live, gone), "") === None)
   }
 
-  test("readTombs selects the key BY NAME: a tombstone dir with extra " +
-    "columns reads the named key, and one missing it fails loudly " +
-    "instead of positionally guessing a column") {
+  test("readTombs reads every live dir in one pinned-schema read: the " +
+    "key is selected BY NAME even behind a decoy column, and a dir " +
+    "written before tb_bound existed reads as unscoped (MaxValue)") {
     import spark.implicits._
-    val root = s"/tmp/graft_tombs_spec_${java.util.UUID.randomUUID()}"
-    // modern shape: (h, tb_bound) — read by name even with a decoy
-    // column ordered FIRST
-    Seq(("x1", 7L, 3L), ("x2", 9L, 3L)).toDF("decoy", "h", "tb_bound")
-      .select(col("decoy"), col("h"), col("tb_bound"))
+    val root = java.nio.file.Files.createTempDirectory("graft_tombs").toString
+    // (h, tb_bound) behind a decoy column ordered FIRST
+    Seq(("x1", "k7", 3L), ("x2", "k9", 3L)).toDF("decoy", "h", "tb_bound")
       .write.parquet(s"$root/t_named")
-    val named = IngestIndex.readTombs(spark, Seq(s"$root/t_named"), "h")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(named === Seq((7L, 3L), (9L, 3L)))
-    // legacy shape: single key column under the caller's own name,
-    // no bound — still readable, bound defaults to MaxValue
-    Seq(4L, 5L).toDF("legacy_key").write.parquet(s"$root/t_legacy")
-    val legacy = IngestIndex.readTombs(spark, Seq(s"$root/t_legacy"), "h")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(legacy === Seq((4L, Long.MaxValue), (5L, Long.MaxValue)))
-    // ambiguous: extra columns and NO 'h' — must throw, not guess
-    Seq(("a", 1L)).toDF("not_key", "also_not")
-      .write.parquet(s"$root/t_ambig")
-    val ex = intercept[IllegalStateException] {
-      IngestIndex.readTombs(spark, Seq(s"$root/t_ambig"), "h").collect()
+    // no tb_bound: the shape before retractions were source-scoped
+    Seq("k4", "k5").toDF("h").write.parquet(s"$root/t_unbound")
+    def read(dirs: String*) = IngestIndex.readTombs(spark,
+      dirs.map(d => s"$root/$d"), "h")
+      .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
+    assert(read("t_named") === Seq(("k7", 3L), ("k9", 3L)))
+    assert(read("t_unbound") === Seq(("k4", Long.MaxValue),
+      ("k5", Long.MaxValue)))
+    assert(read("t_named", "t_unbound") === Seq(("k4", Long.MaxValue),
+      ("k5", Long.MaxValue), ("k7", 3L), ("k9", 3L)))
+  }
+
+  test("retracting a null-text doc writes no NULL tombstone key and " +
+    "leaves the next batch's decisions as without it") {
+    val seed = "retracted seed document for the null text case"
+    def run(retract: (Long, String)*) = {
+      val t = java.nio.file.Files.createTempDirectory("graft_ii_nt").toString
+      val idx = s"$t/idx"; val out = s"$t/out"
+      StreamOps.ingestBatch(docs(1L -> seed,
+        2L -> "a filler document that is never retracted"), 0L, idx, out)
+      StreamOps.retractDocs(docs(retract: _*), idx, "nt")
+      StreamOps.ingestBatch(docs(3L -> seed,
+        4L -> "a filler document that is never retracted"), 1L, idx, out)
+      (idx, decisions(out))
     }
-    assert(ex.getMessage.contains("no 'h' column"))
+    val (idx, withNull) = run(9L -> seed, 10L -> (null: String))
+    for ((kind, key) <- Seq("hashes" -> "h", "bands" -> "bk")) {
+      val t = spark.read.parquet(s"$idx/tombs_$kind/t_nt")
+      assert(t.count() > 0 && t.filter(col(key).isNull).isEmpty,
+        s"$kind tombstone holds a NULL key")
+    }
+    val (_, without) = run(9L -> seed)
+    assert(withNull === without)
+    assert(withNull.contains((3L, false, false, true)) &&
+      withNull.contains((4L, true, true, false)))
+  }
+
+  test("a steady batch and a compaction read every index dir under its " +
+    "pinned schema: over two runs per kind, live deltas and a live " +
+    "retraction, no job is a schema-inference read") {
+    val t = java.nio.file.Files.createTempDirectory("graft_ii_pin").toString
+    val idx = s"$t/idx"; val out = s"$t/out"
+    val seed = "pinned schema seed document shared across batches"
+    // two compactions of different size classes leave two runs per kind
+    StreamOps.ingestBatch(docs((1L -> seed) +: (2L to 8L).map(i =>
+      i -> s"first fold unique document number $i of the pinned spec"): _*),
+      0L, idx, out)
+    IngestIndex.compact(spark, idx, 0L)
+    StreamOps.ingestBatch(docs(
+      11L -> "second fold lone document of the pinned spec"), 1L, idx, out)
+    IngestIndex.compact(spark, idx, 1L)
+    val m = IngestIndex.readManifest(spark, idx)
+    IngestIndex.Kinds.foreach(k =>
+      assert(m.runs(k).size >= 2, s"$k runs: ${m.runs(k)}"))
+    StreamOps.ingestBatch(docs(
+      21L -> "a live delta document of the pinned spec"), 2L, idx, out)
+    StreamOps.retractDocs(docs(99L -> ("first fold unique document " +
+      "number 2 of the pinned spec")), idx, "pin")
+    // the retraction's first probe sizes its tombstone set (cached per
+    // set), so the batch below is the steady shape
+    StreamOps.ingestBatch(docs(
+      31L -> "a warm-up document of the pinned spec"), 3L, idx, out)
+    val (_, jobs) = org.apache.spark.TestBus.jobsOf(spark.sparkContext) {
+      StreamOps.ingestBatch(docs(41L -> seed,
+        42L -> "a fresh document of the pinned spec"), 4L, idx, out)
+      IngestIndex.compact(spark, idx, 4L)
+    }
+    val stages = jobs.flatten.map(_.name)
+    assert(stages.nonEmpty)
+    val inference = stages.filter(_.startsWith("parquet at IngestIndex.scala"))
+    assert(inference.isEmpty, s"schema-inference jobs: $inference")
+    assert(decisions(out).contains((41L, true, true, false)) &&
+      decisions(out).contains((42L, false, false, true)))
   }
 
   /** Read and (over)write `<idx>/manifest.json` as text — writes go
@@ -1034,29 +1089,6 @@ class IngestIndexSpec extends AnyFunSuite {
     val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .create(p, true)
     try out.write(txt.getBytes("UTF-8")) finally out.close()
-  }
-
-  test("deleting a swept tombstone dir evicts the readTombs verdicts " +
-    "that named it, so the verdict cache shrinks instead of creeping " +
-    "to its cap") {
-    val t = java.nio.file.Files.createTempDirectory("graft_ii_evict").toString
-    val idx = s"$t/idx"; val out = s"$t/out"
-    val seed = "a document whose retraction verdicts must be evicted"
-    StreamOps.ingestBatch(docs(1L -> seed,
-      2L -> "unrelated filler that stays in the index"), 0L, idx, out)
-    StreamOps.retractDocs(docs(9L -> seed), idx, "evict")
-    // the probe and the applying compaction read the live tombstones
-    StreamOps.ingestBatch(docs(3L -> seed), 1L, idx, out)
-    IngestIndex.compact(spark, idx, 1L)
-    StreamOps.ingestBatch(docs(4L -> "a second filler document"), 2L,
-      idx, out)
-    IngestIndex.compact(spark, idx, 2L) // logical sweep
-    assert(IngestIndex.readManifest(spark, idx).runs("tswept_hashes")
-      .map(_.name) === Seq("t_evict"))
-    val before = IngestIndex.driverCacheSizes._2
-    IngestIndex.compact(spark, idx, 3L) // physical deletion
-    assert(IngestIndex.tombDirs(spark, idx, "hashes").isEmpty)
-    assert(IngestIndex.driverCacheSizes._2 < before)
   }
 
   test("a hand-written manifest in today's key layout compacts: the " +
