@@ -3,7 +3,7 @@ package graft.streaming
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -53,9 +53,11 @@ import graft.streaming.IngestIndex.{AnnFamily, Manifest, Run}
   * Scale shape: ingest is APPEND-ONLY — unlike the dedup gate it never
   * probes prior state, so per-batch cost is O(batch) by construction:
   * a batch that fits the held cap is collected once, assigned on the
-  * driver and written in one job; a larger one runs a narrow
-  * assignment map over broadcast centroids and one cell-partitioned
-  * write. Queries probe nProbe cells per vector: the query set is
+  * driver and written from there with no Spark job
+  * ([[IngestIndex.writeFromDriver]], as are a compaction's runs over
+  * held inputs and a small delete's tombstone); a larger one runs a
+  * narrow assignment map over broadcast centroids and one
+  * cell-partitioned write. Queries probe nProbe cells per vector: the query set is
   * small by contract, so it is collected once and its probes are
   * assigned on the driver against the in-memory quantizer. A steady
   * query launches NO Spark job: runs and deltas never change once
@@ -266,7 +268,9 @@ object AnnIngest {
     *
     * Once the quantizer exists, a batch of at most `HeldMaxValues / dim`
     * rows is collected once and assigned on the driver, and the delta is
-    * written from the driver in one job. When the index's rows are held
+    * written from the driver with no Spark job ([[writeLocal]]): over a
+    * local batch frame the ingest runs none at all. When the index's rows
+    * are held
     * for queries ([[queryTopK]]), the decoded delta is held too, so the
     * next query reads nothing back. The first batch, which trains the
     * quantizer, and a larger batch run the distributed assignment and
@@ -297,8 +301,7 @@ object AnnIngest {
           toHeld(InternalRow(graft.sim.Ivf.nearestCell(cents, e),
             r.getLong(0), e, r.getDouble(2))).copy(): InternalRow
         }
-        holdWritten(sp, indexDir, dir, writeLocal(sp, dir, rs, cents.length),
-          Nil)
+        holdWritten(sp, indexDir, dir, writeLocal(sp, dir, rs), Nil)
       case None =>
         val cents = ensureCentroids(rows, indexDir, nCells)
         // ~one file per populated cell partition. The exchange width is
@@ -335,8 +338,10 @@ object AnnIngest {
     * TOMBSTONE — `ids` (single `vec_id` column) written under
     * `tombs/t_<tag>` in overwrite mode, so re-issuing the same tag is
     * idempotent. Up to [[IngestIndex.TombBroadcastMax]] ids are collected
-    * and written in one job, and when the live set before them is held
-    * the new set is held in its place: the next query collects nothing.
+    * and written from the driver with no write job
+    * ([[IngestIndex.writeFromDriver]]), and when the live set before them
+    * is held the new set is held in its place: the next query collects
+    * nothing; a larger set is written by a distinct and one write job.
     * Readers anti-join live tombstones immediately (the
     * ids vanish from every readIndex/queryTopK result as soon as this
     * returns); the next [[compact]] APPLIES them (the rebuilt runs
@@ -351,7 +356,6 @@ object AnnIngest {
              tag: String): Unit =
       IngestIndex.withWriterLease(sp, indexDir) {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val m = IngestIndex.readManifest(sp, indexDir)
     AnnFamily.requireNewTag(m, tag)
     // the split_ namespace is reserved: split-retrain tombstones are
@@ -369,8 +373,8 @@ object AnnIngest {
       vid.distinct().withColumn("tb_bound", lit(bound))
         .write.mode("overwrite").parquet(dir)
     else {
-      // a set small enough to hold: distinct on the driver, one write
-      // task, and — when the set before it is held and this tag is new —
+      // a set small enough to hold: distinct on the driver, written from
+      // there, and — when the set before it is held and this tag is new —
       // the new live set held in its place, as a collect would build it
       val before = tombDirsWith(m, sp, indexDir)
       val prev =
@@ -380,11 +384,8 @@ object AnnIngest {
           ledgerOf(m)).flatten
       val added = got.map(r => if (r.isNullAt(0)) null
         else java.lang.Long.valueOf(r.getLong(0))).distinct
-      sp.createDataFrame(
-          sp.sparkContext.parallelize(added.toSeq.map(Row(_, bound)), 1),
-          StructType(Seq(StructField("vec_id", LongType),
-            StructField("tb_bound", LongType, nullable = false))))
-        .write.mode("overwrite").parquet(dir)
+      IngestIndex.writeFromDriver(sp, dir, takedownSchema,
+        Seq("" -> added.toSeq.map(InternalRow(_, bound))))
       prev.map(_.rows ++ added.map(Row(_, null, bound)))
         .filter(_.length <= IngestIndex.TombBroadcastMax)
         .foreach(rs => IngestIndex.tombHold(sp,
@@ -444,6 +445,10 @@ object AnnIngest {
       org.apache.spark.sql.types.IntegerType),
     org.apache.spark.sql.types.StructField("tb_bound",
       org.apache.spark.sql.types.LongType)))
+
+  /** At-rest schema of a takedown tombstone ([[delete]]). */
+  private val takedownSchema = org.apache.spark.sql.types.StructType(
+    tombSchema.fields.filter(_.name != "cell"))
 
   /** Live tombstone rows normalized to (vec_id, cell, tb_applied):
     * takedown tombstones ([[delete]]) carry no cell — cell reads NULL,
@@ -707,25 +712,28 @@ object AnnIngest {
   private val heldSchema = org.apache.spark.sql.types.StructType(
     vecSchema.fields.last +: vecSchema.fields.init)
 
-  /** Write `rows` (held layout, no null cell) as the dir `dir` in ONE job
-    * from a local frame whose slices each hold whole cells — so, like
-    * the shuffled write, one file per cell — and return the dir as a
+  /** Write `rows` (held layout, no null cell) as the dir `dir` from the
+    * driver ([[IngestIndex.writeFromDriver]]) under the session's codec —
+    * like the shuffled write, one file per cell — and return the dir as a
     * read of it decodes: under the f32 codec every element rounds to a
     * float. */
   private def writeLocal(sp: SparkSession, dir: String,
-      rows: Seq[InternalRow], nCells: Int): HeldDir = {
-    import org.apache.spark.sql.catalyst.expressions.BoundReference
-    val toVec = UnsafeProjection.create(vecSchema.fields.toSeq.map { f =>
-      BoundReference(heldSchema.fieldIndex(f.name), f.dataType, true)
-    })
-    val w = graft.ops.Spread.cellWidth(sp, math.max(nCells, 1))
-    val byCell = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-    val slices = byCell.zipWithIndex.groupBy(_._2 % w).values.toSeq
-      .map(_.flatMap(_._1._2).map(r => toVec(r).copy()))
-    writeCells(sp, dir, GraftBridge.frame(sp,
-      sp.sparkContext.parallelize(slices, math.max(slices.length, 1))
-        .flatMap(identity), vecSchema))
+      rows: Seq[InternalRow]): HeldDir = {
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
     val round = f32(sp)
+    val byCell = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+    // the at-rest row: (vec_id, e, norm), its cell the `cell=` dir
+    val atRest = org.apache.spark.sql.types.StructType(
+      vecSchema.fields.init.map(f => if (round && f.name == "e")
+        f.copy(dataType = ArrayType(FloatType)) else f))
+    IngestIndex.writeFromDriver(sp, dir, atRest, byCell.map { case (c, rs) =>
+      s"cell=$c" -> rs.map { r =>
+        InternalRow(if (r.isNullAt(1)) null else r.getLong(1),
+          if (r.isNullAt(2)) null
+          else if (round) f32Encoded(r.getArray(2)) else r.getArray(2),
+          if (r.isNullAt(3)) null else r.getDouble(3))
+      }
+    })
     val toHeld = UnsafeProjection.create(heldSchema)
     new HeldDir(srcIdOf(dir), byCell.map { case (c, rs) =>
       c -> (if (!round) rs.toArray else rs.map { r =>
@@ -735,6 +743,13 @@ object AnnIngest {
       }.toArray)
     }.toMap, rows.map(valuesOf).sum, whole = true)
   }
+
+  /** `e` as the f32 codec stores it: each element cast to a float, a
+    * null element kept. */
+  private def f32Encoded(e: ArrayData): ArrayData =
+    new GenericArrayData(Array.tabulate[Any](e.numElements()) { i =>
+      if (e.isNullAt(i)) null else e.getDouble(i).toFloat
+    })
 
   /** `e` as a read of it decodes under the f32 codec: each element cast
     * to a float and widened back, a null element kept. */
@@ -882,8 +897,8 @@ object AnnIngest {
     * A fold or merge whose input dirs are all held ([[queryTopK]]),
     * under a held tombstone set, takes its rows from the held rows,
     * keeps those the query paths' rule admits, writes the run from the
-    * driver in one job and holds it; the skew report then counts cells
-    * from the held rows. A compaction that writes no heal tombstone and
+    * driver with no Spark job and holds it; the skew report then counts
+    * cells from the held rows. A compaction that writes no heal tombstone and
     * deletes no swept one holds the unchanged tombstone set under the
     * new ledger. Otherwise — inputs not held, a tombstone set
     * above [[IngestIndex.TombBroadcastMax]] — the run is read, cleaned
@@ -1011,7 +1026,7 @@ object AnnIngest {
       // a fold or merge over held inputs is written from the held rows
       def written(inputs: Seq[String]): Run = {
         val name = nextName()
-        heldRun(sp, indexDir, name, inputs, tombs, preSlots).getOrElse(
+        heldRun(sp, indexDir, name, inputs, tombs).getOrElse(
           writeRun(sp, indexDir, name, clean(readDirs(sp, inputs)), preSlots))
       }
       val fold = if (deltaDirs.isEmpty) None else Some(written(deltaDirs))
@@ -1535,18 +1550,18 @@ object AnnIngest {
   /** The run `name` of `indexDir` from the held rows of `inputs`, when
     * each is held whole and the live tombstone set `tombs` is held: the
     * rows it admits — the rule of both query paths — written from the
-    * driver ([[writeLocal]]) and held in turn. None when the distributed
+    * driver with no Spark job ([[writeLocal]]) and held in turn; a set
+    * that admits none writes an empty run. None when the distributed
     * read and write must serve. */
   private def heldRun(sp: SparkSession, indexDir: String, name: String,
-      inputs: Seq[String], tombs: Either[DataFrame, TombSet], nCells: Int)
+      inputs: Seq[String], tombs: Either[DataFrame, TombSet])
       : Option[Run] =
     tombs.toOption.flatMap { set =>
       heldOf(sp, indexDir, inputs).filter(_.forall(_.whole)).map { hs =>
         val rows = for (h <- hs; (c, rs) <- h.byCell.toSeq;
                         r <- rs.toSeq if set.admits(r, c, h.src)) yield r
         val dir = s"${vectorsDir(indexDir)}/$name"
-        holdWritten(sp, indexDir, dir, writeLocal(sp, dir, rows, nCells),
-          inputs)
+        holdWritten(sp, indexDir, dir, writeLocal(sp, dir, rows), inputs)
         Run(name, rows.length)
       }
     }

@@ -278,6 +278,58 @@ object IngestIndex {
     fc.rename(qTmp, qDst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
+  /** Write `groups` — (sub-dir, rows) pairs, each row matching `schema`
+    * field for field — as the dir `dir`, from the driver with no Spark
+    * job: each group becomes ONE `part-*.parquet` file under
+    * `dir/<sub-dir>` (`""` is `dir` itself), written by the output writer
+    * a Spark parquet write uses (`ParquetFileFormat.prepareWrite` over the
+    * session's conf and Hadoop conf, so codec and footer metadata are a
+    * Spark write's), the files in parallel on [[graft.ops.Jobs]]. No
+    * groups writes an empty dir. For a few thousand rows the job's
+    * dispatch is the cost: 500 rows in 16 files took 220–270 ms as a job
+    * against 80–90 ms from the driver (4-vCPU host, local FS).
+    *
+    * The files go to the hidden sibling `_stage_<name>`, which then
+    * replaces `dir` by delete-and-rename. A Spark job's committer moves
+    * its files into `dir` one by one at job commit, so a reader listing
+    * `dir` meanwhile sees part of the write; a listing never sees a
+    * staged write at all, since index listings match `batch=`, `run_`
+    * and `t_` names. The stage's name is a function of `dir`'s, so the
+    * retry of a write that died before its rename clears what that
+    * attempt left and writes again: the overwrite stays idempotent. */
+  private[streaming] def writeFromDriver(sp: SparkSession, dir: String,
+      schema: StructType,
+      groups: Seq[(String, Seq[org.apache.spark.sql.catalyst.InternalRow])])
+      : Unit = {
+    import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import graft.ops.Jobs
+    val fs = fsFor(sp, dir)
+    val target = fs.makeQualified(new Path(dir))
+    val stage = new Path(target.getParent, s"_stage_${target.getName}")
+    fs.delete(stage, true)
+    fs.mkdirs(stage)
+    val job = Job.getInstance(GraftBridge.hadoopConf(sp))
+    val out = new ParquetFileFormat().prepareWrite(sp, job, Map.empty, schema)
+    val write = java.util.UUID.randomUUID.toString
+    Jobs.joinAll(groups.zipWithIndex.map { case ((sub, rows), i) =>
+      Jobs.fork(GraftBridge.withActive(sp) {
+        val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+          new TaskAttemptID("graft", 0, TaskType.MAP, i, 0))
+        val name = f"part-$i%05d-$write.c000${out.getFileExtension(ctx)}"
+        val w = out.newInstance(
+          new Path(if (sub.isEmpty) stage else new Path(stage, sub), name)
+            .toString, schema, ctx)
+        try rows.foreach(w.write) finally w.close()
+      })
+    })
+    fs.delete(target, true)
+    if (!fs.rename(stage, target))
+      throw new java.io.IOException(s"could not rename $stage to $target")
+  }
+
   // ---- writer lease ---------------------------------------------------------
 
   /** Age past which a `_writer.lease` is presumed abandoned (crashed

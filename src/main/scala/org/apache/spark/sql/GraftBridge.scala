@@ -1,21 +1,22 @@
 package org.apache.spark.sql
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.types.StructType
 
 /** Minimal bridge to `private[sql]` members: the Column ↔ Expression
   * converters — the supported way to expose a custom Catalyst Expression
-  * through the public Column API in Spark 4's split-API world — and a
-  * frame over rows already in Catalyst's own form. */
+  * through the public Column API in Spark 4's split-API world — and the
+  * session state a driver-side file write needs. */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** A frame over `rows`, which must match `schema` field for field. */
-  def frame(sp: SparkSession, rows: RDD[InternalRow],
-      schema: StructType): DataFrame =
-    sp.asInstanceOf[classic.SparkSession]
-      .internalCreateDataFrame(rows, schema)
+  /** The session's Hadoop conf with its SQL conf laid over it — the conf
+    * a Spark write job hands its output writers. */
+  def hadoopConf(sp: SparkSession): Configuration =
+    sp.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
+  /** `body` with `sp` as the thread's active session, so `SQLConf.get`
+    * reads its conf. */
+  def withActive[T](sp: SparkSession)(body: => T): T = sp.withActive(body)
 }

@@ -1149,6 +1149,10 @@ class AnnIngestSpec extends AnyFunSuite {
     consistent(vecs(0 until 70).repartition(4).sample(0.5))
     consistent(vecs(0 until 70).repartition(4).limit(20))
 
+    // a held index compacts from the driver with no job; a distributed
+    // query leaves the index unheld, so this compaction reads and writes
+    // distributed and the stage check below has stages to see
+    AnnIngest.queryTopKWith(spark, idx, vecs(0 until 5), k, 2, 0L).collect()
     val (cJobs, cStages) = jobsOf(AnnIngest.compact(spark, idx, 3L))
     assert(inferred(cStages).isEmpty, inferred(cStages).mkString("\n"))
     assert(cJobs > 0)
@@ -1780,31 +1784,37 @@ class AnnIngestSpec extends AnyFunSuite {
       Row(901L, Seq.fill[java.lang.Float](8)(null)),
       Row(902L, Seq[java.lang.Float](-0.4f, 0.2f, null, 0.9f, -0.1f, null,
         0.3f, 0.05f)))
-    val (held, dist) = (s"$t/held", s"$t/dist")
-    for ((idx, cap) <- Seq(held -> AnnIngest.HeldMaxValues, dist -> 0L)) {
-      AnnIngest.ingestBatch(vecs(0 until 40), 0L, idx, nCells = 4)
-      AnnIngest.ingestBatchWith(odd.union(vecs(40 until 50)), 1L, idx, 4, cap)
+    for (codec <- Seq("f64", "f32")) {
+      val (held, dist) = (s"$t/$codec/held", s"$t/$codec/dist")
+      graft.TestSpark.withConf(AnnIngest.VectorCodecKey, codec) {
+        for ((idx, cap) <- Seq(held -> AnnIngest.HeldMaxValues, dist -> 0L)) {
+          AnnIngest.ingestBatch(vecs(0 until 40), 0L, idx, nCells = 4)
+          AnnIngest.ingestBatchWith(odd.union(vecs(40 until 50)), 1L, idx, 4,
+            cap)
+        }
+      }
+      val rows = indexRows(held)
+      assert(rows === indexRows(dist), codec)
+      val cents = AnnIngest.readCentroids(spark, held).get
+      odd.collect().foreach { r =>
+        val e = r.getSeq[java.lang.Float](1)
+        val got = rows.find(_._1 == r.getLong(0)).get
+        assert(got._2.map(_ == null) === e.map(_ == null), s"id ${got._1}")
+        assert(got._4 === graft.sim.Ivf.probeCells(cents,
+          e.map(x => if (x == null) 0.0 else x.toDouble).toArray, 1).head)
+      }
+      val q = vecs(0 until 10).union(odd)
+      val want = distTopK(dist, q, 5, 2)
+      assert(want.exists(_._3 == 900L))
+      assert(sameBits(topK(held, q, 5, 2), want), codec)
+      assert(sameBits(distTopK(held, q, 5, 2), want), codec)
     }
-    val rows = indexRows(held)
-    assert(rows === indexRows(dist))
-    val cents = AnnIngest.readCentroids(spark, held).get
-    odd.collect().foreach { r =>
-      val e = r.getSeq[java.lang.Float](1)
-      val got = rows.find(_._1 == r.getLong(0)).get
-      assert(got._2.map(_ == null) === e.map(_ == null), s"id ${got._1}")
-      assert(got._4 === graft.sim.Ivf.probeCells(cents,
-        e.map(x => if (x == null) 0.0 else x.toDouble).toArray, 1).head)
-    }
-    val q = vecs(0 until 10).union(odd)
-    val want = distTopK(dist, q, 5, 2)
-    assert(want.exists(_._3 == 900L))
-    assert(sameBits(topK(held, q, 5, 2), want))
-    assert(sameBits(distTopK(held, q, 5, 2), want))
   }
 
-  test("writes keep a held index current: a driver-side ingest and a small " +
-    "delete each run one job, a compaction one job per run it writes, and " +
-    "the query after each launches none and returns the reference rows") {
+  test("writes keep a held index current: a driver-side ingest, a small " +
+    "delete and a compaction over held inputs run no job, the query after " +
+    "each launches none and returns the reference rows, and only a " +
+    "caller's repartition adds jobs to an ingest") {
     val s = spark
     import s.implicits._
     val t = java.nio.file.Files.createTempDirectory("graft_annwt").toString
@@ -1822,24 +1832,27 @@ class AnnIngestSpec extends AnyFunSuite {
         qStages.map(_._1).mkString(", "))
       assert(sameBits(got, referenceTopK(idx, q, 5, 2)), step)
     }
-    write(1, "ingest")(
+    // an unrepartitioned local batch: collected and written with no job
+    write(0, "ingest")(
       AnnIngest.ingestBatch(vecs(40 until 60), 1L, idx, nCells = 4))
     // the driver's write keeps one file per cell
     val cellDirs = new java.io.File(s"$idx/vectors/batch=1").listFiles
       .filter(_.getName.startsWith("cell="))
     assert(cellDirs.nonEmpty && cellDirs.forall(_.listFiles
       .count(_.getName.endsWith(".parquet")) == 1))
-    write(1, "fold")(AnnIngest.compact(spark, idx, 1L))
-    write(1, "ingest")(
-      AnnIngest.ingestBatch(vecs(60 until 120), 2L, idx, nCells = 4))
+    write(0, "fold")(AnnIngest.compact(spark, idx, 1L))
+    // a round-robin repartition of the batch costs its shuffle and the
+    // collect's result job; the write still runs none
+    write(2, "repartitioned ingest")(AnnIngest.ingestBatch(
+      vecs(60 until 120).repartition(3), 2L, idx, nCells = 4))
     // the 60-row fold lands in the 60-row run's size class: two runs
-    write(2, "fold and merge")(AnnIngest.compact(spark, idx, 2L))
+    write(0, "fold and merge")(AnnIngest.compact(spark, idx, 2L))
     assert(IngestIndex.readManifest(spark, idx).runs("vectors") ===
       Seq(IngestIndex.Run("run_2_1", 120L)))
-    write(1, "delete")(
+    write(0, "delete")(
       AnnIngest.delete(spark, idx, Seq(3L, 65L).toDF("vec_id"), "gone"))
     assert(!topK(idx, q, 5, 2).exists(x => Set(3L, 65L)(x._3)))
-    write(1, "second delete")(
+    write(0, "second delete")(
       AnnIngest.delete(spark, idx, Seq(7L).toDF("vec_id"), "more"))
     // no delta to fold: the compaction applies the takedowns, writes no
     // run, and holds the tombstone set under its new ledger
@@ -1847,6 +1860,10 @@ class AnnIngestSpec extends AnyFunSuite {
     assert(IngestIndex.readManifest(spark, idx).runs("tombs").map(_.name)
       .toSet === Set("t_gone", "t_more"))
     assert(AnnIngest.heldSizes(spark, idx) === ((1, 120L * 8)))
+    // a steady ingest of an unrepartitioned local batch, end to end
+    write(0, "steady ingest")(
+      AnnIngest.ingestBatch(vecs(120 until 150), 4L, idx, nCells = 4))
+    assert(AnnIngest.heldSizes(spark, idx) === ((2, 150L * 8)))
   }
 
   test("a compaction over held inputs writes the rows and the skew report " +
@@ -1908,5 +1925,181 @@ class AnnIngestSpec extends AnyFunSuite {
     assert(AnnIngest.heldSizes(spark, held) === ((0, 0L)))
     AnnIngest.skewReport(spark, held, 4L)
     assert(skew(held) === fromHeld)
+  }
+
+  /** The footer of `file`. */
+  private def footer(file: java.io.File) = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file.toURI), conf))
+    try r.getFooter finally r.close()
+  }
+
+  /** The parquet files right under `dir`. */
+  private def parquetFiles(dir: java.io.File): Seq[java.io.File] =
+    Option(dir.listFiles).toSeq.flatten.filter(_.getName.endsWith(".parquet"))
+
+  /** The `cell=` dirs of `dir`, by name. */
+  private def cellDirsOf(dir: String): Map[String, java.io.File] =
+    Option(new java.io.File(dir).listFiles).toSeq.flatten
+      .filter(_.getName.startsWith("cell=")).map(d => d.getName -> d).toMap
+
+  test("driver-written dirs read back as the bits of distributed-written " +
+    "ones under both codecs: a null element, one file per cell dir, the " +
+    "footer rows, codec, columns and metadata, the skew counts, a fully " +
+    "tombstoned held compaction and a small tombstone") {
+    import org.apache.spark.sql.Row
+    import scala.jdk.CollectionConverters._
+    val s = spark
+    import s.implicits._
+    val t = java.nio.file.Files.createTempDirectory("graft_anndw").toString
+    val odd = embRows(
+      Row(900L, Seq[java.lang.Float](0.5f, null, -0.25f, 0.1f, 0f, 0.3f,
+        null, 0.7f)),
+      Row(901L, Seq.fill[java.lang.Float](8)(null)))
+    // not representable as floats: the f32 codec rounds them
+    val dbl = (70 until 90).map { i =>
+      (i.toLong, Array.tabulate(8)(d => math.sin(i * 13 + d * 5) / 3))
+    }.toDF("vec_id", "embedding")
+    for (codec <- Seq("f64", "f32")) {
+      val (drv, dist) = (s"$t/$codec/drv", s"$t/$codec/dist")
+      graft.TestSpark.withConf(AnnIngest.VectorCodecKey, codec) {
+        for ((idx, cap) <- Seq(drv -> AnnIngest.HeldMaxValues, dist -> 0L)) {
+          // the first batch trains the quantizer: distributed on both
+          AnnIngest.ingestBatch(vecs(0 until 40), 0L, idx, nCells = 4)
+          AnnIngest.ingestBatchWith(odd.union(vecs(40 until 70))
+            .union(dbl.select(col("vec_id"), col("embedding")
+              .cast("array<float>").as("embedding"))), 1L, idx, 4, cap)
+          AnnIngest.ingestBatchWith(dbl, 2L, idx, 4, cap)
+        }
+      }
+      assert(indexRows(drv) === indexRows(dist), codec)
+      for (b <- Seq(1, 2)) {
+        val (dc, sc) = (cellDirsOf(s"$drv/vectors/batch=$b"),
+          cellDirsOf(s"$dist/vectors/batch=$b"))
+        assert(dc.nonEmpty && dc.keySet === sc.keySet, s"$codec batch $b")
+        dc.foreach { case (c, d) =>
+          val (fd, fs) = (parquetFiles(d), parquetFiles(sc(c)))
+          assert(fd.length === 1 && fs.length === 1, s"$codec $b $c")
+          assert(IngestIndex.footerRows(spark, Seq(d.getPath)) ===
+            IngestIndex.footerRows(spark, Seq(sc(c).getPath)))
+          // a Spark write's codec, columns and footer metadata; only the
+          // nullability differs, which a distributed write takes from its
+          // plan and the driver's always leaves nullable
+          type Footer = org.apache.parquet.hadoop.metadata.ParquetMetadata
+          def codecs(f: Footer) =
+            f.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec))
+          def columns(f: Footer) =
+            f.getFileMetaData.getSchema.getColumns.asScala.map(c =>
+              c.getPath.toSeq -> c.getPrimitiveType.getPrimitiveTypeName)
+          def meta(f: Footer) = f.getFileMetaData.getKeyValueMetaData.asScala
+            .toMap.map { case (k, v) => k -> (
+              if (k != "org.apache.spark.sql.parquet.row.metadata") v
+              else org.apache.spark.sql.types.DataType.fromJson(v)
+                .simpleString) }
+          val (md, ms) = (footer(fd.head), footer(fs.head))
+          assert(codecs(md).nonEmpty && codecs(md) === codecs(ms))
+          assert(columns(md) === columns(ms), s"$codec $b $c")
+          assert(meta(md) === meta(ms), s"$codec $b $c")
+        }
+      }
+      assert(AnnIngest.skewReport(spark, drv, 2L)._2 ===
+        AnnIngest.skewReport(spark, dist, 2L)._2, codec)
+    }
+
+    // a held compaction whose every input row is tombstoned writes its
+    // empty run with no job, commits no run, as the distributed one, and
+    // the index compacts again after it
+    val (drv, dist) = (s"$t/gone/drv", s"$t/gone/dist")
+    for ((idx, cap) <- Seq(drv -> AnnIngest.HeldMaxValues, dist -> 0L)) {
+      AnnIngest.ingestBatch(vecs(0 until 40), 0L, idx, nCells = 4)
+      AnnIngest.ingestBatchWith(vecs(40 until 60), 1L, idx, 4, cap)
+      if (cap > 0) topK(idx, vecs(0 until 5), 3, 2) // holds the index
+      AnnIngest.delete(spark, idx, (0L until 60L).toDF("vec_id"), "all")
+      if (cap > 0) assert(jobsOf(AnnIngest.compact(spark, idx, 1L))._1 === 0)
+      else AnnIngest.compact(spark, idx, 1L)
+      assert(AnnIngest.readIndex(spark, idx, None).count() === 0L)
+      assert(IngestIndex.readManifest(spark, idx).runs.get("vectors")
+        .forall(_.isEmpty))
+      AnnIngest.ingestBatchWith(vecs(60 until 80), 2L, idx, 4, cap)
+      AnnIngest.compact(spark, idx, 2L)
+      assert(IngestIndex.readManifest(spark, idx).runs("vectors") ===
+        Seq(IngestIndex.Run("run_2_0", 20L)), idx)
+    }
+    assert(indexRows(drv) === indexRows(dist))
+    assert(indexRows(drv).map(_._1) === (60L until 80L).sortBy(_.toString))
+    // the empty write itself: a dir with no file, read as 0 rows under
+    // the pinned schema
+    val empty = s"$t/empty"
+    IngestIndex.writeFromDriver(spark, empty, org.apache.spark.sql.types
+      .StructType.fromDDL("vec_id long, norm double"), Nil)
+    assert(new java.io.File(empty).list().isEmpty)
+    assert(IngestIndex.footerRows(spark, Seq(empty)) === 0L)
+    assert(spark.read.schema("vec_id long, norm double").parquet(empty)
+      .count() === 0L)
+
+    // a small tombstone, written from the driver, read under its pinned
+    // schema: the distinct ids, each with the source bound
+    val tb = s"$t/tomb"
+    AnnIngest.ingestBatch(vecs(0 until 40), 0L, tb, nCells = 4)
+    AnnIngest.ingestBatch(vecs(40 until 60), 3L, tb, nCells = 4)
+    AnnIngest.delete(spark, tb, Seq(7L, 3L, 7L, 55L).toDF("vec_id"), "few")
+    val dir = new java.io.File(s"$tb/tombs/t_few")
+    assert(parquetFiles(dir).length === 1)
+    val got = spark.read.schema("vec_id long, tb_bound long")
+      .parquet(dir.getPath).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    assert(got === Seq(3L, 7L, 55L).map(_ -> 4L))
+  }
+
+  test("a driver-side write that died before its rename leaves a _stage_ " +
+    "dir that no listing, read or query sees, and the retry of its target " +
+    "replaces it") {
+    val s = spark
+    import s.implicits._
+    val t = java.nio.file.Files.createTempDirectory("graft_annst").toString
+    val idx = s"$t/idx"
+    AnnIngest.ingestBatch(vecs(0 until 40), 0L, idx, nCells = 4)
+    val q = vecs(0 until 70)
+    assert(topK(idx, q, 5, 2).nonEmpty) // holds the index
+    // a whole staged delta and tombstone, as a crash before the rename
+    // leaves them: the written dirs moved back to their stage names
+    def crash(dir: String): Unit = {
+      val d = new java.io.File(dir)
+      assert(d.renameTo(new java.io.File(d.getParentFile,
+        "_stage_" + d.getName)))
+    }
+    AnnIngest.ingestBatch(vecs(40 until 70), 1L, idx, nCells = 4)
+    crash(s"$idx/vectors/batch=1")
+    AnnIngest.delete(spark, idx, Seq(3L, 7L).toDF("vec_id"), "gone")
+    crash(s"$idx/tombs/t_gone")
+    val stages = Seq(s"$idx/vectors/_stage_batch=1", s"$idx/tombs/_stage_t_gone")
+    assert(stages.forall(new java.io.File(_).isDirectory))
+    assert(IngestIndex.deltaDirs(spark, idx, "vectors", -1L, Long.MaxValue)
+      .map(d => IngestIndex.nameOf(d._2)) === Seq("batch=0"))
+    assert(AnnIngest.tombDirs(spark, idx).isEmpty)
+    val cycle = IngestIndex.AnnFamily.open(
+      IngestIndex.readManifest(spark, idx), Nil, 5L)
+    assert(!cycle.superseded(Nil)("_stage_batch=1"))
+    val ids = AnnIngest.readIndex(spark, idx, None).select("vec_id")
+      .as[Long].collect().toSet
+    assert(ids === (0L until 40L).toSet)
+    for (got <- Seq(topK(idx, q, 80, 4), distTopK(idx, q, 80, 4))) {
+      assert(got.map(_._3).toSet === ids)
+      assert(sameBits(got, referenceTopK(idx, q, 80, 4)))
+    }
+    // the retries: each stage is cleared and its target written whole
+    AnnIngest.ingestBatch(vecs(40 until 70), 1L, idx, nCells = 4)
+    AnnIngest.delete(spark, idx, Seq(3L, 7L).toDF("vec_id"), "gone")
+    assert(stages.forall(!new java.io.File(_).exists))
+    val want = (0L until 70L).toSet -- Set(3L, 7L)
+    assert(AnnIngest.readIndex(spark, idx, None).select("vec_id")
+      .as[Long].collect().toSet === want)
+    val got = topK(idx, q, 80, 4)
+    assert(got.map(_._3).toSet === want)
+    assert(sameBits(got, referenceTopK(idx, q, 80, 4)))
+    assert(sameBits(got, distTopK(idx, q, 80, 4)))
   }
 }
