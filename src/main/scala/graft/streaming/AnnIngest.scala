@@ -57,10 +57,10 @@ import graft.streaming.IngestIndex.{AnnFamily, Manifest, Run}
   * ([[IngestIndex.writeFromDriver]], as are a compaction's runs over
   * held inputs and a small delete's tombstone); a larger one runs a
   * narrow assignment map over broadcast centroids and one
-  * cell-partitioned write. Queries probe nProbe cells per vector: the query set is
-  * small by contract, so it is collected once and its probes are
-  * assigned on the driver against the in-memory quantizer. A steady
-  * query launches NO Spark job: runs and deltas never change once
+  * cell-partitioned write. Queries probe nProbe cells per vector: the
+  * query set is small by contract, so it is collected once and its
+  * probes are assigned on the driver against the in-memory quantizer.
+  * A steady query launches NO Spark job: runs and deltas never change once
   * published, so the decoded rows of each live run or delta dir are
   * held on the driver, one entry per dir keyed by the dir's files
   * ([[IngestIndex.dirKey]]), and the probed cells are scored there in
@@ -270,9 +270,8 @@ object AnnIngest {
     * rows is collected once and assigned on the driver, and the delta is
     * written from the driver with no Spark job ([[writeLocal]]): over a
     * local batch frame the ingest runs none at all. When the index's rows
-    * are held
-    * for queries ([[queryTopK]]), the decoded delta is held too, so the
-    * next query reads nothing back. The first batch, which trains the
+    * are held for queries ([[queryTopK]]), the decoded delta is held too,
+    * so the next query reads nothing back. The first batch, which trains the
     * quantizer, and a larger batch run the distributed assignment and
     * cell shuffle instead. */
   def ingestBatch(batch: DataFrame, batchId: Long, indexDir: String,
@@ -898,8 +897,8 @@ object AnnIngest {
     * under a held tombstone set, takes its rows from the held rows,
     * keeps those the query paths' rule admits, writes the run from the
     * driver with no Spark job and holds it; the skew report then counts
-    * cells from the held rows. A compaction that writes no heal tombstone and
-    * deletes no swept one holds the unchanged tombstone set under the
+    * cells from the held rows. A compaction that writes no heal tombstone
+    * and deletes no swept one holds the unchanged tombstone set under the
     * new ledger. Otherwise — inputs not held, a tombstone set
     * above [[IngestIndex.TombBroadcastMax]] — the run is read, cleaned
     * and written distributed, as are every heal and the retrain.

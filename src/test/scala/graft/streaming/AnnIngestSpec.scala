@@ -2075,7 +2075,8 @@ class AnnIngestSpec extends AnyFunSuite {
     crash(s"$idx/vectors/batch=1")
     AnnIngest.delete(spark, idx, Seq(3L, 7L).toDF("vec_id"), "gone")
     crash(s"$idx/tombs/t_gone")
-    val stages = Seq(s"$idx/vectors/_stage_batch=1", s"$idx/tombs/_stage_t_gone")
+    val stages =
+      Seq(s"$idx/vectors/_stage_batch=1", s"$idx/tombs/_stage_t_gone")
     assert(stages.forall(new java.io.File(_).isDirectory))
     assert(IngestIndex.deltaDirs(spark, idx, "vectors", -1L, Long.MaxValue)
       .map(d => IngestIndex.nameOf(d._2)) === Seq("batch=0"))
