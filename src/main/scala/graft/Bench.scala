@@ -45,7 +45,9 @@ object Bench {
       val tiny = spark.range(100)
         .select(col("id").cast("double").as("f"), (col("id") % 2 === 0).as("y"))
       // one 100-row fit per algorithm family: BLAS/optimizer/tree class
-      // loading and codegen are steady-state costs, not query costs
+      // loading and codegen are steady-state costs, not query costs.
+      // logistic takes its driver fit here, as the catalog's logistic
+      // fits do; oneVsRest loads MLlib's distributed LogisticRegression
       graft.train.Train.logistic(tiny, Seq("f"), col("y"), maxIter = 1)
       graft.train.Train.svm(tiny, Seq("f"), col("y"), maxIter = 1)
       graft.train.Train.decisionTree(tiny, Seq("f"), col("y"), maxDepth = 2)

@@ -165,40 +165,57 @@ object Eval {
     * counted half, summed as 2U in `Long`s — repeatable under any
     * partitioning, unlike MLlib's evaluator, whose ROC bins follow a
     * sampled sort. One pass over [[graft.ops.RangeScan]]'s sorted rows:
-    * equal scores share a partition, each returns (positives, negatives,
-    * local 2U), and the driver adds the cross-partition term — every
-    * negative of an earlier partition scores strictly lower. NaN when a
-    * class is empty. */
+    * equal scores share a partition, each folds its run ([[rankFold]]),
+    * and the driver adds the cross-partition term ([[foldAuc]]). NaN when
+    * a class is empty. */
   private[graft] def rankAuc(df: DataFrame, score: Column,
                              isPos: Column): Double = {
     val scored = df.select(score.cast("double").as("s"),
       coalesce(isPos, lit(false)).as("pos")).filter(col("s").isNotNull)
-    val perPart = RangeScan.sorted(scored, Seq(col("s").asc),
+    foldAuc(RangeScan.sorted(scored, Seq(col("s").asc),
       RangeScan.width(df))(r => (r.getDouble(0), r.getBoolean(1)))
-      .mapPartitions { rows =>
-        // per run of equal scores: its positives each beat the negatives
-        // below it (2 each) and tie its own negatives (1 each)
-        var pos, neg, u2, runPos, runNeg = 0L
-        var prev = 0.0
-        def close(): Unit = {
-          u2 += runPos * (2 * neg + runNeg)
-          pos += runPos; neg += runNeg; runPos = 0L; runNeg = 0L
-        }
-        rows.foreach { case (x, isP) =>
-          if ((runPos + runNeg) > 0 && !(x == prev || (x.isNaN && prev.isNaN)))
-            close()
-          prev = x
-          if (isP) runPos += 1 else runNeg += 1
-        }
+      .mapPartitions(rows => Iterator.single(rankFold(rows)))
+      .collect()) // in partition order, i.e. ascending score ranges
+  }
+
+  /** [[rankAuc]] of scores held on the driver: one sorted run, the same
+    * fold. Spark's ascending order puts NaN last, as `TotalOrdering`
+    * does; it keeps -0.0 and 0.0 together, and the fold counts them as
+    * one score either way. */
+  private[graft] def rankAuc(scored: Array[(Double, Boolean)]): Double =
+    foldAuc(Seq(rankFold(
+      scored.sortBy(_._1)(Ordering.Double.TotalOrdering).iterator)))
+
+  /** The Mann–Whitney fold of ascending (score, positive) rows: per run of
+    * equal scores, its positives each beat the negatives below it (2
+    * each) and tie its own negatives (1 each). Returns (positives,
+    * negatives, 2U). */
+  private def rankFold(rows: Iterator[(Double, Boolean)]): (Long, Long, Long) = {
+    var pos, neg, u2, runPos, runNeg = 0L
+    var prev = 0.0
+    def close(): Unit = {
+      u2 += runPos * (2 * neg + runNeg)
+      pos += runPos; neg += runNeg; runPos = 0L; runNeg = 0L
+    }
+    rows.foreach { case (x, isP) =>
+      if ((runPos + runNeg) > 0 && !(x == prev || (x.isNaN && prev.isNaN)))
         close()
-        Iterator.single((pos, neg, u2))
-      }.collect() // in partition order, i.e. ascending score ranges
+      prev = x
+      if (isP) runPos += 1 else runNeg += 1
+    }
+    close()
+    (pos, neg, u2)
+  }
+
+  /** AUC of [[rankFold]]s over ascending, disjoint score ranges: every
+    * negative of an earlier range scores strictly lower. */
+  private def foldAuc(folds: Seq[(Long, Long, Long)]): Double = {
     var negBelow, u2 = 0L
-    perPart.foreach { case (p, n, local) =>
+    folds.foreach { case (p, n, local) =>
       u2 += local + 2 * p * negBelow
       negBelow += n
     }
-    val (nPos, nNeg) = (perPart.map(_._1).sum, negBelow)
+    val (nPos, nNeg) = (folds.map(_._1).sum, negBelow)
     if (nPos == 0 || nNeg == 0) Double.NaN
     else u2.toDouble / (2.0 * nPos.toDouble * nNeg.toDouble)
   }

@@ -41,14 +41,19 @@ object Pipeline {
   /** `stats`: numeric + categorical profiling into the typed catalog.
     * The spec's weight expression (JEXL) feeds the weighted stat duals;
     * absent → weight 1.0 (weighted fields equal the count metrics, the
-    * reference's no-weightColumnName convention). */
+    * reference's no-weightColumnName convention). The numeric and the
+    * categorical profile share no state, so they run concurrently
+    * ([[graft.ops.Jobs]]): each is a short chain of small jobs, and
+    * overlapping them overlaps their driver-side residue. */
   def stats(df: DataFrame, spec: DataSpec, numericCols: Seq[String],
             categoricalCols: Seq[String]): Seq[ColumnProfile] = {
+    import graft.ops.Jobs
     val w = spec.weightColumn.map(Jexl.translate).getOrElse(lit(1.0))
-    val num = StatsPipeline.profileNumeric(df, numericCols, isPos(spec),
-      spec.maxNumBin, w, full = true)
-    val cat = StatsPipeline.profileCategorical(df, categoricalCols,
-      isPos(spec), weight = w)
+    val Seq(num, cat) = Jobs.joinAll(Seq(
+      Jobs.fork(StatsPipeline.profileNumeric(df, numericCols, isPos(spec),
+        spec.maxNumBin, w, full = true)),
+      Jobs.fork(StatsPipeline.profileCategorical(df, categoricalCols,
+        isPos(spec), weight = w))))
     val all = numericCols.map(num) ++ categoricalCols.map(cat)
     all.zipWithIndex.map { case (p, i) => p.copy(columnNum = i) }
   }

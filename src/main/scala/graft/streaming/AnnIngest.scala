@@ -1223,10 +1223,16 @@ object AnnIngest {
     cycle.deleteSwept(f, tombsDir(indexDir))
     val next = Manifest(upTo, cycle.entries(runs, healTombs.toSeq), cents)
     IngestIndex.writeManifest(sp, indexDir, next)
+    // orphan stage dirs go with the superseded ones: a driver-side write
+    // that died before its rename (IngestIndex.writeFromDriver) leaves a
+    // `_stage_<name>` dir no listing reads, and every such write runs
+    // under the writer lease this compaction holds, so any stage dir it
+    // sees is dead
+    def staged(d: Path) = d.getName.startsWith("_stage_")
     val p = new Path(vectorsDir(indexDir))
     if (f.exists(p))
       f.listStatus(p).map(_.getPath)
-        .filter(d => cycle.superseded(runs)(d.getName))
+        .filter(d => cycle.superseded(runs)(d.getName) || staged(d))
         .foreach { d => f.delete(d, true); () }
     // orphan split-tombstone dirs — a crash between a previous split's
     // tombstone write and its manifest publish: inert for every reader
@@ -1236,7 +1242,8 @@ object AnnIngest {
     val tombsRoot = new Path(tombsDir(indexDir))
     if (f.exists(tombsRoot)) {
       f.listStatus(tombsRoot).toSeq.map(_.getPath).foreach { d =>
-        if (d.getName.startsWith("t_split_") && !keptTombNames(d.getName)) {
+        if (staged(d) ||
+            d.getName.startsWith("t_split_") && !keptTombNames(d.getName)) {
           f.delete(d, true); ()
         }
       }

@@ -296,7 +296,8 @@ object IngestIndex {
     * staged write at all, since index listings match `batch=`, `run_`
     * and `t_` names. The stage's name is a function of `dir`'s, so the
     * retry of a write that died before its rename clears what that
-    * attempt left and writes again: the overwrite stays idempotent. */
+    * attempt left and writes again: the overwrite stays idempotent. A
+    * stage no retry comes for is removed by the next ANN compaction. */
   private[streaming] def writeFromDriver(sp: SparkSession, dir: String,
       schema: StructType,
       groups: Seq[(String, Seq[org.apache.spark.sql.catalyst.InternalRow])])

@@ -35,11 +35,75 @@ object Train {
       d === Double.NegativeInfinity, 0.0).otherwise(d).as(c)
   }
 
+  /** Binary logistic regression: MLlib `LogisticRegression` (no
+    * regularization, intercept fitted) behind a `VectorAssembler`.
+    *
+    * When the training rows' feature values (rows × features) fit under
+    * [[LocalFitMaxValues]], the projected rows are collected once and the
+    * fit runs on the driver ([[org.apache.spark.ml.GraftMlBridge]]):
+    * MLlib's own summary, standardization, block aggregator and breeze
+    * L-BFGS, without the Spark job per loss evaluation that the
+    * distributed optimizer pays (a fit is ~10 iterations and ~30 loss
+    * evaluations). It returns the `PipelineModel` `Pipeline.fit` would,
+    * with MLlib's coefficients up to summation order, and [[Trained.auc]]
+    * is the same exact rank-sum, over the driver's scores. Above the
+    * cap, or for rows the driver fit does not cover — no rows, a label
+    * outside {0, 1}, one class only — `Pipeline.fit` runs as before,
+    * over the same rows. */
   def logistic(df: DataFrame, features: Seq[String], label: Column,
-               maxIter: Int = 20): Trained = {
+               maxIter: Int = 20): Trained =
+    logisticWith(df, features, label, maxIter, LocalFitMaxValues)
+
+  /** Cap of [[logistic]]'s driver fit in feature values (rows ×
+    * features): 2^21 doubles, 16 MB. A `lifecycle_wide` bag is ~70k
+    * values; the catalog's largest fit, q_train_lr over sf0.1 lineitem,
+    * is 1.8M. */
+  private val LocalFitMaxValues = 1L << 21
+
+  /** [[logistic]] with the driver fit's cap `localMax` in feature values;
+    * 0 always runs `Pipeline.fit`. */
+  private[graft] def logisticWith(df: DataFrame, features: Seq[String],
+      label: Column, maxIter: Int, localMax: Long): Trained = {
     val lr = new LogisticRegression().setMaxIter(maxIter)
       .setLabelCol("label").setFeaturesCol("features")
-    fit(df, features, label, new Pipeline().setStages(Array(assemble(features), lr)))
+    val pipeline = new Pipeline().setStages(Array(assemble(features), lr))
+    val data = trainingRows(df, features, label)
+    val cap = localMax / math.max(features.length, 1)
+    // one task reads the rows in partition order and stops after cap+1,
+    // so the collect is one job whatever the input's width; more than
+    // cap decides "big", and a big input is then read again by the
+    // distributed fit, whose dozens of jobs dwarf that first read
+    val local =
+      if (cap > 0 && features.nonEmpty)
+        Some(data.coalesce(1).limit(math.min(cap + 1, Int.MaxValue).toInt)
+          .collect()).filter(_.length <= cap).flatMap(fitLocal(pipeline, lr, _))
+      else None
+    local.getOrElse(fit(data, pipeline))
+  }
+
+  /** The driver fit of [[logistic]] over collected (features…, label)
+    * rows; None when the rows are empty, hold a label outside {0, 1} or
+    * only one class. The feature vectors are the ones `VectorAssembler`
+    * builds (its zeros dropped, then `compressed`), so the model scores
+    * each row exactly as its `transform` would. */
+  private def fitLocal(pipeline: Pipeline, lr: LogisticRegression,
+                       rows: Array[org.apache.spark.sql.Row]): Option[Trained] = {
+    import org.apache.spark.ml.GraftMlBridge
+    import org.apache.spark.ml.linalg.Vectors
+    val nf = rows.headOption.map(_.length - 1).getOrElse(0)
+    val labels = rows.map(_.getDouble(nf))
+    val (n1, n0) = (labels.count(_ == 1.0), labels.count(_ == 0.0))
+    Option.when(n0 > 0 && n1 > 0 && n0 + n1 == labels.length) {
+      val vectors = rows.map { r =>
+        val idx = (0 until nf).filter(r.getDouble(_) != 0.0).toArray
+        Vectors.sparse(nf, idx, idx.map(r.getDouble)).compressed
+      }
+      val lrModel = GraftMlBridge.fitBinaryLogistic(lr, vectors, labels)
+      val model = GraftMlBridge.pipelineModel(pipeline,
+        Array(pipeline.getStages.head.asInstanceOf[VectorAssembler], lrModel))
+      Trained(model, graft.eval.Eval.rankAuc(vectors.indices.toArray.map(i =>
+        (lrModel.predictRaw(vectors(i))(1), labels(i) > 0.5))))
+    }
   }
 
   def gbt(df: DataFrame, features: Seq[String], label: Column,
@@ -107,11 +171,7 @@ object Train {
       .setLabelCol("label").setFeaturesCol("features")
     val ovr = new OneVsRest().setClassifier(base)
       .setLabelCol("label").setFeaturesCol("features").setParallelism(4)
-    val data = df.select(features.map(finiteFeature) :+
-      label.cast("double").as("label"): _*)
-      // unlabeled rows can't be trained on (MLlib raises on NULL/NaN
-      // labels): exclude them, the reference's invalid-tag filter shape
-      .filter(col("label").isNotNull && !isnan(col("label")))
+    val data = trainingRows(df, features, label)
       // k per-class fits + the transform all replay this otherwise
       .transform(graft.Ckpt.truncate(_))
     val pipeline = new Pipeline()
@@ -120,16 +180,25 @@ object Train {
       .select(col("prediction"), col("label"))
   }
 
-  private def fit(df: DataFrame, features: Seq[String], label: Column,
-                  pipeline: Pipeline): Trained = {
-    val data = df.select(features.map(finiteFeature) :+
+  /** Training rows: the features as non-finite-guarded doubles
+    * ([[finiteFeature]]) and the label as a double, unlabeled rows
+    * dropped — MLlib raises on a NULL/NaN label; this is the reference's
+    * invalid-tag filter shape. */
+  private def trainingRows(df: DataFrame, features: Seq[String],
+                           label: Column): DataFrame =
+    df.select(features.map(finiteFeature) :+
       label.cast("double").as("label"): _*)
-      // unlabeled rows can't be trained on (MLlib raises on NULL/NaN
-      // labels): exclude them, the reference's invalid-tag filter shape
       .filter(col("label").isNotNull && !isnan(col("label")))
-      // fit, transform and the AUC pass each replay this projection
-      // from the scan otherwise — materialize it once
-      .transform(graft.Ckpt.truncate(_))
+
+  private def fit(df: DataFrame, features: Seq[String], label: Column,
+                  pipeline: Pipeline): Trained =
+    fit(trainingRows(df, features, label), pipeline)
+
+  /** `pipeline.fit` over training rows, and the AUC over them. */
+  private def fit(rows: DataFrame, pipeline: Pipeline): Trained = {
+    // fit, transform and the AUC pass each replay this projection from
+    // the scan otherwise — materialize it once
+    val data = graft.Ckpt.truncate(rows)
     val model = pipeline.fit(data)
     Trained(model, rankAuc(model.transform(data)))
   }
@@ -161,19 +230,12 @@ object Train {
       .setSeed(42L)
     // materialize once, same as fit(): k-fold x grid re-executes the
     // projection lineage (numFolds x gridSize + 1) times otherwise
-    val data = df.select(features.map(finiteFeature) :+
-      label.cast("double").as("label"): _*)
-      // unlabeled rows can't be trained on (MLlib raises on NULL/NaN
-      // labels): exclude them, the reference's invalid-tag filter shape
-      .filter(col("label").isNotNull && !isnan(col("label")))
+    val data = trainingRows(df, features, label)
       .transform(graft.Ckpt.truncate(_))
     val model = cv.fit(data)
     (model.bestModel.asInstanceOf[PipelineModel], model.avgMetrics.max)
   }
 
-  /** Bagging: k models over deterministic md5-hash row subsets (the
-    * reference replicates rows into k bags, `BaggingSubsampleUDF.java`);
-    * prediction = mean of member probabilities. */
   /** One-vs-one multi-class (reference `MultipleClassification.ONEVSONE`,
     * `ModelTrainConf.java:54-58`): one binary LR per CLASS PAIR, each
     * trained only on that pair's rows, majority vote over all pairs with
@@ -183,11 +245,7 @@ object Train {
     * pass, like comboScore). Returns (prediction, label) rows. */
   def oneVsOne(df: DataFrame, features: Seq[String], label: Column,
                maxIter: Int = 20): DataFrame = {
-    val data = df.select(features.map(finiteFeature) :+
-      label.cast("double").as("label"): _*)
-      // unlabeled rows can't be trained on (MLlib raises on NULL/NaN
-      // labels): exclude them, the reference's invalid-tag filter shape
-      .filter(col("label").isNotNull && !isnan(col("label")))
+    val data = trainingRows(df, features, label)
     val classes = data.select("label").distinct()
       .collect().map(_.getDouble(0)).sorted
     require(classes.length >= 2,
@@ -438,16 +496,21 @@ object Train {
       rankAuc(wideModel.transform(withLogit)))
   }
 
-  /** k models over deterministic hash-split bags (~70% of the rows
-    * each), fitted concurrently from driver threads ([[graft.ops.Jobs]]),
-    * as MLlib's `CrossValidator.setParallelism` fits its folds. A fit is
-    * dozens of small jobs whose driver-side residue (job submission,
-    * planning, the optimizer's driver loop) dominates at bench scale, so
-    * overlapping the bags overlaps that residue. Each bag reads the same
-    * filtered rows under the same partitioning as a sequential fit would,
-    * so the models and their exact AUCs ([[rankAuc]]) equal sequential
-    * fits'. If a fit throws, the other bags are awaited and the first
-    * failure (in bag order) is raised. */
+  /** Bagging: k models over deterministic crc32-hash row subsets (~70%
+    * of the rows each; the reference replicates rows into k bags,
+    * `BaggingSubsampleUDF.java`), scored as the mean of the members'
+    * probabilities ([[comboScore]], `Score.ensemble`). The bags fit
+    * concurrently from driver threads ([[graft.ops.Jobs]]), as MLlib's
+    * `CrossValidator.setParallelism` fits its folds: a logistic bag under
+    * the driver-fit cap ([[logistic]]) is one collect job and driver
+    * work, and the bags' driver fits overlap; above it a fit is dozens of
+    * small jobs whose driver-side residue (job submission, planning, the
+    * optimizer's driver loop) dominates at bench scale, and overlapping
+    * the bags overlaps that residue. Each bag reads the same filtered
+    * rows under the same partitioning as a sequential fit would, so the
+    * models and their exact AUCs ([[rankAuc]]) equal sequential fits'.
+    * If a fit throws, the other bags are awaited and the first failure
+    * (in bag order) is raised. */
   def bagged(df: DataFrame, features: Seq[String], label: Column,
              key: Column, k: Int = 3,
              trainOne: (DataFrame, Seq[String], Column) => Trained =

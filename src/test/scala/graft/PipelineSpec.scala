@@ -40,6 +40,31 @@ class PipelineSpec extends AnyFunSuite {
     assert(back.count(_.finalSelect) === 3)
   }
 
+  test("stats forks its numeric and categorical profiles into the catalog " +
+    "the sequential profiles build, field for field") {
+    import graft.ops.StatsPipeline
+    val df = Tables.load(spark, "/root/testdata/sf0.001", "lineitem")
+    val spec = DataSpec(
+      targetColumn = "l_returnflag",
+      posTags = Set("R"), negTags = Set("A", "N"),
+      weightColumn = Some("l_quantity"))
+    val clean = Pipeline.init(df, spec)
+    val num = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+    val cat = Seq("l_linestatus", "l_returnflag")
+    val w = graft.expr.Jexl.translate("l_quantity")
+    val numP = StatsPipeline.profileNumeric(clean, num, Pipeline.isPos(spec),
+      spec.maxNumBin, w, full = true)
+    val catP = StatsPipeline.profileCategorical(clean, cat,
+      Pipeline.isPos(spec), weight = w)
+    val sequential = (num.map(numP) ++ cat.map(catP)).zipWithIndex
+      .map { case (p, i) => p.copy(columnNum = i) }
+    val forked = Pipeline.stats(clean, spec, num, cat)
+    assert(forked.length === 6)
+    forked.zip(sequential).foreach { case (f, s) =>
+      assert(f === s, f.columnName)
+    }
+  }
+
   test("pareto varsel keeps the non-dominated (KS, IV) front first") {
     import graft.catalog.{ColumnProfile, ColumnStats}
     def prof(n: Int, name: String, ks: Double, iv: Double) =

@@ -2102,5 +2102,20 @@ class AnnIngestSpec extends AnyFunSuite {
     assert(got.map(_._3).toSet === want)
     assert(sameBits(got, referenceTopK(idx, q, 80, 4)))
     assert(sameBits(got, distTopK(idx, q, 80, 4)))
+    // an abandoned delete, whose tag is never issued again, and an
+    // abandoned ingest: no retry clears their stages, the next
+    // compaction does, and reads nothing from them
+    AnnIngest.delete(spark, idx, Seq(11L).toDF("vec_id"), "lost")
+    crash(s"$idx/tombs/t_lost")
+    AnnIngest.ingestBatch(vecs(70 until 80), 2L, idx, nCells = 4)
+    crash(s"$idx/vectors/batch=2")
+    val orphans =
+      Seq(s"$idx/tombs/_stage_t_lost", s"$idx/vectors/_stage_batch=2")
+    assert(orphans.forall(new java.io.File(_).isDirectory))
+    AnnIngest.compact(spark, idx, 2L)
+    assert(orphans.forall(!new java.io.File(_).exists))
+    assert(AnnIngest.readIndex(spark, idx, None).select("vec_id")
+      .as[Long].collect().toSet === want)
+    assert(sameBits(topK(idx, q, 80, 4), referenceTopK(idx, q, 80, 4)))
   }
 }
