@@ -38,66 +38,97 @@ object Train {
   /** Binary logistic regression: MLlib `LogisticRegression` (no
     * regularization, intercept fitted) behind a `VectorAssembler`.
     *
-    * When the training rows' feature values (rows × features) fit under
-    * [[LocalFitMaxValues]], the projected rows are collected once and the
-    * fit runs on the driver ([[org.apache.spark.ml.GraftMlBridge]]):
+    * The training rows are materialized once, in one parallel pass that
+    * also counts them ([[truncateCounted]]). When they fit under
+    * [[LocalFitMaxRows]] and [[LocalFitMaxValues]], they are collected
+    * and the fit runs on the driver ([[org.apache.spark.ml.GraftMlBridge]]):
     * MLlib's own summary, standardization, block aggregator and breeze
     * L-BFGS, without the Spark job per loss evaluation that the
     * distributed optimizer pays (a fit is ~10 iterations and ~30 loss
-    * evaluations). It returns the `PipelineModel` `Pipeline.fit` would,
-    * with MLlib's coefficients up to summation order, and [[Trained.auc]]
-    * is the same exact rank-sum, over the driver's scores. Above the
-    * cap, or for rows the driver fit does not cover — no rows, a label
-    * outside {0, 1}, one class only — `Pipeline.fit` runs as before,
-    * over the same rows. */
+    * evaluations), so a fit is two jobs. It returns the `PipelineModel`
+    * `Pipeline.fit` would, with MLlib's coefficients up to summation
+    * order, and [[Trained.auc]] is the same exact rank-sum, over the
+    * driver's scores. Above the cap, or for rows the driver fit does not
+    * cover — no rows, a label outside {0, 1}, one class only —
+    * `Pipeline.fit` runs as before, over the same materialized rows. */
   def logistic(df: DataFrame, features: Seq[String], label: Column,
                maxIter: Int = 20): Trained =
     logisticWith(df, features, label, maxIter, LocalFitMaxValues)
 
-  /** Cap of [[logistic]]'s driver fit in feature values (rows ×
-    * features): 2^21 doubles, 16 MB. A `lifecycle_wide` bag is ~70k
-    * values; the catalog's largest fit, q_train_lr over sf0.1 lineitem,
-    * is 1.8M. */
+  /** Caps of [[logistic]]'s driver fit, in rows and in feature values
+    * (rows × features). The driver holds the collected rows, each row's
+    * feature vector, its standardized copy in MLlib's instance blocks and
+    * its label and score; the sampled peak live heap of a fit was ~200 B
+    * a row at 1–3 features, ~205 MB at both caps (1.02M rows × 2), and
+    * `bagged` holds k such fits at once. The driver fit beat the
+    * distributed one at every size measured up to both caps, 1.8× there
+    * (CHANGES.md). A `lifecycle_wide` bag is ~8.4k rows and ~70k values;
+    * the catalog's largest fit, q_train_lr over sf0.1 lineitem, is 600k
+    * rows and 1.8M values. */
+  private val LocalFitMaxRows = 1L << 20
   private val LocalFitMaxValues = 1L << 21
 
-  /** [[logistic]] with the driver fit's cap `localMax` in feature values;
-    * 0 always runs `Pipeline.fit`. */
+  /** [[logistic]] with the driver fit's cap `localMax` in feature values
+    * (rows stay capped by [[LocalFitMaxRows]]); 0 always runs
+    * `Pipeline.fit`. */
   private[graft] def logisticWith(df: DataFrame, features: Seq[String],
       label: Column, maxIter: Int, localMax: Long): Trained = {
     val lr = new LogisticRegression().setMaxIter(maxIter)
       .setLabelCol("label").setFeaturesCol("features")
     val pipeline = new Pipeline().setStages(Array(assemble(features), lr))
-    val data = trainingRows(df, features, label)
-    val cap = localMax / math.max(features.length, 1)
-    // one task reads the rows in partition order and stops after cap+1,
-    // so the collect is one job whatever the input's width; more than
-    // cap decides "big", and a big input is then read again by the
-    // distributed fit, whose dozens of jobs dwarf that first read
+    // the size check reads nothing more than the materializing pass, so
+    // a big input is read once, by that pass
+    val (data, n) = truncateCounted(trainingRows(df, features, label))
     val local =
-      if (cap > 0 && features.nonEmpty)
-        Some(data.coalesce(1).limit(math.min(cap + 1, Int.MaxValue).toInt)
-          .collect()).filter(_.length <= cap).flatMap(fitLocal(pipeline, lr, _))
+      if (features.nonEmpty && n > 0 && n <= LocalFitMaxRows &&
+          n * features.length <= localMax)
+        fitLocal(pipeline, lr, instances(data.collect()))
       else None
-    local.getOrElse(fit(data, pipeline))
+    local.getOrElse(fitRows(data, pipeline))
   }
 
-  /** The driver fit of [[logistic]] over collected (features…, label)
-    * rows; None when the rows are empty, hold a label outside {0, 1} or
-    * only one class. The feature vectors are the ones `VectorAssembler`
-    * builds (its zeros dropped, then `compressed`), so the model scores
-    * each row exactly as its `transform` would. */
-  private def fitLocal(pipeline: Pipeline, lr: LogisticRegression,
-                       rows: Array[org.apache.spark.sql.Row]): Option[Trained] = {
-    import org.apache.spark.ml.GraftMlBridge
-    import org.apache.spark.ml.linalg.Vectors
+  /** `rows` materialized ([[graft.Ckpt.truncate]]) and their count, taken
+    * in that same pass per partition, so a partition computed twice (a
+    * retried task, or the second pass of a reliable checkpoint) counts
+    * once. */
+  private def truncateCounted(rows: DataFrame): (DataFrame, Long) = {
+    import scala.jdk.CollectionConverters._
+    val counts =
+      rows.sparkSession.sparkContext.collectionAccumulator[(Int, Long)]
+    val data = graft.Ckpt.truncate(rows.mapPartitions { it =>
+      val task = org.apache.spark.TaskContext.get()
+      var n = 0L
+      task.addTaskCompletionListener[Unit](_ =>
+        counts.add((task.partitionId(), n)))
+      it.map { r => n += 1; r }
+    }(org.apache.spark.sql.Encoders.row(rows.schema)))
+    (data, counts.value.asScala.toMap.values.sum)
+  }
+
+  /** Collected (features…, label) rows as the feature vectors
+    * `VectorAssembler` builds (its zeros dropped, then `compressed`) and
+    * the labels, so the model scores each row exactly as its `transform`
+    * would. The rows themselves are not kept. */
+  private def instances(rows: Array[org.apache.spark.sql.Row])
+      : (Array[org.apache.spark.ml.linalg.Vector], Array[Double]) = {
     val nf = rows.headOption.map(_.length - 1).getOrElse(0)
-    val labels = rows.map(_.getDouble(nf))
+    (rows.map { r =>
+      val idx = (0 until nf).filter(r.getDouble(_) != 0.0).toArray
+      org.apache.spark.ml.linalg.Vectors.sparse(nf, idx, idx.map(r.getDouble))
+        .compressed
+    }, rows.map(_.getDouble(nf)))
+  }
+
+  /** The driver fit of [[logistic]] over collected rows ([[instances]]);
+    * None when there are no rows, a label outside {0, 1} or only one
+    * class. */
+  private def fitLocal(pipeline: Pipeline, lr: LogisticRegression,
+      rows: (Array[org.apache.spark.ml.linalg.Vector], Array[Double]))
+      : Option[Trained] = {
+    import org.apache.spark.ml.GraftMlBridge
+    val (vectors, labels) = rows
     val (n1, n0) = (labels.count(_ == 1.0), labels.count(_ == 0.0))
     Option.when(n0 > 0 && n1 > 0 && n0 + n1 == labels.length) {
-      val vectors = rows.map { r =>
-        val idx = (0 until nf).filter(r.getDouble(_) != 0.0).toArray
-        Vectors.sparse(nf, idx, idx.map(r.getDouble)).compressed
-      }
       val lrModel = GraftMlBridge.fitBinaryLogistic(lr, vectors, labels)
       val model = GraftMlBridge.pipelineModel(pipeline,
         Array(pipeline.getStages.head.asInstanceOf[VectorAssembler], lrModel))
@@ -192,13 +223,13 @@ object Train {
 
   private def fit(df: DataFrame, features: Seq[String], label: Column,
                   pipeline: Pipeline): Trained =
-    fit(trainingRows(df, features, label), pipeline)
-
-  /** `pipeline.fit` over training rows, and the AUC over them. */
-  private def fit(rows: DataFrame, pipeline: Pipeline): Trained = {
     // fit, transform and the AUC pass each replay this projection from
     // the scan otherwise — materialize it once
-    val data = graft.Ckpt.truncate(rows)
+    fitRows(graft.Ckpt.truncate(trainingRows(df, features, label)), pipeline)
+
+  /** `pipeline.fit` over materialized training rows, and the AUC over
+    * them. */
+  private def fitRows(data: DataFrame, pipeline: Pipeline): Trained = {
     val model = pipeline.fit(data)
     Trained(model, rankAuc(model.transform(data)))
   }

@@ -119,6 +119,31 @@ class LocalFitSpec extends AnyFunSuite {
     assert(lr(two).numClasses === 3)
   }
 
+  test("the row count behind the cap is exact under local and reliable " +
+    "checkpoints, and a fit over the cap runs no job beyond MLlib's") {
+    val sc = spark.sparkContext
+    val df = gauss(700, 13)
+    val feats = Seq("x1", "x2")
+    def run(localMax: Long) = TestBus.jobsOf(sc)(
+      Train.logisticWith(df, feats, col("label"), 20, localMax))
+    def check(ckptJobs: Int, what: String): Unit = {
+      val (dist, distJobs) = run(0L)
+      val (atCap, atJobs) = run(700L * 2)
+      assert(atJobs.length <= ckptJobs + 1, s"$what: ${atJobs.length} jobs")
+      assertParity(atCap, dist, s"$what: at the cap")
+      val (over, overJobs) = run(700L * 2 - 1)
+      assert(overJobs.length === distJobs.length, what)
+      assertParity(over, dist, s"$what: one value over the cap")
+    }
+    check(1, "local checkpoint")
+    // a reliable checkpoint computes the rows twice: a count pass, then
+    // the write
+    val dir = java.nio.file.Files.createTempDirectory("graft_lf_ckpt")
+    spark.conf.set(Ckpt.DirKey, dir.toString)
+    try check(2, "reliable checkpoint")
+    finally spark.conf.unset(Ckpt.DirKey)
+  }
+
   test("job budget: a fit under the cap runs at most 2 jobs, bagged with " +
     "k = 3 at most 6, and the distributed fit more than that") {
     val sc = spark.sparkContext
