@@ -58,11 +58,11 @@ object Train {
   /** Caps of [[logistic]]'s driver fit, in rows and in feature values
     * (rows × features). The driver holds the collected rows, each row's
     * feature vector, its standardized copy in MLlib's instance blocks and
-    * its label and score; the sampled peak live heap of a fit was ~200 B
-    * a row at 1–3 features, ~205 MB at both caps (1.02M rows × 2), and
-    * `bagged` holds k such fits at once. The driver fit beat the
-    * distributed one at every size measured up to both caps, 1.8× there
-    * (CHANGES.md). A `lifecycle_wide` bag is ~8.4k rows and ~70k values;
+    * its label and score; the sampled peak live heap of a fit was
+    * 200–300 B a row at 1–3 features, up to ~320 MB at both caps (2^20
+    * rows × 2), and `bagged` holds k such fits at once. The driver fit
+    * beat the distributed one at every size measured up to both caps,
+    * 1.6× there (CHANGES.md). A `lifecycle_wide` bag is ~8.4k rows and ~70k values;
     * the catalog's largest fit, q_train_lr over sf0.1 lineitem, is 600k
     * rows and 1.8M values. */
   private val LocalFitMaxRows = 1L << 20
@@ -533,8 +533,8 @@ object Train {
     * probabilities ([[comboScore]], `Score.ensemble`). The bags fit
     * concurrently from driver threads ([[graft.ops.Jobs]]), as MLlib's
     * `CrossValidator.setParallelism` fits its folds: a logistic bag under
-    * the driver-fit cap ([[logistic]]) is one collect job and driver
-    * work, and the bags' driver fits overlap; above it a fit is dozens of
+    * the driver-fit cap ([[logistic]]) is two jobs (materialize,
+    * collect) and driver work, and the bags' driver fits overlap; above it a fit is dozens of
     * small jobs whose driver-side residue (job submission, planning, the
     * optimizer's driver loop) dominates at bench scale, and overlapping
     * the bags overlaps that residue. Each bag reads the same filtered
